@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ByteType
+import graft.sources.Bucketize
 
 /** Persisted IVF/LSH ANN index — the embedding-side twin of
   * `DedupIndex`: the corpus' normalized vectors are laid out ONCE under
@@ -24,25 +25,9 @@ object AnnIndex {
 
   def postingsTable(name: String): String = s"${name}_postings"
 
-  /** Build (or rebuild) the postings index: (tbl, bkt, corpus_id, cv)
-    * bucketed by (tbl, bkt). `numBuckets` sizes buckets for the CORPUS —
-    * probes shuffle only the query batch to match it.
-    *
-    * `planesPerTable` <= 0 (the default) sizes the plane count from the
-    * corpus via `Dedup.planesFor`: with a FIXED plane count, per-bucket
-    * occupancy — and therefore every probe's candidate volume — grows
-    * linearly with the corpus (the 10x rehearsal read 18.5 -> 181 MB of
-    * probe shuffle at planes=4). The chosen geometry is persisted as
-    * table properties, and `probe` reads it from there — the caller
-    * cannot desynchronize probe hashing from the layout.
-    */
-  /** `quantize = true` stores SQ8 postings: each normalized vector as
-    * int8 codes (`qv` = round(cv * 127 / scale), `qscale` = max|cv_i|)
-    * instead of the float64 array — 8x fewer vector bytes per posting
-    * row, THE lever at 100 TB where the postings (×nTables) dominate
-    * index storage and probe-side scan bytes. Probes score by asymmetric
-    * distance (stored codes × full-precision query, `ArrayDotBytes`), so
-    * quantization error enters once, not twice.
+  /** Postings rows (tbl, bkt, corpus_id, cv) — or (…, qscale, qv) when
+    * `quantize` — for a corpus under the given hashing geometry; shared by
+    * `write` and `append` so appended rows hash exactly like the build.
     */
   private def postingsOf(corpus: DataFrame, vecCol: String, idCol: String,
                          planes: Int, nTables: Int,
@@ -69,6 +54,26 @@ object AnnIndex {
     }
   }
 
+  /** Build (or rebuild) the postings index: (tbl, bkt, corpus_id, cv)
+    * bucketed by (tbl, bkt). `numBuckets` sizes buckets for the CORPUS —
+    * probes shuffle only the query batch to match it.
+    *
+    * `planesPerTable` <= 0 (the default) sizes the plane count from the
+    * corpus via `Dedup.planesFor`: with a FIXED plane count, per-bucket
+    * occupancy — and therefore every probe's candidate volume — grows
+    * linearly with the corpus (the 10x rehearsal read 18.5 -> 181 MB of
+    * probe shuffle at planes=4). The chosen geometry is persisted as
+    * table properties, and `probe` reads it from there — the caller
+    * cannot desynchronize probe hashing from the layout.
+    *
+    * `quantize = true` stores SQ8 postings: each normalized vector as
+    * int8 codes (`qv` = round(cv * 127 / scale), `qscale` = max|cv_i|)
+    * instead of the float64 array — 8x fewer vector bytes per posting
+    * row, THE lever at 100 TB where the postings (×nTables) dominate
+    * index storage and probe-side scan bytes. Probes score by asymmetric
+    * distance (stored codes × full-precision query, `ArrayDotBytes`), so
+    * quantization error enters once, not twice.
+    */
   def write(corpus: DataFrame, vecCol: String, idCol: String, name: String,
             path: String, planesPerTable: Int = 0, nTables: Int = 16,
             numBuckets: Int = 32, quantize: Boolean = false): Unit = {
@@ -76,53 +81,39 @@ object AnnIndex {
       if (planesPerTable > 0) planesPerTable
       else Dedup.planesFor(corpus.count())
     val postings = postingsOf(corpus, vecCol, idCol, planes, nTables, quantize)
-    val table = postingsTable(name)
-    graft.sources.Bucketize.writeBucketed(postings, table,
-      s"$path/postings", Seq("tbl", "bkt"), numBuckets)
-    corpus.sparkSession.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES (" +
-      s"'graft.planesPerTable' = '$planes', 'graft.nTables' = '$nTables', " +
-      s"'graft.quantized' = '$quantize')")
+    Bucketize.writeBucketed(postings, postingsTable(name), s"$path/postings",
+      Seq("tbl", "bkt"), numBuckets)
+    Bucketize.alterTableProps(corpus.sparkSession, postingsTable(name), Seq(
+      "graft.planesPerTable" -> planes, "graft.nTables" -> nTables,
+      "graft.quantized" -> quantize))
   }
 
   /** The standing-index lifecycle in one call — `TextSearch.ensureIndex`
     * for the LSH postings index: build/rebuild only when the stamped
     * content key plus build geometry does not match the corpus; reuse
-    * otherwise. Returns true when it (re)built. Dir-backed corpora
-    * default to the O(files) LISTING key (r15, see `IndexManifest`);
-    * non-scan plans fall back to the precise `IndexManifest.rowsKey`
-    * ((id, vector) xxhash64 aggregate, no tokenize), which is also the
-    * `precomputedKey` opt-in for ingest loops tracking their manifest
-    * additively (no scan, no listing — the 100 TB shape).
+    * otherwise. Returns true when it (re)built. The reuse policy is
+    * `StandingIndex.ensure`'s: dir-backed corpora key on the O(files)
+    * LISTING (see `IndexManifest`); non-scan plans fall back to the
+    * precise `IndexManifest.rowsKey` ((id, vector) xxhash64 aggregate, no
+    * tokenize), which is also the `precomputedKey` opt-in for ingest
+    * loops tracking their manifest additively.
     *
     * Out-of-band `append`s deliberately do NOT update the key (appends
     * here mutate no table properties — that property-free contract is
     * spec-pinned for concurrent-append safety), so the next `ensure`
     * over the accumulated corpus rebuilds: wasteful, never stale.
-    *
-    * Concurrency: SINGLE-WRITER per index name (all `ensure*` —
-    * check-then-act, no metastore CAS; post-stamp read-back fails the
-    * common interleaving loudly; serialize ensures for the hard
-    * guarantee, and quiesce probes across a rebuild).
+    * SINGLE-WRITER per index name, like all `ensure*`.
     */
   def ensure(corpus: DataFrame, vecCol: String, idCol: String, name: String,
              path: => String, planesPerTable: Int = 0, nTables: Int = 16,
              numBuckets: Int = 32, quantize: Boolean = false,
-             precomputedKey: Option[String] = None): Boolean = {
-    val spark = corpus.sparkSession
-    val params = s"annlsh:p$planesPerTable:t$nTables:b$numBuckets:q$quantize"
-    val key = precomputedKey.getOrElse(
-      IndexManifest.filesKeyOf(corpus, params, Seq(idCol, vecCol))
-        .getOrElse(IndexManifest.rowsKey(corpus, Seq(idCol, vecCol), params)))
-    val pt = postingsTable(name)
-    val fresh = spark.catalog.tableExists(pt) &&
-      IndexManifest.stored(spark, pt).contains(key)
-    if (!fresh) {
+             precomputedKey: Option[String] = None): Boolean =
+    StandingIndex.ensure(corpus, postingsTable(name),
+      s"annlsh:p$planesPerTable:t$nTables:b$numBuckets:q$quantize",
+      Seq(idCol, vecCol), precomputedKey,
+      IndexManifest.rowsKey(corpus, Seq(idCol, vecCol), _))(
       write(corpus, vecCol, idCol, name, path, planesPerTable, nTables,
-        numBuckets, quantize)
-      IndexManifest.stampVerified(spark, pt, key)
-    }
-    !fresh
-  }
+        numBuckets, quantize))
 
   /** Append a new embedding batch to an existing postings index — the
     * accumulate-over-months half (`DedupIndex.append`'s embedding twin).
@@ -139,22 +130,18 @@ object AnnIndex {
     */
   def append(corpus: DataFrame, vecCol: String, idCol: String,
              name: String): Unit = {
-    val spark = corpus.sparkSession
-    val (planes, tables) = geometry(spark, name)
-    val postings = postingsOf(corpus, vecCol, idCol, planes, tables,
-      quantized(spark, name))
-    graft.sources.Bucketize.appendBucketed(postings, postingsTable(name),
-      Seq("tbl", "bkt"))
+    val props = Bucketize.tableProps(corpus.sparkSession, postingsTable(name))
+    val (planes, tables) = geometryOf(props)
+    Bucketize.appendBucketed(postingsOf(corpus, vecCol, idCol, planes, tables,
+      quantizedOf(props)), postingsTable(name))
   }
 
   /** Compact append-accumulated postings into a fresh layout at `newPath`
-    * (`DedupIndex.compact`'s embedding twin); geometry and quantization
-    * properties carry over.
+    * (`DedupIndex.compact`'s embedding twin, `StandingIndex.compact`);
+    * geometry and quantization properties carry over.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, name: String,
-              newPath: String): Unit =
-    graft.sources.Bucketize.compact(spark, postingsTable(name),
-      s"$newPath/postings")
+  def compact(spark: SparkSession, name: String, newPath: String): Unit =
+    StandingIndex.compact(spark, name, newPath, "postings")
 
   /** `compact` for the k-means IVF layout (r15 — the last index family
     * missing the ingest -> compact rhythm): append-accumulated CELLS are
@@ -163,38 +150,33 @@ object AnnIndex {
     * identity and compaction must never retrain it — so probes are plan-
     * and result-identical (spec-pinned in AnnIndexSpec).
     */
-  def compactKmeans(spark: org.apache.spark.sql.SparkSession, name: String,
-                    newPath: String): Unit = {
-    graft.sources.Bucketize.compact(spark, cellsTable(name),
-      s"$newPath/cells")
-    graft.sources.Bucketize.compact(spark, centroidsTable(name),
-      s"$newPath/centroids")
-  }
+  def compactKmeans(spark: SparkSession, name: String,
+                    newPath: String): Unit =
+    StandingIndex.compact(spark, name, newPath, "cells", "centroids")
 
   /** The (planesPerTable, nTables) geometry persisted with the index. */
-  def geometry(spark: org.apache.spark.sql.SparkSession,
-               name: String): (Int, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${postingsTable(name)}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    (props("graft.planesPerTable").toInt, props("graft.nTables").toInt)
-  }
+  def geometry(spark: SparkSession, name: String): (Int, Int) =
+    geometryOf(Bucketize.tableProps(spark, postingsTable(name)))
 
   /** Whether the postings were written SQ8-quantized (absent = false,
     * for indexes laid out before the flag existed).
     */
-  def quantized(spark: org.apache.spark.sql.SparkSession,
-                name: String): Boolean =
-    spark.sql(s"SHOW TBLPROPERTIES `${postingsTable(name)}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      .get("graft.quantized").exists(_.toBoolean)
+  def quantized(spark: SparkSession, name: String): Boolean =
+    quantizedOf(Bucketize.tableProps(spark, postingsTable(name)))
+
+  private def geometryOf(props: Map[String, String]): (Int, Int) =
+    (props("graft.planesPerTable").toInt, props("graft.nTables").toInt)
+
+  private def quantizedOf(props: Map[String, String]): Boolean =
+    props.get("graft.quantized").exists(_.toBoolean)
 
   /** Top-k per query against the persisted postings; the bucket geometry
     * comes from the index's own table properties. Output schema and rank
     * semantics are exactly `ivfTopK`'s (query_id, rank, corpus_id,
     * cosine). The candidate join never broadcasts and never reshuffles
     * the corpus: the query batch shuffles to the index's bucket count.
-    */
-  /** `allowed` (optional): FILTERED search — restrict matches to the ids
+    *
+    * `allowed` (optional): FILTERED search — restrict matches to the ids
     * in this one-column frame (semi-join on the candidate set BEFORE
     * top-k, so k survivors are returned from within the subset). Because
     * LSH bucket keys are per-vector, filtering candidates is EXACTLY
@@ -224,16 +206,8 @@ object AnnIndex {
         posexplode(VecExprs.hyperplaneBuckets(col("qv"), tables, planes)))
       .select(col("query_id"), col("qv"),
         col("pos").as("tbl"), col("col").as("bkt"))
-    val postings = allowed match {
-      case None => spark.table(postingsTable(name))
-      case Some(a) =>
-        require(a.columns.length == 1,
-          s"allowed must be a one-column id frame, got ${a.columns.mkString(", ")}")
-        val ids = a.select(col(a.columns.head).as("corpus_id")).distinct()
-        spark.table(postingsTable(name)).join(
-          if (broadcastAllowed) broadcast(ids) else ids,
-          Seq("corpus_id"), "left_semi")
-    }
+    val postings = restricted(spark.table(postingsTable(name)), allowed,
+      broadcastAllowed)
     // score before deduplicating multi-table hits, same rationale as
     // ivfTopK: once scored, the vectors drop out of the dedup shuffle.
     // SQ8 postings (detected from the layout's own schema, so plain
@@ -252,6 +226,19 @@ object AnnIndex {
       .agg(first(col("cosine")).as("cosine"))
     SimilaritySearch.topK(scored, k)
   }
+
+  /** `table` semi-joined to the ids of the one-column `allowed` frame —
+    * both families' filtered search — broadcast when `bcast`.
+    */
+  private def restricted(table: DataFrame, allowed: Option[DataFrame],
+                         bcast: Boolean): DataFrame =
+    allowed.fold(table) { a =>
+      require(a.columns.length == 1,
+        s"allowed must be a one-column id frame, got ${a.columns.mkString(", ")}")
+      val ids = a.select(col(a.columns.head).as("corpus_id")).distinct()
+      table.join(if (bcast) broadcast(ids) else ids, Seq("corpus_id"),
+        "left_semi")
+    }
 
   // ---------------------------------------------------------------------
   // Persisted trained-centroid IVF: the k-means twin of the LSH postings
@@ -274,24 +261,15 @@ object AnnIndex {
                   name: String, path: String, kClusters: Int = 0,
                   iters: Int = 2, numBuckets: Int = 32): Unit = {
     val spark = corpus.sparkSession
-    val raw = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__v"))
-      .filter(col("__v").isNotNull)
-    val c = raw
-      .repartition(graft.ops.Partitions.cpuSpread(raw), col("corpus_id"))
-      .select(col("corpus_id"), Dedup.normalized(col("__v")).as("cv"))
-      .localCheckpoint()
+    val c = normalizedCorpus(corpus, vecCol, idCol).localCheckpoint()
     val kc =
       if (kClusters > 0) kClusters
       else math.max(16, math.sqrt(c.count().toDouble).toInt)
     val cents = SimilaritySearch.kmeansCentroids(c, kc, iters)
-    val assigned = c.withColumn("cid",
-      element_at(SimilaritySearch.nearestCids(cents, col("cv"), 1), 1))
-      .select(col("cid"), col("corpus_id"), col("cv"))
-    graft.sources.Bucketize.writeBucketed(assigned, cellsTable(name),
+    Bucketize.writeBucketed(assignedTo(cents, c), cellsTable(name),
       s"$path/cells", Seq("cid"), numBuckets)
     import spark.implicits._
-    val centDf = cents.toDF("cid", "cv")
-    graft.sources.Bucketize.writeBucketed(centDf, centroidsTable(name),
+    Bucketize.writeBucketed(cents.toDF("cid", "cv"), centroidsTable(name),
       s"$path/centroids", Seq("cid"), 1)
   }
 
@@ -307,22 +285,35 @@ object AnnIndex {
   def ensureKmeans(corpus: DataFrame, vecCol: String, idCol: String,
                    name: String, path: => String, kClusters: Int = 0,
                    iters: Int = 2, numBuckets: Int = 32,
-                   precomputedKey: Option[String] = None): Boolean = {
-    val spark = corpus.sparkSession
-    val params = s"annkm:k$kClusters:i$iters:b$numBuckets"
-    val key = precomputedKey.getOrElse(
-      IndexManifest.filesKeyOf(corpus, params, Seq(idCol, vecCol))
-        .getOrElse(IndexManifest.rowsKey(corpus, Seq(idCol, vecCol), params)))
-    val ct = cellsTable(name)
-    val fresh = spark.catalog.tableExists(ct) &&
-      IndexManifest.stored(spark, ct).contains(key)
-    if (!fresh) {
+                   precomputedKey: Option[String] = None): Boolean =
+    StandingIndex.ensure(corpus, cellsTable(name),
+      s"annkm:k$kClusters:i$iters:b$numBuckets", Seq(idCol, vecCol),
+      precomputedKey, IndexManifest.rowsKey(corpus, Seq(idCol, vecCol), _))(
       writeKmeans(corpus, vecCol, idCol, name, path, kClusters, iters,
-        numBuckets)
-      IndexManifest.stampVerified(spark, ct, key)
-    }
-    !fresh
+        numBuckets))
+
+  /** (corpus_id, cv): the non-null vectors, CPU-spread and normalized. */
+  private def normalizedCorpus(corpus: DataFrame, vecCol: String,
+                               idCol: String): DataFrame = {
+    val raw = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__v"))
+      .filter(col("__v").isNotNull)
+    raw.repartition(graft.ops.Partitions.cpuSpread(raw), col("corpus_id"))
+      .select(col("corpus_id"), Dedup.normalized(col("__v")).as("cv"))
   }
+
+  /** (cid, corpus_id, cv): each normalized row in its nearest cell. */
+  private def assignedTo(cents: Seq[(Int, Seq[Double])],
+                         c: DataFrame): DataFrame =
+    c.withColumn("cid",
+      element_at(SimilaritySearch.nearestCids(cents, col("cv"), 1), 1))
+      .select(col("cid"), col("corpus_id"), col("cv"))
+
+  /** The trained centroid table, collected (bounded: kClusters x dim). */
+  private def centroids(spark: SparkSession,
+                        name: String): Seq[(Int, Seq[Double])] =
+    spark.table(centroidsTable(name))
+      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
+      .toSeq.sortBy(_._1)
 
   /** Append a new embedding batch to a persisted k-means IVF index:
     * assign the batch to the index's STORED centroids (no retraining —
@@ -333,20 +324,8 @@ object AnnIndex {
     */
   def appendKmeans(corpus: DataFrame, vecCol: String, idCol: String,
                    name: String): Unit = {
-    val spark = corpus.sparkSession
-    val cents: Seq[(Int, Seq[Double])] = spark.table(centroidsTable(name))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
-      .toSeq.sortBy(_._1)
-    val raw = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__v"))
-      .filter(col("__v").isNotNull)
-    val assigned = raw
-      .repartition(graft.ops.Partitions.cpuSpread(raw), col("corpus_id"))
-      .select(col("corpus_id"), Dedup.normalized(col("__v")).as("cv"))
-      .withColumn("cid",
-        element_at(SimilaritySearch.nearestCids(cents, col("cv"), 1), 1))
-      .select(col("cid"), col("corpus_id"), col("cv"))
-    graft.sources.Bucketize.appendBucketed(assigned, cellsTable(name),
-      Seq("cid"))
+    Bucketize.appendBucketed(assignedTo(centroids(corpus.sparkSession, name),
+      normalizedCorpus(corpus, vecCol, idCol)), cellsTable(name))
   }
 
   /** Top-k per query against the persisted cells: assign each query to
@@ -354,8 +333,8 @@ object AnnIndex {
     * centroid table is a bounded kClusters x dim collect) and join on
     * cid against the bucketed cell scan. Output schema and semantics are
     * exactly `SimilaritySearch.kmeansIvfTopK`'s on the same geometry.
-    */
-  /** `allowed` (optional): FILTERED search over the cells, same contract
+    *
+    * `allowed` (optional): FILTERED search over the cells, same contract
     * as `probe`'s — cell assignment is per-vector, so filtering candidates
     * before top-k equals probing an index built on the subset trained on
     * the SAME centroids.
@@ -365,24 +344,14 @@ object AnnIndex {
                   allowed: Option[DataFrame] = None): DataFrame = {
     import graft.functions.VecExprs
     val spark = queries.sparkSession
-    val cents: Seq[(Int, Seq[Double])] = spark.table(centroidsTable(name))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
-      .toSeq.sortBy(_._1)
+    val cents = centroids(spark, name)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__v"))
       .filter(col("__v").isNotNull)
       .select(col("query_id"), Dedup.normalized(col("__v")).as("qv"))
       .select(col("query_id"), col("qv"),
         explode(SimilaritySearch.nearestCids(cents, col("qv"), nProbe)).as("cid"))
-    val cells = allowed match {
-      case None => spark.table(cellsTable(name))
-      case Some(a) =>
-        require(a.columns.length == 1,
-          s"allowed must be a one-column id frame, got ${a.columns.mkString(", ")}")
-        spark.table(cellsTable(name)).join(
-          a.select(col(a.columns.head).as("corpus_id")).distinct(),
-          Seq("corpus_id"), "left_semi")
-    }
-    val scored = cells.join(q, Seq("cid"))
+    val scored = restricted(spark.table(cellsTable(name)), allowed, false)
+      .join(q, Seq("cid"))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine",
         round(VecExprs.arrayDot(col("cv"), col("qv")), 6))
@@ -394,15 +363,12 @@ object AnnIndex {
     * of `DedupIndex.probeStream`. Each micro-batch is a static frame
     * inside foreachBatch, so the probe is EXACTLY the batch `probe`
     * (same plan, zero index-side Exchange); all state lives in the index
-    * layout, not in stream memory.
+    * layout, not in stream memory (`StandingIndex.probeStream`).
     */
   def probeStream(stream: DataFrame, vecCol: String, idCol: String,
                   name: String, k: Int)(
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(probe(batch, vecCol, idCol, name, k), batchId)
-      }
-      .start()
+    StandingIndex.probeStream(stream, None,
+      probe(_, vecCol, idCol, name, k))(sink)
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import graft.sources.Bucketize
 
 /** Persisted minhash-LSH dedup index — the incremental-ingestion half of
   * the 100 TB dedup story, beyond the reference (skrub's `deduplicate`,
@@ -59,59 +60,40 @@ object DedupIndex {
             path: String, n: Int = 3, rowsPerBand: Int = 2, nBands: Int = 8,
             numBuckets: Int = 32): Unit = {
     val (bands, docs) = parts(df, textCol, idCol, n, rowsPerBand, nBands)
-    graft.sources.Bucketize.writeBucketed(bands, bandsTable(name),
-      s"$path/bands", Seq("band"), numBuckets)
-    graft.sources.Bucketize.writeBucketed(docs, docsTable(name),
-      s"$path/docs", Seq("id"), numBuckets)
-    df.sparkSession.sql(
-      s"ALTER TABLE `${bandsTable(name)}` SET TBLPROPERTIES (" +
-        s"'graft.n' = '$n', 'graft.rowsPerBand' = '$rowsPerBand', " +
-        s"'graft.nBands' = '$nBands')")
+    Bucketize.writeBucketed(bands, bandsTable(name), s"$path/bands",
+      Seq("band"), numBuckets)
+    Bucketize.writeBucketed(docs, docsTable(name), s"$path/docs", Seq("id"),
+      numBuckets)
+    Bucketize.alterTableProps(df.sparkSession, bandsTable(name), Seq(
+      "graft.n" -> n, "graft.rowsPerBand" -> rowsPerBand,
+      "graft.nBands" -> nBands))
   }
 
   /** The standing-index lifecycle in one call — `TextSearch.ensureIndex`
     * for the minhash-band dedup index: build/rebuild only when the
     * stamped content key plus the shingle/band geometry does not match
     * the corpus; reuse otherwise. Returns true when it (re)built.
-    * Dir-backed corpora default to the O(files) LISTING key (r15 —
-    * names+lengths+plan fingerprint, one directory listing per reuse
-    * check, see `IndexManifest`); non-scan plans fall back to the
-    * precise manifest aggregate (`IndexManifest.textKey`), which is also
-    * the opt-in via `precomputedKey` for in-place same-size mutations
-    * and for ingest loops tracking their manifest additively (no scan at
-    * all — the 100 TB shape).
+    * The reuse policy is `StandingIndex.ensure`'s: dir-backed corpora
+    * key on the O(files) LISTING (see `IndexManifest`); non-scan plans
+    * fall back to the precise manifest aggregate (`IndexManifest.textKey`),
+    * which is also the `precomputedKey` opt-in for in-place same-size
+    * mutations and for ingest loops tracking their manifest additively.
     *
     * Out-of-band `append`s deliberately do NOT update the key (appends
     * here mutate no table properties — spec-pinned for concurrent-append
     * safety), so the next `ensure` over the accumulated corpus rebuilds:
     * wasteful, never stale.
     *
-    * Concurrency: SINGLE-WRITER per index name, like all `ensure*` —
-    * check-then-act over a no-CAS metastore; two concurrent ensures race
-    * the layout path and a concurrent probe can see a half-rebuilt
-    * index. The post-stamp read-back fails the common interleaving
-    * loudly; serialize ensures (one driver per standing index) for the
-    * hard guarantee.
+    * SINGLE-WRITER per index name, like all `ensure*`.
     */
   def ensure(df: DataFrame, textCol: String, idCol: String, name: String,
              path: => String, n: Int = 3, rowsPerBand: Int = 2, nBands: Int = 8,
              numBuckets: Int = 32,
-             precomputedKey: Option[String] = None): Boolean = {
-    val spark = df.sparkSession
-    val params = s"mhband:n$n:r$rowsPerBand:nb$nBands:b$numBuckets"
-    val key = precomputedKey.getOrElse(
-      IndexManifest.filesKeyOf(df, params, Seq(textCol, idCol))
-        .getOrElse(IndexManifest.textKey(df, textCol, params)))
-    val bt = bandsTable(name)
-    val fresh = spark.catalog.tableExists(bt) &&
-      IndexManifest.stored(spark, bt).contains(key)
-    if (!fresh) {
-      write(df, textCol, idCol, name, path, n, rowsPerBand, nBands,
-        numBuckets)
-      IndexManifest.stampVerified(spark, bt, key)
-    }
-    !fresh
-  }
+             precomputedKey: Option[String] = None): Boolean =
+    StandingIndex.ensure(df, bandsTable(name),
+      s"mhband:n$n:r$rowsPerBand:nb$nBands:b$numBuckets", Seq(textCol, idCol),
+      precomputedKey, IndexManifest.textKey(df, textCol, _))(
+      write(df, textCol, idCol, name, path, n, rowsPerBand, nBands, numBuckets))
 
   /** Append a new ingest batch to an existing index — the accumulate-
     * over-months half of the story (`write` once, then per ingest: `probe`
@@ -134,25 +116,22 @@ object DedupIndex {
              name: String): Unit = {
     val (n, rowsPerBand, nBands) = geometry(df.sparkSession, name)
     val (bands, docs) = parts(df, textCol, idCol, n, rowsPerBand, nBands)
-    graft.sources.Bucketize.appendBucketed(bands, bandsTable(name),
-      Seq("band"))
-    graft.sources.Bucketize.appendBucketed(docs, docsTable(name), Seq("id"))
+    Bucketize.appendBucketed(bands, bandsTable(name))
+    Bucketize.appendBucketed(docs, docsTable(name))
   }
 
   /** Compact an append-accumulated index into a fresh layout at `newPath`
     * (one sorted file per bucket again); geometry properties carry over,
     * so probes are plan- and result-identical. Run it on the cadence the
-    * append-file count dictates — the classic ingest → compact rhythm.
+    * append-file count dictates — the classic ingest → compact rhythm
+    * (`StandingIndex.compact`).
     */
-  def compact(spark: SparkSession, name: String, newPath: String): Unit = {
-    graft.sources.Bucketize.compact(spark, bandsTable(name), s"$newPath/bands")
-    graft.sources.Bucketize.compact(spark, docsTable(name), s"$newPath/docs")
-  }
+  def compact(spark: SparkSession, name: String, newPath: String): Unit =
+    StandingIndex.compact(spark, name, newPath, "bands", "docs")
 
   /** The (n, rowsPerBand, nBands) geometry persisted with the index. */
   def geometry(spark: SparkSession, name: String): (Int, Int, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${bandsTable(name)}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val props = Bucketize.tableProps(spark, bandsTable(name))
     (props("graft.n").toInt, props("graft.rowsPerBand").toInt,
       props("graft.nBands").toInt)
   }
@@ -201,15 +180,13 @@ object DedupIndex {
     * (write them, route dups away, alert — the caller's policy). Each
     * micro-batch is a static frame inside foreachBatch, so the probe is
     * EXACTLY the batch `probe` — same plan, same zero index-side Exchange,
-    * and state lives in the index layout, not in stream memory.
+    * and state lives in the index layout, not in stream memory
+    * (`StandingIndex.probeStream`).
     */
   def probeStream(stream: DataFrame, textCol: String, idCol: String,
                   name: String, minJaccard: Double = 0.4)(
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(probe(batch, textCol, idCol, name, minJaccard), batchId)
-      }
-      .start()
+    StandingIndex.probeStream(stream, None,
+      probe(_, textCol, idCol, name, minJaccard))(sink)
 }

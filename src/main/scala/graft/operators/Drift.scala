@@ -236,28 +236,15 @@ object Drift {
     * discipline: each micro-batch is a static frame inside foreachBatch,
     * so scoring is EXACTLY the batch `score` — all state is the fitted
     * model's bounded bin counts, nothing accumulates in stream memory.
+    * All three monitors share `StandingIndex.probeStream`; no default
+    * queryName, so any number of concurrent monitors coexist — name one
+    * explicitly for dashboards.
     */
   def psiStream(model: PsiModel, stream: DataFrame,
                 queryName: Option[String] = None)(
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery =
-    scoreStream(stream, queryName, model.score _)(sink)
-
-  /** The one foreachBatch monitor wrapper all three signals share. No
-    * default queryName: Spark auto-assigns unique ids, so any number of
-    * concurrent monitors coexist; name one explicitly for dashboards.
-    */
-  private def scoreStream(stream: DataFrame, queryName: Option[String],
-                          scoreFn: DataFrame => DataFrame)(
-      sink: (DataFrame, Long) => Unit):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    val w0 = stream.writeStream.outputMode("append")
-    queryName.fold(w0)(w0.queryName)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(scoreFn(batch), batchId)
-      }
-      .start()
-  }
+    StandingIndex.probeStream(stream, queryName, model.score _)(sink)
 
   /** Kolmogorov–Smirnov statistic per NUMERIC column: sup |F_ref − F_cur|
     * evaluated over the reference's equal-width discretization (bins fit on
@@ -310,7 +297,7 @@ object Drift {
                queryName: Option[String] = None)(
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery =
-    scoreStream(stream, queryName, model.scoreKs _)(sink)
+    StandingIndex.probeStream(stream, queryName, model.scoreKs _)(sink)
 
   /** New-category alert feed: values present in `cur` but never seen in
     * `ref` — the third signal monitoring stacks pair with psi/ks (psi lumps
@@ -453,5 +440,5 @@ object Drift {
                     queryName: Option[String] = None)(
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery =
-    scoreStream(stream, queryName, model.score _)(sink)
+    StandingIndex.probeStream(stream, queryName, model.score _)(sink)
 }

@@ -5,13 +5,15 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPl
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.sources.Bucketize
 
 /** Content-addressed staleness keys for STANDING INDEXES — the cache-
-  * validity contract behind `TextSearch.ensureIndex` /
-  * `DedupIndex.ensure` / `AnnIndex.ensure` (r14; closes the r13 verdict
-  * nit that standing-probe reuse keyed on the corpus directory PATH: if
-  * the parquet under a dir was regenerated in place, a path-keyed guard
-  * silently served the old corpus).
+  * validity contract behind `StandingIndex.ensure`, the one lifecycle
+  * every family's `ensure*` (`TextSearch.ensureIndex`, `DedupIndex.ensure`,
+  * `AnnIndex.ensure`/`ensureKmeans`) delegates to (r14; closes the r13
+  * verdict nit that standing-probe reuse keyed on the corpus directory
+  * PATH: if the parquet under a dir was regenerated in place, a path-keyed
+  * guard silently served the old corpus).
   *
   * A key is `<content>|<params>`:
   *  - content for DIR-BACKED corpora (the default since r15 — the r14
@@ -183,19 +185,19 @@ object IndexManifest {
   def isFilesKey(key: String): Boolean = key.startsWith("F")
 
   def stored(spark: SparkSession, table: String): Option[String] =
-    spark.sql(s"SHOW TBLPROPERTIES `$table`").collect()
-      .collectFirst { case r if r.getString(0) == Key => r.getString(1) }
+    Bucketize.tableProps(spark, table).get(Key)
 
   def stamp(spark: SparkSession, table: String, key: String): Unit = {
     // whitelist, not blacklist (ADVICE r14): a key containing SQL-literal
     // escape characters (quotes, backslashes) would be munged by the
-    // ALTER TABLE below, so the stored key never equals the in-memory
-    // key and ensure* silently rebuilds on every call — refuse loudly
+    // property writer's ALTER TABLE, so the stored key never equals the
+    // in-memory key and ensure* silently rebuilds on every call — refuse
+    // loudly
     // instead. Every key this object mints (digits, hex, ':', '|',
     // param words) passes; caller-minted precomputedKeys must too.
     require(key.matches("[A-Za-z0-9:|,._=\\-]+"),
       s"malformed manifest key (allowed: [A-Za-z0-9:|,._=-]): $key")
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES ('$Key' = '$key')")
+    Bucketize.alterTableProps(spark, table, Seq(Key -> key))
   }
 
   /** Drop the stamped key (next `ensure*` rebuilds — the fail-stale-never
@@ -203,8 +205,7 @@ object IndexManifest {
     * listing-derived key live.
     */
   private[graft] def unset(spark: SparkSession, table: String): Unit =
-    spark.sql(
-      s"ALTER TABLE `$table` UNSET TBLPROPERTIES IF EXISTS ('$Key')")
+    Bucketize.alterTableProps(spark, table, Nil, Seq(Key))
 
   /** `stamp` + read-back: fails loudly when the read-back key is not the
     * one just written — the cheap detector for two sessions racing

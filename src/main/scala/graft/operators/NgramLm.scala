@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Text
+import graft.sources.Bucketize
 
 /** N-gram language-model perplexity scoring — the CCNet-style corpus
   * quality signal (Wenzek et al. 2020: docs are ranked by the perplexity of
@@ -165,17 +166,16 @@ object NgramLm {
       .saveAsTable(vocabTable(name))
     model.bigrams.write.mode("overwrite").option("path", s"$path/bigrams")
       .saveAsTable(bigramsTable(name))
-    // key must avoid the substring "token": SHOW TBLPROPERTIES redacts
+    // key must avoid the substring "token": the property reader redacts
     // values whose key matches spark.sql.redaction.string.regex
     // ("(?i)secret|password|token|access[.]key")
-    spark.sql(s"ALTER TABLE `${vocabTable(name)}` SET TBLPROPERTIES (" +
-      s"'graft.lmTotal' = '${model.totalTokens}', " +
-      s"'graft.lmVocab' = '${model.vocabCount}')")
+    Bucketize.alterTableProps(spark, vocabTable(name), Seq(
+      "graft.lmTotal" -> model.totalTokens,
+      "graft.lmVocab" -> model.vocabCount))
   }
 
   def read(spark: org.apache.spark.sql.SparkSession, name: String): Model = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${vocabTable(name)}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val props = Bucketize.tableProps(spark, vocabTable(name))
     Model(spark.table(vocabTable(name)), spark.table(bigramsTable(name)),
       props("graft.lmTotal").toLong, props("graft.lmVocab").toInt)
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Bucketize
 
 /** BM25 full-text retrieval over a document corpus — the lexical half of
   * the retrieval story next to the ANN family (`SimilaritySearch`,
@@ -212,9 +213,8 @@ object TextSearch {
 
   private val PendingKey = "graft.bm25.pendingBatch"
 
-  private def tblProps(spark: SparkSession, name: String): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES `${postingsTable(name)}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+  private def stats(nDocs: Long, sumDl: Long): Seq[(String, Long)] =
+    Seq("graft.bm25.nDocs" -> nDocs, "graft.bm25.sumDl" -> sumDl)
 
   /** Loud guard against the half-applied-append window: `append` stamps a
     * pending-batch marker before it mutates anything and clears it only
@@ -256,16 +256,14 @@ object TextSearch {
     // round-trips at cluster scale — which is exactly the regime the r9
     // bench flagged this builder's constants in
     graft.ops.Jobs.overlapAll(df.sparkSession.sparkContext)(Seq(
-      () => graft.sources.Bucketize.writeBucketed(docLens, lensTable(name),
+      () => Bucketize.writeBucketed(docLens, lensTable(name),
         s"$path/lens", Seq("doc_id"), numBuckets),
-      () => graft.sources.Bucketize.writeBucketed(post, postingsTable(name),
+      () => Bucketize.writeBucketed(post, postingsTable(name),
         s"$path/postings", Seq("term"), numBuckets)))
     val (nDocs, sumDl) = corpusStats(docLens)
     docLens.unpersist()
-    df.sparkSession.sql(
-      s"ALTER TABLE `${postingsTable(name)}` SET TBLPROPERTIES (" +
-        s"'graft.bm25.nDocs' = '$nDocs', " +
-        s"'graft.bm25.sumDl' = '$sumDl')")
+    Bucketize.alterTableProps(df.sparkSession, postingsTable(name),
+      stats(nDocs, sumDl))
   }
 
   /** The STANDING-INDEX lifecycle in one call (r14 — the bench
@@ -273,19 +271,14 @@ object TextSearch {
     * probe-ready BM25 index named `name` exists for EXACTLY this corpus
     * content and build geometry, building/rebuilding only when it does
     * not. Returns true when it (re)built, false when the standing index
-    * was reused — the caller probes either way.
-    *
-    * Staleness is CONTENT-keyed, not path-keyed, at one of two
-    * granularities (see `IndexManifest`'s scaladoc for the full
-    * contract):
+    * was reused — the caller probes either way. The reuse policy is
+    * `StandingIndex.ensure`'s, shared by all four index families:
     *  - dir-backed corpora (`df` is a plain file scan, modulo
-    *    Project/Filter — the common shape) default to the O(files)
-    *    LISTING key since r15: file names + lengths + the plan's own
-    *    filter fingerprint, so a corpus regenerated in place (new part
-    *    files) rebuilds, an unchanged listing reuses, and the per-call
-    *    reuse cost is one directory listing — NOT a corpus scan. Blind
-    *    spot (documented, no standard writer hits it): an in-place
-    *    mutation preserving file name AND length;
+    *    Project/Filter — the common shape) key on the O(files) LISTING
+    *    (file names + lengths + the plan's own filter fingerprint), so a
+    *    corpus regenerated in place rebuilds and the per-call reuse cost
+    *    is one directory listing, not a corpus scan. Blind spot: an
+    *    in-place mutation preserving file name AND length;
     *  - everything else (and the precise opt-in, via
     *    `precomputedKey = Some(IndexManifest.textKey(df, textCol,
     *    "bm25:b<n>"))`) keys on the corpus manifest — n_docs, n_tokens,
@@ -302,35 +295,16 @@ object TextSearch {
     * `path` is BY-NAME: evaluated only when a (re)build actually happens,
     * so callers may pass an expression that provisions/wipes the layout
     * directory (the bench registries do) without invalidating a standing
-    * index they are about to reuse.
-    *
-    * Concurrency: `ensure*` is SINGLE-WRITER per index name — it is
-    * check-then-act over a metastore with last-write-wins property
-    * updates and no CAS, so two sessions ensuring the same `name` can
-    * race DROP TABLE/overwrite on the layout path, and a concurrent
-    * probe can observe a half-rebuilt index. The post-stamp read-back
-    * (`IndexManifest.stampVerified`) detects the common interleaving and
-    * fails the loser loudly, but the hard guarantee is the contract:
-    * one ensuring driver per standing index, probes quiesced across a
-    * rebuild (mirrors `append`'s single-writer note).
+    * index they are about to reuse. SINGLE-WRITER per index name (see
+    * `StandingIndex.ensure`; mirrors `append`'s single-writer note).
     */
   def ensureIndex(df: DataFrame, textCol: String, idCol: String,
                   name: String, path: => String, numBuckets: Int = 32,
-                  precomputedKey: Option[String] = None): Boolean = {
-    val spark = df.sparkSession
-    val params = s"bm25:b$numBuckets"
-    val key = precomputedKey.getOrElse(
-      IndexManifest.filesKeyOf(df, params, Seq(textCol, idCol))
-        .getOrElse(IndexManifest.textKey(df, textCol, params)))
-    val pt = postingsTable(name)
-    val fresh = spark.catalog.tableExists(pt) &&
-      IndexManifest.stored(spark, pt).contains(key)
-    if (!fresh) {
-      buildIndex(df, textCol, idCol, name, path, numBuckets)
-      IndexManifest.stampVerified(spark, pt, key)
-    }
-    !fresh
-  }
+                  precomputedKey: Option[String] = None): Boolean =
+    StandingIndex.ensure(df, postingsTable(name), s"bm25:b$numBuckets",
+      Seq(textCol, idCol), precomputedKey,
+      IndexManifest.textKey(df, textCol, _))(
+      buildIndex(df, textCol, idCol, name, path, numBuckets))
 
   /** Append an ingest batch to a standing index — the accumulate-over-
     * months half of the story (probe the batch, route dups away, append
@@ -348,7 +322,8 @@ object TextSearch {
     * both directions. The window is additionally STAMPED: a pending-batch
     * marker is set before the stats mutation and cleared only after both
     * data appends commit, so a crashed append is detected loudly by the
-    * next append/probe instead of silently double-counting on a blind
+    * next append (`probe` deliberately skips that check — see
+    * `requireClean`) instead of silently double-counting on a blind
     * retry. Recovery: `repair` (resync stats from the lens table) or a
     * rebuild from source.
     *
@@ -368,14 +343,13 @@ object TextSearch {
     if (bN == 0) { docLens.unpersist(); return }
     val (_, bSum) = corpusStats(docLens)
     val spark = df.sparkSession
-    val props = tblProps(spark, name)
+    val pt = postingsTable(name)
+    val props = Bucketize.tableProps(spark, pt)
     requireClean(props, name, "append")
     val batchTag = java.util.UUID.randomUUID().toString
-    spark.sql(
-      s"ALTER TABLE `${postingsTable(name)}` SET TBLPROPERTIES (" +
-        s"'$PendingKey' = '$batchTag', " +
-        s"'graft.bm25.nDocs' = '${props("graft.bm25.nDocs").toLong + bN}', " +
-        s"'graft.bm25.sumDl' = '${props("graft.bm25.sumDl").toLong + bSum}')")
+    Bucketize.alterTableProps(spark, pt,
+      (PendingKey -> batchTag) +: stats(props("graft.bm25.nDocs").toLong + bN,
+        props("graft.bm25.sumDl").toLong + bSum))
     // stamp-then-verify: appends are SINGLE-WRITER by contract (metastore
     // property updates are last-write-wins, not CAS), but two appends that
     // both passed requireClean are best-effort DETECTED here — whichever
@@ -386,7 +360,7 @@ object TextSearch {
     // counts (probe's lens-count check catches the mismatch once the
     // marker clears). This shrinks (not closes — see scaladoc) the
     // interleaving window; serialize appends for a hard guarantee.
-    val won = tblProps(spark, name).get(PendingKey).contains(batchTag)
+    val won = Bucketize.tableProps(spark, pt).get(PendingKey).contains(batchTag)
     if (!won) {
       docLens.unpersist()
       throw new IllegalStateException(
@@ -399,12 +373,9 @@ object TextSearch {
           "the stats from the lens table, then retry this batch. Appends " +
           "are single-writer by contract.")
     }
-    graft.sources.Bucketize.appendBucketed(docLens, lensTable(name),
-      Seq("doc_id"))
-    graft.sources.Bucketize.appendBucketed(post, postingsTable(name),
-      Seq("term"))
-    spark.sql(s"ALTER TABLE `${postingsTable(name)}` " +
-      s"UNSET TBLPROPERTIES ('$PendingKey')")
+    Bucketize.appendBucketed(docLens, lensTable(name))
+    Bucketize.appendBucketed(post, pt)
+    Bucketize.alterTableProps(spark, pt, Nil, Seq(PendingKey))
     // ensure-managed indexes keep their content key LIVE across appends:
     // manifest-scan keys are additive over disjoint batches, so combining
     // the batch's manifest (one batch-sized aggregate) lets a later
@@ -417,14 +388,10 @@ object TextSearch {
     // mismatches the (now part-appended) corpus and forces a rebuild —
     // the safe direction. Indexes built via bare `buildIndex` carry no
     // key and skip this (no extra scan).
-    IndexManifest.stored(spark, postingsTable(name)).foreach { k =>
-      if (IndexManifest.isFilesKey(k))
-        IndexManifest.unset(spark, postingsTable(name))
-      else {
-        val bk = IndexManifest.textKey(df, textCol, IndexManifest.paramsOf(k))
-        IndexManifest.stamp(spark, postingsTable(name),
-          IndexManifest.combine(k, bk))
-      }
+    IndexManifest.stored(spark, pt).foreach { k =>
+      if (IndexManifest.isFilesKey(k)) IndexManifest.unset(spark, pt)
+      else IndexManifest.stamp(spark, pt, IndexManifest.combine(k,
+        IndexManifest.textKey(df, textCol, IndexManifest.paramsOf(k))))
     }
     docLens.unpersist()
   }
@@ -439,24 +406,17 @@ object TextSearch {
   def repair(spark: SparkSession, name: String): Unit = {
     val lens = spark.table(lensTable(name))
     val (nDocs, sumDl) = corpusStats(lens)
-    spark.sql(
-      s"ALTER TABLE `${postingsTable(name)}` SET TBLPROPERTIES (" +
-        s"'graft.bm25.nDocs' = '$nDocs', " +
-        s"'graft.bm25.sumDl' = '$sumDl')")
-    spark.sql(s"ALTER TABLE `${postingsTable(name)}` " +
-      s"UNSET TBLPROPERTIES IF EXISTS ('$PendingKey')")
+    Bucketize.alterTableProps(spark, postingsTable(name), stats(nDocs, sumDl),
+      Seq(PendingKey))
   }
 
   /** Compact an append-accumulated index into a fresh layout at `newPath`
     * (one sorted file per bucket again); the stats properties carry over,
     * so probes are plan- and result-identical — the ingest → compact
-    * rhythm shared with `DedupIndex`/`AnnIndex`.
+    * rhythm shared with `DedupIndex`/`AnnIndex` (`StandingIndex.compact`).
     */
-  def compact(spark: SparkSession, name: String, newPath: String): Unit = {
-    graft.sources.Bucketize.compact(spark, postingsTable(name),
-      s"$newPath/postings")
-    graft.sources.Bucketize.compact(spark, lensTable(name), s"$newPath/lens")
-  }
+  def compact(spark: SparkSession, name: String, newPath: String): Unit =
+    StandingIndex.compact(spark, name, newPath, "postings", "lens")
 
   // stats tuples already lens-verified this JVM (see probe's scaladoc)
   private[graft] val verifiedStats =
@@ -491,7 +451,7 @@ object TextSearch {
             queries: DataFrame, qTextCol: String, qIdCol: String,
             k: Int, k1: Double = 1.2, b: Double = 0.75,
             verifyStats: Boolean = true): DataFrame = {
-    val props = tblProps(spark, name)
+    val props = Bucketize.tableProps(spark, postingsTable(name))
     val nDocs = props("graft.bm25.nDocs").toLong
     val avgdl = props("graft.bm25.sumDl").toDouble / nDocs.toDouble
     val statsKey = s"$name:$nDocs:${props("graft.bm25.sumDl")}"
@@ -516,16 +476,13 @@ object TextSearch {
     * queries runs the same batch `probe` (same plan, exchange-free df over
     * the bucketed postings); all state lives in the index layout, not in
     * stream memory — the search-as-you-ingest twin of
-    * `DedupIndex.probeStream` / `AnnIndex.probeStream`.
+    * `DedupIndex.probeStream` / `AnnIndex.probeStream`
+    * (`StandingIndex.probeStream`).
     */
   def probeStream(stream: DataFrame, qTextCol: String, qIdCol: String,
                   name: String, k: Int)(
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(probe(batch.sparkSession, name, batch, qTextCol, qIdCol, k),
-          batchId)
-      }
-      .start()
+    StandingIndex.probeStream(stream, None,
+      b => probe(b.sparkSession, name, b, qTextCol, qIdCol, k))(sink)
 }

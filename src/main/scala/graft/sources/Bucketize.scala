@@ -91,8 +91,11 @@ object Bucketize {
   private def clusterByBucket(df: DataFrame, keys: Seq[String],
                               numBuckets: Int): DataFrame = {
     import org.apache.spark.sql.functions.col
-    if (!df.sparkSession.conf.getOption(ClusteredWriteKey).forall(_.toBoolean))
-      return df
+    val clustered = df.sparkSession.conf.getOption(ClusteredWriteKey)
+      .forall(v => v.toBooleanOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"$ClusteredWriteKey must be true or false, got '$v'")))
+    if (!clustered) return df
     val perBucket =
       df.queryExecution.optimizedPlan.stats.sizeInBytes / numBuckets
     if (perBucket > BucketBytesWarn)
@@ -112,40 +115,33 @@ object Bucketize {
                     keys: Seq[String], numBuckets: Int): Unit = {
     require(keys.nonEmpty, "bucket keys must be non-empty")
     df.sparkSession.sql(s"DROP TABLE IF EXISTS `$table`")
-    clusterByBucket(df, keys, numBuckets)
-      .write.format("parquet").mode("overwrite")
-      .option("path", path)
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
+    writer(df, keys, numBuckets, "overwrite").option("path", path)
       .saveAsTable(table)
   }
 
-  /** Append `df` to an existing bucketed table with the SAME bucket spec
-    * (Spark validates the spec against the catalog entry and refuses a
-    * mismatch loudly). Appended rows land in new per-bucket files: bucket
-    * pruning and exchange-free joins keep working — Spark just stops
-    * assuming within-bucket sortedness once a bucket has several files,
-    * which trades a local re-sort, never a shuffle. This is the
-    * accumulate-over-months half of the persisted-index story.
+  /** Append `df` to an existing bucketed table under the bucket spec
+    * recorded in the catalog — bucket columns and count both come from
+    * there, so an append cannot mismatch the layout. Appended rows land in
+    * new per-bucket files: bucket pruning and exchange-free joins keep
+    * working — Spark just stops assuming within-bucket sortedness once a
+    * bucket has several files, which trades a local re-sort, never a
+    * shuffle. This is the accumulate-over-months half of the persisted-
+    * index story.
     */
-  def appendBucketed(df: DataFrame, table: String,
-                     keys: Seq[String]): Unit = {
-    require(keys.nonEmpty, "bucket keys must be non-empty")
+  def appendBucketed(df: DataFrame, table: String): Unit = {
     require(df.sparkSession.catalog.tableExists(table),
       s"table $table does not exist — write it with writeBucketed first")
-    val numBuckets = numBucketsOf(df.sparkSession, table)
-    clusterByBucket(df, keys, numBuckets)
-      .write.format("parquet").mode("append")
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
+    val spec = bucketSpecOf(df.sparkSession, table)
+    writer(df, spec.bucketColumnNames, spec.numBuckets, "append")
       .saveAsTable(table)
   }
 
-  /** The bucket count recorded in the catalog for a bucketed table —
-    * appends read it from here so they cannot mismatch the layout.
-    */
-  def numBucketsOf(spark: SparkSession, table: String): Int =
-    bucketSpecOf(spark, table).numBuckets
+  private def writer(df: DataFrame, keys: Seq[String], numBuckets: Int,
+                     mode: String) =
+    clusterByBucket(df, keys, numBuckets)
+      .write.format("parquet").mode(mode)
+      .bucketBy(numBuckets, keys.head, keys.tail: _*)
+      .sortBy(keys.head, keys.tail: _*)
 
   private def bucketSpecOf(spark: SparkSession, table: String):
       org.apache.spark.sql.catalyst.catalog.BucketSpec =
@@ -170,9 +166,7 @@ object Bucketize {
     */
   def compact(spark: SparkSession, table: String, newPath: String): Unit = {
     val spec = bucketSpecOf(spark, table)
-    val props = spark.sql(s"SHOW TBLPROPERTIES `$table`")
-      .collect().map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft."))
+    val props = tableProps(spark, table).filter(_._1.startsWith("graft."))
     val keys = spec.bucketColumnNames
     val staging = s"${table}__compacting"
     // Pin the rewrite's scan to BUCKETED reading. By default Spark's
@@ -197,11 +191,34 @@ object Bucketize {
     try writeBucketed(spark.table(table), staging, newPath, keys,
       spec.numBuckets)
     finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    props.foreach { case (k, v) =>
-      spark.sql(s"ALTER TABLE `$staging` SET TBLPROPERTIES ('$k' = '$v')")
-    }
+    alterTableProps(spark, staging, props)
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     spark.sql(s"ALTER TABLE `$staging` RENAME TO `$table`")
+  }
+
+  /** The table's properties — the one reader of a bucketed layout's
+    * metadata (index geometry, corpus stats, staleness keys). Values of
+    * keys matching `spark.sql.redaction.string.regex` (e.g. any key
+    * containing "token") come back redacted, so graft keys avoid them.
+    */
+  def tableProps(spark: SparkSession, table: String): Map[String, String] =
+    spark.sql(s"SHOW TBLPROPERTIES `$table`").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** The one writer: SET `set` (one metastore update), then UNSET `unset`
+    * (IF EXISTS). Keys and values are embedded as single-quoted SQL
+    * literals verbatim, so both must be free of quotes and backslashes —
+    * `IndexManifest.stamp` enforces that on caller-minted keys; every
+    * other value graft writes is a number, boolean or UUID.
+    */
+  def alterTableProps(spark: SparkSession, table: String,
+                      set: Iterable[(String, Any)],
+                      unset: Iterable[String] = Nil): Unit = {
+    if (set.nonEmpty) spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
+      set.map { case (k, v) => s"'$k' = '$v'" }.mkString("(", ", ", ")"))
+    if (unset.nonEmpty) spark.sql(
+      s"ALTER TABLE `$table` UNSET TBLPROPERTIES IF EXISTS " +
+        unset.map(k => s"'$k'").mkString("(", ", ", ")"))
   }
 
   /** Number of shuffle exchanges in the (possibly adaptive) physical plan —

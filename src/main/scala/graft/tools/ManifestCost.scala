@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   *     timed region (the r14 default, kept as the opt-in),
   *   - `ensure_precomp+probe` — `precomputedKey` handed in by an ingest
   *     loop tracking its manifest additively (no scan, no listing — the
-  *     100 TB shape; pays one SHOW TBLPROPERTIES).
+  *     100 TB shape; pays one table-property read).
   * Three timed passes after one warmup, per-row medians printed plus one
   * JSON line — BASELINE.md records the table next to the standing-probe
   * medians.

@@ -68,7 +68,7 @@ class BucketizeSpec extends AnyFunSuite {
         "a fresh write must emit exactly numBuckets files")
       Bucketize.appendBucketed(
         (5001L to 9000L).map(i => (i, s"v$i")).toDF("k", "v").repartition(4),
-        "graft_bkt_files", Seq("k"))
+        "graft_bkt_files")
       assert(parquetFiles(s"$dir/t") === 8,
         "an append adds at most one file per bucket")
       // compaction: back to one sorted file per bucket, zero-shuffle
@@ -180,6 +180,15 @@ class BucketizeSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS graft_bkt_esc")
       spark.sql("DROP TABLE IF EXISTS graft_bkt_esc2")
     }
+    // a value that is neither true nor false fails the write with an error
+    // naming the key, not a bare parse error
+    val e = intercept[IllegalArgumentException] {
+      withConf(Bucketize.ClusteredWriteKey -> "yes") {
+        Bucketize.writeBucketed(df, "graft_bkt_esc3", s"$dir/t3", Seq("k"), 4)
+      }
+    }
+    assert(e.getMessage.contains(Bucketize.ClusteredWriteKey) &&
+      e.getMessage.contains("true or false"), e.getMessage)
   }
 
   test("compact leaves no autoBucketedScan pin behind when the conf was " +

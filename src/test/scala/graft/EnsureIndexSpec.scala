@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{AnnIndex, DedupIndex, IndexManifest, TextSearch}
 
@@ -256,6 +257,110 @@ class EnsureIndexSpec extends AnyFunSuite {
       "q_id", k = 3).select("q_id", "doc_id", "rank")
       .collect().map(_.toSeq).toSet
     assert(viaEnsure === oneShot)
+  }
+
+  /** One index family driven through its public lifecycle verbs — the
+    * rows of the table-driven lifecycle test below.
+    */
+  private case class Family(
+      label: String, corpus: DataFrame, batch: DataFrame, cols: Seq[String],
+      params: Int => String, primary: String => String, parts: Seq[String],
+      ensure: (DataFrame, String, String, Int) => Boolean,
+      append: (DataFrame, String) => Unit,
+      compact: (String, String) => Unit,
+      probe: String => Set[Seq[Any]])
+
+  /** Parquet files per bucket id under a bucketed table's directory
+    * (Spark names bucket files `part-…_<bucketId>.c000….parquet`).
+    */
+  private def filesPerBucket(dir: String): Map[Int, Int] = {
+    val id = """.*_(\d+)(?:\..*)?$""".r
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.endsWith(".parquet"))
+      .collect { case id(b) => b.toInt }
+      .groupBy(identity).map { case (b, fs) => b -> fs.length }
+  }
+
+  test("one lifecycle for all four index families: ensure builds, reuses, " +
+    "rebuilds on changed params; append then compact leaves one file per " +
+    "bucket with probes unchanged; stored keys keep their params format") {
+    val docs = (1L to 12L).map(i =>
+      (i, s"alpha beta w${i % 5} v${i % 3} gamma term$i delta"))
+      .toDF("doc_id", "text")
+    val docBatch = (101L to 106L).map(i =>
+      (i, s"omega psi w${i % 5} chi v${i % 3} term$i")).toDF("doc_id", "text")
+    val vecs = (1L to 12L).map(i =>
+      (i, Seq(math.cos(i * 0.5), math.sin(i * 0.5), (i % 3).toDouble / 3)))
+      .toDF("vec_id", "embedding")
+    val vecBatch = (101L to 106L).map(i =>
+      (i, Seq(math.cos(i * 0.7), math.sin(i * 0.7), (i % 2).toDouble)))
+      .toDF("vec_id", "embedding")
+    val textQs = Seq((1L, "alpha w1 term3"), (2L, "omega term102 v1"))
+      .toDF("q_id", "q_text")
+    val dupQs = Seq((901L, "alpha beta w2 v2 gamma term2 delta"),
+      (902L, "omega psi w3 chi v0 term103")).toDF("doc_id", "text")
+    val vecQs = Seq((901L, Seq(1.0, 0.2, 0.3)), (902L, Seq(-0.4, 0.9, 1.0)))
+      .toDF("vec_id", "embedding")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val families = Seq(
+      Family("bm25", docs, docBatch, Seq("text", "doc_id"), b => s"bm25:b$b",
+        TextSearch.postingsTable, Seq("postings", "lens"),
+        TextSearch.ensureIndex(_, "text", "doc_id", _, _, _),
+        TextSearch.append(_, "text", "doc_id", _),
+        TextSearch.compact(spark, _, _),
+        n => rows(TextSearch.probe(spark, n, textQs, "q_text", "q_id", k = 3))),
+      Family("dedup", docs, docBatch, Seq("text", "doc_id"),
+        b => s"mhband:n3:r2:nb8:b$b", DedupIndex.bandsTable,
+        Seq("bands", "docs"),
+        (df, n, p, b) => DedupIndex.ensure(df, "text", "doc_id", n, p,
+          numBuckets = b),
+        DedupIndex.append(_, "text", "doc_id", _),
+        DedupIndex.compact(spark, _, _),
+        n => rows(DedupIndex.probe(dupQs, "text", "doc_id", n, 0.3))),
+      Family("annlsh", vecs, vecBatch, Seq("vec_id", "embedding"),
+        b => s"annlsh:p2:t4:b$b:qfalse", AnnIndex.postingsTable,
+        Seq("postings"),
+        (df, n, p, b) => AnnIndex.ensure(df, "embedding", "vec_id", n, p,
+          planesPerTable = 2, nTables = 4, numBuckets = b),
+        AnnIndex.append(_, "embedding", "vec_id", _),
+        AnnIndex.compact(spark, _, _),
+        n => rows(AnnIndex.probe(vecQs, "embedding", "vec_id", n, k = 3))),
+      Family("annkm", vecs, vecBatch, Seq("vec_id", "embedding"),
+        b => s"annkm:k2:i2:b$b", AnnIndex.cellsTable,
+        Seq("cells", "centroids"),
+        (df, n, p, b) => AnnIndex.ensureKmeans(df, "embedding", "vec_id", n,
+          p, kClusters = 2, numBuckets = b),
+        AnnIndex.appendKmeans(_, "embedding", "vec_id", _),
+        AnnIndex.compactKmeans(spark, _, _),
+        n => rows(AnnIndex.probeKmeans(vecQs, "embedding", "vec_id", n,
+          k = 3, nProbe = 2))))
+    families.foreach { f =>
+      val dir = s"${tmp(s"graft_lc_${f.label}_src")}/corpus.parquet"
+      f.corpus.repartition(2).write.parquet(dir)
+      def rd = spark.read.parquet(dir)
+      val name = s"graft_lc_${f.label}"
+      val path = tmp(s"graft_lc_${f.label}_idx")
+      assert(f.ensure(rd, name, path, 2), s"${f.label}: first ensure builds")
+      assert(!f.ensure(rd, name, path, 2), s"${f.label}: ensure reuses")
+      // the key format predates the shared lifecycle: an index stamped
+      // before it is recognized (reused), not rebuilt
+      assert(IndexManifest.stored(spark, f.primary(name)) ===
+        Some(IndexManifest.filesKey(spark, dir, f.params(2), f.cols)), f.label)
+      assert(f.ensure(rd, name, path, 4), s"${f.label}: new params rebuild")
+      f.append(f.batch, name)
+      assert(filesPerBucket(s"$path/${f.parts.head}").values.max > 1,
+        s"${f.label}: the append must leave a bucket with several files")
+      val before = f.probe(name)
+      assert(before.nonEmpty, s"${f.label}: probe finds nothing")
+      val newPath = tmp(s"graft_lc_${f.label}_compact")
+      f.compact(name, newPath)
+      f.parts.foreach { p =>
+        val fpb = filesPerBucket(s"$newPath/$p")
+        assert(fpb.nonEmpty && fpb.values.forall(_ == 1),
+          s"${f.label}/$p: one file per bucket after compact, got $fpb")
+      }
+      assert(f.probe(name) === before, s"${f.label}: probe moved on compact")
+    }
   }
 
   test("DedupIndex.ensure / AnnIndex.ensure: reuse vs rebuild observable; " +
