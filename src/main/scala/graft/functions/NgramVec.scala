@@ -24,30 +24,41 @@ object NgramVec {
     * order, so callers can compare bytes and hex-encode only winners) or
     * read nibbles directly (hex char i = nibble i of the byte stream).
     */
-  def md5Bytes(s: String): Array[Byte] = {
+  // the Charset constant, not the name "UTF-8": a by-name lookup per
+  // call showed up in executor profiles of the minhash/simhash loops
+  def md5Bytes(s: String): Array[Byte] =
+    md5().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** This thread's pooled MD5 digest, reset — for loops that hash from
+    * their own reused byte buffers (`digest(buf, off, 16)` resets it again).
+    */
+  private[graft] def md5(): java.security.MessageDigest = {
     val md = mdPool.get()
     md.reset()
-    md.digest(s.getBytes("UTF-8"))
+    md
   }
 
-  def hex(bytes: Array[Byte]): String = {
+  def hex(bytes: Array[Byte]): String = hex(bytes, 0)
+
+  /** Lowercase hex of the 16-byte digest starting at `off`. */
+  def hex(bytes: Array[Byte], off: Int): String = {
     val out = new Array[Char](32)
     var i = 0
     while (i < 16) {
-      out(2 * i) = hexChars((bytes(i) >> 4) & 0xf)
-      out(2 * i + 1) = hexChars(bytes(i) & 0xf)
+      out(2 * i) = hexChars((bytes(off + i) >> 4) & 0xf)
+      out(2 * i + 1) = hexChars(bytes(off + i) & 0xf)
       i += 1
     }
     new String(out)
   }
 
-  /** Unsigned lexicographic compare of two 16-byte digests (== comparing
-    * their lowercase-hex encodings as strings).
+  /** Unsigned lexicographic compare of the 16-byte digests at `a(aOff)`
+    * and `b(bOff)` (== comparing their lowercase-hex encodings as strings).
     */
-  def compareDigests(a: Array[Byte], b: Array[Byte]): Int = {
+  def compareDigests(a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int): Int = {
     var i = 0
     while (i < 16) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
+      val d = (a(aOff + i) & 0xff) - (b(bOff + i) & 0xff)
       if (d != 0) return d
       i += 1
     }

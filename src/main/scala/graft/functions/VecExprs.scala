@@ -861,31 +861,48 @@ object VecExprs {
     override protected def nullSafeEval(input: Any): Any =
       compute(input.asInstanceOf[ArrayData])
 
+    /** UTF-8 bytes of each "#j" suffix, built once per expression. */
+    @transient private lazy val suffixes: Array[Array[Byte]] =
+      Array.tabulate(k)(j => s"#$j".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
     def compute(shingles: ArrayData): ArrayData = {
       val n = shingles.numElements()
-      // compare RAW digests (unsigned byte order == lowercase-hex string
-      // order) and hex-encode only the k winners: the hot loop does
-      // n*k digests but zero hex strings and no per-call MessageDigest
-      val mins = new Array[Array[Byte]](k)
-      var i = 0
-      while (i < n) {
-        val s = shingles.getUTF8String(i).toString
-        var j = 0
-        while (j < k) {
-          val h = NgramVec.md5Bytes(s + "#" + j)
-          if (mins(j) == null || NgramVec.compareDigests(h, mins(j)) < 0)
-            mins(j) = h
-          j += 1
-        }
-        i += 1
-      }
       // empty shingle set -> null signature elements would break the
       // non-null contract; emit the empty array instead (no shingles, no
       // bands, doc never collides — same as the aggregate form which
       // produced no row for an empty posting)
-      if (n == 0) new GenericArrayData(Array.empty[Any])
-      else new GenericArrayData(mins.map(b =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(NgramVec.hex(b)): Any))
+      if (n == 0) return new GenericArrayData(Array.empty[Any])
+      // compare RAW digests (unsigned byte order == lowercase-hex string
+      // order) and hex-encode only the k winners. The n*k digests run on
+      // reused buffers: each shingle's UTF-8 bytes are written into `buf`
+      // once, the "#j" suffix is appended in place behind them, every
+      // digest lands in the one `dig` array, and it is copied into `mins`
+      // only when it is a new minimum — no per-digest String or array.
+      val md = NgramVec.md5()
+      val dig = new Array[Byte](16)
+      val mins = new Array[Byte](16 * k)
+      var buf = new Array[Byte](64)
+      var i = 0
+      while (i < n) {
+        val s = shingles.getUTF8String(i)
+        val len = s.numBytes()
+        // 12 bytes fit '#' plus any Int's decimal digits
+        if (buf.length < len + 12) buf = new Array[Byte](2 * (len + 12))
+        s.writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET)
+        var j = 0
+        while (j < k) {
+          val suf = suffixes(j)
+          System.arraycopy(suf, 0, buf, len, suf.length)
+          md.update(buf, 0, len + suf.length)
+          md.digest(dig, 0, 16)
+          if (i == 0 || NgramVec.compareDigests(dig, 0, mins, 16 * j) < 0)
+            System.arraycopy(dig, 0, mins, 16 * j, 16)
+          j += 1
+        }
+        i += 1
+      }
+      new GenericArrayData(Array.tabulate[Any](k)(j =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(NgramVec.hex(mins, 16 * j))))
     }
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {

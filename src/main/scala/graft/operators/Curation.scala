@@ -236,7 +236,9 @@ object Curation {
     * pruned independently, because one `Recipe.pipelineFull` run writes
     * one leaf of EACH and `keepLast = 1` must keep that run whole. A
     * recurring 100 TB pipeline sharing a checkpointDir otherwise
-    * accumulates one narrow-row-per-doc parquet per run forever.
+    * accumulates one narrow-row-per-doc parquet per run forever. (The
+    * `recipe_input_verdicts_*` stage leaf `pipelineFull` writes is deleted
+    * before it returns; one left by a crashed run prunes as its own family.)
     *
     * Only call between runs: a pruned leaf invalidates any STILL-LIVE
     * frame returned by the run that wrote it (reads are lazy — the

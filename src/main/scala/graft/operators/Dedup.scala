@@ -194,18 +194,24 @@ object Dedup {
   /** Per-bucket auto-routed candidate generation shared by the "auto"
     * modes: ONE aggregate over the posting list computes each bucket's
     * (min id, size) — both partial-aggregable, so a flooded bucket
-    * pre-collapses map-side — then buckets at or under `cap` members
+    * pre-collapses map-side wherever the aggregate plans its own exchange
+    * (minhashLshPairs hands it postings already partitioned on the band,
+    * and it aggregates in place) — then buckets at or under `cap` members
     * self-join into exact all-pairs (≤ cap candidates per posting row:
     * linear overall) while oversized buckets emit only (hub, member)
     * edges. All four frames key on the SAME bucket columns, so the plan
     * is one exchange reused across the stats aggregate, the stats join,
-    * and the small-bucket self-join.
+    * and the small-bucket self-join. The size counts `id`, not `1`: a
+    * null-id row can never pair, and the `id` reference keeps the
+    * small-bucket branch (which prunes `__hub`) reading the same
+    * (id, bucket) columns as every other consumer — a count(1) let
+    * column pruning hand that branch a different, unreusable exchange.
     */
   private def autoBucketPairs(posting: DataFrame, bucketCols: Seq[String],
                               cap: Int): DataFrame = {
     val keys = bucketCols.map(col)
     val stats = posting.groupBy(keys: _*)
-      .agg(min(col("id")).as("__hub"), count(lit(1)).as("__n"))
+      .agg(min(col("id")).as("__hub"), count(col("id")).as("__n"))
     val joined = posting.join(stats, bucketCols)
     val small = joined.filter(col("__n") <= cap)
       .select(keys :+ col("id"): _*)
@@ -270,19 +276,23 @@ object Dedup {
     // signature computation (16 md5s x every shingle) serialized on one
     // core (2.6s of a 3.0s query) while the cluster idled. Shuffling the
     // raw (id, text) first means every consumer of the reused exchange
-    // computes its per-doc work across all partitions: both band-join
-    // sides recompute the (now parallel, ~0.1s) signatures, both
-    // verification joins recompute shingles, and the exchange is also
-    // hash-partitioned on id — exactly the partitioning the verification
-    // joins require.
+    // computes its per-doc work across all partitions: the signatures
+    // (once — see `banded`) and the shingles of both verification joins;
+    // the exchange is also hash-partitioned on id — exactly the
+    // partitioning the verification joins require.
     // Null docs are dropped on the CHEAP input column, pre-exchange — a
     // `filter(sig.isNotNull)` here got predicate-pushed through the
     // repartition INTO THE SCAN, computing the entire signature in the
     // scan's single task just to test null-ness (and again above the
     // exchange): the pushdown that usually helps turned the fix inside out.
     // sig is null exactly when text is null, so the filters are equivalent.
+    // Null ids go too: they can never pass an `a < b` pair filter, and the
+    // optimizer would otherwise infer that isnotnull(id) on some band
+    // consumers only (star's streamed side, not its hub aggregate), giving
+    // the band exchange two different children that cannot be reused.
     val raw = df.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .filter(col(textCol).isNotNull)
+      .filter(col(textCol).isNotNull && col(idCol).isNotNull)
+    val nSpread = graft.ops.Partitions.cpuSpread(raw)
     val base = raw
       // explicit partition COUNT: a bare repartition(col) is
       // REPARTITION_BY_COL, which AQE freely coalesces back to one
@@ -290,7 +300,7 @@ object Dedup {
       // spreading CPU (hashing), not bytes (same as embeddingCosinePairs);
       // the count itself is size-gated (Partitions.cpuSpread) so a tiny
       // vocabulary doesn't pay full-width shuffle overhead
-      .repartition(graft.ops.Partitions.cpuSpread(raw), col("id"))
+      .repartition(nSpread, col("id"))
     val sigs = base.select(col("id"),
         graft.functions.VecExprs.minhashSig(
           graft.functions.VecExprs.tokenShingles(col("__text"), n), k).as("sig"))
@@ -303,12 +313,28 @@ object Dedup {
     // would share the constant band md5("<b>:") and pair QUADRATICALLY.
     // Unreachable via tokenShingles (always >= 1 shingle) but the guard
     // makes the documented no-collision contract hold for any caller.
+    // The band postings sit behind ONE explicit exchange keyed on `band`,
+    // so every consumer below (both sides of the "all" self-join, star's
+    // hub aggregate and join, auto's stats, join and self-join) is
+    // already co-partitioned on the bucket and reads the same reused
+    // shuffle: MinhashSig runs once per document, where a consumer that
+    // plans its own band exchange over `base` recomputes the k md5s per
+    // shingle (PlanShapeSpec pins one evaluation per plan). Explicit count
+    // for the same AQE-coalescing reason as `base`. The trade: AQE splits
+    // skewed join partitions only on exchanges it planned itself, so a
+    // flooded bucket stays one task. Star and auto emit O(bucket) rows
+    // from it; on the copies corpus (every bucket a flood) star and auto
+    // ran faster at 100x, and all three modes at 10x, than with
+    // per-consumer band exchanges.
     val banded = sigs.select(col("id"),
-      explode(array(bandExprs(col("sig"), rowsPerBand, nBands): _*)).as("band"))
+        explode(array(bandExprs(col("sig"), rowsPerBand, nBands): _*)).as("band"))
+      .repartition(nSpread, col("band"))
     val cand = bandPairs match {
       case "star" =>
-        // one map-side-combined min per bucket (skew-proof: a million-copy
-        // bucket pre-collapses per partition), then O(bucket) hub edges
+        // one min per bucket, aggregated in place on the band exchange
+        // (the join below needs every bucket in one partition anyway),
+        // then O(bucket) hub edges: a million-copy bucket is one task's
+        // linear work, never a quadratic one
         val hubs = banded.groupBy(col("band")).agg(min(col("id")).as("id_a"))
         banded.join(hubs, Seq("band"))
           .filter(col("id_a") < col("id"))

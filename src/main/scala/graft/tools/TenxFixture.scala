@@ -23,9 +23,10 @@ object TenxFixture {
     val outDir = args.headOption.getOrElse("/tmp/graft-sf10x")
     val nCopies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -59,9 +60,9 @@ object TenxFixture {
     // contrast measures the layout, not the engine (guide §2.5 input
     // skew; r17 measured exactly this: a 32-task sketch stage whose
     // total task time equaled one task's wall). Spread each table over
-    // a deterministic hash layout before writing.
+    // a deterministic hash layout before writing, one file per core.
     def spread(df: org.apache.spark.sql.DataFrame, key: String) =
-      df.repartition(32, col(key))
+      df.repartition(cpus.toInt, col(key))
 
     spread(spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("*"), copies)

@@ -238,6 +238,21 @@ class PlanShapeSpec extends AnyFunSuite {
       s"unexpected shuffle keys $keys:\n$plan")
   }
 
+  test("minhashLshPairs evaluates MinhashSig once per plan in every " +
+    "bandPairs mode") {
+    // the band postings sit behind one exchange that every candidate
+    // consumer reuses; a consumer that plans its own band exchange over
+    // the id-partitioned text recomputes the signatures on its side
+    val docs = TestSpark.table("documents")
+    for (mode <- Seq("all", "star", "auto")) {
+      val plan = finalPlan(graft.operators.Dedup.minhashLshPairs(docs,
+        "text", "doc_id", bandPairs = mode))
+      val evals = "(?i)minhashsig\\(".r.findAllIn(plan).length
+      assert(evals === 1,
+        s"bandPairs=$mode evaluates MinhashSig $evals times:\n$plan")
+    }
+  }
+
   test("registry sweep: no shuffle cartesian product in any registered query") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.VecExprs
-import graft.operators.{Decontaminate, Dedup, TextAnalysis}
+import graft.operators.{Decontaminate, Dedup, Recipe, TextAnalysis}
 
 /** Training-data curation operators added in round 7's second half:
   * repetition quality signals, benchmark decontamination, semantic
@@ -466,6 +466,82 @@ class TrainingDataSpec extends AnyFunSuite {
         epochs = Map.empty, maxGroupRows = 4L).count()
     }
     assert(e3.getMessage.contains("packSubShards"), e3.getMessage)
+  }
+
+  /** q_pipeline_full's settings: bench = every 17th doc, corpus = the rest. */
+  private def pipelineFull(docs: org.apache.spark.sql.DataFrame,
+                           checkpointDir: String = "") =
+    graft.operators.Recipe.pipelineFull(
+      docs.filter($"doc_id" % 17 =!= 0), docs.filter($"doc_id" % 17 === 0),
+      "text", "doc_id", "source",
+      budgets = Map("src0" -> 150L, "src1" -> 250L),
+      epochs = Map("src0" -> 2.45, "src1" -> 0.6, "src3" -> 0.0),
+      decontaminateN = 4, lmVocabSize = 20, lmMinCount = 2L,
+      lmMaxBigrams = 300, lmMaxNll = 7.0, minMeanMicro = -1300000L,
+      checkpointDir = checkpointDir)
+
+  /** Rows as sorted strings, doubles rounded past the last digit an
+    * aggregation order could move.
+    */
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map { c =>
+        if (df.schema(c).dataType == org.apache.spark.sql.types.DoubleType)
+          round(col(c), 9).as(c)
+        else col(c)
+      }: _*)
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** The fixture documents as a lazy join — an input pipelineFull stages
+    * (a bare table scan is read as is).
+    */
+  private def joinedDocs(): org.apache.spark.sql.DataFrame = {
+    val t = TestSpark.table("documents")
+    t.select($"doc_id", $"text").join(t.select($"doc_id", $"source"), "doc_id")
+  }
+
+  test("Recipe.pipelineFull stages a joined or aggregated input, not a " +
+    "bare scan") {
+    val t = TestSpark.table("documents")
+    assert(!Recipe.carriesUpstreamWork(t.filter($"doc_id" % 17 =!= 0)
+      .select($"doc_id", $"text")))
+    assert(Recipe.carriesUpstreamWork(joinedDocs()))
+    assert(Recipe.carriesUpstreamWork(t.groupBy($"source").count()))
+  }
+
+  test("Recipe.pipelineFull: a lazily joined input gives the rows of the " +
+    "same input read from a table") {
+    val lazyDocs = joinedDocs()
+    val dir = java.nio.file.Files.createTempDirectory("graft_recipe_in")
+    val path = dir.resolve("docs.parquet").toString
+    lazyDocs.write.parquet(path)
+    val expected = rowSet(pipelineFull(spark.read.parquet(path)))
+    assert(expected.nonEmpty)
+    assert(rowSet(pipelineFull(lazyDocs)) === expected)
+  }
+
+  test("Recipe.pipelineFull with a checkpointDir leaves exactly its two " +
+    "verdict leaves, and the returned frame still collects") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_recipe_ck").toFile
+    val out = pipelineFull(joinedDocs(), dir.toString)
+    val leaves = dir.listFiles().map(_.getName).toSeq
+    assert(leaves.count(_.startsWith("curation_verdicts_")) === 1, leaves)
+    assert(leaves.count(_.startsWith("recipe_verdicts_")) === 1, leaves)
+    assert(leaves.length === 2, leaves)
+    assert(out.collect().nonEmpty)
+  }
+
+  test("Recipe.pipelineFull without a checkpointDir leaves nothing " +
+    "persisted but local checkpoints") {
+    // the verdict frames (and the LM model state) are local checkpoints;
+    // the staged input and compose's base are plain persists that must be
+    // released before the call returns
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = pipelineFull(joinedDocs())
+    val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(added.nonEmpty && added.values.forall(_.isCheckpointed),
+      added.values.map(_.toDebugString).mkString("\n"))
+    assert(out.collect().nonEmpty)
   }
 
   test("Curation.sweep scoreCol (r13): the exact-dedup keeper is the " +

@@ -87,6 +87,26 @@ class VecExprsSpec extends AnyFunSuite {
         Text.minhashSignature(Text.shingleSet(col("text"), 3), 4).as("slow"))
     edge.collect().foreach(r =>
       assert(r.getSeq[String](0) === r.getSeq[String](1)))
+    // non-ASCII text through the shingler (normalization keeps only
+    // [a-z0-9] tokens) and, fed directly, multi-byte UTF-8 shingles (2-,
+    // 3- and 4-byte code points) with a double-digit "#j" suffix range:
+    // the loop hashes each shingle's UTF-8 bytes with the suffix appended
+    // in place, which must equal the SQL md5 over concat(shingle, '#', j)
+    val texts = Seq("café naïve 東京 タワー déjà vu",
+      "emoji 🙂 text 🚀 über straße ΑΒΓ δεζ",
+      "plain ascii words for the long tail of the loop")
+    val viaText = texts.toDF("text")
+      .select(VecExprs.minhashSig(
+          VecExprs.tokenShingles(col("text"), 3), 32).as("fast"),
+        Text.minhashSignature(Text.shingleSet(col("text"), 3), 32).as("slow"))
+    val direct = texts.toDF("text")
+      .select(split(col("text"), " ").as("sh"))
+      .select(VecExprs.minhashSig(col("sh"), 32).as("fast"),
+        Text.minhashSignature(col("sh"), 32).as("slow"))
+    (viaText.collect() ++ direct.collect()).foreach { r =>
+      assert(r.getSeq[String](0).length === 32)
+      assert(r.getSeq[String](0) === r.getSeq[String](1))
+    }
   }
 
   test("PostingPairs matches the composed nested-transform pair generation") {
