@@ -1,34 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.plans.Json
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // The generated-class cache defaults to 100 entries (static conf).
-      // The registry's ~190 queries compile far more whole-stage-codegen
-      // units than that, so by the time the timed pass reaches a query its
-      // warmup-compiled classes are evicted and the timed section pays
-      // Janino compilation plus a cold (interpreted-until-C2) first run —
-      // the exact one-off the untimed warmup pass exists to exclude (on a
-      // cluster, codegen+JIT is a per-executor constant). Single-sourced
-      // from the engine's session recipe (graft.Sessions, r17) so users
-      // get the measured behavior too; env-overridable for A/B.
-      .config(Sessions.CodegenCacheKey,
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE",
-          Sessions.CodegenCacheEntries))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+    val spark = Sessions.local()
     // Optional comma-separated name filter for isolated re-timing of a few
     // queries (perf iteration); the driver never sets it, so its runs always
     // time the full registry.
@@ -36,11 +11,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    def clearState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // SERVER mode (r14): a line protocol over stdin so an external
     // orchestrator (tools/bench_interleaved.py) can alternate ONE warm
     // JVM's per-query timings with the DuckDB oracle's — interleaving
@@ -65,10 +35,10 @@ object Bench {
           case (_, None) => println(s"GRAFT_BENCH ERR $nm unknown-query")
           case ("warm", Some(fn)) =>
             try fn(spark, sfDir).count() catch { case _: Throwable => () }
-            clearState()
+            Sessions.clearState(spark)
             println(s"GRAFT_BENCH OK $nm")
           case ("time", Some(fn)) =>
-            clearState(); System.gc()
+            Sessions.clearState(spark)
             val t0 = System.nanoTime()
             try {
               fn(spark, sfDir).count()
@@ -98,7 +68,7 @@ object Bench {
     // still absorbed its own warmup and corrupted cross-round comparison.)
     ordered.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      clearState()
+      Sessions.clearState(spark)
     }
     // A failed query must never read as a fast time: it is emitted as null
     // in `queries` (consumers summing timings skip it) and its error surfaces
@@ -119,8 +89,7 @@ object Bench {
       // timed section, so the previous query's storage/heap debt is not
       // billed to this one — the DuckDB oracle baseline runs every query in
       // a fresh process, this is the same discipline.
-      clearState()
-      System.gc()
+      Sessions.clearState(spark)
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -172,9 +141,9 @@ object Bench {
     }
     def queryJson(entries: Seq[(String, Option[Double])],
                   f: Double => String): String = entries.map { case (k, v) =>
-      s"\"" + esc(k) + "\":" + v.fold("null")(f)
+      Json.str(k) + ":" + v.fold("null")(f)
     }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"\"${esc(k)}\":\"${esc(v)}\"" }
+    val errJson = errors.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }
       .mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
     // pass_ok: how many of the `passes` runs each median summarizes —
@@ -182,7 +151,7 @@ object Bench {
     // task 3); a query that failed some passes is visible here without
     // digging through errors
     val passOk = ordered.map { case (name, _) =>
-      s"\"${esc(name)}\":" + allPasses.count(_.exists {
+      s"${Json.str(name)}:" + allPasses.count(_.exists {
         case (n, t) => n == name && t.isDefined })
     }.mkString("{", ",", "}")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"),

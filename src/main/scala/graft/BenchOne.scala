@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev helper: time ONE query at a given SF dir, with an untimed warmup of
   * the same query (JVM/codegen/parquet-footer costs excluded — mirrors
@@ -11,32 +10,14 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // match Bench: hold every generated class of warmup+timed runs
-      // (single-sourced from the engine's session recipe, graft.Sessions)
-      .config(Sessions.CodegenCacheKey,
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE",
-          Sessions.CodegenCacheEntries))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val fn = SparkEntry.queries(name)
     // warmup on the tiny SF so caches/codegen warm without masking the run
     try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
     val times = (1 to reps).map { _ =>
-      // same per-query discipline as Bench: drop cached plans AND persisted
-      // blocks (localCheckpoint leftovers), let GC run outside the timed
-      // section — otherwise rep N is billed for rep N-1's storage debt
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
+      // same per-query discipline as Bench: rep N must not be billed for
+      // rep N-1's storage debt
+      Sessions.clearState(spark)
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9

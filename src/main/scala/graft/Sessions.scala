@@ -20,6 +20,9 @@ import org.apache.spark.sql.SparkSession
   * registry. The cache holds compiled CLASSES for plan fragments, never
   * data or results; cost is bounded metaspace (~10-100 KB per class). On
   * a cluster the same setting applies per executor JVM.
+  *
+  * `local` is the one session recipe every main and the test suite build
+  * their local session from.
   */
 object Sessions {
 
@@ -29,7 +32,7 @@ object Sessions {
   val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
 
   /** Sized to hold every codegen unit of a ~200-query registry with room
-    * to spare; the bench honors `SPARK_GRAFT_CODEGEN_CACHE` to A/B it.
+    * to spare.
     */
   val CodegenCacheEntries = "8000"
 
@@ -44,4 +47,48 @@ object Sessions {
     */
   def tuned(builder: SparkSession.Builder): SparkSession.Builder =
     recommended.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+
+  /** Core count of a local session: `SPARK_GRAFT_CPUS`, else the host's
+    * processors.
+    */
+  private def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCpus(value: Option[String]): Int = value match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  /** The local session: `local[cores]` with as many shuffle partitions,
+    * UTC, no UI, AQE, nanosecond parquet timestamps read as longs (the
+    * events fixture), no TIMESTAMP_NTZ inference, and the recommended
+    * confs; `extra` adds or overrides confs. Log level WARN.
+    */
+  def local(cores: Int = cpus,
+            extra: Map[String, String] = Map.empty): SparkSession = {
+    val confs = recommended ++ Map(
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") ++ extra
+    val spark = confs.foldLeft(SparkSession.builder().master(s"local[$cores]")) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Drop every cached plan and persisted block, then let a GC cycle run:
+    * the state one query or rep leaves behind must not be billed to the
+    * next.
+    */
+  def clearState(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
 }

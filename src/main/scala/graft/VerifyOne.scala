@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.plans.Json
 import java.nio.file.{Files, Paths}
 
 /** Dev helper: dump one or more queries (+ their oracle entries) for
@@ -10,31 +10,14 @@ object VerifyOne {
   def main(args: Array[String]): Unit = {
     val Array(namesArg, sfDir, outDir) = args
     val names = namesArg.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val entries = names.flatMap(n =>
-      SparkEntry.oracleSql.get(n).map(sql => s"${q(n)}: ${q(sql)}"))
+      SparkEntry.oracleSql.get(n).map(sql => s"${Json.str(n)}: ${Json.str(sql)}"))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       entries.mkString("{", ", ", "}"))
     spark.stop()

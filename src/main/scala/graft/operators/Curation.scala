@@ -308,9 +308,9 @@ object Curation {
     val base = sweep(docs, bench, textCol, idCol, decontaminateN,
         dedupScoreCol)
       .withColumnRenamed("kept", "__base_kept")
-    val lm = NgramLm.fitScore(docs, textCol, Seq(idCol),
-        vocabSize = lmVocabSize, minCount = lmMinCount,
-        maxBigrams = lmMaxBigrams)
+    val model = NgramLm.fit(docs, textCol, vocabSize = lmVocabSize,
+      minCount = lmMinCount, maxBigrams = lmMaxBigrams)
+    val lm = NgramLm.score(model, docs, textCol, Seq(idCol))
       .select(col(idCol), col("avg_nll"))
     val curatedPlan = base
       .join(lm, Seq(idCol))
@@ -341,6 +341,10 @@ object Curation {
         curatedPlan.write.mode("overwrite").parquet(path)
         docs.sparkSession.read.parquet(path)
       } else curatedPlan.localCheckpoint(true)
+    // the LM model's two checkpoints are read only by `lm`, which `curated`
+    // has materialized: free them now rather than when the ContextCleaner
+    // collects the model
+    Dedup.releaseCheckpoints(model.vocab, model.bigrams)
     val mixed = Mix.temperatureFlag(
         curated.filter(col("curated")).select(col(idCol), col(sourceCol)),
         sourceCol, Seq(idCol), mixTemperature, mixTargetFrac, seed)

@@ -622,8 +622,7 @@ object Dedup {
         col("is_dup"))
       else verdict.select(col("vec_id"), col("is_dup"))
     val mat = out.localCheckpoint() // eager: verdicts materialized here
-    assigned.rdd.unpersist(false)
-    c.rdd.unpersist(false)
+    releaseCheckpoints(assigned, c)
     mat
   }
 
@@ -729,13 +728,13 @@ object Dedup {
   def connectedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame =
     connectedComponentsTracked(vertices, pairs)._1
 
-  /** As `connectedComponents`, also returning the RDD ids of the final
-    * label frame's checkpoint blocks — the caller that materializes a
-    * downstream result can free EXACTLY those (and nothing a concurrent
-    * driver thread may have registered meanwhile).
+  /** As `connectedComponents`, also returning the final label frame's
+    * checkpoint — the caller that materializes a downstream result frees
+    * EXACTLY it with `releaseCheckpoints` (and nothing a concurrent driver
+    * thread may have registered meanwhile).
     */
   private[operators] def connectedComponentsTracked(
-      vertices: DataFrame, pairs: DataFrame): (DataFrame, Set[Int]) = {
+      vertices: DataFrame, pairs: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
     // both directions from ONE pass over `pairs`: a union of two selects
     // would evaluate the (expensive, self-join-shaped) pair pipeline twice
@@ -746,7 +745,6 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val idType = pairs.schema("id_a").dataType
-    val sc = pairs.sparkSession.sparkContext
     // Only vertices that touch an edge can ever change label — everything
     // else is trivially its own singleton component. Iterating over the
     // edge-touched set only keeps every per-iteration shuffle proportional
@@ -757,23 +755,17 @@ object Dedup {
     // localCheckpoint truncates the logical plan each iteration — without it
     // the lineage doubles per step and plan compilation blows up after ~8
     // iterations. Each checkpoint pins its partitions in the block manager,
-    // so the PREVIOUS iteration's blocks are freed explicitly once the next
-    // one is materialized (tracked via getPersistentRDDs — public API) —
-    // otherwise diameter-many copies of the label frame accumulate.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val out = df.localCheckpoint() // eager: materialized here
-      // exact backing-rdd id (no snapshot diffing — a concurrent driver
-      // thread's blocks must never be attributed to this checkpoint)
-      (out, org.apache.spark.sql.GraftBridge.checkpointedRddId(out).toSet)
-    }
+    // so the PREVIOUS iteration's checkpoint is freed explicitly once the
+    // next one is materialized — otherwise diameter-many copies of the
+    // label frame accumulate.
     // Initial label = min over {self} ∪ direct neighbors — the same single
     // hash aggregate a distinct() init would cost, but it IS the first
     // message-passing round, so every call converges one join+checkpoint
     // iteration earlier (a 2-clique settles in one loop round).
-    var (labels, liveBlocks) = checkpointTracked(
-      edges.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
-        .select(col("src").as("id"),
-          least(col("src"), col("__mn")).as("label")))
+    var live = edges.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
+      .select(col("src").as("id"), least(col("src"), col("__mn")).as("label"))
+      .localCheckpoint() // eager: materialized here
+    var labels = live
     // ONE join + ONE aggregate per propagation round (min-label message
     // passing): neighbor messages carry the sender's label, each vertex also
     // sends itself its current label tagged in `self` — min(label) is the
@@ -799,20 +791,20 @@ object Dedup {
       // aggregate appears twice in round 2's plan (join side + self side);
       // its shuffle exchange is reused, not recomputed.
       val mid = propagate(labels).select(col("id"), col("label"))
-      val (next, newBlocks) = checkpointTracked(propagate(mid))
+      val next = propagate(mid).localCheckpoint()
       // isEmpty short-circuits on the first changed row (limit-1 over the
       // checkpointed frame) — a full count aggregate only ever runs on the
       // final (converged) iteration, where the frame is scanned once anyway
       val anyChanged = !next.filter(col("label") < col("old")).isEmpty
-      liveBlocks.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-      liveBlocks = newBlocks
+      releaseCheckpoints(live)
+      live = next
       labels = next.select(col("id"), col("label"))
       converged = !anyChanged
     }
     edges.unpersist()
     val out = vertices.select(col("id")).join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    (out, liveBlocks)
+    (out, live)
   }
 
   /** The reference's `deduplicate` contract (skrub/_deduplicate.py:15-285):
@@ -829,8 +821,10 @@ object Dedup {
     * (a lineage-truncated localCheckpoint, |distinct values| rows) so every
     * intermediate this call owns is freed before returning. The checkpoint
     * block is released when the frame is garbage-collected (ContextCleaner)
-    * or explicitly via `df.rdd.unpersist()`; it cannot be recomputed after
-    * executor loss — re-run the call in that case.
+    * or explicitly by unpersisting the RDD `GraftBridge.checkpointedRddId`
+    * names (`df.rdd` is a new RDD on top of the checkpoint; unpersisting
+    * it frees nothing); it cannot be recomputed after executor loss —
+    * re-run the call in that case.
     */
   /** `candidates = "auto"` routes to the minhash-band generator above
     * EITHER gate: the exact inverted index's pair amplification (each pair
@@ -864,7 +858,6 @@ object Dedup {
     require(Set("auto", "jaccard", "minhash").contains(candidates),
       s"candidates must be auto|jaccard|minhash, got $candidates")
     val spark = df.sparkSession
-    val sc = spark.sparkContext
     val vals = df.filter(col(c).isNotNull).groupBy(col(c).as("v"))
       .agg(count(lit(1)).as("freq"))
       .withColumn("id", md5(col("v")))
@@ -967,7 +960,7 @@ object Dedup {
       vals.unpersist(blocking = false)
       mat
     } else {
-      val (labels, labelBlocks) =
+      val (labels, labelCheckpoint) =
         connectedComponentsTracked(vals.select(col("id")), pairs)
       val labeled = vals.join(labels, Seq("id"))
       // cluster representative (most frequent member, ties -> smallest value)
@@ -986,12 +979,23 @@ object Dedup {
       // dead storage, and blocks registered by concurrent driver threads are
       // never touched.
       val mat = out.localCheckpoint()
-      labelBlocks.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+      releaseCheckpoints(labelCheckpoint)
       vals.unpersist(blocking = false)
       mat
     }
   }
+
+  /** Free the local-checkpoint blocks behind `frames`, by the RDD id each
+    * checkpoint registered (no snapshot diffing — a concurrent driver
+    * thread's blocks are never touched). `df.rdd.unpersist()` would free
+    * nothing: `Dataset.rdd` is a new RDD on top of the checkpoint.
+    */
+  private[graft] def releaseCheckpoints(frames: DataFrame*): Unit =
+    frames.foreach { df =>
+      org.apache.spark.sql.GraftBridge.checkpointedRddId(df).foreach(id =>
+        df.sparkSession.sparkContext.getPersistentRDDs.get(id)
+          .foreach(_.unpersist(blocking = false)))
+    }
 
   /** L2-normalize a float array column (double arithmetic). */
   def normalized(vec: Column): Column =

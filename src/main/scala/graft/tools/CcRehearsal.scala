@@ -1,10 +1,7 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.Dedup
 
 /** Evidence tool for the canonical-map connected-components paths at Nx
   * scale (r17 verdict task 7): run `Dedup.deduplicate` over the SAME
@@ -12,9 +9,11 @@ import org.apache.spark.sql.functions._
   * (pair graph collected when it fits under maxDriverPairs) and once with
   * `maxDriverPairs = 0`, which forces the distributed min-label-
   * propagation loop — and report wall time, job count, and total shuffle
-  * read/write bytes for each, plus the pair-graph size that drives the
-  * routing. The two variants must return identical translation maps
-  * (asserted here), so the comparison is purely about the CC mechanism.
+  * read/write bytes for each, plus the candidate generator deduplicate's
+  * auto route picks and the size of the pair graph it yields (which
+  * drives the CC routing). The two variants must return identical
+  * translation maps (asserted here), so the comparison is purely about
+  * the CC mechanism.
   *
   * Usage: runMain graft.tools.CcRehearsal [corpusDir] [textCol]
   *        (default /tmp/graft-sf10x, "text"; reads documents.parquet)
@@ -23,67 +22,39 @@ object CcRehearsal {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-sf10x")
     val textCol = if (args.length > 1) args(1) else "text"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config(graft.Sessions.CodegenCacheKey, graft.Sessions.CodegenCacheEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
 
-    val jobs = new AtomicInteger()
-    val shufR = new AtomicLong()
-    val shufW = new AtomicLong()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        shufR.addAndGet(e.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead)
-        shufW.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-
-    def clear(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
     def run(label: String, maxDriverPairs: Int): Array[org.apache.spark.sql.Row] = {
-      clear()
-      jobs.set(0); shufR.set(0); shufW.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val out = graft.operators.Dedup.deduplicate(docs, textCol,
-        minJaccard = 0.4, maxDriverPairs = maxDriverPairs)
-      val rows = out.collect()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(300)
-      println(f"CCREHEARSAL $label wall=$wall%.2f s jobs=${jobs.get()} " +
-        f"shufR=${shufR.get() / 1e6}%.1f MB shufW=${shufW.get() / 1e6}%.1f MB " +
+      graft.Sessions.clearState(spark)
+      val m = graft.obs.Collector.measure(spark) {
+        val out = Dedup.deduplicate(docs, textCol, minJaccard = 0.4,
+          maxDriverPairs = maxDriverPairs)
+        (out, out.collect())
+      }
+      val (out, rows) = m.result
+      println(f"CCREHEARSAL $label wall=${m.wallS}%.2f s jobs=${m.jobs.size} " +
+        f"shufR=${m.shuffleRead / 1e6}%.1f MB shufW=${m.shuffleWrite / 1e6}%.1f MB " +
         s"rows=${rows.length}")
-      out.rdd.unpersist(false)
+      Dedup.releaseCheckpoints(out)
       rows
     }
 
-    // pair-graph size (the routing driver): same generator deduplicate uses
-    val nPairs = {
-      val vals = docs.filter(col(textCol).isNotNull)
-        .groupBy(col(textCol).as("text"))
-        .agg(count(lit(1)).as("freq"))
-        .withColumn("id", md5(col("text")))
-      graft.operators.Dedup.minhashLshPairs(vals, "text", "id",
-        n = 3, minJaccard = 0.4).count()
-    }
-    println(s"CCREHEARSAL pair-graph edges=$nPairs (driver path taken when <= 1000000)")
+    // pair-graph size (the routing driver): the generator deduplicate's
+    // auto route picks from the same distinct-value stats
+    val vals = docs.filter(col(textCol).isNotNull)
+      .groupBy(col(textCol).as("text"))
+      .agg(count(lit(1)).as("freq"))
+      .withColumn("id", md5(col("text")))
+    val st = vals.agg(count(lit(1)), sum(length(col("text")))).head()
+    val minhash = Dedup.autoRoutesToMinhash(st.getLong(0),
+      if (st.isNullAt(1)) 0L else st.getLong(1))
+    val nPairs = (if (minhash) Dedup.minhashLshPairs(vals, "text", "id",
+        n = 3, minJaccard = 0.4)
+      else Dedup.ngramJaccardPairs(vals, "text", "id", n = 3,
+        minJaccard = 0.4)).count()
+    println(s"CCREHEARSAL generator=${if (minhash) "minhash" else "jaccard"} " +
+      s"pair-graph edges=$nPairs (driver path taken when <= 1000000)")
 
     // warmup (codegen/JIT for both paths)
     run("warmup-driver", maxDriverPairs = 1000000)

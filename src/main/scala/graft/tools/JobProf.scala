@@ -1,14 +1,15 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
+import graft.obs.Collector
 
 /** Per-job/per-stage wall attribution for ONE registered query (evidence
   * tool, not part of the driver contract): runs the query once untimed
-  * (codegen/JIT warmup, same discipline as Bench), then once instrumented,
-  * and prints every Spark job of the timed run with its wall time, stage
-  * count, task count, and the job group/description when set — the "where
-  * do the N seconds go" table guide §1.1 starts from when there is no UI.
+  * (codegen/JIT warmup, same discipline as Bench), then once instrumented
+  * through `graft.obs.Collector`, and prints every Spark job of the timed
+  * run with its wall time, stage count, task count and description, and
+  * under it every stage it ran — the "where do the N seconds go" table
+  * guide §1.1 starts from when there is no UI.
   *
   * Usage: runMain graft.tools.JobProf <query> [sfDir] [reps]
   */
@@ -17,82 +18,27 @@ object JobProf {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config(graft.Sessions.CodegenCacheKey, graft.Sessions.CodegenCacheEntries)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val fn = graft.SparkEntry.queries(name)
-
-    case class StageRow(wall: Double, tasks: Int, gcSec: Double,
-                        cpuSec: Double, runSec: Double, name: String)
-    case class Job(id: Int, t0: Long, var t1: Long = 0L,
-                   var stages: Int = 0, var tasks: Int = 0,
-                   stageRows: scala.collection.mutable.ArrayBuffer[StageRow] =
-                     scala.collection.mutable.ArrayBuffer(),
-                   desc: String = "")
-    val jobs = scala.collection.mutable.LinkedHashMap[Int, Job]()
-    val stageToJob = scala.collection.mutable.HashMap[Int, Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.synchronized {
-          jobs(e.jobId) = Job(e.jobId, e.time,
-            desc = Option(e.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse(""))
-          e.stageInfos.foreach(si => stageToJob(si.stageId) = e.jobId)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.t1 = e.time) }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        jobs.synchronized {
-          val si = e.stageInfo
-          stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
-            j.stages += 1; j.tasks += si.numTasks
-            val wall = (for (a <- si.completionTime; b <- si.submissionTime)
-              yield (a - b) / 1e3).getOrElse(0.0)
-            val m = si.taskMetrics
-            j.stageRows += StageRow(wall, si.numTasks, m.jvmGCTime / 1e3,
-              m.executorCpuTime / 1e9, m.executorRunTime / 1e3,
-              si.name.take(60))
-          }
-        }
-    }
-
     // warmup (untimed): codegen + JIT + parquet footers
     try fn(spark, sfDir).count() catch { case _: Throwable => () }
     (1 to reps).foreach { rep =>
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      jobs.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(200) // let the listener bus drain
-      println(f"JOBPROF $name rep=$rep wall=$wall%.2f s, ${jobs.size} jobs")
-      val byWall = jobs.values.toSeq
-      var acc = 0.0
-      byWall.foreach { j =>
-        val dt = (j.t1 - j.t0).max(0L) / 1e3
-        acc += dt
-        println(f"JOBPROF   job=${j.id}%-4d ${dt}%7.2f s  stages=${j.stages}%-3d tasks=${j.tasks}%-5d ${j.desc.take(90)}")
-        if (dt > 1.0) j.stageRows.sortBy(-_.wall).take(4).foreach { s =>
-          println(f"JOBPROF     stage ${s.wall}%7.2f s tasks=${s.tasks}%-5d " +
-            f"taskRun=${s.runSec}%.1f s taskCpu=${s.cpuSec}%.1f s gc=${s.gcSec}%.1f s ${s.name}")
+      Sessions.clearState(spark)
+      val m = Collector.measure(spark)(fn(spark, sfDir).count())
+      println(f"JOBPROF $name rep=$rep wall=${m.wallS}%.2f s, ${m.jobs.size} jobs")
+      m.jobs.foreach { j =>
+        println(f"JOBPROF   job=${j.id}%-4d ${j.wallS}%7.2f s  stages=${j.stages.size}%-3d " +
+          f"tasks=${j.tasks}%-5d ${j.description.take(90)}")
+        j.stages.foreach { s =>
+          println(f"JOBPROF     stage=${s.id}%-4d ${s.wallS}%7.2f s tasks=${s.tasks}%-5d " +
+            f"taskRun=${s.runS}%.1f s taskCpu=${s.cpuS}%.1f s gc=${s.gcS}%.1f s " +
+            f"shufR=${s.shuffleRead / 1e6}%.1f MB shufW=${s.shuffleWrite / 1e6}%.1f MB " +
+            f"spill=${s.spill / 1e6}%.1f MB peakExec=${s.peakExecMem / 1e6}%.1f MB " +
+            f"maxTask=${s.maxTaskS}%.2f s medTask=${s.medianTaskS}%.2f s ${s.name.take(60)}")
         }
       }
-      println(f"JOBPROF   sum-of-jobs ${acc}%.2f s (gaps to wall = driver/planning time)")
+      println(f"JOBPROF   sum-of-jobs ${m.jobs.map(_.wallS).sum}%.2f s " +
+        "(gaps to wall = driver/planning time)")
     }
     spark.stop()
   }

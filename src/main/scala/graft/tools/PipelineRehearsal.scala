@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline rehearsal (VERDICT r7 task 3): every operator has
@@ -15,25 +14,11 @@ import org.apache.spark.sql.functions._
   * cross-operator pressure this rehearsal exists to surface.
   *
   * Usage: runMain graft.tools.PipelineRehearsal [corpusDir] [outDir]
-  *   SPARK_GRAFT_REHEARSAL_COPIES controls the synthesis width (default
-  *   100). Reuses corpusDir/documents10.parquet + embeddings10.parquet if
-  *   present (same synthesis contract as ScaleRehearsal).
+  *   corpusDir holds `TenxFixture` documents and embeddings at
+  *   SPARK_GRAFT_REHEARSAL_COPIES copies (default 100); `TenxFixture.write`
+  *   keeps them when the copy count matches and rewrites them otherwise.
   */
 object PipelineRehearsal {
-
-  final class Tally extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val peakMem = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        peakMem.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-      }
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val corpusDir = args.headOption.getOrElse("/tmp/graft-sf100")
@@ -41,55 +26,23 @@ object PipelineRehearsal {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nCopies = sys.env.get("SPARK_GRAFT_REHEARSAL_COPIES")
       .map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tally = new Tally
-    spark.sparkContext.addSparkListener(tally)
+    val spark = graft.Sessions.local()
+    TenxFixture.write(spark, sfDir, corpusDir, nCopies,
+      Seq("documents", "embeddings"))
 
-    // ---- corpus (ScaleRehearsal synthesis contract) --------------------
-    if (!new java.io.File(s"$corpusDir/documents10.parquet").exists()) {
-      val copies = explode(sequence(lit(0), lit(nCopies - 1))).as("copy")
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"), copies)
-        .select((col("doc_id") + col("copy") * lit(1000000L)).as("doc_id"),
-          when(col("copy") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" copytoken"), col("copy")))
-            .as("text"))
-        .write.mode("overwrite").parquet(s"$corpusDir/documents10.parquet")
-      spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"), copies)
-        .select((col("vec_id") + col("copy") * lit(1000000L)).as("vec_id"),
-          transform(col("embedding"),
-            (x, i) => when(i === 0, x + col("copy").cast("float") / 1000.0f)
-              .otherwise(x)).as("embedding"))
-        .write.mode("overwrite").parquet(s"$corpusDir/embeddings10.parquet")
-    }
-
-    var lastRows = 0L
     def stage(name: String)(f: => DataFrame): DataFrame = {
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      val (r0, w0) = (tally.read.get(), tally.write.get())
-      tally.peakMem.set(0L)
-      val t0 = System.nanoTime()
-      val out = f
-      out.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      val back = spark.read.parquet(s"$outDir/$name.parquet")
-      lastRows = back.count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      graft.Sessions.clearState(spark)
+      val m = graft.obs.Collector.measure(spark) {
+        f.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+        val back = spark.read.parquet(s"$outDir/$name.parquet")
+        (back, back.count())
+      }
+      val (back, rows) = m.result
       val heap = (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) / 1e9
-      println(f"[pipeline] $name%-14s ${sec}%8.2f s  rows=$lastRows%-9d " +
-        f"shufW=${(tally.write.get() - w0) / 1e6}%9.1f MB " +
-        f"shufR=${(tally.read.get() - r0) / 1e6}%9.1f MB " +
-        f"peakExec=${tally.peakMem.get() / 1e6}%8.1f MB heap=${heap}%5.1f GB")
+      println(f"[pipeline] $name%-14s ${m.wallS}%8.2f s  rows=$rows%-9d " +
+        f"shufW=${m.shuffleWrite / 1e6}%9.1f MB " +
+        f"shufR=${m.shuffleRead / 1e6}%9.1f MB " +
+        f"peakExec=${m.peakExecMem / 1e6}%8.1f MB heap=${heap}%5.1f GB")
       back
     }
 
@@ -98,7 +51,8 @@ object PipelineRehearsal {
     // don't grow with the crawl
     val bench = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 17 === 0)
-    val docsRaw = spark.read.parquet(s"$corpusDir/documents10.parquet")
+    val docsRaw = spark.read.parquet(s"$corpusDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
       .withColumn("source", concat(lit("s"), col("doc_id") % 8))
 
     // 1. six-stage curation sweep (quality, repetition, exact dedup,
@@ -132,7 +86,7 @@ object PipelineRehearsal {
     // 3. semantic near-dup pruning over the selection's embeddings
     //    (vec_id ≡ doc_id in the synthesis), auto √n cells, nProbe=2
     val unique = stage("semdedup") {
-      val emb = spark.read.parquet(s"$corpusDir/embeddings10.parquet")
+      val emb = spark.read.parquet(s"$corpusDir/embeddings.parquet")
         .join(selected.withColumnRenamed("doc_id", "vec_id"), "vec_id")
       graft.operators.Dedup.semanticDedupMultiProbe(emb, "embedding",
           "vec_id", minCosine = 0.95, kClusters = 0, iters = 2, nProbe = 2)
@@ -148,7 +102,7 @@ object PipelineRehearsal {
         .filter(col("vec_id") % 5 === 0)
       val m = graft.operators.Classify.fitCentroids(seed, "embedding",
         "label")
-      val emb = spark.read.parquet(s"$corpusDir/embeddings10.parquet")
+      val emb = spark.read.parquet(s"$corpusDir/embeddings.parquet")
         .join(unique.withColumnRenamed("doc_id", "vec_id"), "vec_id")
       graft.operators.Classify.classify(emb, "embedding", "vec_id", m)
     }

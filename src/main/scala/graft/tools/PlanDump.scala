@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round evidence dumper: writes `explain("formatted")` for a
   * comma-separated list of registered queries to <outDir>/<name><suffix>.txt
-  * in ONE session (graft.Explain spins a JVM per query). Index-building
-  * queries execute their build as a side effect of constructing the
-  * returned probe frame — exactly what the bench times.
+  * in ONE session. Index-building queries execute their build as a side
+  * effect of constructing the returned probe frame — exactly what the
+  * bench times.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]
   */
@@ -17,22 +16,12 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     Files.createDirectories(Paths.get(outDir))
     var failures = 0
     names.foreach { name =>
       try {
-        val df = SparkEntryRef.queries(name)(spark, sfDir)
+        val df = graft.SparkEntry.queries(name)(spark, sfDir)
         // SPARK_GRAFT_PLANDUMP_EXEC=1: execute THIS frame's own plan first
         // (toRdd computes every row inside the same QueryExecution —
         // df.count() would plan a separate query), so the dump is the
@@ -51,17 +40,11 @@ object PlanDump {
           failures += 1
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.Sessions.clearState(spark)
     }
     spark.stop()
     // an evidence run where a dump failed must not look successful to a
     // script checking the exit code
     if (failures > 0) sys.exit(1)
-  }
-
-  private object SparkEntryRef {
-    def queries = graft.SparkEntry.queries
   }
 }

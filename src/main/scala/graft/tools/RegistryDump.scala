@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scala-façade reference dump for the PySpark binding proof
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object RegistryDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, out) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     import graft.functions.VecExprs
     docs.select(col("doc_id"),

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Write both TableReport HTML forms (static + interactive) for a fixture
   * table — the README demo artifact and the manual-inspection path for the
   * interactive report's inline JS.
@@ -11,15 +9,7 @@ object ReportDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft-report")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     val customer = graft.ops.Kernel.table(spark, sfDir, "customer")
     graft.operators.TableReport.writeHtml(customer, Seq("c_custkey"),
       s"$outDir/customer.html", title = "customer")

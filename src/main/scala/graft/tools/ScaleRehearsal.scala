@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, SimilaritySearch}
 
@@ -9,44 +8,18 @@ import graft.operators.{Dedup, SimilaritySearch}
   * and 10x the bench corpus and report wall time + shuffle bytes per query,
   * so the "constants collapse at scale" claims are MEASURED, not argued.
   *
-  * The 10x corpus is deterministic: 9 perturbed copies of the sf0.1 tables
-  * (documents get a copy-token appended — near-dup structure per copy is
-  * preserved, cross-copy near-dups are introduced deliberately; embeddings
-  * get a copy-indexed deterministic jitter on one component). Written once
-  * to /tmp parquet so every timed query reads parquet exactly like the
-  * bench.
+  * The Nx tables come from `TenxFixture.write` (deterministic perturbed,
+  * key-shifted copies of the sf0.1 tables), written to outDir parquet so
+  * every timed query reads parquet exactly like the bench.
   *
   * Usage: java -cp ... graft.tools.ScaleRehearsal [outDir]
   */
 object ScaleRehearsal {
 
-  final class ShuffleTally extends SparkListener {
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val write = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-sf1")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val spark = graft.Sessions.local()
 
     // Optional comma-separated name filter (same contract as Bench's
     // SPARK_GRAFT_QUERIES) for targeted re-timing of one family.
@@ -59,67 +32,34 @@ object ScaleRehearsal {
       n != "fit_target_encoder"))
     val needEvents = only.forall(_.exists(_.startsWith("time_")))
     val needCustomer = only.forall(_.exists(n =>
-      n.startsWith("fit_fuzzy") || n == "fit_interpolation" ||
-        n == "fit_target_encoder"))
+      n.startsWith("fit_fuzzy") || n.startsWith("fit_join_discovery") ||
+        n == "fit_interpolation" || n == "fit_target_encoder"))
 
     // ---- deterministic Nx corpus ------------------------------------
-    val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
     // SPARK_GRAFT_REHEARSAL_COPIES widens the synthetic corpus (default
-    // 10x) — e.g. 100 for crossover measurements on the cheap fit shapes
+    // 10x) — e.g. 100 for crossover measurements on the cheap fit shapes.
+    // Only the tables a selected query reads are written (kept when the
+    // directory already holds them at this copy count). The Nx orders keep
+    // the value distributions of every column but the two keys, whose key
+    // spaces grow N-fold; o_custkey shifts with the Nx customer's
+    // c_custkey, so the FK stays whole at every scale. The Nx customer
+    // grows the MAIN side of the fuzzy-join / interpolation shapes while
+    // the aux (nation / supplier) stays fixed, and its key shift rotates
+    // c_custkey % 3, so every copy re-mixes the three mangling styles
+    // deterministically.
     val nCopies = sys.env.get("SPARK_GRAFT_REHEARSAL_COPIES")
       .map(_.toInt).getOrElse(10)
-    val copies = explode(sequence(lit(0), lit(nCopies - 1))).as("copy")
-    if (needDocsEmb) {
-    docs1.select(col("doc_id"), col("text"), copies)
-      .select((col("doc_id") + col("copy") * lit(1000000L)).as("doc_id"),
-        // copy 0 keeps the original text; others append a copy token so
-        // each copy reproduces the corpus' near-dup structure AND every
-        // original gains 9 cross-copy near-duplicates (a harsher graph
-        // than the bench corpus, on purpose)
-        when(col("copy") === 0, col("text"))
-          .otherwise(concat(col("text"), lit(" copytoken"), col("copy")))
-          .as("text"))
-      .write.mode("overwrite").parquet(s"$outDir/documents10.parquet")
-    emb1.select(col("vec_id"), col("embedding"), copies)
-      .select((col("vec_id") + col("copy") * lit(1000000L)).as("vec_id"),
-        // jitter component 0 by copy/1000 — preserves neighborhoods,
-        // breaks exact ties deterministically
-        transform(col("embedding"),
-          (x, i) => when(i === 0, x + col("copy").cast("float") / 1000.0f)
-            .otherwise(x)).as("embedding"))
-      .write.mode("overwrite").parquet(s"$outDir/embeddings10.parquet")
-    }
-
-    // Nx events for the time-series family: key-shifted copies (user and
-    // event id spaces shifted per copy, timestamps unchanged) — per-key
-    // stream length stays constant while keys multiply, exactly how event
-    // corpora grow, so per-key window work must stay flat
-    val ev1raw = spark.read.parquet(s"$sfDir/events.parquet")
-    if (needEvents) ev1raw.select(col("*"), copies)
-      .withColumn("event_id", col("event_id") + col("copy") * lit(100000000L))
-      .withColumn("user_id", col("user_id") + col("copy") * lit(1000000L))
-      .drop("copy")
-      .write.mode("overwrite").parquet(s"$outDir/events10.parquet")
-
-    // 10x orders for the constant-job fit shapes (cleaner / drop_similar /
-    // column_assoc): 9 key-shifted copies — value distributions preserved,
-    // so the fitted plans stay comparable across scales
+    val tables = Seq("documents" -> needDocsEmb, "embeddings" -> needDocsEmb,
+      "orders" -> needOrders, "customer" -> needCustomer,
+      "events" -> needEvents).collect { case (t, true) => t }
+    TenxFixture.write(spark, sfDir, outDir, nCopies, tables)
+    def nx(table: String, at1x: DataFrame): DataFrame =
+      if (tables.contains(table)) spark.read.parquet(s"$outDir/$table.parquet")
+      else at1x
+    val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+    val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val ord1 = spark.read.parquet(s"$sfDir/orders.parquet")
-    if (needOrders) ord1.select(col("*"), copies)
-      .withColumn("o_orderkey", col("o_orderkey") + col("copy") * lit(100000000L))
-      .drop("copy")
-      .write.mode("overwrite").parquet(s"$outDir/orders10.parquet")
-
-    // Nx customer for the fuzzy-join / interpolation fit shapes: the MAIN
-    // side grows while the aux (nation / supplier) stays fixed — the
-    // reference-table-enrichment shape. Key shift rotates c_custkey % 3, so
-    // every copy re-mixes the three mangling styles deterministically.
     val cust1 = spark.read.parquet(s"$sfDir/customer.parquet")
-    if (needCustomer) cust1.select(col("*"), copies)
-      .withColumn("c_custkey", col("c_custkey") + col("copy") * lit(1000000L))
-      .drop("copy")
-      .write.mode("overwrite").parquet(s"$outDir/customer10.parquet")
 
     def queries(docs: DataFrame, emb: DataFrame, ord: DataFrame,
                 ev: DataFrame, cust: DataFrame): Seq[(String, () => Long)] = Seq(
@@ -488,24 +428,24 @@ object ScaleRehearsal {
       // into a value-keyed equi-join — its shuffle must grow ~linearly in
       // the Nx key space; the sketch path moves k longs per column, so its
       // shufW must stay FLAT at any scale; auto must pick exact below
-      // DefaultMaxExactDistinct and the sketch above it (the Nx orders key
-      // space crosses 2M distinct pairs at ~13x, so 100x flips the route).
-      // The right side is the FIXED 1x customer dimension in every mode.
+      // DefaultMaxExactDistinct and the sketch above it (orders plus
+      // customer carry ~180k distinct pairs per copy, so the sum crosses 2M
+      // at ~11x and 100x flips the route). The right side is the customer
+      // dimension at the same scale, so o_custkey -> c_custkey inclusion
+      // stays 1.0.
       "fit_join_discovery_exact" -> (() => {
-        val cust1x = spark.read.parquet(s"$sfDir/customer.parquet")
-          .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
         graft.operators.Discovery.joinKeys(
           ord.select(col("o_orderkey"), col("o_custkey"),
             col("o_orderstatus"), col("o_orderpriority")),
-          cust1x, mode = "exact").count()
+          cust.select(col("c_custkey"), col("c_nationkey"),
+            col("c_mktsegment")), mode = "exact").count()
       }),
       "fit_join_discovery_sketch" -> (() => {
-        val cust1x = spark.read.parquet(s"$sfDir/customer.parquet")
-          .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
         graft.operators.Discovery.joinKeys(
           ord.select(col("o_orderkey"), col("o_custkey"),
             col("o_orderstatus"), col("o_orderpriority")),
-          cust1x, mode = "sketch").count()
+          cust.select(col("c_custkey"), col("c_nationkey"),
+            col("c_mktsegment")), mode = "sketch").count()
       }),
       // KBins fit (r9): exact percentile's aggregation state is a full
       // sorted copy of the column (wall superlinear-ish, one wide
@@ -550,12 +490,11 @@ object ScaleRehearsal {
           Seq("o_orderstatus", "o_orderpriority")).count()
       }),
       "fit_join_discovery_auto" -> (() => {
-        val cust1x = spark.read.parquet(s"$sfDir/customer.parquet")
-          .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
         graft.operators.Discovery.joinKeys(
           ord.select(col("o_orderkey"), col("o_custkey"),
             col("o_orderstatus"), col("o_orderpriority")),
-          cust1x, mode = "auto").count()
+          cust.select(col("c_custkey"), col("c_nationkey"),
+            col("c_mktsegment")), mode = "auto").count()
       }),
       // stratified sampling (r7): the fraction path is one codegen'd scan
       // predicate — time must grow ~linearly with ZERO shuffle at both
@@ -1036,47 +975,33 @@ object ScaleRehearsal {
                  ev: DataFrame, cust: DataFrame): Seq[(String, () => Long)] =
       queries(docs, emb, ord, ev, cust).filter { case (n, _) => only.forall(_.contains(n)) }
 
-    def clear(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-
     def runSuite(label: String, docs: DataFrame, emb: DataFrame,
                  ord: DataFrame, ev: DataFrame, cust: DataFrame,
                  warm: Boolean): Unit = {
       // untimed warmup (codegen/JIT), same discipline as Bench — skipped at
       // 10x, where every query runs seconds-to-minutes and the one-off JIT
       // constant is noise (the 1x pass has already compiled the kernels)
-      if (warm) selected(docs, emb, ord, ev, cust).foreach { case (_, f) => f(); clear() }
+      if (warm) selected(docs, emb, ord, ev, cust).foreach { case (_, f) =>
+        f(); graft.Sessions.clearState(spark)
+      }
       selected(docs, emb, ord, ev, cust).foreach { case (name, f) =>
-        clear()
-        val (r0, w0) = (tally.read.get(), tally.write.get())
-        val t0 = System.nanoTime()
-        val n = f()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val (rd, wr) = (tally.read.get() - r0, tally.write.get() - w0)
-        println(f"[scale] $label%-4s $name%-22s ${sec}%8.2f s  rows=$n%-9d " +
-          f"shufW=${wr / 1e6}%9.1f MB shufR=${rd / 1e6}%9.1f MB")
+        graft.Sessions.clearState(spark)
+        val m = graft.obs.Collector.measure(spark)(f())
+        println(f"[scale] $label%-4s $name%-22s ${m.wallS}%8.2f s  rows=${m.result}%-9d " +
+          f"shufW=${m.shuffleWrite / 1e6}%9.1f MB shufR=${m.shuffleRead / 1e6}%9.1f MB")
       }
     }
 
     // families whose synthesis was skipped fall back to the 1x frames —
     // their queries are filtered out anyway
-    val docs10 = if (needDocsEmb)
-      spark.read.parquet(s"$outDir/documents10.parquet") else docs1
-    val emb10 = if (needDocsEmb)
-      spark.read.parquet(s"$outDir/embeddings10.parquet") else emb1
-    val ord10 = if (needOrders)
-      spark.read.parquet(s"$outDir/orders10.parquet") else ord1
     val ev1 = graft.ops.Kernel.table(spark, sfDir, "events")
-    val ev10 = if (needEvents)
-      graft.ops.Kernel.table(spark, outDir, "events10") else ev1
-    val cust10 = if (needCustomer)
-      spark.read.parquet(s"$outDir/customer10.parquet") else cust1
+    val ev10 = if (needEvents) graft.ops.Kernel.table(spark, outDir, "events")
+      else ev1
     runSuite("1x", docs1.select("doc_id", "text"),
       emb1.select("vec_id", "embedding"), ord1, ev1, cust1, warm = true)
-    runSuite(s"${nCopies}x", docs10, emb10, ord10, ev10, cust10, warm = false)
+    runSuite(s"${nCopies}x", nx("documents", docs1).select("doc_id", "text"),
+      nx("embeddings", emb1).select("vec_id", "embedding"),
+      nx("orders", ord1), ev10, nx("customer", cust1), warm = false)
     spark.stop()
   }
 }

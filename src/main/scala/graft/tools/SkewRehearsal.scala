@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.LongType
   * Three timed plans over the same parquet fixture (x2 shuffle regimes):
   *   1. plain sort-merge, AQE skew-join ON (defaults),
   *   2. plain sort-merge, AQE OFF (the naive baseline),
-  *   3. `Skew.saltedJoin` (128 salt buckets — ~4x the partition count, so
-  *      salt-to-partition collisions cannot re-concentrate the hot key).
+  *   3. `Skew.saltedJoin` (128 salt buckets — 4x the partition count at
+  *      32 cores, so salt-to-partition collisions cannot re-concentrate
+  *      the hot key).
   *
   * Expected shape (recorded in BASELINE.md): AQE's OptimizeSkewedJoin
   * only splits a partition above skewedPartitionThresholdInBytes (256 MB
@@ -38,15 +39,8 @@ object SkewRehearsal {
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft-skew")
     val rows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "20000000").toLong
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(extra = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
     // zipf(2) via inverse CDF of an md5 uniform: P(key = k) ~ 1/k(k+1)
     val maxKey = 100000L
@@ -64,41 +58,29 @@ object SkewRehearsal {
     val p = spark.read.parquet(probePath)
     val b = spark.read.parquet(buildPath)
 
-    // per-run task-duration tally: the wall can be shuffle-bound while ONE
-    // straggler task carries the hot key — max/median task time is the
-    // direct skew reading (the straggler IS what kills a 1000-executor
-    // stage: 999 finish, one runs for an hour)
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null) durations.add(t.taskInfo.duration)
-      })
     // two shuffle regimes over the SAME join: "narrow" prunes the probe
     // payload (only k shuffles — the hot partition compresses to almost
     // nothing, so AQE's bytes-based skew detector cannot see it), "wide"
     // carries the incompressible md5 payload (the hot partition's true
-    // ~400 MB is visible to AQE)
+    // ~400 MB is visible to AQE). The wall can be shuffle-bound while ONE
+    // straggler task carries the hot key, so each run also reports the
+    // max and median task time of its most skewed stage — the direct skew
+    // reading (the straggler IS what kills a 1000-executor stage: 999
+    // finish, one runs for an hour)
     def timed(body: => DataFrame, wide: Boolean): (Double, Long, Long, Boolean) = {
-      durations.clear()
-      val t0 = System.nanoTime()
       val out =
         if (wide) body.agg(count(lit(1)), sum(length(col("payload"))),
           sum(length(col("dim_payload"))))
         else body.agg(count(lit(1)), sum(length(col("dim_payload"))))
-      out.collect()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain the last task events
-      val ds = durations.toArray(Array.empty[java.lang.Long])
-        .map(_.longValue).sorted
+      val m = graft.obs.Collector.measure(spark)(out.collect())
+      val straggler = m.stages.maxByOption(_.maxTaskS)
       val plan = out.queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           a.executedPlan.toString
         case p0 => p0.toString
       }
-      (wall, if (ds.isEmpty) 0L else ds.last,
-        if (ds.isEmpty) 0L else ds(ds.length / 2),
+      (m.wallS, straggler.fold(0L)(s => math.round(s.maxTaskS * 1000)),
+        straggler.fold(0L)(s => math.round(s.medianTaskS * 1000)),
         plan.contains("skew=true"))
     }
     def withConf[T](pairs: (String, String)*)(bodyT: => T): T = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -29,7 +29,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * have flowed through.
   *
   * Usage: runMain graft.tools.StreamingRehearsal [corpusDir] [outDir]
-  * (corpusDir defaults to the ScaleRehearsal 10x synthesis.)
+  * (corpusDir holds `TenxFixture` documents and embeddings at
+  * SPARK_GRAFT_REHEARSAL_COPIES copies, default 10; `TenxFixture.write`
+  * keeps them when the copy count matches and rewrites them otherwise.)
   */
 object StreamingRehearsal {
 
@@ -37,18 +39,9 @@ object StreamingRehearsal {
     val corpusDir = args.headOption.getOrElse("/tmp/graft-sf10")
     val outDir = args.lift(1).getOrElse("/tmp/graft-stream")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$outDir/warehouse")
-      .config("spark.sql.streaming.checkpointLocation", s"$outDir/ckpt")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(extra = Map(
+      "spark.sql.warehouse.dir" -> s"$outDir/warehouse",
+      "spark.sql.streaming.checkpointLocation" -> s"$outDir/ckpt"))
     import spark.implicits._
 
     // ---- offline phase: persisted indexes from the FIXED 1x corpus ----
@@ -72,34 +65,19 @@ object StreamingRehearsal {
     }
 
     // ---- the live stream: Nx documents as a paced parquet file stream --
-    // synthesize the Nx corpus if a prior ScaleRehearsal run hasn't
-    // (same deterministic construction: ScaleRehearsal's copy scheme)
-    val corpusPath = s"$corpusDir/documents10.parquet"
-    if (!new java.io.File(corpusPath).exists()) {
-      val nCopies = sys.env.get("SPARK_GRAFT_REHEARSAL_COPIES")
-        .map(_.toInt).getOrElse(10)
-      println(s"[stream] synthesizing ${nCopies}x corpus at $corpusDir")
-      val copies = explode(sequence(lit(0), lit(nCopies - 1))).as("copy")
-      docs1x.select(col("doc_id"), col("text"), copies)
-        .select((col("doc_id") + col("copy") * lit(1000000L)).as("doc_id"),
-          when(col("copy") === 0, col("text"))
-            .otherwise(concat(col("text"), lit(" copytoken"), col("copy")))
-            .as("text"))
-        .repartition(32) // many files: the stream paces on file granularity
-        .write.mode("overwrite").parquet(corpusPath)
-      emb1x.select(col("vec_id"), col("embedding"), copies)
-        .select((col("vec_id") + col("copy") * lit(1000000L)).as("vec_id"),
-          transform(col("embedding"),
-            (x, i) => when(i === 0, x + col("copy").cast("float") / 1000.0f)
-              .otherwise(x)).as("embedding"))
-        .write.mode("overwrite").parquet(s"$corpusDir/embeddings10.parquet")
-    }
+    // (TenxFixture tables; the stream paces on their files, one per core
+    // and at least 8)
+    val nCopies = sys.env.get("SPARK_GRAFT_REHEARSAL_COPIES")
+      .map(_.toInt).getOrElse(10)
+    TenxFixture.write(spark, sfDir, corpusDir, nCopies,
+      Seq("documents", "embeddings"))
+    val corpusPath = s"$corpusDir/documents.parquet"
     val schema = spark.read.parquet(corpusPath).schema
     val nFiles = new java.io.File(corpusPath).listFiles()
       .count(_.getName.endsWith(".parquet"))
     val perTrigger = math.max(1, nFiles / 8) // ~8 micro-batches
     println(s"[stream] source $corpusPath: $nFiles files, " +
-      s"$perTrigger per trigger")
+      s"$perTrigger per trigger, ${(nFiles + perTrigger - 1) / perTrigger} batches")
     def source(): DataFrame = spark.readStream
       .schema(schema).option("maxFilesPerTrigger", perTrigger)
       .parquet(corpusPath)
@@ -143,7 +121,7 @@ object StreamingRehearsal {
     // under test: per-batch latency stays batch-shaped as the index
     // accumulates, and appended docs are immediately probe-visible
     // (cross-copy near-dups get routed once their first copy is in).
-    val emb10 = spark.read.parquet(s"$corpusDir/embeddings10.parquet")
+    val emb10 = spark.read.parquet(s"$corpusDir/embeddings.parquet")
     val ingest = gated(source()).writeStream.queryName("ingest")
       .outputMode("append")
       .option("checkpointLocation", s"$outDir/ckpt/ingest")

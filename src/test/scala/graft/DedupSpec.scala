@@ -158,6 +158,18 @@ class DedupSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"embeddingLshPairs leaked persisted RDDs: $leaked")
   }
 
+  test("semanticDedup leaves only its verdict checkpoint persisted") {
+    // the normalized-vector and assignment checkpoints are freed by their
+    // own RDD ids; only the returned verdict frame's block stays
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val emb = TestSpark.table("embeddings").limit(300)
+    val out = Dedup.semanticDedup(emb, "embedding", "vec_id", minCosine = 0.9)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added === org.apache.spark.sql.GraftBridge.checkpointedRddId(out).toSet
+      && added.size == 1, s"semanticDedup left persisted RDDs: $added")
+  }
+
   test("scale-aware knobs: corpus-relative DF cutoff and log2 plane count") {
     val docs = TestSpark.table("documents")
     val n = docs.count()

@@ -3,23 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for every suite (suites run sequentially in the
-  * forked test JVM; a per-suite session would pay ~5s startup each).
+  * forked test JVM; a per-suite session would pay ~5s startup each), built
+  * from the same recipe as every main.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val SfDir = "/root/testdata/sf0.001"
 

@@ -532,14 +532,15 @@ class TrainingDataSpec extends AnyFunSuite {
 
   test("Recipe.pipelineFull without a checkpointDir leaves nothing " +
     "persisted but local checkpoints") {
-    // the verdict frames (and the LM model state) are local checkpoints;
-    // the staged input and compose's base are plain persists that must be
-    // released before the call returns
+    // exactly the two verdict frames (Curation's and compose's) stay, as
+    // local checkpoints; the staged input and compose's base are plain
+    // persists, and the LM model's two checkpoints are freed, before the
+    // call returns
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = pipelineFull(joinedDocs())
     val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-    assert(added.nonEmpty && added.values.forall(_.isCheckpointed),
+    assert(added.size == 2 && added.values.forall(_.isCheckpointed),
       added.values.map(_.toDebugString).mkString("\n"))
     assert(out.collect().nonEmpty)
   }
