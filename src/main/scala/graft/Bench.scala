@@ -3,14 +3,20 @@ import graft.plans.Json
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local()
     // Optional comma-separated name filter for isolated re-timing of a few
     // queries (perf iteration); the driver never sets it, so its runs always
     // time the full registry.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val ordered = SparkEntry.selected("SPARK_GRAFT_QUERIES",
+      sys.env.get("SPARK_GRAFT_QUERIES"))
+    // SPARK_GRAFT_BENCH_PASSES > 1 (the round-close discipline) times every
+    // query that many times and reports the PER-QUERY MEDIAN: this host's
+    // walls swing ±8% run-to-run on identical code, and medianing only the
+    // total (the r10/r11 close rule) left per-query diffs noisy enough to
+    // raise three rounds of false drift alarms on the dedup family. The
+    // default (driver runs) stays 1 pass.
+    val passes = Sessions.positiveInt("SPARK_GRAFT_BENCH_PASSES",
+      sys.env.get("SPARK_GRAFT_BENCH_PASSES"), 1)
+    val spark = Sessions.local()
     // SERVER mode (r14): a line protocol over stdin so an external
     // orchestrator (tools/bench_interleaved.py) can alternate ONE warm
     // JVM's per-query timings with the DuckDB oracle's — interleaving
@@ -73,15 +79,6 @@ object Bench {
     // A failed query must never read as a fast time: it is emitted as null
     // in `queries` (consumers summing timings skip it) and its error surfaces
     // in `errors` + a nonzero exit.
-    //
-    // SPARK_GRAFT_BENCH_PASSES > 1 (the round-close discipline) times every
-    // query that many times and reports the PER-QUERY MEDIAN: this host's
-    // walls swing ±8% run-to-run on identical code, and medianing only the
-    // total (the r10/r11 close rule) left per-query diffs noisy enough to
-    // raise three rounds of false drift alarms on the dedup family. The
-    // default (driver runs) stays 1 pass.
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-      .map(_.trim.toInt).filter(_ >= 1).getOrElse(1)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     def timedPass(): Seq[(String, Option[Double])] = ordered.map { case (name, fn) =>
       // Queries are independent: drop any cached plans or persisted blocks a
@@ -123,7 +120,8 @@ object Bench {
     // both lost their alphabetically-first ~19 queries this way). At 88
     // registered queries even decisecond precision with full names is 2018
     // chars, so the stdout line economizes three ways (full-precision,
-    // full-name numbers always go to BENCH_LOCAL.json in-repo):
+    // full-name numbers always go to BENCH_LOCAL.json, or BENCH_FILTERED.json
+    // for a subset, in the working directory):
     //  1. decisecond values, trailing zeros stripped;
     //  2. query keys drop the uniform "q_" prefix (dedup_canonical ==
     //     q_dedup_canonical; BENCH_LOCAL.json / CORRECTNESS keep full
@@ -154,7 +152,14 @@ object Bench {
       s"${Json.str(name)}:" + allPasses.count(_.exists {
         case (n, t) => n == name && t.isDefined })
     }.mkString("{", ",", "}")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_LOCAL.json"),
+    // BENCH_LOCAL.json is the tracked artifact of the full registry on the
+    // sf0.1 fixture; a name-filtered run or one on another dir (an Nx
+    // fixture) writes BENCH_FILTERED.json instead of replacing it
+    val resultFile =
+      if (sys.env.contains("SPARK_GRAFT_QUERIES") ||
+          !sfDir.stripSuffix("/").endsWith("/sf0.1")) "BENCH_FILTERED.json"
+      else "BENCH_LOCAL.json"
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(resultFile),
       s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"pass_ok":$passOk,"queries":${queryJson(results, _.toString)},"errors":$errJson,"sf":"$sfDir"}""" + "\n")
     catch { case _: Throwable => () }
     // "errors" appears only when non-empty — a failed query still surfaces

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * surface home of settings the bench harness validated, so a user
   * building their own session gets the same behavior the published
   * numbers were measured under (r16 verdict task: the insight must live
-  * where users build sessions, not only in Bench/BenchOne).
+  * where users build sessions, not only in Bench).
   *
   * The one non-default today: `spark.sql.codegen.cache.maxEntries`.
   * Spark's generated-class cache holds 100 compiled whole-stage-codegen
@@ -51,13 +51,19 @@ object Sessions {
   /** Core count of a local session: `SPARK_GRAFT_CPUS`, else the host's
     * processors.
     */
-  private def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+  private def cpus: Int = positiveInt("SPARK_GRAFT_CPUS",
+    sys.env.get("SPARK_GRAFT_CPUS"), Runtime.getRuntime.availableProcessors)
 
-  private[graft] def parseCpus(value: Option[String]): Int = value match {
-    case None => Runtime.getRuntime.availableProcessors
+  /** The one parser of a positive-integer setting: `default` when unset,
+    * else the value, or an `IllegalArgumentException` naming `key` and the
+    * value.
+    */
+  private[graft] def positiveInt(key: String, value: Option[String],
+                                 default: => Int): Int = value match {
+    case None => default
     case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
       throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+        s"$key must be a positive integer, got '$v'"))
   }
 
   /** The local session: `local[cores]` with as many shuffle partitions,

@@ -41,6 +41,25 @@ object SparkEntry {
       StreamingQueries.queries ++ ProofQueries.queries ++ LmQueries.queries ++
       TokenizerQueries.queries ++ RetrievalQueries.queries
 
+  /** The rows of `queries` named by `value`, a comma-separated list read
+    * from setting `key` (every row when unset), sorted by name. A list
+    * that names no row, or names one `queries` lacks, throws an
+    * `IllegalArgumentException` naming `key` and the unknown names.
+    */
+  private[graft] def selected(key: String, value: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val rows = value.fold(all) { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(all.contains).toSeq.sorted
+      if (names.isEmpty || unknown.nonEmpty) throw new IllegalArgumentException(
+        s"$key must name registered queries, got '$v'" +
+          (if (unknown.isEmpty) "" else s"; unknown: ${unknown.mkString(", ")}"))
+      all.filter { case (n, _) => names(n) }
+    }
+    rows.toSeq.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get the weaker rows-only check.
     */

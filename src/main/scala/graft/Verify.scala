@@ -6,15 +6,13 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Sessions.local()
-    new java.io.File(outDir).mkdirs()
     // Optional comma-separated name filter for fast local iteration on a few
     // queries; the driver never sets it, so its runs always dump everything.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    val selected = SparkEntry.selected("SPARK_GRAFT_QUERIES",
+      sys.env.get("SPARK_GRAFT_QUERIES"))
+    val spark = Sessions.local()
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

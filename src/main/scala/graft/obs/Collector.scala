@@ -28,12 +28,11 @@ final case class Measured[A](result: A, wallS: Double, jobs: Seq[JobStats]) {
   def stages: Seq[StageStats] = jobs.flatMap(_.stages)
   def shuffleRead: Long = stages.map(_.shuffleRead).sum
   def shuffleWrite: Long = stages.map(_.shuffleWrite).sum
-  def peakExecMem: Long = stages.map(_.peakExecMem).maxOption.getOrElse(0L)
+  def spill: Long = stages.map(_.spill).sum
 }
 
-/** The one job/stage metrics collector: `Bench`-style tools, `JobProf` and
-  * the rehearsals read their jobs, shuffle bytes, spill and task skew from
-  * it.
+/** The one job/stage metrics collector: `JobProf` and the tests read jobs,
+  * shuffle bytes, spill and task skew from it.
   */
 object Collector {
 

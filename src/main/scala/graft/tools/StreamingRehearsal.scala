@@ -29,16 +29,25 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * have flowed through.
   *
   * Usage: runMain graft.tools.StreamingRehearsal [corpusDir] [outDir]
-  * (corpusDir holds `TenxFixture` documents and embeddings at
-  * SPARK_GRAFT_REHEARSAL_COPIES copies, default 10; `TenxFixture.write`
-  * keeps them when the copy count matches and rewrites them otherwise.)
+  * (corpusDir is a `TenxFixture` dir: the stream reads its documents and
+  * embeddings as written, at whatever copy count it holds; the offline
+  * indexes are built from SPARK_GRAFT_SF_DIR's 1x tables.) Each run starts
+  * from an empty `<outDir>/ckpt` and exits 1 when any of the three streams
+  * reads no rows.
   */
 object StreamingRehearsal {
 
   def main(args: Array[String]): Unit = {
-    val corpusDir = args.headOption.getOrElse("/tmp/graft-sf10")
+    val corpusDir = args.headOption.getOrElse("/tmp/graft-sf10x")
     val outDir = args.lift(1).getOrElse("/tmp/graft-stream")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    for (t <- Seq("documents", "embeddings"))
+      require(new java.io.File(s"$corpusDir/$t.parquet").isDirectory,
+        s"StreamingRehearsal: no $corpusDir/$t.parquet; write the corpus first " +
+          s"with: sbt \"runMain graft.tools.TenxFixture $corpusDir <copies>\"")
+    // an earlier run's checkpoints mark every source file committed, and
+    // the streams would then read nothing
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outDir, "ckpt"))
     val spark = graft.Sessions.local(extra = Map(
       "spark.sql.warehouse.dir" -> s"$outDir/warehouse",
       "spark.sql.streaming.checkpointLocation" -> s"$outDir/ckpt"))
@@ -66,11 +75,7 @@ object StreamingRehearsal {
 
     // ---- the live stream: Nx documents as a paced parquet file stream --
     // (TenxFixture tables; the stream paces on their files, one per core
-    // and at least 8)
-    val nCopies = sys.env.get("SPARK_GRAFT_REHEARSAL_COPIES")
-      .map(_.toInt).getOrElse(10)
-    TenxFixture.write(spark, sfDir, corpusDir, nCopies,
-      Seq("documents", "embeddings"))
+    // of the host that wrote them and at least 8)
     val corpusPath = s"$corpusDir/documents.parquet"
     val schema = spark.read.parquet(corpusPath).schema
     val nFiles = new java.io.File(corpusPath).listFiles()
@@ -191,11 +196,17 @@ object StreamingRehearsal {
       println(s"[stream] drift id=$batchId top: $top")
     }
 
-    ingest.processAllAvailable()
-    packed.processAllAvailable()
-    drift.processAllAvailable()
-    ingest.stop(); packed.stop(); drift.stop()
+    val streams = Seq(ingest, packed, drift)
+    streams.foreach(_.processAllAvailable())
+    // a stream that processed no rows measured nothing: fail the run
+    val idle = streams.filterNot(_.recentProgress.exists(_.numInputRows > 0))
+      .map(_.name)
+    streams.foreach(_.stop())
     println(s"[stream] done: ${progress.size()} progress events recorded")
     spark.stop()
+    if (idle.nonEmpty) {
+      System.err.println(s"[stream] FAILED: no micro-batch read rows in ${idle.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

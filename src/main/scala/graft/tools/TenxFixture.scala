@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Spark-vs-DuckDB ratio measured where the constants have amortized
   * (VERDICT r10 task 3), instead of argued from fixture-sized walls.
   *
-  * The one Nx generator: `ScaleRehearsal`, `PipelineRehearsal` and
+  * The one Nx generator: `graft.Bench`, `JobProf` and
   * `StreamingRehearsal` read the tables `write` lays down. Copy 0 is the
   * base table; every other copy shifts the keys (the FK shift applied to
   * BOTH sides, so join selectivity is preserved), appends a copy token to
@@ -19,15 +19,20 @@ import org.apache.spark.sql.functions._
   * jitters embedding component 0 by copy/1000 (neighborhoods preserved,
   * exact ties broken deterministically). Events shift user and event ids
   * with timestamps unchanged: per-key stream length stays constant while
-  * keys multiply, exactly how event corpora grow.
+  * keys multiply, exactly how event corpora grow. `write` also copies the
+  * `Unscaled` tables at 1x, so every registry row runs on the Nx dir
+  * (lookup-side tables such as the fuzzy and interpolation joins' aux stay
+  * fixed while the main side grows; a row that reads only those tables
+  * times 1x data there). Every Nx table keeps its base table's parquet
+  * column types.
   *
   * Usage: runMain graft.tools.TenxFixture <outDir> [copies=10]
   *        (reads SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1)
   */
 object TenxFixture {
 
-  /** Every table the generator writes: name -> key shifts; the first
-    * shifted key is the table's spread key and copy index.
+  /** Every table the generator scales: name -> key shifts; the first
+    * shifted key is the table's spread key.
     */
   private val Shifts = scala.collection.immutable.ListMap(
     "documents" -> Seq("doc_id" -> 1000000L),
@@ -38,54 +43,53 @@ object TenxFixture {
 
   val Tables: Seq[String] = Shifts.keys.toSeq
 
+  /** The fixture tables `write` copies unchanged. */
+  val Unscaled: Seq[String] = Seq("lineitem", "nation", "part", "region",
+    "supplier")
+
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-sf10x")
-    val nCopies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
+    val nCopies = graft.Sessions.positiveInt("TenxFixture copies",
+      args.lift(1), 10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.Sessions.local()
-    write(spark, sfDir, outDir, nCopies, Tables)
+    write(spark, sfDir, outDir, nCopies)
     spark.stop()
   }
 
-  /** Write `nCopies` copies of each of `tables` (a subset of `Tables`) from
-    * `sfDir` to `<outDir>/<table>.parquet`. A table already there that holds
-    * `nCopies` copies of this base (row count and top copy index match) is
-    * kept, any other is rewritten: every rehearsal can call this on a shared
-    * fixture directory, and none silently rescales another's tables.
+  /** Write `nCopies` copies of each of `Tables` and one byte-for-byte copy
+    * of each of `Unscaled` from `sfDir` to `<outDir>/<table>.parquet`,
+    * replacing whatever those paths held.
     */
   def write(spark: SparkSession, sfDir: String, outDir: String,
-            nCopies: Int, tables: Seq[String]): Unit = {
+            nCopies: Int): Unit = {
+    require(nCopies > 0, s"TenxFixture: copies must be positive, got $nCopies")
     val copies = explode(sequence(lit(0), lit(nCopies - 1))).as("copy")
-    tables.foreach { table =>
-      val shifts = Shifts.getOrElse(table, throw
-        new IllegalArgumentException(s"TenxFixture: unknown table $table"))
-      val (key, keyShift) = shifts.head
+    Shifts.foreach { case (table, shifts) =>
       val base = spark.read.parquet(s"$sfDir/$table.parquet")
       // the key shifts assume the base fixture's id ranges — a larger base
       // would silently collide copy 0's high keys with copy 1's low ones,
       // corrupting join fan-out and the id-uniqueness preconditions the
       // benchmarks exercise. Refuse loudly instead (one tiny agg).
-      val stats = base.select(count(lit(1)) +:
-        shifts.map { case (c, _) => max(col(c)) }: _*).head()
+      val maxes = base.select(shifts.map { case (c, _) => max(col(c)) }: _*).head()
       shifts.zipWithIndex.foreach { case ((c, shift), i) =>
-        require(stats.getLong(i + 1) < shift,
-          s"TenxFixture: $table.$c max ${stats.getLong(i + 1)} >= copy shift " +
+        require(maxes.getLong(i) < shift,
+          s"TenxFixture: $table.$c max ${maxes.getLong(i)} >= copy shift " +
             s"$shift — raise the shift constant for this base fixture")
       }
-      val path = s"$outDir/$table.parquet"
-      val written = scala.util.Try(spark.read.parquet(path)
-        .select(count(lit(1)), max(col(key))).head()).toOption
-      if (written.exists(w => w.getLong(0) == stats.getLong(0) * nCopies &&
-          !w.isNullAt(1) && w.getLong(1) / keyShift + 1 == nCopies)) {
-        println(s"[tenx] kept ${nCopies}x $table at $path")
-      } else {
-        val shifted = shifts.foldLeft(base.select(col("*"), copies)) {
-          case (df, (c, shift)) => df.withColumn(c, col(c) + col("copy") * lit(shift))
-        }
-        spread(perturbed(table, shifted).drop("copy"), key)
-          .write.mode("overwrite").parquet(path)
-        println(s"[tenx] wrote ${nCopies}x $table to $path")
+      val shifted = shifts.foldLeft(base.select(col("*"), copies)) {
+        case (df, (c, shift)) => df.withColumn(c, col(c) + col("copy") * lit(shift))
       }
+      val path = s"$outDir/$table.parquet"
+      spread(baseTypes(perturbed(table, shifted).drop("copy")), shifts.head._1)
+        .write.mode("overwrite").parquet(path)
+      println(s"[tenx] wrote ${nCopies}x $table to $path")
+    }
+    Unscaled.foreach { t =>
+      val dst = java.nio.file.Paths.get(outDir, s"$t.parquet")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, s"$t.parquet"), dst,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      println(s"[tenx] copied 1x $t to $dst")
     }
   }
 
@@ -94,10 +98,23 @@ object TenxFixture {
       when(col("copy") === 0, col("text"))
         .otherwise(concat(col("text"), lit(" copytoken"), col("copy"))))
     case "embeddings" => df.withColumn("embedding", transform(col("embedding"),
-      (x, i) => when(i === 0, x + col("copy").cast("float") / 1000.0f)
+      (x, i) => when(i === 0, (x + col("copy") / 1000.0).cast("float"))
         .otherwise(x)))
     case _ => df
   }
+
+  // The base fixtures store timestamps as INT64 microseconds without the
+  // UTC flag (pyarrow `timestamp[us]`), which the session reads as
+  // TimestampType. Spark writes TimestampType as INT96 by default (and as
+  // UTC-adjusted INT64 under TIMESTAMP_MICROS), but TimestampNtzType as
+  // exactly the base's INT64 type. The session is UTC, so the cast keeps
+  // every value.
+  private def baseTypes(df: DataFrame): DataFrame =
+    df.select(df.schema.fields.toSeq.map { f =>
+      if (f.dataType == org.apache.spark.sql.types.TimestampType)
+        col(f.name).cast("timestamp_ntz").as(f.name)
+      else col(f.name)
+    }: _*)
 
   // The base tables are single-file; exploding N copies of a one-
   // partition read and writing directly produces ONE file with 1-2 row

@@ -85,6 +85,12 @@ class EnsureIndexSpec extends AnyFunSuite {
     // a bare scan (the precomputedKey-compatible form)
     assert(IndexManifest.filesKey(spark, pq, "bm25:b4",
       Seq("text", "doc_id")) === stored0)
+    // ...and so does the frame's own listing key: handed over as the
+    // precomputed key it reuses
+    val ofFrame = IndexManifest.filesKeyOf(rd, "bm25:b4", Seq("text", "doc_id"))
+    assert(ofFrame === Some(stored0))
+    assert(TextSearch.ensureIndex(rd, "text", "doc_id", name, path,
+      numBuckets = 4, precomputedKey = ofFrame) === false)
     // file ADDED (ingest landing a new part file) -> rebuild
     Seq((9L, "alpha beta gamma newdoc")).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(pq)

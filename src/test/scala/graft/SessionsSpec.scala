@@ -13,12 +13,45 @@ class SessionsSpec extends AnyFunSuite {
 
   test("SPARK_GRAFT_CPUS: unset means the host's processors, a bad value " +
     "throws naming the key and the value") {
-    assert(Sessions.parseCpus(None) === Runtime.getRuntime.availableProcessors)
-    assert(Sessions.parseCpus(Some("6")) === 6)
+    def cpus(v: Option[String]) = Sessions.positiveInt("SPARK_GRAFT_CPUS", v,
+      Runtime.getRuntime.availableProcessors)
+    assert(cpus(None) === Runtime.getRuntime.availableProcessors)
+    assert(cpus(Some("6")) === 6)
     for (bad <- Seq("0", "-2", "four", "", "1.5")) {
-      val e = intercept[IllegalArgumentException](Sessions.parseCpus(Some(bad)))
+      val e = intercept[IllegalArgumentException](cpus(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") &&
         e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("SPARK_GRAFT_BENCH_PASSES: unset means one pass, a bad value " +
+    "throws naming the key and the value") {
+    def passes(v: Option[String]) =
+      Sessions.positiveInt("SPARK_GRAFT_BENCH_PASSES", v, 1)
+    assert(passes(None) === 1)
+    assert(passes(Some(" 3 ")) === 3)
+    for (bad <- Seq("0", "-1", "x", "")) {
+      val e = intercept[IllegalArgumentException](passes(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_PASSES") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("SPARK_GRAFT_QUERIES: unset selects the registry sorted by name, a " +
+    "list selects its rows, an unknown or empty list throws naming the key") {
+    def select(v: Option[String]) =
+      SparkEntry.selected("SPARK_GRAFT_QUERIES", v).map(_._1)
+    assert(select(None) === SparkEntry.queries.keys.toSeq.sorted)
+    assert(select(Some(" q_kbins, q_dedup_exact ,")) ===
+      Seq("q_dedup_exact", "q_kbins"))
+    val e = intercept[IllegalArgumentException](
+      select(Some("q_kbins,q_kbnis,q_nope")))
+    assert(e.getMessage.contains("SPARK_GRAFT_QUERIES") &&
+      e.getMessage.contains("unknown: q_kbnis, q_nope") &&
+      !e.getMessage.contains("unknown: q_kbins"), e.getMessage)
+    for (empty <- Seq("", " , ")) {
+      val e = intercept[IllegalArgumentException](select(Some(empty)))
+      assert(e.getMessage.contains("SPARK_GRAFT_QUERIES"), e.getMessage)
     }
   }
 

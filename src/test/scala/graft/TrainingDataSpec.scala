@@ -657,8 +657,7 @@ class TrainingDataSpec extends AnyFunSuite {
       Seq("curation_verdicts_0000000000001_aaaa.parquet"))
     // EQUAL write stamps (same-millisecond concurrent runs — the case the
     // uuid suffix exists for) break ties by name DESCENDING: the
-    // lexicographic max survives, matching ScaleRehearsal's
-    // newest-is-lex-max assumption (ADVICE r14)
+    // lexicographic max survives (ADVICE r14)
     val dir3 = java.nio.file.Files.createTempDirectory("graft_prune3").toFile
     def mk3(name: String): Unit = {
       val d = new java.io.File(dir3, name)
