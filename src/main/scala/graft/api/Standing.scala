@@ -22,6 +22,12 @@ import graft.operators.{AnnIndex, DedupIndex, IndexManifest, TextSearch}
   * one table-property read. Keys for that path come from `filesKey` /
   * `textKey` / `rowsKey` / `combineKeys` below.
   *
+  * Each family's storage is its `StandingIndex.Layout` (`TextSearch.layout`,
+  * `DedupIndex.layout`, `AnnIndex.layout`, `AnnIndex.kmeansLayout`): the
+  * `compact*` calls are the layout's compact, and the table `storedKey`
+  * reads is the layout's primary table — `<name>_postings` for BM25 and
+  * LSH ANN, `<name>_bands` for dedup, `<name>_cells` for k-means IVF.
+  *
   * Executed end-to-end from a real pyspark process by
   * `tools/pyspark_registry_check.py` (part 4) against a Scala-driven
   * reference dump, and from Scala by QuickstartSpec — both drive exactly
@@ -53,7 +59,7 @@ object Standing {
     TextSearch.repair(spark, name)
 
   def compactText(spark: SparkSession, name: String, newPath: String): Unit =
-    TextSearch.compact(spark, name, newPath)
+    TextSearch.layout.compact(spark, name, newPath)
 
   // ---- minhash-band near-dup index (DedupIndex) ----
 
@@ -80,7 +86,7 @@ object Standing {
 
   def compactDedup(spark: SparkSession, name: String,
                    newPath: String): Unit =
-    DedupIndex.compact(spark, name, newPath)
+    DedupIndex.layout.compact(spark, name, newPath)
 
   // ---- LSH ANN postings index (AnnIndex) ----
 
@@ -106,9 +112,9 @@ object Standing {
     AnnIndex.append(corpus, vecCol, idCol, name)
 
   def compactAnn(spark: SparkSession, name: String, newPath: String): Unit =
-    AnnIndex.compact(spark, name, newPath)
+    AnnIndex.layout.compact(spark, name, newPath)
 
-  // ---- k-means IVF ANN index (AnnIndex.*Kmeans) ----
+  // ---- k-means IVF ANN index (AnnIndex.*Kmeans, AnnIndex.kmeansLayout) ----
 
   def ensureAnnKmeans(corpus: DataFrame, vecCol: String, idCol: String,
                       name: String, path: String, kClusters: Int,
@@ -126,7 +132,7 @@ object Standing {
 
   def compactAnnKmeans(spark: SparkSession, name: String,
                        newPath: String): Unit =
-    AnnIndex.compactKmeans(spark, name, newPath)
+    AnnIndex.kmeansLayout.compact(spark, name, newPath)
 
   // ---- staleness keys (IndexManifest) ----
 

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ByteType
-import graft.sources.Bucketize
 
 /** Persisted IVF/LSH ANN index — the embedding-side twin of
   * `DedupIndex`: the corpus' normalized vectors are laid out ONCE under
@@ -23,7 +22,11 @@ import graft.sources.Bucketize
   */
 object AnnIndex {
 
-  def postingsTable(name: String): String = s"${name}_postings"
+  /** The LSH layout: one postings part bucketed by (tbl, bkt), carrying
+    * the hashing geometry and quantization flag as properties.
+    */
+  val layout: StandingIndex.Layout = StandingIndex.Layout("postings",
+    StandingIndex.Part("postings", Seq("tbl", "bkt")))
 
   /** Postings rows (tbl, bkt, corpus_id, cv) — or (…, qscale, qv) when
     * `quantize` — for a corpus under the given hashing geometry; shared by
@@ -81,19 +84,17 @@ object AnnIndex {
       if (planesPerTable > 0) planesPerTable
       else Dedup.planesFor(corpus.count())
     val postings = postingsOf(corpus, vecCol, idCol, planes, nTables, quantize)
-    Bucketize.writeBucketed(postings, postingsTable(name), s"$path/postings",
-      Seq("tbl", "bkt"), numBuckets)
-    Bucketize.alterTableProps(corpus.sparkSession, postingsTable(name), Seq(
-      "graft.planesPerTable" -> planes, "graft.nTables" -> nTables,
-      "graft.quantized" -> quantize))
+    layout.write(corpus.sparkSession, name, path, numBuckets,
+      Map("postings" -> postings), Seq("graft.planesPerTable" -> planes,
+        "graft.nTables" -> nTables, "graft.quantized" -> quantize))
   }
 
   /** The standing-index lifecycle in one call — `TextSearch.ensureIndex`
     * for the LSH postings index: build/rebuild only when the stamped
     * content key plus build geometry does not match the corpus; reuse
     * otherwise. Returns true when it (re)built. The reuse policy is
-    * `StandingIndex.ensure`'s: dir-backed corpora key on the O(files)
-    * LISTING (see `IndexManifest`); non-scan plans fall back to the
+    * `StandingIndex.Layout.ensure`'s: dir-backed corpora key on the
+    * O(files) LISTING (see `IndexManifest`); non-scan plans fall back to the
     * precise `IndexManifest.rowsKey` ((id, vector) xxhash64 aggregate, no
     * tokenize), which is also the `precomputedKey` opt-in for ingest
     * loops tracking their manifest additively.
@@ -108,7 +109,7 @@ object AnnIndex {
              path: => String, planesPerTable: Int = 0, nTables: Int = 16,
              numBuckets: Int = 32, quantize: Boolean = false,
              precomputedKey: Option[String] = None): Boolean =
-    StandingIndex.ensure(corpus, postingsTable(name),
+    layout.ensure(corpus, name,
       s"annlsh:p$planesPerTable:t$nTables:b$numBuckets:q$quantize",
       Seq(idCol, vecCol), precomputedKey,
       IndexManifest.rowsKey(corpus, Seq(idCol, vecCol), _))(
@@ -130,45 +131,20 @@ object AnnIndex {
     */
   def append(corpus: DataFrame, vecCol: String, idCol: String,
              name: String): Unit = {
-    val props = Bucketize.tableProps(corpus.sparkSession, postingsTable(name))
-    val (planes, tables) = geometryOf(props)
-    Bucketize.appendBucketed(postingsOf(corpus, vecCol, idCol, planes, tables,
-      quantizedOf(props)), postingsTable(name))
+    val (planes, tables, quantized) = geometry(corpus.sparkSession, name)
+    layout.append(name, Map("postings" ->
+      postingsOf(corpus, vecCol, idCol, planes, tables, quantized)))
   }
 
-  /** Compact append-accumulated postings into a fresh layout at `newPath`
-    * (`DedupIndex.compact`'s embedding twin, `StandingIndex.compact`);
-    * geometry and quantization properties carry over.
+  /** The (planesPerTable, nTables, quantized) geometry persisted with the
+    * index; an absent quantization flag reads false (indexes laid out
+    * before the flag existed).
     */
-  def compact(spark: SparkSession, name: String, newPath: String): Unit =
-    StandingIndex.compact(spark, name, newPath, "postings")
-
-  /** `compact` for the k-means IVF layout (r15 — the last index family
-    * missing the ingest -> compact rhythm): append-accumulated CELLS are
-    * rewritten to one sorted file per bucket; the centroids table is
-    * rewritten alongside UNCHANGED — the quantizer is the index's
-    * identity and compaction must never retrain it — so probes are plan-
-    * and result-identical (spec-pinned in AnnIndexSpec).
-    */
-  def compactKmeans(spark: SparkSession, name: String,
-                    newPath: String): Unit =
-    StandingIndex.compact(spark, name, newPath, "cells", "centroids")
-
-  /** The (planesPerTable, nTables) geometry persisted with the index. */
-  def geometry(spark: SparkSession, name: String): (Int, Int) =
-    geometryOf(Bucketize.tableProps(spark, postingsTable(name)))
-
-  /** Whether the postings were written SQ8-quantized (absent = false,
-    * for indexes laid out before the flag existed).
-    */
-  def quantized(spark: SparkSession, name: String): Boolean =
-    quantizedOf(Bucketize.tableProps(spark, postingsTable(name)))
-
-  private def geometryOf(props: Map[String, String]): (Int, Int) =
-    (props("graft.planesPerTable").toInt, props("graft.nTables").toInt)
-
-  private def quantizedOf(props: Map[String, String]): Boolean =
-    props.get("graft.quantized").exists(_.toBoolean)
+  def geometry(spark: SparkSession, name: String): (Int, Int, Boolean) = {
+    val p = layout.props(spark, name)
+    (p("graft.planesPerTable").toInt, p("graft.nTables").toInt,
+      p.get("graft.quantized").exists(_.toBoolean))
+  }
 
   /** Top-k per query against the persisted postings; the bucket geometry
     * comes from the index's own table properties. Output schema and rank
@@ -182,39 +158,29 @@ object AnnIndex {
     * LSH bucket keys are per-vector, filtering candidates is EXACTLY
     * equivalent to probing an index built on the allowed subset (pinned
     * in AnnIndexSpec) — the layout serves every slice of the corpus
-    * without per-slice rebuilds. The filter frame is BROADCAST by default
-    * (`broadcastAllowed = true`): filtered search is for bounded allow-
-    * lists, and a broadcast semi-join leaves the bucketed postings scan
-    * untouched. A corpus-scale filter frame cannot broadcast — pass
-    * `broadcastAllowed = false`, and know the cost honestly: a shuffled
-    * left_semi on corpus_id RE-EXCHANGES the (tbl, bkt)-bucketed postings
-    * by corpus_id, a corpus-sized exchange. At that scale, materialize
-    * the filtered corpus as its own index instead.
+    * without per-slice rebuilds. The filter frame is BROADCAST: filtered
+    * search is for bounded allow-lists, and a broadcast semi-join leaves
+    * the bucketed postings scan untouched. For a corpus-scale filter,
+    * materialize the filtered corpus as its own index instead.
     */
   def probe(queries: DataFrame, vecCol: String, idCol: String, name: String,
-            k: Int, planesPerTable: Int = 0, nTables: Int = 0,
-            allowed: Option[DataFrame] = None,
-            broadcastAllowed: Boolean = true): DataFrame = {
+            k: Int, allowed: Option[DataFrame] = None): DataFrame = {
     import graft.functions.VecExprs
     val spark = queries.sparkSession
-    val (planes, tables) =
-      if (planesPerTable > 0 && nTables > 0) (planesPerTable, nTables)
-      else geometry(spark, name)
+    val (planes, tables, quantized) = geometry(spark, name)
     val q = queries
       .select(col(idCol).as("query_id"), Dedup.normalized(col(vecCol)).as("qv"))
       .select(col("query_id"), col("qv"),
         posexplode(VecExprs.hyperplaneBuckets(col("qv"), tables, planes)))
       .select(col("query_id"), col("qv"),
         col("pos").as("tbl"), col("col").as("bkt"))
-    val postings = restricted(spark.table(postingsTable(name)), allowed,
-      broadcastAllowed)
+    val postings = restricted(layout.scan(spark, name), allowed, true)
     // score before deduplicating multi-table hits, same rationale as
     // ivfTopK: once scored, the vectors drop out of the dedup shuffle.
-    // SQ8 postings (detected from the layout's own schema, so plain
-    // views work too) score by asymmetric distance: stored int8 codes
+    // SQ8 postings score by asymmetric distance: stored int8 codes
     // against the full-precision query vector, cosine ≈ qscale/127 * dot
     val cosine =
-      if (postings.columns.contains("qscale"))
+      if (quantized)
         round(col("qscale") / lit(127.0) *
           VecExprs.arrayDotBytes(col("qv"), col("qv_q")), 6)
       else round(VecExprs.arrayDot(col("cv"), col("qv_q")), 6)
@@ -249,8 +215,12 @@ object AnnIndex {
   // re-training, and join their probed cells against a bucketed scan.
   // ---------------------------------------------------------------------
 
-  def cellsTable(name: String): String = s"${name}_cells"
-  def centroidsTable(name: String): String = s"${name}_centroids"
+  /** The k-means IVF layout: cells bucketed by cell id, and the trained
+    * centroid table (bounded: kClusters x dim) at one bucket.
+    */
+  val kmeansLayout: StandingIndex.Layout = StandingIndex.Layout("cells",
+    StandingIndex.Part("cells", Seq("cid")),
+    StandingIndex.Part("centroids", Seq("cid"), buckets = 1))
 
   /** Train + lay out the k-means IVF index. `kClusters <= 0` auto-sizes
     * to ~sqrt(corpus) (the IVF scaling — cell table and occupancy both
@@ -266,11 +236,9 @@ object AnnIndex {
       if (kClusters > 0) kClusters
       else math.max(16, math.sqrt(c.count().toDouble).toInt)
     val cents = SimilaritySearch.kmeansCentroids(c, kc, iters)
-    Bucketize.writeBucketed(assignedTo(cents, c), cellsTable(name),
-      s"$path/cells", Seq("cid"), numBuckets)
     import spark.implicits._
-    Bucketize.writeBucketed(cents.toDF("cid", "cv"), centroidsTable(name),
-      s"$path/centroids", Seq("cid"), 1)
+    kmeansLayout.write(spark, name, path, numBuckets, Map(
+      "cells" -> assignedTo(cents, c), "centroids" -> cents.toDF("cid", "cv")))
   }
 
   /** `ensure` for the k-means IVF layout: content key (listing-derived
@@ -286,7 +254,7 @@ object AnnIndex {
                    name: String, path: => String, kClusters: Int = 0,
                    iters: Int = 2, numBuckets: Int = 32,
                    precomputedKey: Option[String] = None): Boolean =
-    StandingIndex.ensure(corpus, cellsTable(name),
+    kmeansLayout.ensure(corpus, name,
       s"annkm:k$kClusters:i$iters:b$numBuckets", Seq(idCol, vecCol),
       precomputedKey, IndexManifest.rowsKey(corpus, Seq(idCol, vecCol), _))(
       writeKmeans(corpus, vecCol, idCol, name, path, kClusters, iters,
@@ -311,7 +279,7 @@ object AnnIndex {
   /** The trained centroid table, collected (bounded: kClusters x dim). */
   private def centroids(spark: SparkSession,
                         name: String): Seq[(Int, Seq[Double])] =
-    spark.table(centroidsTable(name))
+    kmeansLayout.scan(spark, name, "centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
       .toSeq.sortBy(_._1)
 
@@ -323,10 +291,10 @@ object AnnIndex {
     * that tradeoff is IVF's, not this implementation's.
     */
   def appendKmeans(corpus: DataFrame, vecCol: String, idCol: String,
-                   name: String): Unit = {
-    Bucketize.appendBucketed(assignedTo(centroids(corpus.sparkSession, name),
-      normalizedCorpus(corpus, vecCol, idCol)), cellsTable(name))
-  }
+                   name: String): Unit =
+    kmeansLayout.append(name, Map("cells" -> assignedTo(
+      centroids(corpus.sparkSession, name),
+      normalizedCorpus(corpus, vecCol, idCol))))
 
   /** Top-k per query against the persisted cells: assign each query to
     * its `nProbe` nearest STORED centroids (no re-training — the
@@ -350,7 +318,7 @@ object AnnIndex {
       .select(col("query_id"), Dedup.normalized(col("__v")).as("qv"))
       .select(col("query_id"), col("qv"),
         explode(SimilaritySearch.nearestCids(cents, col("qv"), nProbe)).as("cid"))
-    val scored = restricted(spark.table(cellsTable(name)), allowed, false)
+    val scored = restricted(kmeansLayout.scan(spark, name), allowed, false)
       .join(q, Seq("cid"))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine",

@@ -83,38 +83,6 @@ object Curation {
           !col("contaminated"))
   }
 
-  /** The FULL sweep: `sweep`'s four stages plus the two model-driven ones —
-    * an LM-perplexity gate (`NgramLm` fit on the input corpus itself;
-    * `lm_ok` = avg_nll <= `lmMaxNll`, the CCNet-style "drop the most
-    * surprising tail" cut) and temperature source mixing over the curated
-    * survivors (`Mix`; rates are computed from SURVIVOR counts per source —
-    * mixing an uncurated census would misweight sources whose docs die in
-    * the gates). Stage order is deliberate: the exact-dedup keeper is still
-    * chosen among quality+repetition survivors (as in `sweep` — the LM
-    * verdict is an independent per-doc gate like decontamination, so it
-    * cannot reassign keepers), and mixing is last because its rates depend
-    * on every earlier verdict.
-    *
-    * Cost over `sweep`: the LM fit's two bounded-output scans + one scoring
-    * scan with a doc-keyed aggregate, the id joins aligning the verdict
-    * branches, and mixing's per-source aggregate (tiny). The combined
-    * verdict frame feeds mixing twice (rate fit + flag join), so it is
-    * materialized once — to parquet under `checkpointDir` when provided
-    * (the lineage-free phase discipline a 100 TB run wants), else
-    * localCheckpoint — one narrow row per doc, the same discipline as the
-    * semantic-dedup assignment — instead of re-running the whole sweep per
-    * consumer.
-    *
-    * Output: one row per input doc — idCol, sourceCol, the six stage
-    * verdicts, the audit payloads (avg_nll, mix rate) and final `kept`.
-    */
-  /** DATASET CARD (beyond reference — the release artifact a curation run
-    * ships with its corpus): retention totals, per-stage pass rates, and
-    * the per-source funnel (docs → curated → sampled, with mix rates),
-    * rendered as self-contained markdown from ONE bounded aggregate over
-    * the verdict frame (global + per-source rows — |sources|+1 rows ever
-    * leave the executors). Feed it `sweepFull`'s output.
-    */
   /** Content-addressed corpus MANIFEST — the identity a training run
     * records next to its config so "which data was this, exactly?" has a
     * checkable answer: ONE bounded aggregate row
@@ -195,6 +163,13 @@ object Curation {
         col("old_fp"), col("new_fp"))
   }
 
+  /** DATASET CARD (beyond reference — the release artifact a curation run
+    * ships with its corpus): retention totals, per-stage pass rates, and
+    * the per-source funnel (docs → curated → sampled, with mix rates),
+    * rendered as self-contained markdown from ONE bounded aggregate over
+    * the verdict frame (global + per-source rows — |sources|+1 rows ever
+    * leave the executors). Feed it `sweepFull`'s output.
+    */
   def datasetCard(verdicts: DataFrame, sourceCol: String,
                   title: String = "Dataset card"): String = {
     val stages = Seq("quality_ok", "repetition_ok", "lm_ok", "exact_unique",
@@ -298,6 +273,31 @@ object Curation {
     f"${family}_verdicts_${System.currentTimeMillis()}%013d_" +
       java.util.UUID.randomUUID().toString.take(8) + ".parquet"
 
+  /** The FULL sweep: `sweep`'s four stages plus the two model-driven ones —
+    * an LM-perplexity gate (`NgramLm` fit on the input corpus itself;
+    * `lm_ok` = avg_nll <= `lmMaxNll`, the CCNet-style "drop the most
+    * surprising tail" cut) and temperature source mixing over the curated
+    * survivors (`Mix`; rates are computed from SURVIVOR counts per source —
+    * mixing an uncurated census would misweight sources whose docs die in
+    * the gates). Stage order is deliberate: the exact-dedup keeper is still
+    * chosen among quality+repetition survivors (as in `sweep` — the LM
+    * verdict is an independent per-doc gate like decontamination, so it
+    * cannot reassign keepers), and mixing is last because its rates depend
+    * on every earlier verdict.
+    *
+    * Cost over `sweep`: the LM fit's two bounded-output scans + one scoring
+    * scan with a doc-keyed aggregate, the id joins aligning the verdict
+    * branches, and mixing's per-source aggregate (tiny). The combined
+    * verdict frame feeds mixing twice (rate fit + flag join), so it is
+    * materialized once — to parquet under `checkpointDir` when provided
+    * (the lineage-free phase discipline a 100 TB run wants), else
+    * localCheckpoint — one narrow row per doc, the same discipline as the
+    * semantic-dedup assignment — instead of re-running the whole sweep per
+    * consumer.
+    *
+    * Output: one row per input doc — idCol, sourceCol, the six stage
+    * verdicts, the audit payloads (avg_nll, mix rate) and final `kept`.
+    */
   def sweepFull(docs: DataFrame, bench: DataFrame, textCol: String,
                 idCol: String, sourceCol: String, decontaminateN: Int = 8,
                 lmVocabSize: Int = 20000, lmMinCount: Long = 2L,

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
-import graft.sources.Bucketize
 
 /** Persisted minhash-LSH dedup index — the incremental-ingestion half of
   * the 100 TB dedup story, beyond the reference (skrub's `deduplicate`,
@@ -26,15 +25,20 @@ import graft.sources.Bucketize
   */
 object DedupIndex {
 
-  def bandsTable(name: String): String = s"${name}_bands"
-  def docsTable(name: String): String = s"${name}_docs"
+  /** The dedup layout: band keys bucketed by band (carrying the shingle /
+    * band geometry as properties) and shingle sets bucketed by doc id.
+    */
+  val layout: StandingIndex.Layout = StandingIndex.Layout("bands",
+    StandingIndex.Part("bands", Seq("band")),
+    StandingIndex.Part("docs", Seq("id")))
 
-  /** (bands: (id, band) null-free, docs: (id, shingles)) for a corpus side.
-    * The raw text is CPU-spread before hashing for the same reason as
-    * minhashLshPairs: signature cost is per-character, not per-byte-split.
+  /** The layout's rows for a corpus side: `bands` (id, band) null-free and
+    * `docs` (id, shingles). The raw text is CPU-spread before hashing for
+    * the same reason as minhashLshPairs: signature cost is per-character,
+    * not per-byte-split.
     */
   private def parts(df: DataFrame, textCol: String, idCol: String, n: Int,
-                    rowsPerBand: Int, nBands: Int): (DataFrame, DataFrame) = {
+                    rowsPerBand: Int, nBands: Int): Map[String, DataFrame] = {
     val raw = df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), col(textCol).as("__text"))
     val spread = raw.repartition(graft.ops.Partitions.cpuSpread(raw), col("id"))
@@ -45,7 +49,7 @@ object DedupIndex {
     val bands = sigs.select(col("id"),
         explode(array(Dedup.bandExprs(col("sig"), rowsPerBand, nBands): _*)).as("band"))
       .filter(col("band").isNotNull)
-    (bands, docs)
+    Map("bands" -> bands, "docs" -> docs)
   }
 
   /** Build (or rebuild) the index for `df` under catalog name `name`,
@@ -58,26 +62,21 @@ object DedupIndex {
     */
   def write(df: DataFrame, textCol: String, idCol: String, name: String,
             path: String, n: Int = 3, rowsPerBand: Int = 2, nBands: Int = 8,
-            numBuckets: Int = 32): Unit = {
-    val (bands, docs) = parts(df, textCol, idCol, n, rowsPerBand, nBands)
-    Bucketize.writeBucketed(bands, bandsTable(name), s"$path/bands",
-      Seq("band"), numBuckets)
-    Bucketize.writeBucketed(docs, docsTable(name), s"$path/docs", Seq("id"),
-      numBuckets)
-    Bucketize.alterTableProps(df.sparkSession, bandsTable(name), Seq(
-      "graft.n" -> n, "graft.rowsPerBand" -> rowsPerBand,
-      "graft.nBands" -> nBands))
-  }
+            numBuckets: Int = 32): Unit =
+    layout.write(df.sparkSession, name, path, numBuckets,
+      parts(df, textCol, idCol, n, rowsPerBand, nBands), Seq("graft.n" -> n,
+        "graft.rowsPerBand" -> rowsPerBand, "graft.nBands" -> nBands))
 
   /** The standing-index lifecycle in one call — `TextSearch.ensureIndex`
     * for the minhash-band dedup index: build/rebuild only when the
     * stamped content key plus the shingle/band geometry does not match
     * the corpus; reuse otherwise. Returns true when it (re)built.
-    * The reuse policy is `StandingIndex.ensure`'s: dir-backed corpora
-    * key on the O(files) LISTING (see `IndexManifest`); non-scan plans
-    * fall back to the precise manifest aggregate (`IndexManifest.textKey`),
-    * which is also the `precomputedKey` opt-in for in-place same-size
-    * mutations and for ingest loops tracking their manifest additively.
+    * The reuse policy is `StandingIndex.Layout.ensure`'s: dir-backed
+    * corpora key on the O(files) LISTING (see `IndexManifest`); non-scan
+    * plans fall back to the precise manifest aggregate
+    * (`IndexManifest.textKey`), which is also the `precomputedKey` opt-in
+    * for in-place same-size mutations and for ingest loops tracking their
+    * manifest additively.
     *
     * Out-of-band `append`s deliberately do NOT update the key (appends
     * here mutate no table properties — spec-pinned for concurrent-append
@@ -90,7 +89,7 @@ object DedupIndex {
              path: => String, n: Int = 3, rowsPerBand: Int = 2, nBands: Int = 8,
              numBuckets: Int = 32,
              precomputedKey: Option[String] = None): Boolean =
-    StandingIndex.ensure(df, bandsTable(name),
+    layout.ensure(df, name,
       s"mhband:n$n:r$rowsPerBand:nb$nBands:b$numBuckets", Seq(textCol, idCol),
       precomputedKey, IndexManifest.textKey(df, textCol, _))(
       write(df, textCol, idCol, name, path, n, rowsPerBand, nBands, numBuckets))
@@ -115,52 +114,36 @@ object DedupIndex {
   def append(df: DataFrame, textCol: String, idCol: String,
              name: String): Unit = {
     val (n, rowsPerBand, nBands) = geometry(df.sparkSession, name)
-    val (bands, docs) = parts(df, textCol, idCol, n, rowsPerBand, nBands)
-    Bucketize.appendBucketed(bands, bandsTable(name))
-    Bucketize.appendBucketed(docs, docsTable(name))
+    layout.append(name, parts(df, textCol, idCol, n, rowsPerBand, nBands))
   }
-
-  /** Compact an append-accumulated index into a fresh layout at `newPath`
-    * (one sorted file per bucket again); geometry properties carry over,
-    * so probes are plan- and result-identical. Run it on the cadence the
-    * append-file count dictates — the classic ingest → compact rhythm
-    * (`StandingIndex.compact`).
-    */
-  def compact(spark: SparkSession, name: String, newPath: String): Unit =
-    StandingIndex.compact(spark, name, newPath, "bands", "docs")
 
   /** The (n, rowsPerBand, nBands) geometry persisted with the index. */
   def geometry(spark: SparkSession, name: String): (Int, Int, Int) = {
-    val props = Bucketize.tableProps(spark, bandsTable(name))
-    (props("graft.n").toInt, props("graft.rowsPerBand").toInt,
-      props("graft.nBands").toInt)
+    val p = layout.props(spark, name)
+    (p("graft.n").toInt, p("graft.rowsPerBand").toInt, p("graft.nBands").toInt)
   }
 
   /** Best near-duplicate already in the index for each batch doc:
     * (id, match_id, jaccard) — highest exact jaccard >= `minJaccard` among
     * band-collision candidates, ties to the smallest match_id; batch docs
     * with no match emit no row. The shingle / band geometry comes from the
-    * index's own table properties (explicit values only for indexes read
-    * through plain views that carry none). The two index joins read
-    * bucketed scans — no Exchange on the index side; the aggregate is a
-    * bounded per-id best, map-side combined.
+    * index's own table properties. The two index joins read bucketed
+    * scans — no Exchange on the index side; the aggregate is a bounded
+    * per-id best, map-side combined.
     */
   def probe(batch: DataFrame, textCol: String, idCol: String, name: String,
-            minJaccard: Double = 0.4, n: Int = 0, rowsPerBand: Int = 0,
-            nBands: Int = 0): DataFrame = {
+            minJaccard: Double = 0.4): DataFrame = {
     val spark = batch.sparkSession
-    val (gN, gRows, gBands) =
-      if (n > 0 && rowsPerBand > 0 && nBands > 0) (n, rowsPerBand, nBands)
-      else geometry(spark, name)
-    val (bBands, bDocs) = parts(batch, textCol, idCol, gN, gRows, gBands)
-    val iBands = spark.table(bandsTable(name))
+    val (n, rowsPerBand, nBands) = geometry(spark, name)
+    val b = parts(batch, textCol, idCol, n, rowsPerBand, nBands)
+    val iBands = layout.scan(spark, name)
       .select(col("band"), col("id").as("match_id"))
-    val cand = bBands.join(iBands, Seq("band"))
+    val cand = b("bands").join(iBands, Seq("band"))
       .select(col("id"), col("match_id")).distinct()
-    val iDocs = spark.table(docsTable(name))
+    val iDocs = layout.scan(spark, name, "docs")
       .select(col("id").as("match_id"), col("shingles").as("sh_i"))
     val verified = cand
-      .join(bDocs, Seq("id"))
+      .join(b("docs"), Seq("id"))
       .join(iDocs, Seq("match_id"))
       .withColumn("n_common", size(array_intersect(col("shingles"), col("sh_i"))))
       .withColumn("jaccard", col("n_common").cast(DoubleType) /

@@ -1,20 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.sources.Bucketize
 
 /** The ONE standing-index lifecycle shared by every persisted index
   * family — BM25 (`TextSearch`), minhash-band dedup (`DedupIndex`), LSH
-  * ANN and k-means IVF (`AnnIndex`). Each family keeps only what really
-  * differs: its build body, its probe scorer and its append policy; the
-  * reuse policy (content key → freshness check → build → verified stamp),
-  * the ingest → compact rewrite and the micro-batch stream wrapper live
-  * here, so a change to any of them is made once.
-  *
-  * Table convention: a family's index `name` is a set of bucketed tables
-  * `<name>_<part>` laid out under `<path>/<part>` (`postings`, `lens`,
-  * `bands`, `docs`, `cells`, `centroids`); the staleness key
-  * (`IndexManifest`) is stamped on the family's primary table.
+  * ANN and k-means IVF (`AnnIndex`). Each family declares its storage
+  * once, as a [[StandingIndex.Layout]], and keeps only what really
+  * differs: its build body, its probe scorer, its append policy and the
+  * decode of its geometry properties. Everything the layout determines —
+  * table names, bucketed writes, appends, compaction, property reads and
+  * the reuse policy (content key → freshness check → build → verified
+  * stamp) — lives here, as does the micro-batch stream wrapper, so a
+  * change to any of them is made once.
   *
   * Reference: skrub's `deduplicate` and retrieval are one-shot in-memory
   * calls; the payoff of a standing index is reusing persisted state across
@@ -22,49 +21,123 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StandingIndex {
 
-  /** Make sure `table`'s index holds EXACTLY `df`'s content under build
-    * geometry `params`, running `build` only when it does not. Returns
-    * true when it (re)built, false when the standing index was reused.
-    *
-    * The key is `precomputedKey` when given (an ingest loop's additive
-    * running manifest — no scan, no listing), else the O(files) listing
-    * key when `df` is a plain file scan (`IndexManifest.filesKeyOf` over
-    * `cols`), else `preciseKey(params)` — the content aggregate
-    * (`textKey`/`rowsKey`). See `IndexManifest` for the contract.
-    *
-    * Concurrency: SINGLE-WRITER per index name — check-then-act over a
-    * metastore with last-write-wins property updates and no CAS, so two
-    * sessions ensuring the same name race the layout path and a concurrent
-    * probe can observe a half-rebuilt index. The post-stamp read-back
-    * (`IndexManifest.stampVerified`) fails the common interleaving loudly;
-    * the hard guarantee is the contract: one ensuring driver per standing
-    * index, probes quiesced across a rebuild.
+  /** One bucketed table of an index: bucketed and sorted by `keys`, into
+    * the index's bucket count unless `buckets` (> 0) fixes it.
     */
-  def ensure(df: DataFrame, table: String, params: String, cols: Seq[String],
-             precomputedKey: Option[String], preciseKey: String => String)(
-      build: => Unit): Boolean = {
-    val spark = df.sparkSession
-    val key = precomputedKey.getOrElse(
-      IndexManifest.filesKeyOf(df, params, cols).getOrElse(preciseKey(params)))
-    val fresh = spark.catalog.tableExists(table) &&
-      IndexManifest.stored(spark, table).contains(key)
-    if (!fresh) {
-      build
-      IndexManifest.stampVerified(spark, table, key)
-    }
-    !fresh
-  }
+  final case class Part(name: String, keys: Seq[String], buckets: Int = 0)
 
-  /** Compact an append-accumulated index into a fresh layout at `newPath`:
-    * each table `<name>_<part>` is rewritten to `<newPath>/<part>` with one
-    * sorted file per bucket (`Bucketize.compact`), its bucket spec and
-    * graft.* properties carried over, so probes are plan- and result-
-    * identical. Run it on the cadence the append-file count dictates.
+  /** A family's storage: index `name` is the bucketed external parquet
+    * tables `<name>_<part>` laid out under `<path>/<part>`, one per part.
+    * `parts` are in write and append order; the `primary` part's table
+    * carries the geometry properties and the staleness key
+    * (`IndexManifest`). The families' layouts:
+    *  - BM25: `lens(doc_id)`, then primary `postings(term)`;
+    *  - minhash bands: primary `bands(band)`, `docs(id)`;
+    *  - LSH ANN: primary `postings(tbl, bkt)`;
+    *  - k-means IVF: primary `cells(cid)`, `centroids(cid)` at one bucket.
     */
-  def compact(spark: SparkSession, name: String, newPath: String,
-              parts: String*): Unit =
-    parts.foreach(p =>
-      graft.sources.Bucketize.compact(spark, s"${name}_$p", s"$newPath/$p"))
+  final case class Layout(primary: String, parts: Part*) {
+    require(parts.exists(_.name == primary), s"no part named $primary")
+
+    /** The catalog table of `part` of index `name`. */
+    def table(name: String, part: String = primary): String = s"${name}_$part"
+
+    /** `part` of index `name` as a frame; a missing table fails naming the
+      * index.
+      */
+    def scan(spark: SparkSession, name: String,
+             part: String = primary): DataFrame =
+      try spark.table(table(name, part))
+      catch {
+        case e: AnalysisException => throw new IllegalStateException(
+          s"standing index '$name' has no table ${table(name, part)}: " +
+            "its build did not finish, or the name belongs to another " +
+            "index family — rebuild it", e)
+      }
+
+    /** The primary table's properties. Reading a missing key fails naming
+      * the index, the table and the key — what a build that died before
+      * its properties, or a name of another family, looks like.
+      */
+    def props(spark: SparkSession, name: String): Map[String, String] =
+      Bucketize.tableProps(spark, table(name)).withDefault(k =>
+        throw new IllegalStateException(
+          s"standing index '$name': table ${table(name)} has no property " +
+            s"'$k' — its build did not finish, or the name belongs to " +
+            "another index family; rebuild it"))
+
+    /** Make sure index `name` holds EXACTLY `df`'s content under build
+      * geometry `params`, running `build` only when it does not. Returns
+      * true when it (re)built, false when the standing index was reused.
+      *
+      * The key is `precomputedKey` when given (an ingest loop's additive
+      * running manifest — no scan, no listing), else the O(files) listing
+      * key when `df` is a plain file scan (`IndexManifest.filesKeyOf` over
+      * `cols`), else `preciseKey(params)` — the content aggregate
+      * (`textKey`/`rowsKey`). It is stamped on the primary table. See
+      * `IndexManifest` for the contract.
+      *
+      * Concurrency: SINGLE-WRITER per index name — check-then-act over a
+      * metastore with last-write-wins property updates and no CAS, so two
+      * sessions ensuring the same name race the layout path and a
+      * concurrent probe can observe a half-rebuilt index. The post-stamp
+      * read-back (`IndexManifest.stampVerified`) fails the common
+      * interleaving loudly; the hard guarantee is the contract: one
+      * ensuring driver per standing index, probes quiesced across a
+      * rebuild.
+      */
+    def ensure(df: DataFrame, name: String, params: String, cols: Seq[String],
+               precomputedKey: Option[String], preciseKey: String => String)(
+        build: => Unit): Boolean = {
+      val spark = df.sparkSession
+      val key = precomputedKey.getOrElse(
+        IndexManifest.filesKeyOf(df, params, cols).getOrElse(preciseKey(params)))
+      val fresh = spark.catalog.tableExists(table(name)) &&
+        IndexManifest.stored(spark, table(name)).contains(key)
+      if (!fresh) {
+        build
+        IndexManifest.stampVerified(spark, table(name), key)
+      }
+      !fresh
+    }
+
+    /** (Re)write index `name` under `path`: each part's rows from
+      * `frames(part)`, replacing any existing table, then `props` (read
+      * after the writes) on the primary table. The parts are independent
+      * jobs, overlapped from one driver thread each (`Jobs.overlapAll`):
+      * at local[32] that is wall-neutral (the jobs saturate the same
+      * cores); it pays off where the write cost is COMMIT LATENCY rather
+      * than CPU — object-store multipart commits and metastore round-trips
+      * at cluster scale.
+      */
+    def write(spark: SparkSession, name: String, path: String,
+              numBuckets: Int, frames: Map[String, DataFrame],
+              props: => Iterable[(String, Any)] = Nil): Unit = {
+      graft.ops.Jobs.overlapAll(spark.sparkContext)(parts.map(p => () =>
+        Bucketize.writeBucketed(frames(p.name), table(name, p.name),
+          s"$path/${p.name}", p.keys,
+          if (p.buckets > 0) p.buckets else numBuckets)))
+      Bucketize.alterTableProps(spark, table(name), props)
+    }
+
+    /** Append `frames` to index `name`, part by part in part order, under
+      * each table's recorded bucket spec (`Bucketize.appendBucketed`);
+      * parts without a frame are left alone.
+      */
+    def append(name: String, frames: Map[String, DataFrame]): Unit =
+      parts.foreach(p => frames.get(p.name)
+        .foreach(Bucketize.appendBucketed(_, table(name, p.name))))
+
+    /** Compact an append-accumulated index into a fresh layout at
+      * `newPath`: each part is rewritten to `<newPath>/<part>` with one
+      * sorted file per bucket (`Bucketize.compact`), its bucket spec and
+      * graft.* properties carried over, so probes are plan- and result-
+      * identical. Run it on the cadence the append-file count dictates.
+      */
+    def compact(spark: SparkSession, name: String, newPath: String): Unit =
+      parts.foreach(p =>
+        Bucketize.compact(spark, table(name, p.name), s"$newPath/${p.name}"))
+  }
 
   /** Run `probe` on each micro-batch of `stream` and hand the result to
     * `sink` (write, route away, alert — the caller's policy). Each

@@ -208,13 +208,21 @@ object TextSearch {
            k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
     topkOf(scores(df, textCol, idCol, queries, qTextCol, qIdCol, k1, b), k)
 
-  def postingsTable(name: String): String = s"${name}_postings"
-  def lensTable(name: String): String = s"${name}_lens"
+  /** The BM25 layout: doc lengths bucketed by doc id, postings by term;
+    * the corpus stats live on the postings table. Lens comes first so a
+    * crash between the two appends leaves lens rows without postings —
+    * docs that score as empty, never orphan postings that skew df.
+    */
+  val layout: StandingIndex.Layout = StandingIndex.Layout("postings",
+    StandingIndex.Part("lens", Seq("doc_id")),
+    StandingIndex.Part("postings", Seq("term")))
 
   private val PendingKey = "graft.bm25.pendingBatch"
+  private val NDocsKey = "graft.bm25.nDocs"
+  private val SumDlKey = "graft.bm25.sumDl"
 
   private def stats(nDocs: Long, sumDl: Long): Seq[(String, Long)] =
-    Seq("graft.bm25.nDocs" -> nDocs, "graft.bm25.sumDl" -> sumDl)
+    Seq(NDocsKey -> nDocs, SumDlKey -> sumDl)
 
   /** Loud guard against the half-applied-append window: `append` stamps a
     * pending-batch marker before it mutates anything and clears it only
@@ -227,43 +235,29 @@ object TextSearch {
     * degraded state (batch docs registered in the stats but not yet
     * retrievable). Only run `repair` when no append is in flight.
     */
-  private def requireClean(props: Map[String, String], name: String,
-                           what: String): Unit =
+  private def requireClean(props: Map[String, String], name: String): Unit =
     props.get(PendingKey).filter(_.nonEmpty).foreach { b =>
       throw new IllegalStateException(
-        s"TextSearch.$what: index '$name' has a pending append " +
+        s"TextSearch.append: index '$name' has a pending append " +
           s"(batch '$b'). If an append is RUNNING, wait for it; if it " +
           "CRASHED, do NOT retry it — run " +
           s"TextSearch.repair(spark, \"$name\") to resync the stats " +
           "from the lens table, or rebuild the index from source.")
     }
 
-  /** Persist the corpus as a standing BM25 index: postings bucketed by
-    * term, doc lengths bucketed by doc id, corpus stats as table
-    * properties. `probe` then touches no corpus-side Exchange: the query
-    * terms broadcast against the bucketed postings scan. The tokenize
-    * happens twice (postings write, lens write) — the stats come from the
-    * already-cached lens frame, not a third pass.
+  /** Persist the corpus as a standing BM25 index (`layout`), corpus stats
+    * as table properties. `probe` then touches no corpus-side Exchange:
+    * the query terms broadcast against the bucketed postings scan. The
+    * tokenize happens twice (postings write, lens write) — the stats come
+    * from the already-cached lens frame, not a third pass.
     */
   def buildIndex(df: DataFrame, textCol: String, idCol: String,
                  name: String, path: String, numBuckets: Int = 32): Unit = {
     val (post, docLens) = postings(df, textCol, idCol)
-    // the two bucketed writes are independent jobs (postings never reads
-    // docLens) — overlap them from two driver threads. Measured honestly:
-    // at local[32] this is wall-neutral (both jobs saturate the same
-    // cores); the overlap pays off where the write cost is COMMIT LATENCY
-    // rather than CPU — object-store multipart commits and metastore
-    // round-trips at cluster scale — which is exactly the regime the r9
-    // bench flagged this builder's constants in
-    graft.ops.Jobs.overlapAll(df.sparkSession.sparkContext)(Seq(
-      () => Bucketize.writeBucketed(docLens, lensTable(name),
-        s"$path/lens", Seq("doc_id"), numBuckets),
-      () => Bucketize.writeBucketed(post, postingsTable(name),
-        s"$path/postings", Seq("term"), numBuckets)))
-    val (nDocs, sumDl) = corpusStats(docLens)
-    docLens.unpersist()
-    Bucketize.alterTableProps(df.sparkSession, postingsTable(name),
-      stats(nDocs, sumDl))
+    try layout.write(df.sparkSession, name, path, numBuckets,
+      Map("lens" -> docLens, "postings" -> post),
+      (stats _).tupled(corpusStats(docLens)))
+    finally docLens.unpersist()
   }
 
   /** The STANDING-INDEX lifecycle in one call (r14 — the bench
@@ -272,7 +266,7 @@ object TextSearch {
     * content and build geometry, building/rebuilding only when it does
     * not. Returns true when it (re)built, false when the standing index
     * was reused — the caller probes either way. The reuse policy is
-    * `StandingIndex.ensure`'s, shared by all four index families:
+    * `StandingIndex.Layout.ensure`'s, shared by all four index families:
     *  - dir-backed corpora (`df` is a plain file scan, modulo
     *    Project/Filter — the common shape) key on the O(files) LISTING
     *    (file names + lengths + the plan's own filter fingerprint), so a
@@ -296,14 +290,14 @@ object TextSearch {
     * so callers may pass an expression that provisions/wipes the layout
     * directory (the bench registries do) without invalidating a standing
     * index they are about to reuse. SINGLE-WRITER per index name (see
-    * `StandingIndex.ensure`; mirrors `append`'s single-writer note).
+    * `StandingIndex.Layout.ensure`; mirrors `append`'s single-writer
+    * note).
     */
   def ensureIndex(df: DataFrame, textCol: String, idCol: String,
                   name: String, path: => String, numBuckets: Int = 32,
                   precomputedKey: Option[String] = None): Boolean =
-    StandingIndex.ensure(df, postingsTable(name), s"bm25:b$numBuckets",
-      Seq(textCol, idCol), precomputedKey,
-      IndexManifest.textKey(df, textCol, _))(
+    layout.ensure(df, name, s"bm25:b$numBuckets", Seq(textCol, idCol),
+      precomputedKey, IndexManifest.textKey(df, textCol, _))(
       buildIndex(df, textCol, idCol, name, path, numBuckets))
 
   /** Append an ingest batch to a standing index — the accumulate-over-
@@ -335,21 +329,31 @@ object TextSearch {
     * any data lands, but a fully adversarial schedule can still slip
     * through — serialize appends (one ingest driver per index) for the
     * hard guarantee.
+    *
+    * The batch's lens frame is released on every exit: a refused, failed
+    * or empty append pins no storage.
     */
   def append(df: DataFrame, textCol: String, idCol: String,
              name: String): Unit = {
     val (post, docLens) = postings(df, textCol, idCol)
-    val bN = docLens.count()
-    if (bN == 0) { docLens.unpersist(); return }
+    try {
+      val bN = docLens.count()
+      if (bN > 0) appendBatch(df, textCol, name, post, docLens, bN)
+    } finally docLens.unpersist()
+  }
+
+  private def appendBatch(df: DataFrame, textCol: String, name: String,
+                          post: DataFrame, docLens: DataFrame,
+                          bN: Long): Unit = {
     val (_, bSum) = corpusStats(docLens)
     val spark = df.sparkSession
-    val pt = postingsTable(name)
-    val props = Bucketize.tableProps(spark, pt)
-    requireClean(props, name, "append")
+    val pt = layout.table(name)
+    val props = layout.props(spark, name)
+    requireClean(props, name)
     val batchTag = java.util.UUID.randomUUID().toString
     Bucketize.alterTableProps(spark, pt,
-      (PendingKey -> batchTag) +: stats(props("graft.bm25.nDocs").toLong + bN,
-        props("graft.bm25.sumDl").toLong + bSum))
+      (PendingKey -> batchTag) +: stats(props(NDocsKey).toLong + bN,
+        props(SumDlKey).toLong + bSum))
     // stamp-then-verify: appends are SINGLE-WRITER by contract (metastore
     // property updates are last-write-wins, not CAS), but two appends that
     // both passed requireClean are best-effort DETECTED here — whichever
@@ -360,21 +364,17 @@ object TextSearch {
     // counts (probe's lens-count check catches the mismatch once the
     // marker clears). This shrinks (not closes — see scaladoc) the
     // interleaving window; serialize appends for a hard guarantee.
-    val won = Bucketize.tableProps(spark, pt).get(PendingKey).contains(batchTag)
-    if (!won) {
-      docLens.unpersist()
-      throw new IllegalStateException(
-        s"TextSearch.append: concurrent append detected on '$name' — " +
-          "another batch stamped the pending marker between this append's " +
-          "clean-check and its stamp. This append aborted before writing " +
-          "data, but the surviving stats may be inconsistent EITHER way " +
-          "(last-write-wins property updates): after the in-flight append " +
-          s"completes, run TextSearch.repair(spark, \"$name\") to resync " +
-          "the stats from the lens table, then retry this batch. Appends " +
-          "are single-writer by contract.")
-    }
-    Bucketize.appendBucketed(docLens, lensTable(name))
-    Bucketize.appendBucketed(post, pt)
+    val won = layout.props(spark, name).get(PendingKey).contains(batchTag)
+    if (!won) throw new IllegalStateException(
+      s"TextSearch.append: concurrent append detected on '$name' — " +
+        "another batch stamped the pending marker between this append's " +
+        "clean-check and its stamp. This append aborted before writing " +
+        "data, but the surviving stats may be inconsistent EITHER way " +
+        "(last-write-wins property updates): after the in-flight append " +
+        s"completes, run TextSearch.repair(spark, \"$name\") to resync " +
+        "the stats from the lens table, then retry this batch. Appends " +
+        "are single-writer by contract.")
+    layout.append(name, Map("lens" -> docLens, "postings" -> post))
     Bucketize.alterTableProps(spark, pt, Nil, Seq(PendingKey))
     // ensure-managed indexes keep their content key LIVE across appends:
     // manifest-scan keys are additive over disjoint batches, so combining
@@ -393,7 +393,6 @@ object TextSearch {
       else IndexManifest.stamp(spark, pt, IndexManifest.combine(k,
         IndexManifest.textKey(df, textCol, IndexManifest.paramsOf(k))))
     }
-    docLens.unpersist()
   }
 
   /** Recover from a detected half-applied append: recompute nDocs/sumDl
@@ -401,22 +400,13 @@ object TextSearch {
     * has exactly one lens row) and clear the pending marker. Postings of
     * the crashed batch may be absent (those docs score as empty — the
     * monotone-degraded state `append` documents) but never double-counted
-    * in the stats; a `compact`-then-rebuild is the full-fidelity path.
+    * in the stats; a compact-then-rebuild is the full-fidelity path.
     */
   def repair(spark: SparkSession, name: String): Unit = {
-    val lens = spark.table(lensTable(name))
-    val (nDocs, sumDl) = corpusStats(lens)
-    Bucketize.alterTableProps(spark, postingsTable(name), stats(nDocs, sumDl),
+    val (nDocs, sumDl) = corpusStats(layout.scan(spark, name, "lens"))
+    Bucketize.alterTableProps(spark, layout.table(name), stats(nDocs, sumDl),
       Seq(PendingKey))
   }
-
-  /** Compact an append-accumulated index into a fresh layout at `newPath`
-    * (one sorted file per bucket again); the stats properties carry over,
-    * so probes are plan- and result-identical — the ingest → compact
-    * rhythm shared with `DedupIndex`/`AnnIndex` (`StandingIndex.compact`).
-    */
-  def compact(spark: SparkSession, name: String, newPath: String): Unit =
-    StandingIndex.compact(spark, name, newPath, "postings", "lens")
 
   // stats tuples already lens-verified this JVM (see probe's scaladoc)
   private[graft] val verifiedStats =
@@ -426,38 +416,36 @@ object TextSearch {
     * `topk`, with corpus stats from the index's own table properties, so a
     * probe cannot desynchronize from the layout it scores against.
     *
-    * Consistency check (`verifyStats = true`): when NO append is in
-    * flight (pending marker clear), the lens-table row count must equal
-    * the `nDocs` property — every committed doc writes exactly one lens
-    * row, so a mismatch means a torn append whose marker was cleared
-    * without `repair` (or a corrupted layout), and the probe refuses with
-    * the recovery path instead of silently mis-scoring idf/avgdl. A SET
-    * marker skips the check: registered-but-not-yet-retrievable batch
-    * docs are the documented monotone in-flight state, and reads stay
-    * available during ingest. The count is one metadata-bounded job over
-    * the two-column lens table, MEMOIZED per verified (name, nDocs,
-    * sumDl) tuple per JVM (r15) — a standing index probed per query
-    * batch pays it once, not per probe (at 100 TB the count is an
-    * O(files) footer pass). Sound: every mutation that could invalidate
-    * a verified tuple also CHANGES it — `append` rewrites nDocs/sumDl
-    * (stamping the pending marker first; a torn append leaves the marker
-    * or the mutated stats), `repair` rewrites them, a rebuild recreates
-    * the table. Out-of-band layout corruption from ANOTHER process is
-    * outside any per-call check's reach anyway (the count would race
-    * it). Pass `verifyStats = false` on hot probe loops that accept the
-    * torn-append risk entirely.
+    * Consistency check: when NO append is in flight (pending marker
+    * clear), the lens-table row count must equal the `nDocs` property —
+    * every committed doc writes exactly one lens row, so a mismatch means
+    * a torn append whose marker was cleared without `repair` (or a
+    * corrupted layout), and the probe refuses with the recovery path
+    * instead of silently mis-scoring idf/avgdl. A SET marker skips the
+    * check: registered-but-not-yet-retrievable batch docs are the
+    * documented monotone in-flight state, and reads stay available during
+    * ingest. The count is one metadata-bounded job over the two-column
+    * lens table, MEMOIZED per verified (name, nDocs, sumDl) tuple per JVM
+    * (r15) — a standing index probed per query batch pays it once, not
+    * per probe (at 100 TB the count is an O(files) footer pass). Sound:
+    * every mutation that could invalidate a verified tuple also CHANGES
+    * it — `append` rewrites nDocs/sumDl (stamping the pending marker
+    * first; a torn append leaves the marker or the mutated stats),
+    * `repair` rewrites them, a rebuild recreates the table. Out-of-band
+    * layout corruption from ANOTHER process is outside any per-call
+    * check's reach anyway (the count would race it).
     */
   def probe(spark: SparkSession, name: String,
             queries: DataFrame, qTextCol: String, qIdCol: String,
-            k: Int, k1: Double = 1.2, b: Double = 0.75,
-            verifyStats: Boolean = true): DataFrame = {
-    val props = Bucketize.tableProps(spark, postingsTable(name))
-    val nDocs = props("graft.bm25.nDocs").toLong
-    val avgdl = props("graft.bm25.sumDl").toDouble / nDocs.toDouble
-    val statsKey = s"$name:$nDocs:${props("graft.bm25.sumDl")}"
-    if (verifyStats && !props.get(PendingKey).exists(_.nonEmpty) &&
+            k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val props = layout.props(spark, name)
+    val nDocs = props(NDocsKey).toLong
+    val avgdl = props(SumDlKey).toDouble / nDocs.toDouble
+    val statsKey = s"$name:$nDocs:${props(SumDlKey)}"
+    val lens = layout.scan(spark, name, "lens")
+    if (!props.get(PendingKey).exists(_.nonEmpty) &&
         !verifiedStats.contains(statsKey)) {
-      val lensN = spark.table(lensTable(name)).count()
+      val lensN = lens.count()
       if (lensN != nDocs) throw new IllegalStateException(
         s"TextSearch.probe: index '$name' is INCONSISTENT — lens table " +
           s"has $lensN rows but the nDocs property says $nDocs, with no " +
@@ -467,8 +455,7 @@ object TextSearch {
           "the lens table, or rebuild the index from source.")
       verifiedStats.add(statsKey)
     }
-    topkOf(scoreMicro(spark.table(postingsTable(name)),
-      Some(spark.table(lensTable(name))), nDocs, avgdl,
+    topkOf(scoreMicro(layout.scan(spark, name), Some(lens), nDocs, avgdl,
       queries, qTextCol, qIdCol, k1, b, dfViaWindow = true), k)
   }
 

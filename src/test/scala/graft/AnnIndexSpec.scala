@@ -47,7 +47,7 @@ class AnnIndexSpec extends AnyFunSuite {
       numBuckets = 4)
     val expectedPlanes = graft.operators.Dedup.planesFor(emb.count())
     assert(AnnIndex.geometry(spark, "graft_annidx_auto") ===
-      (expectedPlanes, 16))
+      ((expectedPlanes, 16, false)))
     // probe runs with the persisted geometry — no caller-side params
     val out = AnnIndex.probe(emb.filter(col("vec_id") < 8), "embedding",
       "vec_id", "graft_annidx_auto", k = 5)
@@ -70,8 +70,8 @@ class AnnIndexSpec extends AnyFunSuite {
       planesPerTable = 4, nTables = 16, numBuckets = 4)
     AnnIndex.write(emb, "embedding", "vec_id", "graft_annidx_sq8", sq8,
       planesPerTable = 4, nTables = 16, numBuckets = 4, quantize = true)
-    assert(AnnIndex.quantized(spark, "graft_annidx_sq8"))
-    assert(!AnnIndex.quantized(spark, "graft_annidx_full"))
+    assert(AnnIndex.geometry(spark, "graft_annidx_sq8")._3)
+    assert(!AnnIndex.geometry(spark, "graft_annidx_full")._3)
     val fb = dirBytes(s"$full/postings")
     val qb = dirBytes(s"$sq8/postings")
     assert(qb < fb / 2, s"quantized postings $qb B vs full $fb B")
@@ -162,13 +162,18 @@ class AnnIndexSpec extends AnyFunSuite {
       probe.collect()
       assert(Bucketize.bucketedScans(probe) === 1,
         probe.queryExecution.executedPlan.toString)
-      // same files as plain parquet must plan MORE exchanges — the
-      // difference is the corpus-side shuffle the layout pre-paid
-      spark.read.parquet(s"$dir/postings")
-        .createOrReplaceTempView("graft_annidx_plain_postings")
-      // the temp view has no table properties — geometry passed explicitly
+      // same files as an unbucketed table must plan MORE exchanges — the
+      // difference is the corpus-side shuffle the layout pre-paid; the
+      // index's properties are copied over, so the probe reads the same
+      // geometry
+      val plainTable = AnnIndex.layout.table("graft_annidx_plain")
+      spark.sql(s"DROP TABLE IF EXISTS `$plainTable`")
+      spark.catalog.createTable(plainTable, s"$dir/postings", "parquet")
+      Bucketize.alterTableProps(spark, plainTable,
+        Bucketize.tableProps(spark, AnnIndex.layout.table("graft_annidx_plan"))
+          .filter(_._1.startsWith("graft.")))
       val plain = AnnIndex.probe(queries, "embedding", "vec_id",
-        "graft_annidx_plain", k = 5, planesPerTable = 4, nTables = 16)
+        "graft_annidx_plain", k = 5)
       plain.collect()
       val bucketedEx = Bucketize.shuffleExchanges(probe)
       val plainEx = Bucketize.shuffleExchanges(plain)
@@ -261,9 +266,10 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.appendKmeans(emb.filter(col("vec_id") % 2 === 1), "embedding",
       "vec_id", "graft_annidx_km_inc")
     // every appended vector is in the cell table, assigned to a stored cid
-    val cells = spark.table(AnnIndex.cellsTable("graft_annidx_km_inc"))
+    val km = AnnIndex.kmeansLayout
+    val cells = spark.table(km.table("graft_annidx_km_inc"))
     assert(cells.count() === emb.count())
-    val cids = spark.table(AnnIndex.centroidsTable("graft_annidx_km_inc"))
+    val cids = spark.table(km.table("graft_annidx_km_inc", "centroids"))
       .select("cid").collect().map(_.getInt(0)).toSet
     assert(cells.select("cid").distinct().collect()
       .map(_.getInt(0)).toSet.subsetOf(cids))
@@ -278,24 +284,23 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(m === q, s"query $q (an appended vector, re-id'd) must find " +
         s"its own appended posting at rank 1, found $m")
     }
-    // compactKmeans (r15): the append-accumulated cells rewrite to one
+    // compaction (r15): the append-accumulated cells rewrite to one
     // sorted file per bucket, the centroids carry over UNCHANGED (the
     // quantizer is never retrained), and a probe is result-identical
-    val centsBefore = spark.table(
-        AnnIndex.centroidsTable("graft_annidx_km_inc"))
+    val centsBefore = spark.table(km.table("graft_annidx_km_inc", "centroids"))
       .collect().map(_.toSeq).toSet
     val refProbe = AnnIndex.probeKmeans(probeQ, "embedding", "vec_id",
         "graft_annidx_km_inc", k = 3, nProbe = 4)
       .collect().map(_.toSeq).toSet
     val newDir = java.nio.file.Files
       .createTempDirectory("graft_annidx_kmc").toString
-    AnnIndex.compactKmeans(spark, "graft_annidx_km_inc", newDir)
-    assert(spark.table(AnnIndex.centroidsTable("graft_annidx_km_inc"))
+    km.compact(spark, "graft_annidx_km_inc", newDir)
+    assert(spark.table(km.table("graft_annidx_km_inc", "centroids"))
       .collect().map(_.toSeq).toSet === centsBefore)
     assert(AnnIndex.probeKmeans(probeQ, "embedding", "vec_id",
         "graft_annidx_km_inc", k = 3, nProbe = 4)
       .collect().map(_.toSeq).toSet === refProbe)
-    assert(spark.table(AnnIndex.cellsTable("graft_annidx_km_inc"))
+    assert(spark.table(km.table("graft_annidx_km_inc"))
       .count() === emb.count())
   }
 
@@ -308,7 +313,7 @@ class AnnIndexSpec extends AnyFunSuite {
       "graft_annidx_props", dir, planesPerTable = 4, nTables = 8,
       numBuckets = 4)
     def props() = spark.sql(
-        s"SHOW TBLPROPERTIES `${AnnIndex.postingsTable("graft_annidx_props")}`")
+        s"SHOW TBLPROPERTIES `${AnnIndex.layout.table("graft_annidx_props")}`")
       .collect().map(r => r.getString(0) -> r.getString(1))
       .filter(_._1.startsWith("graft.")).toMap
     val before = props()
@@ -319,10 +324,10 @@ class AnnIndexSpec extends AnyFunSuite {
       "vec_id", "graft_annidx_props")
     assert(props() === before,
       "append must not touch the persisted geometry/quantization")
-    assert(AnnIndex.geometry(spark, "graft_annidx_props") === ((4, 8)))
+    assert(AnnIndex.geometry(spark, "graft_annidx_props") === ((4, 8, false)))
     // appended postings are live under the same geometry: every appended
     // id appears in the postings table
-    val ids = spark.table(AnnIndex.postingsTable("graft_annidx_props"))
+    val ids = spark.table(AnnIndex.layout.table("graft_annidx_props"))
       .select(col("corpus_id")).distinct().count()
     assert(ids === emb.filter(col("vec_id") % 4 =!= 3)
       .filter(col("embedding").isNotNull).count())

@@ -110,16 +110,21 @@ class DedupIndexSpec extends AnyFunSuite {
       // both index scans must come back bucketed...
       assert(Bucketize.bucketedScans(probe) === 2,
         probe.queryExecution.executedPlan.toString)
-      // ...and dropping the bucket layout (same files read as plain
-      // parquet) must cost MORE exchanges: the difference is exactly the
-      // index-side shuffles the layout pre-paid
-      val bands = spark.read.parquet(s"$dir/bands")
-      val docsIdx = spark.read.parquet(s"$dir/docs")
-      bands.createOrReplaceTempView("graft_didx_plain_bands")
-      docsIdx.createOrReplaceTempView("graft_didx_plain_docs")
-      // the temp views carry no table properties — geometry passed explicitly
+      // ...and dropping the bucket layout (same files registered as
+      // unbucketed tables, the index's properties copied over) must cost
+      // MORE exchanges: the difference is exactly the index-side shuffles
+      // the layout pre-paid
+      DedupIndex.layout.parts.foreach { p =>
+        val t = DedupIndex.layout.table("graft_didx_plain", p.name)
+        spark.sql(s"DROP TABLE IF EXISTS `$t`")
+        spark.catalog.createTable(t, s"$dir/${p.name}", "parquet")
+      }
+      Bucketize.alterTableProps(spark,
+        DedupIndex.layout.table("graft_didx_plain"),
+        Bucketize.tableProps(spark, DedupIndex.layout.table("graft_didx_plan"))
+          .filter(_._1.startsWith("graft.")))
       val plain = DedupIndex.probe(bat, "text", "doc_id", "graft_didx_plain",
-        minJaccard = 0.2, n = 3, rowsPerBand = 2, nBands = 8)
+        minJaccard = 0.2)
       plain.collect()
       val bucketedEx = Bucketize.shuffleExchanges(probe)
       val plainEx = Bucketize.shuffleExchanges(plain)
@@ -164,7 +169,7 @@ class DedupIndexSpec extends AnyFunSuite {
       .count(_.getName.endsWith(".parquet"))
     val beforeFiles = parquetFiles(s"$dirI/bands")
     val dirC = java.nio.file.Files.createTempDirectory("graft_didx").toString
-    DedupIndex.compact(spark, "graft_didx_ap_inc", dirC)
+    DedupIndex.layout.compact(spark, "graft_didx_ap_inc", dirC)
     assert(parquetFiles(s"$dirC/bands") < beforeFiles,
       s"compaction must shrink the file count (before=$beforeFiles)")
     assert(DedupIndex.geometry(spark, "graft_didx_ap_inc") === ((3, 2, 8)))
@@ -187,18 +192,20 @@ class DedupIndexSpec extends AnyFunSuite {
     def props(t: String) = spark.sql(s"SHOW TBLPROPERTIES `$t`").collect()
       .map(r => r.getString(0) -> r.getString(1))
       .filter(_._1.startsWith("graft.")).toMap
-    val bandsBefore = props(DedupIndex.bandsTable("graft_didx_props"))
-    val docsBefore = props(DedupIndex.docsTable("graft_didx_props"))
+    val bandsTable = DedupIndex.layout.table("graft_didx_props")
+    val docsTable = DedupIndex.layout.table("graft_didx_props", "docs")
+    val bandsBefore = props(bandsTable)
+    val docsBefore = props(docsTable)
     assert(bandsBefore.nonEmpty, "geometry must live in the properties")
-    val n0 = spark.table(DedupIndex.docsTable("graft_didx_props")).count()
+    val n0 = spark.table(docsTable).count()
     DedupIndex.append(docs.filter(col("doc_id") % 4 === 1), "text", "doc_id",
       "graft_didx_props")
     DedupIndex.append(docs.filter(col("doc_id") % 4 === 2), "text", "doc_id",
       "graft_didx_props")
-    assert(props(DedupIndex.bandsTable("graft_didx_props")) === bandsBefore)
-    assert(props(DedupIndex.docsTable("graft_didx_props")) === docsBefore)
+    assert(props(bandsTable) === bandsBefore)
+    assert(props(docsTable) === docsBefore)
     // both batches landed and are probe-visible under the SAME geometry
-    val nAll = spark.table(DedupIndex.docsTable("graft_didx_props")).count()
+    val nAll = spark.table(docsTable).count()
     assert(nAll === docs.filter(col("doc_id") % 4 =!= 3).count(),
       s"both appended batches must land (docs table went $n0 -> $nAll)")
   }

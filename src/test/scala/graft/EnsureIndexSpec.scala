@@ -3,7 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{AnnIndex, DedupIndex, IndexManifest, TextSearch}
+import graft.operators.{AnnIndex, DedupIndex, IndexManifest, StandingIndex,
+  TextSearch}
+import graft.sources.Bucketize
 
 /** The standing-index lifecycle API (r14): `ensure*` builds once, reuses
   * behind a CONTENT-keyed staleness guard, and rebuilds when the corpus
@@ -76,7 +78,7 @@ class EnsureIndexSpec extends AnyFunSuite {
     // the stamped key IS listing-derived — the timed reuse path pays a
     // directory listing, not a corpus tokenize scan
     val stored0 = IndexManifest.stored(spark,
-      TextSearch.postingsTable(name)).get
+      TextSearch.layout.table(name)).get
     assert(IndexManifest.isFilesKey(stored0), stored0)
     // unchanged listing -> reuse (fresh reader, same files)
     assert(TextSearch.ensureIndex(rd, "text", "doc_id", name, path,
@@ -140,7 +142,7 @@ class EnsureIndexSpec extends AnyFunSuite {
     assert(AnnIndex.ensure(vrd, "embedding", "vec_id", vname, vpath,
       planesPerTable = 2, nTables = 2, numBuckets = 2) === true)
     assert(IndexManifest.isFilesKey(
-      IndexManifest.stored(spark, AnnIndex.postingsTable(vname)).get))
+      IndexManifest.stored(spark, AnnIndex.layout.table(vname)).get))
     assert(AnnIndex.ensure(vrd, "embedding", "vec_id", vname, vpath,
       planesPerTable = 2, nTables = 2, numBuckets = 2) === false)
     // ...and the kmeans-IVF twin (fourth family): listing key stamped,
@@ -150,7 +152,7 @@ class EnsureIndexSpec extends AnyFunSuite {
     assert(AnnIndex.ensureKmeans(vrd, "embedding", "vec_id", kname, kpath,
       kClusters = 2, numBuckets = 2) === true)
     assert(IndexManifest.isFilesKey(
-      IndexManifest.stored(spark, AnnIndex.cellsTable(kname)).get))
+      IndexManifest.stored(spark, AnnIndex.kmeansLayout.table(kname)).get))
     assert(AnnIndex.ensureKmeans(vrd, "embedding", "vec_id", kname, kpath,
       kClusters = 2, numBuckets = 2) === false)
     Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(0.8, 0.6)))
@@ -176,7 +178,7 @@ class EnsureIndexSpec extends AnyFunSuite {
       "text", "doc_id", name)
     // key dropped: the accumulated index no longer matches ANY listing
     assert(IndexManifest.stored(spark,
-      TextSearch.postingsTable(name)).isEmpty)
+      TextSearch.layout.table(name)).isEmpty)
     assert(TextSearch.ensureIndex(rd, "text", "doc_id", name, path,
       numBuckets = 4) === true)
   }
@@ -190,7 +192,7 @@ class EnsureIndexSpec extends AnyFunSuite {
     val path = tmp("graft_ensure_guard")
     assert(TextSearch.ensureIndex(corpusA, "text", "doc_id", name, path,
       numBuckets = 4) === true)
-    val pt = TextSearch.postingsTable(name)
+    val pt = TextSearch.layout.table(name)
     intercept[IllegalArgumentException] {
       IndexManifest.stamp(spark, pt, "bad\\key|p")
     }
@@ -270,10 +272,9 @@ class EnsureIndexSpec extends AnyFunSuite {
     */
   private case class Family(
       label: String, corpus: DataFrame, batch: DataFrame, cols: Seq[String],
-      params: Int => String, primary: String => String, parts: Seq[String],
+      params: Int => String, layout: StandingIndex.Layout,
       ensure: (DataFrame, String, String, Int) => Boolean,
       append: (DataFrame, String) => Unit,
-      compact: (String, String) => Unit,
       probe: String => Set[Seq[Any]])
 
   /** Parquet files per bucket id under a bucketed table's directory
@@ -310,34 +311,27 @@ class EnsureIndexSpec extends AnyFunSuite {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     val families = Seq(
       Family("bm25", docs, docBatch, Seq("text", "doc_id"), b => s"bm25:b$b",
-        TextSearch.postingsTable, Seq("postings", "lens"),
+        TextSearch.layout,
         TextSearch.ensureIndex(_, "text", "doc_id", _, _, _),
         TextSearch.append(_, "text", "doc_id", _),
-        TextSearch.compact(spark, _, _),
         n => rows(TextSearch.probe(spark, n, textQs, "q_text", "q_id", k = 3))),
       Family("dedup", docs, docBatch, Seq("text", "doc_id"),
-        b => s"mhband:n3:r2:nb8:b$b", DedupIndex.bandsTable,
-        Seq("bands", "docs"),
+        b => s"mhband:n3:r2:nb8:b$b", DedupIndex.layout,
         (df, n, p, b) => DedupIndex.ensure(df, "text", "doc_id", n, p,
           numBuckets = b),
         DedupIndex.append(_, "text", "doc_id", _),
-        DedupIndex.compact(spark, _, _),
         n => rows(DedupIndex.probe(dupQs, "text", "doc_id", n, 0.3))),
       Family("annlsh", vecs, vecBatch, Seq("vec_id", "embedding"),
-        b => s"annlsh:p2:t4:b$b:qfalse", AnnIndex.postingsTable,
-        Seq("postings"),
+        b => s"annlsh:p2:t4:b$b:qfalse", AnnIndex.layout,
         (df, n, p, b) => AnnIndex.ensure(df, "embedding", "vec_id", n, p,
           planesPerTable = 2, nTables = 4, numBuckets = b),
         AnnIndex.append(_, "embedding", "vec_id", _),
-        AnnIndex.compact(spark, _, _),
         n => rows(AnnIndex.probe(vecQs, "embedding", "vec_id", n, k = 3))),
       Family("annkm", vecs, vecBatch, Seq("vec_id", "embedding"),
-        b => s"annkm:k2:i2:b$b", AnnIndex.cellsTable,
-        Seq("cells", "centroids"),
+        b => s"annkm:k2:i2:b$b", AnnIndex.kmeansLayout,
         (df, n, p, b) => AnnIndex.ensureKmeans(df, "embedding", "vec_id", n,
           p, kClusters = 2, numBuckets = b),
         AnnIndex.appendKmeans(_, "embedding", "vec_id", _),
-        AnnIndex.compactKmeans(spark, _, _),
         n => rows(AnnIndex.probeKmeans(vecQs, "embedding", "vec_id", n,
           k = 3, nProbe = 2))))
     families.foreach { f =>
@@ -350,20 +344,20 @@ class EnsureIndexSpec extends AnyFunSuite {
       assert(!f.ensure(rd, name, path, 2), s"${f.label}: ensure reuses")
       // the key format predates the shared lifecycle: an index stamped
       // before it is recognized (reused), not rebuilt
-      assert(IndexManifest.stored(spark, f.primary(name)) ===
+      assert(IndexManifest.stored(spark, f.layout.table(name)) ===
         Some(IndexManifest.filesKey(spark, dir, f.params(2), f.cols)), f.label)
       assert(f.ensure(rd, name, path, 4), s"${f.label}: new params rebuild")
       f.append(f.batch, name)
-      assert(filesPerBucket(s"$path/${f.parts.head}").values.max > 1,
+      assert(filesPerBucket(s"$path/${f.layout.primary}").values.max > 1,
         s"${f.label}: the append must leave a bucket with several files")
       val before = f.probe(name)
       assert(before.nonEmpty, s"${f.label}: probe finds nothing")
       val newPath = tmp(s"graft_lc_${f.label}_compact")
-      f.compact(name, newPath)
-      f.parts.foreach { p =>
-        val fpb = filesPerBucket(s"$newPath/$p")
+      f.layout.compact(spark, name, newPath)
+      f.layout.parts.foreach { p =>
+        val fpb = filesPerBucket(s"$newPath/${p.name}")
         assert(fpb.nonEmpty && fpb.values.forall(_ == 1),
-          s"${f.label}/$p: one file per bucket after compact, got $fpb")
+          s"${f.label}/${p.name}: one file per bucket after compact, got $fpb")
       }
       assert(f.probe(name) === before, s"${f.label}: probe moved on compact")
     }
@@ -410,5 +404,41 @@ class EnsureIndexSpec extends AnyFunSuite {
       kClusters = 2, numBuckets = 4) === true)
     assert(AnnIndex.ensureKmeans(vecs, "embedding", "vec_id", kname, kpath,
       kClusters = 2, numBuckets = 4) === false)
+  }
+
+  test("an index whose primary table was written without properties " +
+    "fails naming the index and what is missing, for every family") {
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val textQs = Seq((1L, "alpha")).toDF("q_id", "q_text")
+    // (family, layout, primary rows, probe, what the error must name):
+    // the k-means family keeps no properties, so what its probe misses on
+    // a bare primary is the centroids part
+    val cases = Seq[(String, StandingIndex.Layout, DataFrame, String => Any,
+        String => String)](
+      ("bm25", TextSearch.layout,
+        Seq(("alpha", 1L, 1L)).toDF("term", "doc_id", "tf"),
+        TextSearch.probe(spark, _, textQs, "q_text", "q_id", k = 1),
+        _ => "graft.bm25.nDocs"),
+      ("dedup", DedupIndex.layout, Seq((1L, 7L)).toDF("id", "band"),
+        DedupIndex.probe(corpusA, "text", "doc_id", _),
+        _ => "graft.n"),
+      ("annlsh", AnnIndex.layout,
+        Seq((0, 0, 1L, Seq(1.0, 0.0))).toDF("tbl", "bkt", "corpus_id", "cv"),
+        AnnIndex.probe(vecs, "embedding", "vec_id", _, k = 1),
+        _ => "graft.planesPerTable"),
+      ("annkm", AnnIndex.kmeansLayout,
+        Seq((0, 1L, Seq(1.0, 0.0))).toDF("cid", "corpus_id", "cv"),
+        AnnIndex.probeKmeans(vecs, "embedding", "vec_id", _, k = 1),
+        n => s"${n}_centroids"))
+    cases.foreach { case (label, layout, rows, probe, missing) =>
+      val name = s"graft_bare_$label"
+      val primary = layout.parts.find(_.name == layout.primary).get
+      Bucketize.writeBucketed(rows, layout.table(name),
+        s"${tmp(s"graft_bare_$label")}/${primary.name}", primary.keys, 2)
+      val e = intercept[IllegalStateException](probe(name))
+      assert(e.getMessage.contains(s"'$name'") &&
+        e.getMessage.contains(missing(name)), s"$label: ${e.getMessage}")
+    }
   }
 }

@@ -195,7 +195,7 @@ class TextSearchSpec extends AnyFunSuite {
       .collect().map(_.toSeq)
     assert(viaAppend.toSeq === oneShot.toSeq,
       "split build+append must score exactly like the one-shot corpus")
-    TextSearch.compact(spark, "graft_bm25_half", dir2)
+    TextSearch.layout.compact(spark, "graft_bm25_half", dir2)
     val afterCompact = TextSearch.probe(spark, "graft_bm25_half",
       queries, "q_text", "q_id", k = 5).orderBy("q_id", "rank")
       .collect().map(_.toSeq)
@@ -220,12 +220,17 @@ class TextSearchSpec extends AnyFunSuite {
       queries, "q_text", "q_id", k = 5)
     assert(duringPending.count() > 0,
       "probe must keep serving during a pending append window")
-    // MUTATIONS refuse loudly: a blind append retry would double-count
+    // MUTATIONS refuse loudly: a blind append retry would double-count;
+    // the refused append releases the batch's lens frame
+    val sc = spark.sparkContext
+    val pinned = sc.getPersistentRDDs.keySet
     val eAppend = intercept[IllegalStateException] {
       TextSearch.append(docs.limit(3), "text", "doc_id", "graft_bm25_crash")
     }
     assert(eAppend.getMessage.contains("deadbeef"),
       "the refusal must name the crashed batch")
+    assert(sc.getPersistentRDDs.keySet === pinned,
+      "a refused append must not pin its lens frame in storage")
     // repair recomputes nDocs/sumDl from the lens table and clears the
     // marker — probes resume with the pre-crash answers
     TextSearch.repair(spark, "graft_bm25_crash")
@@ -255,9 +260,6 @@ class TextSearchSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("repair"),
       "the refusal must name the recovery path")
-    // the escape hatch for hot loops that accept the risk stays open
-    assert(TextSearch.probe(spark, "graft_bm25_torn", queries, "q_text",
-      "q_id", k = 5, verifyStats = false).count() > 0)
     TextSearch.repair(spark, "graft_bm25_torn")
     val after = TextSearch.probe(spark, "graft_bm25_torn",
       queries, "q_text", "q_id", k = 5).orderBy("q_id", "rank")
