@@ -232,13 +232,15 @@ object AnnIndex {
                   iters: Int = 2, numBuckets: Int = 32): Unit = {
     val spark = corpus.sparkSession
     val c = normalizedCorpus(corpus, vecCol, idCol).localCheckpoint()
-    val kc =
-      if (kClusters > 0) kClusters
-      else math.max(16, math.sqrt(c.count().toDouble).toInt)
-    val cents = SimilaritySearch.kmeansCentroids(c, kc, iters)
-    import spark.implicits._
-    kmeansLayout.write(spark, name, path, numBuckets, Map(
-      "cells" -> assignedTo(cents, c), "centroids" -> cents.toDF("cid", "cv")))
+    try {
+      val kc =
+        if (kClusters > 0) kClusters
+        else math.max(16, math.sqrt(c.count().toDouble).toInt)
+      val cents = SimilaritySearch.kmeansCentroids(c, kc, iters)
+      import spark.implicits._
+      kmeansLayout.write(spark, name, path, numBuckets, Map(
+        "cells" -> assignedTo(cents, c), "centroids" -> cents.toDF("cid", "cv")))
+    } finally Dedup.releaseCheckpoints(c) // the written cells no longer read it
   }
 
   /** `ensure` for the k-means IVF layout: content key (listing-derived

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Text
 
 /** Large-scale document deduplication suite.
@@ -645,50 +650,72 @@ object Dedup {
     * dedup drops (soft pipelines can reweight on cluster_size instead,
     * mirroring `duplicationWeights`).
     *
-    * Scale shape: the label-propagation loop and its joins are bounded by
-    * the PAIR GRAPH (edge-touched ids only), not the corpus; per-cluster
-    * stats come from ONE map-side-combined aggregate over the clustered
-    * rows (count + min_by are partial-aggregable, so a mega-cluster — a
-    * boilerplate page duplicated millions of times, exactly the shape
-    * dedup targets — pre-collapses per partition instead of landing on
-    * one window task) joined back on the label (cluster-count-sized side,
-    * AQE-broadcastable); untouched docs take the `kept = true` fast path
-    * through one AQE-broadcastable anti-join. Nothing corpus-sized is
-    * ever sorted or collected.
+    * Clustering routes on the pair count (the bound is
+    * `KeepBestDriverPairs`, 100k): a graph of at most the bound (every
+    * near-dup graph a curation batch yields so far — 994 pairs for the
+    * 5k-doc bench corpus) is clustered by `clusterOnDriver` (one action
+    * collects at most bound + 1 pairs; no checkpoint), a larger one by the
+    * distributed min-label loop (`connectedComponents`) over the
+    * edge-touched ids. Both give the same (id, label) frame, and one tail
+    * builds the verdict from it: per-cluster stats from ONE
+    * map-side-combined aggregate over the clustered rows (count and min_by
+    * are partial-aggregable, so a mega-cluster pre-collapses per partition
+    * instead of landing on one window task) joined back on the label, and
+    * untouched docs through one anti-join (the graph-sized sides are
+    * AQE-broadcastable). Every join is bounded by the PAIR GRAPH; nothing
+    * corpus-sized is ever sorted or collected.
+    *
+    * The verdict is LAZY (unlike `deduplicate`, whose output is
+    * vocabulary-sized and therefore eagerly materialized): it is
+    * corpus-row-sized, so the CALLER owns its materialization — each
+    * action re-scans `df`, never the pair pipeline, and a null score fails
+    * there, not in this call. `df` is not read before the first action.
     */
   def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
-               scoreCol: String): DataFrame = {
+               scoreCol: String): DataFrame =
+    keepBest(df, pairs, idCol, scoreCol, KeepBestDriverPairs)
+
+  /** `keepBest`'s driver-path pair bound. The driver holds the (id, label)
+    * frame for as long as the verdict is referenced, and each action ships
+    * it to the tasks; measured with md5-string ids on a matching (two ids
+    * per pair, the most a graph of that size can touch) in a local[4] JVM
+    * with a 1 GB heap: 100k pairs ran (28 MB still held after the call),
+    * 250k ran out of heap, while the distributed path ran 1M pairs in that
+    * heap. 1M pairs needed more than 1.5 GB (270 MB held after the call).
+    */
+  private[graft] val KeepBestDriverPairs = 100000
+
+  /** `keepBest` with the driver-path pair bound as a parameter (tests
+    * reach the distributed path with 0). */
+  private[graft] def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
+                              scoreCol: String,
+                              maxDriverPairs: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // The pair list is consumed twice (touched ids + the CC loop's edge
-    // frame) and the candidate pipeline behind it is the expensive part
-    // (shingles + signatures + band join + verify): persist it for the
-    // span of the clustering, then release it BEFORE returning — the
-    // returned verdict must not re-trigger the pair pipeline. That works
-    // because everything the verdict references is checkpoint-backed and
-    // PAIR-GRAPH-BOUNDED: `touched` is localCheckpointed here (eager) and
-    // the CC loop checkpoints its final labels internally, so after this
-    // call the only live state is graph-sized, NEVER corpus-sized (an
-    // earlier draft localCheckpointed the corpus-row verdict itself —
-    // exactly the kind of corpus-sized block-manager residency a 100 TB
-    // run cannot afford). The checkpoint blocks are freed by the
-    // ContextCleaner once the returned frame is garbage-collected.
-    //
-    // LAZY contract (unlike `deduplicate`, whose output is vocabulary-
-    // sized and therefore eagerly materialized): the verdict is
-    // corpus-row-sized, so the CALLER owns its materialization — each
-    // action re-scans `df` for (id, score), but never the pair pipeline.
+    // The pair list is consumed by the driver collect and, above the
+    // bound, twice more (touched ids + the CC loop's edge frame); the
+    // candidate pipeline behind it is the expensive part (shingles +
+    // signatures + band join + verify): persist it for the span of the
+    // clustering, then release it BEFORE returning — the returned verdict
+    // must not re-trigger the pair pipeline. That works because the labels
+    // the verdict references are PAIR-GRAPH-BOUNDED and no longer depend
+    // on `pairs`: a driver-held local frame below the bound; above it,
+    // checkpoint blocks (`touched` is localCheckpointed here, eagerly, and
+    // the CC loop checkpoints its final labels), freed by the
+    // ContextCleaner once the returned frame is garbage-collected. NEVER
+    // corpus-sized state (an earlier draft localCheckpointed the
+    // corpus-row verdict itself — exactly the kind of corpus-sized
+    // block-manager residency a 100 TB run cannot afford).
     // respect a caller-owned persist: unpersisting a frame the caller
     // cached for reuse would silently evict THEIR blocks
-    val callerPersisted =
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val callerPersisted = pairs.storageLevel != StorageLevel.NONE
     val p = if (callerPersisted) pairs
       else pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    val touched = p
-      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-      .localCheckpoint() // eager: pins the pair-bounded vertex set
-    val labels = connectedComponents(touched, p)
-    // CC ran eagerly; labels are checkpointed
-    if (!callerPersisted) p.unpersist(blocking = false)
+    val labels = try clusterOnDriver(p, maxDriverPairs).getOrElse {
+      val touched = p
+        .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
+        .localCheckpoint() // eager: pins the pair-bounded vertex set
+      connectedComponents(touched, p) // ran eagerly, checkpointed
+    } finally if (!callerPersisted) p.unpersist(blocking = false)
     // null scores fail FAST on every CLUSTERED doc (where they would
     // silently win the per-cluster min_by below — ADVICE r12:
     // struct(negate(null), id) sorts first, so a null-scored doc would
@@ -724,6 +751,11 @@ object Dedup {
     * labels are persisted/unpersisted per iteration.
     *
     * Returns (id, label) where label = smallest id in the component.
+    *
+    * This is the scale path: it always runs distributed, every step a few
+    * Spark jobs. `keepBest` and `deduplicate` call it only for pair graphs
+    * above their driver bound; at or below it they cluster with
+    * `clusterOnDriver`, whose labels are the same.
     */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame =
     connectedComponentsTracked(vertices, pairs)._1
@@ -807,6 +839,53 @@ object Dedup {
     (out, live)
   }
 
+  /** Connected components of `pairs` (id_a, id_b) on the driver, when the
+    * graph has at most `bound` pairs: Some((id, label)) for every
+    * edge-touched id, label = the smallest id in its component, the labels
+    * `connectedComponents` gives. None above the bound (or for a negative
+    * bound), and the caller runs the distributed loop instead. ONE action
+    * collects at most bound + 1 pairs (pairs with a null id are dropped: a
+    * null id joins nothing). The distinct ids are sorted under Spark's
+    * ordering for the id type (`TypeUtils.getInterpretedOrdering` on
+    * catalyst values — UTF-8 byte order for strings), and union-find over
+    * their indices links every root to the smaller one, so each
+    * component's root is its minimum. O(E log E) driver time; the result
+    * is a local frame whose rows (one per touched id) stay on the driver
+    * while it is referenced, and the planner broadcasts it when small.
+    */
+  private[graft] def clusterOnDriver(pairs: DataFrame,
+                                     bound: Int): Option[DataFrame] =
+    if (bound < 0) None else {
+      val idType = pairs.schema("id_a").dataType
+      val edges = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
+        .select(col("id_a"), col("id_b"))
+        .limit(math.min(bound, Int.MaxValue - 1) + 1).collect()
+      if (edges.length > bound) None else {
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+        val ord = TypeUtils.getInterpretedOrdering(idType)
+        val ends = edges.flatMap(r =>
+          Array(toCatalyst(r.get(0)), toCatalyst(r.get(1)))).map(_.asInstanceOf[AnyRef])
+        val sorted = ends.clone()
+        java.util.Arrays.sort(sorted, ord)
+        val ids = sorted.indices.filter(i =>
+          i == 0 || ord.compare(sorted(i - 1), sorted(i)) != 0).map(sorted).toArray
+        val parent = Array.range(0, ids.length)
+        def find(x0: Int): Int = { // path halving
+          var x = x0
+          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+          x
+        }
+        def vertex(id: AnyRef): Int = java.util.Arrays.binarySearch(ids, id, ord)
+        ends.grouped(2).foreach { case Array(a, b) =>
+          val (ra, rb) = (find(vertex(a)), find(vertex(b)))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        }
+        val attrs = Seq("id", "label").map(AttributeReference(_, idType, nullable = false)())
+        Some(GraftBridge.ofRows(pairs.sparkSession, LocalRelation(attrs,
+          ids.indices.map(v => InternalRow(ids(v), ids(find(v)))))))
+      }
+    }
+
   /** The reference's `deduplicate` contract (skrub/_deduplicate.py:15-285):
     * cluster the DISTINCT values of a string column by n-gram similarity and
     * map every value to its cluster's most frequent member (ties -> smallest
@@ -850,6 +929,14 @@ object Dedup {
     * 2x that many id strings — 1M pairs keeps the worst case near ~0.5 GB
     * driver heap; larger graphs take the distributed min-label CC fallback,
     * which scales to any size.
+    *
+    * Clustering routes on the pair count, as in `keepBest`: a graph of at
+    * most `maxDriverPairs` pairs is clustered by `clusterOnDriver` (one
+    * action collects at most `maxDriverPairs` + 1 pairs), then ONE
+    * broadcast join of the distinct values against the touched ids
+    * collects their (label, id, value, frequency) and the driver picks each
+    * component's canonical; above the bound the distributed min-label loop
+    * labels every value and one window aggregate picks the canonicals.
     */
   def deduplicate(df: DataFrame, c: String, minJaccard: Double = 0.4,
                   n: Int = 3, maxDriverPairs: Int = 1000000,
@@ -889,65 +976,28 @@ object Dedup {
     // yields a graph bounded by near-duplicate density, not corpus size).
     // An iterative distributed CC loop over a graph this size is pure
     // scheduling overhead: each iteration costs a join + aggregate +
-    // checkpoint materialization. So: collect the pairs (guarded by
-    // `maxDriverPairs` via limit — never an unbounded collect), run
-    // union-find on the driver in O(E α(E)), and broadcast the resulting
-    // translation map back. Above the guard, fall back to the distributed
-    // min-label-propagation loop, which scales to any graph.
-    val head = pairs.select(col("id_a"), col("id_b"))
-      .limit(math.min(maxDriverPairs, Int.MaxValue - 1) + 1).collect()
-    if (head.length <= maxDriverPairs) {
-      // union-find with path halving; union by smaller-root keeps roots
-      // deterministic but the canonical choice below never depends on them
-      val parent = new java.util.HashMap[String, String]()
-      def find(x: String): String = {
-        var r = x
-        var p = parent.getOrDefault(r, r)
-        while (p != r) {
-          val gp = parent.getOrDefault(p, p)
-          parent.put(r, gp); r = p; p = gp
-        }
-        r
-      }
-      head.foreach { row =>
-        val (ra, rb) = (find(row.getString(0)), find(row.getString(1)))
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
+    // checkpoint materialization. So below the bound the graph is
+    // clustered on the driver and the translation map broadcast back.
+    val driverLabels = clusterOnDriver(pairs, maxDriverPairs)
+    if (driverLabels.isDefined) {
       // only edge-touched values can have a non-identity canonical; fetch
-      // their (id, v, freq) with a broadcast semi-join against the persisted
-      // distinct-value frame (bounded by 2·|pairs| rows)
-      val touched = {
-        val s = new scala.collection.mutable.HashSet[String]()
-        head.foreach { r => s += r.getString(0); s += r.getString(1) }
-        s
+      // their (label, id, v, freq) with a broadcast join against the
+      // persisted distinct-value frame (bounded by 2·|pairs| rows)
+      val members = vals.join(broadcast(driverLabels.get), Seq("id"))
+        .select(col("label"), col("id"), col("v"), col("freq")).collect()
+      // canonical per cluster: most frequent member, ties -> smallest value
+      // by Spark's string order (unsigned UTF-8 bytes — Java
+      // String.compareTo differs above the BMP)
+      val canonicalOf = new java.util.HashMap[String, (UTF8String, Long)]()
+      members.foreach { m =>
+        val (v, f) = (UTF8String.fromString(m.getString(2)), m.getLong(3))
+        val cur = canonicalOf.get(m.getString(0))
+        if (cur == null || f > cur._2 || (f == cur._2 && v.binaryCompare(cur._1) < 0))
+          canonicalOf.put(m.getString(0), (v, f))
       }
       import spark.implicits._
-      val members = vals.join(broadcast(touched.toSeq.toDF("id")), Seq("id"))
-        .select(col("id"), col("v"), col("freq")).collect()
-      // canonical per cluster: most frequent member, ties -> smallest value
-      // by UNSIGNED UTF-8 byte order (Spark's UTF8String/binary collation —
-      // Java String.compareTo differs above the BMP, so compare bytes)
-      def utf8Less(a: String, b: String): Boolean = {
-        val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-        var i = 0
-        val m = math.min(x.length, y.length)
-        while (i < m) {
-          val c = (x(i) & 0xff) - (y(i) & 0xff)
-          if (c != 0) return c < 0
-          i += 1
-        }
-        x.length < y.length
-      }
-      val canonicalOf = new java.util.HashMap[String, (String, Long)]()
-      members.foreach { m =>
-        val root = find(m.getString(0))
-        val (v, f) = (m.getString(1), m.getLong(2))
-        val cur = canonicalOf.get(root)
-        if (cur == null || f > cur._2 || (f == cur._2 && utf8Less(v, cur._1)))
-          canonicalOf.put(root, (v, f))
-      }
       val trans = members.map(m =>
-        (m.getString(0), canonicalOf.get(find(m.getString(0)))._1)).toSeq
+        (m.getString(1), canonicalOf.get(m.getString(0))._1.toString)).toSeq
       val out = vals.join(broadcast(trans.toDF("id", "canonical")), Seq("id"), "left")
         .select(col("v").as("value"),
           coalesce(col("canonical"), col("v")).as("canonical"))

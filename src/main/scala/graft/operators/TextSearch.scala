@@ -69,12 +69,17 @@ object TextSearch {
     * (empty docs included; they are real corpus members for idf).
     */
   private def corpusStats(docLens: DataFrame): (Long, Long) = {
+    val stats = lensStats(docLens)
+    require(stats._1 > 0, "TextSearch: empty corpus")
+    stats
+  }
+
+  /** (doc count, length sum) of a lens frame in one aggregate; (0, 0) when
+    * it is empty (its sum is NULL). */
+  private def lensStats(docLens: DataFrame): (Long, Long) = {
     val stats = docLens.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .head()
-    val nDocs = stats.getLong(0)
-    // nDocs first: an empty corpus has a NULL sum and getLong would NPE
-    require(nDocs > 0, "TextSearch: empty corpus")
-    (nDocs, stats.getLong(1))
+    (stats.getLong(0), if (stats.isNullAt(1)) 0L else stats.getLong(1))
   }
 
   /** THE scorer — every public surface goes through here. BM25 micro-
@@ -337,15 +342,14 @@ object TextSearch {
              name: String): Unit = {
     val (post, docLens) = postings(df, textCol, idCol)
     try {
-      val bN = docLens.count()
-      if (bN > 0) appendBatch(df, textCol, name, post, docLens, bN)
+      val (bN, bSum) = lensStats(docLens)
+      if (bN > 0) appendBatch(df, textCol, name, post, docLens, bN, bSum)
     } finally docLens.unpersist()
   }
 
   private def appendBatch(df: DataFrame, textCol: String, name: String,
                           post: DataFrame, docLens: DataFrame,
-                          bN: Long): Unit = {
-    val (_, bSum) = corpusStats(docLens)
+                          bN: Long, bSum: Long): Unit = {
     val spark = df.sparkSession
     val pt = layout.table(name)
     val props = layout.props(spark, name)

@@ -123,6 +123,17 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(seen.sorted.toSeq === direct.sorted.toSeq)
   }
 
+  test("writeKmeans releases its normalized-corpus checkpoint") {
+    val sc = spark.sparkContext
+    val emb = TestSpark.table("embeddings").limit(200)
+    val dir = java.nio.file.Files.createTempDirectory("graft_annidx").toString
+    val pinned = sc.getPersistentRDDs.keySet
+    AnnIndex.writeKmeans(emb, "embedding", "vec_id", "graft_annidx_km_leak",
+      dir, kClusters = 8, iters = 2, numBuckets = 4)
+    assert(sc.getPersistentRDDs.keySet === pinned,
+      "a k-means build must not pin the normalized corpus in storage")
+  }
+
   test("kmeans index probe is bit-identical to one-shot kmeansIvfTopK, zero cell-side Exchange") {
     val emb = TestSpark.table("embeddings").limit(400)
     val queries = emb.filter(col("vec_id") < 8)

@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 import graft.operators.{Dedup, SimilaritySearch}
 
 /** Dedup family: connected components, the canonical translation map, and —
@@ -96,6 +99,97 @@ class DedupSpec extends AnyFunSuite {
     // docs outside the pair graph are singleton keeps
     assert(r("4") === ((1L, true)))
     assert(r("5") === ((1L, true)))
+  }
+
+  /** Chains of 6 and 7 hops with non-monotone ids, a 5-clique and a
+    * 10-leaf star whose center is the largest id. */
+  private val graphEdges: Seq[(Int, Int)] = {
+    val chain1 = Seq(50, 3, 41, 17, 8, 29, 12)
+    val chain2 = Seq(90, 81, 95, 83, 99, 85, 97, 87)
+    val clique = (60 to 64).combinations(2).map(c => (c(0), c(1))).toSeq
+    val star = (70 to 79).map(leaf => (200, leaf))
+    chain1.zip(chain1.tail) ++ chain2.zip(chain2.tail) ++ clique ++ star
+  }
+
+  private def driverVsDistributed[T](idType: DataType)(id: Int => T): Map[T, T] = {
+    val pairDf = spark.createDataFrame(
+      graphEdges.map { case (a, b) => Row(id(a), id(b)) }.asJava,
+      StructType(Seq(StructField("id_a", idType), StructField("id_b", idType))))
+    val verts = pairDf.select(explode(array($"id_a", $"id_b")).as("id")).distinct()
+    def labels(df: org.apache.spark.sql.DataFrame): Map[T, T] =
+      df.select("id", "label").collect()
+        .map(r => r.getAs[T](0) -> r.getAs[T](1)).toMap
+    val driver = labels(Dedup.clusterOnDriver(pairDf, 1000).get)
+    val distributed = labels(Dedup.connectedComponents(verts, pairDf))
+    assert(driver === distributed)
+    assert(driver.values.toSet.size === 4, "four components")
+    driver
+  }
+
+  test("clusterOnDriver labels equal connectedComponents labels: Long ids") {
+    val labels = driverVsDistributed(LongType)(_.toLong)
+    assert(labels(12L) === 3L && labels(200L) === 70L && labels(64L) === 60L)
+  }
+
+  test("clusterOnDriver labels equal connectedComponents labels: string ids " +
+    "above the BMP take Spark's UTF-8 byte order") {
+    // even ids start with U+E000, odd ids with U+1F600 (a surrogate pair):
+    // UTF-16 order puts the odd ids first, UTF-8 byte order the even ones
+    val labels = driverVsDistributed(StringType)(i =>
+      if (i % 2 == 0) s"\uE000$i" else s"\uD83D\uDE00$i")
+    val byLabel = labels.groupBy(_._2).view.mapValues(_.keys.toSeq).toMap
+    assert(byLabel.exists { case (label, members) => label != members.min },
+      "a component whose Java-String minimum differs from its label")
+  }
+
+  test("clusterOnDriver takes the distributed fallback at bound + 1 pairs") {
+    val pairs = graphEdges.map { case (a, b) => (a.toLong, b.toLong) }
+      .toDF("id_a", "id_b")
+    val e = graphEdges.size
+    assert(Dedup.clusterOnDriver(pairs, e).map(_.count()) ===
+      Some(graphEdges.flatMap { case (a, b) => Seq(a, b) }.distinct.size.toLong))
+    assert(Dedup.clusterOnDriver(pairs, e - 1).isEmpty)
+    assert(Dedup.clusterOnDriver(pairs, -1).isEmpty)
+  }
+
+  test("keepBest: driver path and distributed fallback give identical verdicts") {
+    val docs = TestSpark.table("documents")
+    // a coarse score makes ties common, so the smallest-id tie-break counts
+    val scored = docs.select($"doc_id",
+      (size(split($"text", " ")) % 3).cast("long").as("score"))
+    val pairs = Dedup.minhashLshPairs(docs, "text", "doc_id",
+      n = 3, rowsPerBand = 2, nBands = 8, minJaccard = 0.2)
+    def verdicts(bound: Int) =
+      Dedup.keepBest(scored, pairs, "doc_id", "score", bound).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+        .sorted
+    val driver = verdicts(Dedup.KeepBestDriverPairs)
+    assert(driver.exists(_._3 > 1), "fixture must produce clusters")
+    assert(driver.length === docs.count())
+    assert(driver.toSeq === verdicts(0).toSeq)
+  }
+
+  test("keepBest: a null score on a clustered doc fails naming keepBest on " +
+    "both paths; an unclustered null passes through") {
+    def chain(t: Throwable): String = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val pairs = Seq(("a", "b")).toDF("id_a", "id_b")
+    val clusteredNull = Seq(("a", Some(1L)), ("b", None: Option[Long]))
+      .toDF("id", "score")
+    val singletonNull = Seq(("a", Some(1L)), ("b", Some(2L)),
+      ("c", None: Option[Long])).toDF("id", "score")
+    for (bound <- Seq(0, Dedup.KeepBestDriverPairs)) {
+      val e = intercept[Exception] {
+        Dedup.keepBest(clusteredNull, pairs, "id", "score", bound).collect()
+      }
+      assert(chain(e).contains("Dedup.keepBest: scoreCol contains a null"),
+        s"bound $bound: ${chain(e)}")
+      val out = Dedup.keepBest(singletonNull, pairs, "id", "score", bound)
+        .collect().map(r => r.getString(0) ->
+          ((r.getAs[Any](1), r.getLong(2), r.getBoolean(3)))).toMap
+      assert(out === Map("a" -> ((1L, 2L, false)), "b" -> ((2L, 2L, true)),
+        "c" -> ((null, 1L, true))), s"bound $bound")
+    }
   }
 
   test("deduplicate maps variants to the most frequent member") {

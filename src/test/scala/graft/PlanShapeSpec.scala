@@ -238,6 +238,24 @@ class PlanShapeSpec extends AnyFunSuite {
       s"unexpected shuffle keys $keys:\n$plan")
   }
 
+  test("keepBest clusters a small pair graph in a fixed number of Spark " +
+    "jobs, with no per-iteration round trips") {
+    // a 30-hop chain: the distributed min-label loop needs one checkpoint
+    // and one convergence check per two hops, the driver path none
+    val df = (1L to 40L).map(i => (i, i % 7)).toDF("id", "score")
+    val pairs = (1L to 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def jobs(bound: Int): Int = graft.obs.Collector.measure(spark) {
+      graft.operators.Dedup.keepBest(df, pairs, "id", "score", bound).collect()
+    }.jobs.size
+    // two jobs collect the pairs (the limit scans one of the 4 partitions,
+    // then the other three); the verdict's collect runs five more: its
+    // shuffle and broadcast stages, then the result stage. The distributed
+    // loop ran 137 here.
+    val driver = jobs(graft.operators.Dedup.KeepBestDriverPairs)
+    assert(driver === 7)
+    assert(jobs(0) > 10 * driver)
+  }
+
   test("minhashLshPairs evaluates MinhashSig once per plan in every " +
     "bandPairs mode") {
     // the band postings sit behind one exchange that every candidate
