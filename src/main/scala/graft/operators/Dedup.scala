@@ -1,13 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Text
 
 /** Large-scale document deduplication suite.
@@ -196,37 +195,57 @@ object Dedup {
             element_at(sig, b * rowsPerBand + r + 1)): _*))))
     }
 
-  /** Per-bucket auto-routed candidate generation shared by the "auto"
-    * modes: ONE aggregate over the posting list computes each bucket's
+  /** Candidate pairs (id_a < id_b) over a bucket posting — `id` plus the
+    * bucket `keys` — in one of the three modes the LSH generators share
+    * (`bandPairs` of `minhashLshPairs`, `bucketPairs` of
+    * `embeddingLshPairs`): `"all"` self-joins every bucket, `"star"` emits
+    * each bucket's (min id, other) hub edges, and `"auto"` routes per
+    * bucket. Auto's ONE aggregate over the posting computes each bucket's
     * (min id, size) — both partial-aggregable, so a flooded bucket
     * pre-collapses map-side wherever the aggregate plans its own exchange
-    * (minhashLshPairs hands it postings already partitioned on the band,
-    * and it aggregates in place) — then buckets at or under `cap` members
+    * (both callers hand it postings already partitioned on the keys, and
+    * it aggregates in place) — then buckets at or under `cap` members
     * self-join into exact all-pairs (≤ cap candidates per posting row:
     * linear overall) while oversized buckets emit only (hub, member)
-    * edges. All four frames key on the SAME bucket columns, so the plan
-    * is one exchange reused across the stats aggregate, the stats join,
-    * and the small-bucket self-join. The size counts `id`, not `1`: a
-    * null-id row can never pair, and the `id` reference keeps the
-    * small-bucket branch (which prunes `__hub`) reading the same
-    * (id, bucket) columns as every other consumer — a count(1) let
-    * column pruning hand that branch a different, unreusable exchange.
+    * edges. Every frame of every mode keys on the SAME bucket columns, so
+    * the plan is one exchange reused across the stats aggregate, the stats
+    * join, and the self-join. The size counts `id`, not `1`: a null-id row
+    * can never pair, and the `id` reference keeps the small-bucket branch
+    * (which prunes `__hub`) reading the same (id, bucket) columns as every
+    * other consumer — a count(1) let column pruning hand that branch a
+    * different, unreusable exchange.
     */
-  private def autoBucketPairs(posting: DataFrame, bucketCols: Seq[String],
-                              cap: Int): DataFrame = {
-    val keys = bucketCols.map(col)
-    val stats = posting.groupBy(keys: _*)
-      .agg(min(col("id")).as("__hub"), count(col("id")).as("__n"))
-    val joined = posting.join(stats, bucketCols)
-    val small = joined.filter(col("__n") <= cap)
-      .select(keys :+ col("id"): _*)
-    val smallPairs = small.alias("x").join(small.alias("y"), bucketCols)
+  private def bucketPairs(posting: DataFrame, keys: Seq[String], mode: String,
+                          cap: Int): DataFrame = {
+    require(Set("all", "star", "auto")(mode),
+      s"bandPairs/bucketPairs must be all|star|auto, got $mode")
+    require(cap >= 1, "maxBucketPairs must be positive")
+    val k = keys.map(col)
+    def allPairs(p: DataFrame) = p.alias("x").join(p.alias("y"), keys)
       .filter(col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-    val hubEdges = joined.filter(col("__n") > cap)
-      .filter(col("__hub") < col("id"))
-      .select(col("__hub").as("id_a"), col("id").as("id_b"))
-    smallPairs.unionAll(hubEdges).distinct()
+    mode match {
+      case "star" =>
+        // one min per bucket, aggregated in place on the bucket exchange
+        // (the join below needs every bucket in one partition anyway),
+        // then O(bucket) hub edges: a million-copy bucket is one task's
+        // linear work, never a quadratic one
+        val hubs = posting.groupBy(k: _*).agg(min(col("id")).as("id_a"))
+        posting.join(hubs, keys)
+          .filter(col("id_a") < col("id"))
+          .select(col("id_a"), col("id").as("id_b"))
+          .distinct()
+      case "auto" =>
+        val stats = posting.groupBy(k: _*)
+          .agg(min(col("id")).as("__hub"), count(col("id")).as("__n"))
+        val joined = posting.join(stats, keys)
+        val hubEdges = joined.filter(col("__n") > cap)
+          .filter(col("__hub") < col("id"))
+          .select(col("__hub").as("id_a"), col("id").as("id_b"))
+        allPairs(joined.filter(col("__n") <= cap).select(k :+ col("id"): _*))
+          .unionAll(hubEdges).distinct()
+      case _ => allPairs(posting).distinct()
+    }
   }
 
   /** `bandPairs = "all"` (default) materializes every band-colliding pair —
@@ -265,9 +284,6 @@ object Dedup {
                       minJaccard: Double = 0.5,
                       bandPairs: String = "all",
                       maxBucketPairs: Int = 256): DataFrame = {
-    require(Set("all", "star", "auto")(bandPairs),
-      s"bandPairs must be all|star|auto, got $bandPairs")
-    require(maxBucketPairs >= 1, "maxBucketPairs must be positive")
     val k = rowsPerBand * nBands
     // Signature via ONE loop-codegen pass per doc (VecExprs.MinhashSig):
     // the previous explode + K static min-aggregates shape shuffled every
@@ -334,24 +350,7 @@ object Dedup {
     val banded = sigs.select(col("id"),
         explode(array(bandExprs(col("sig"), rowsPerBand, nBands): _*)).as("band"))
       .repartition(nSpread, col("band"))
-    val cand = bandPairs match {
-      case "star" =>
-        // one min per bucket, aggregated in place on the band exchange
-        // (the join below needs every bucket in one partition anyway),
-        // then O(bucket) hub edges: a million-copy bucket is one task's
-        // linear work, never a quadratic one
-        val hubs = banded.groupBy(col("band")).agg(min(col("id")).as("id_a"))
-        banded.join(hubs, Seq("band"))
-          .filter(col("id_a") < col("id"))
-          .select(col("id_a"), col("id").as("id_b"))
-          .distinct()
-      case "auto" =>
-        autoBucketPairs(banded, Seq("band"), maxBucketPairs)
-      case _ => banded.alias("x").join(banded.alias("y"), Seq("band"))
-        .filter(col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        .distinct()
-    }
+    val cand = bucketPairs(banded, Seq("band"), bandPairs, maxBucketPairs)
     val sh = base.select(col("id"),
       graft.functions.VecExprs.tokenShingles(col("__text"), n).as("shingles"))
     cand
@@ -482,9 +481,6 @@ object Dedup {
                         nTables: Int = 16,
                         bucketPairs: String = "all",
                         maxBucketPairs: Int = 256): DataFrame = {
-    require(Set("all", "star", "auto")(bucketPairs),
-      s"bucketPairs must be all|star|auto, got $bucketPairs")
-    require(maxBucketPairs >= 1, "maxBucketPairs must be positive")
     // exchange-reuse instead of persist (the previous persists were never
     // released — a leak in a long-lived session): `v` repartitioned on id
     // is the exact partitioning the two verification joins require, so one
@@ -509,21 +505,8 @@ object Dedup {
         col("nv"), nTables, planesPerTable)))
       .select(col("id"), col("pos").as("tbl"), col("col").as("bkt"))
       .repartition(nSpread, col("tbl"), col("bkt"))
-    val cand = bucketPairs match {
-      case "star" =>
-        val hubs = posting.groupBy(col("tbl"), col("bkt"))
-          .agg(min(col("id")).as("id_a"))
-        posting.join(hubs, Seq("tbl", "bkt"))
-          .filter(col("id_a") < col("id"))
-          .select(col("id_a"), col("id").as("id_b"))
-          .distinct()
-      case "auto" =>
-        autoBucketPairs(posting, Seq("tbl", "bkt"), maxBucketPairs)
-      case _ => posting.alias("x").join(posting.alias("y"), Seq("tbl", "bkt"))
-        .filter(col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-        .distinct()
-    }
+    val cand = Dedup.bucketPairs(posting, Seq("tbl", "bkt"), bucketPairs,
+      maxBucketPairs)
     cand
       .join(v.select(col("id").as("id_a"), col("nv").as("nv_a")), Seq("id_a"))
       .join(v.select(col("id").as("id_b"), col("nv").as("nv_b")), Seq("id_b"))
@@ -650,16 +633,14 @@ object Dedup {
     * dedup drops (soft pipelines can reweight on cluster_size instead,
     * mirroring `duplicationWeights`).
     *
-    * Clustering routes on the pair count (the bound is
-    * `KeepBestDriverPairs`, 100k): a graph of at most the bound (every
-    * near-dup graph a curation batch yields so far — 994 pairs for the
-    * 5k-doc bench corpus) is clustered by `clusterOnDriver` (one action
-    * collects at most bound + 1 pairs; no checkpoint), a larger one by the
-    * distributed min-label loop (`connectedComponents`) over the
-    * edge-touched ids. Both give the same (id, label) frame, and one tail
-    * builds the verdict from it: per-cluster stats from ONE
-    * map-side-combined aggregate over the clustered rows (count and min_by
-    * are partial-aggregable, so a mega-cluster pre-collapses per partition
+    * Clusters come from `components`: a graph of at most `DriverPairs`
+    * pairs (every near-dup graph a curation batch yields so far — 994
+    * pairs for the 5k-doc bench corpus) is clustered on the driver, a
+    * larger one by the distributed min-label loop, and either way the
+    * result is one (id, label) row per edge-touched id. One tail builds
+    * the verdict from it: per-cluster stats from ONE map-side-combined
+    * aggregate over the clustered rows (count and min_by are
+    * partial-aggregable, so a mega-cluster pre-collapses per partition
     * instead of landing on one window task) joined back on the label, and
     * untouched docs through one anti-join (the graph-sized sides are
     * AQE-broadcastable). Every join is bounded by the PAIR GRAPH; nothing
@@ -668,54 +649,21 @@ object Dedup {
     * The verdict is LAZY (unlike `deduplicate`, whose output is
     * vocabulary-sized and therefore eagerly materialized): it is
     * corpus-row-sized, so the CALLER owns its materialization — each
-    * action re-scans `df`, never the pair pipeline, and a null score fails
-    * there, not in this call. `df` is not read before the first action.
+    * action re-scans `df`, never the pair pipeline (the labels are a
+    * driver-held local frame or the loop's final checkpoint, freed by the
+    * ContextCleaner once the verdict is garbage-collected), and a null
+    * score fails there, not in this call. `df` is not read before the
+    * first action.
     */
   def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
                scoreCol: String): DataFrame =
-    keepBest(df, pairs, idCol, scoreCol, KeepBestDriverPairs)
+    keepBest(df, pairs, idCol, scoreCol, DriverPairs)
 
-  /** `keepBest`'s driver-path pair bound. The driver holds the (id, label)
-    * frame for as long as the verdict is referenced, and each action ships
-    * it to the tasks; measured with md5-string ids on a matching (two ids
-    * per pair, the most a graph of that size can touch) in a local[4] JVM
-    * with a 1 GB heap: 100k pairs ran (28 MB still held after the call),
-    * 250k ran out of heap, while the distributed path ran 1M pairs in that
-    * heap. 1M pairs needed more than 1.5 GB (270 MB held after the call).
-    */
-  private[graft] val KeepBestDriverPairs = 100000
-
-  /** `keepBest` with the driver-path pair bound as a parameter (tests
-    * reach the distributed path with 0). */
+  /** `keepBest` with the driver bound as a parameter (tests reach the
+    * distributed path with 0). */
   private[graft] def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
-                              scoreCol: String,
-                              maxDriverPairs: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // The pair list is consumed by the driver collect and, above the
-    // bound, twice more (touched ids + the CC loop's edge frame); the
-    // candidate pipeline behind it is the expensive part (shingles +
-    // signatures + band join + verify): persist it for the span of the
-    // clustering, then release it BEFORE returning — the returned verdict
-    // must not re-trigger the pair pipeline. That works because the labels
-    // the verdict references are PAIR-GRAPH-BOUNDED and no longer depend
-    // on `pairs`: a driver-held local frame below the bound; above it,
-    // checkpoint blocks (`touched` is localCheckpointed here, eagerly, and
-    // the CC loop checkpoints its final labels), freed by the
-    // ContextCleaner once the returned frame is garbage-collected. NEVER
-    // corpus-sized state (an earlier draft localCheckpointed the
-    // corpus-row verdict itself — exactly the kind of corpus-sized
-    // block-manager residency a 100 TB run cannot afford).
-    // respect a caller-owned persist: unpersisting a frame the caller
-    // cached for reuse would silently evict THEIR blocks
-    val callerPersisted = pairs.storageLevel != StorageLevel.NONE
-    val p = if (callerPersisted) pairs
-      else pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    val labels = try clusterOnDriver(p, maxDriverPairs).getOrElse {
-      val touched = p
-        .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-        .localCheckpoint() // eager: pins the pair-bounded vertex set
-      connectedComponents(touched, p) // ran eagerly, checkpointed
-    } finally if (!callerPersisted) p.unpersist(blocking = false)
+                              scoreCol: String, bound: Int): DataFrame = {
+    val labels = components(pairs, bound)._1
     // null scores fail FAST on every CLUSTERED doc (where they would
     // silently win the per-cluster min_by below — ADVICE r12:
     // struct(negate(null), id) sorts first, so a null-scored doc would
@@ -742,31 +690,71 @@ object Dedup {
         col("cluster_size"), col("kept"))
   }
 
-  /** Connected components over an undirected pair list via iterative
-    * min-label propagation: each node repeatedly takes the smallest label
-    * among itself and its neighbors until fixpoint. Converges in
-    * O(component diameter) joins — near-dup clusters are tiny cliques, so
-    * 2-4 iterations in practice; every step is a shuffle join + hash
-    * aggregate (no driver-side graph, no quadratic stage) and intermediate
-    * labels are persisted/unpersisted per iteration.
+  /** The one driver bound of `components`, in pairs: a graph of at most
+    * this many pairs clusters on the driver, a larger one runs the
+    * distributed loop. Measured with `clusterOnDriver` in a local[4] JVM
+    * with a 1 GB heap (Spark's default driver heap), md5-string ids on a
+    * matching (two ids per pair, the most a graph of that size can touch):
+    * 100k pairs ran, with 28 MB still held after the call while the labels
+    * were referenced; 250k ran out of heap, while the distributed loop ran
+    * 1M pairs in that heap; 1M pairs needed more than 1.5 GB (270 MB held
+    * after the call).
+    */
+  private[graft] val DriverPairs = 100000
+
+  /** Connected components of the pair graph `pairs` (id_a, id_b), routed
+    * on its size — the one clustering step of `keepBest` and
+    * `deduplicate`. Returns `(labels, checkpoint)`: `labels` holds one
+    * (id, label) row per edge-touched id, label = the smallest id of its
+    * component under Spark's ordering for the id type; `checkpoint` is the
+    * distributed loop's final label checkpoint (the block behind
+    * `labels`, None on the driver route), for a caller that materializes
+    * its result eagerly and then frees it with `releaseCheckpoints`.
     *
-    * Returns (id, label) where label = smallest id in the component.
-    *
-    * This is the scale path: it always runs distributed, every step a few
-    * Spark jobs. `keepBest` and `deduplicate` call it only for pair graphs
-    * above their driver bound; at or below it they cluster with
-    * `clusterOnDriver`, whose labels are the same.
+    * Pairs with a null id are dropped (a null id joins nothing, so it gets
+    * no label on either route). At most `bound` pairs cluster on the
+    * driver (`clusterOnDriver`); above it, and for a negative bound, the
+    * min-label loop runs (`minLabelLoop`). Both routes read `pairs`, so
+    * it is persisted for the call and released before returning, unless
+    * the caller persisted it (unpersisting it would evict the caller's
+    * blocks); `labels` never depends on it.
+    */
+  private[graft] def components(pairs: DataFrame,
+                                bound: Int): (DataFrame, Option[DataFrame]) = {
+    import org.apache.spark.storage.StorageLevel
+    val owned = pairs.storageLevel == StorageLevel.NONE
+    val cached = if (owned) pairs.persist(StorageLevel.MEMORY_AND_DISK) else pairs
+    try {
+      val p = cached.filter(col("id_a").isNotNull && col("id_b").isNotNull)
+        .select(col("id_a"), col("id_b"))
+      clusterOnDriver(p, bound).map(l => (l, Option.empty[DataFrame]))
+        .getOrElse {
+          val live = minLabelLoop(p)
+          (live.select(col("id"), col("label")), Some(live))
+        }
+    } finally if (owned) cached.unpersist(blocking = false)
+  }
+
+  /** Connected components of `pairs` (id_a, id_b) for every row of
+    * `vertices` (an `id` column): (id, label), label = the smallest id of
+    * the component, an id in no pair its own label. Always distributed —
+    * the min-label loop of `components` with no driver route, joined to
+    * the vertices — so it is the reference the specs hold the driver route
+    * to; `keepBest` and `deduplicate` call `components` instead.
     */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame =
-    connectedComponentsTracked(vertices, pairs)._1
+    vertices.select(col("id")).join(components(pairs, -1)._1, Seq("id"), "left")
+      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
 
-  /** As `connectedComponents`, also returning the final label frame's
-    * checkpoint — the caller that materializes a downstream result frees
-    * EXACTLY it with `releaseCheckpoints` (and nothing a concurrent driver
-    * thread may have registered meanwhile).
+  /** Iterative min-label propagation over a pair graph with no null id:
+    * each vertex repeatedly takes the smallest label among itself and its
+    * neighbors until fixpoint. Converges in O(component diameter) joins —
+    * near-dup clusters are tiny cliques, so 2-4 iterations in practice;
+    * every step is a shuffle join + hash aggregate (no driver-side graph,
+    * no quadratic stage). Returns the final label checkpoint (id, label,
+    * old): one row per edge-touched id.
     */
-  private[operators] def connectedComponentsTracked(
-      vertices: DataFrame, pairs: DataFrame): (DataFrame, DataFrame) = {
+  private def minLabelLoop(pairs: DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // both directions from ONE pass over `pairs`: a union of two selects
     // would evaluate the (expensive, self-join-shaped) pair pipeline twice
@@ -777,12 +765,10 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val idType = pairs.schema("id_a").dataType
-    // Only vertices that touch an edge can ever change label — everything
-    // else is trivially its own singleton component. Iterating over the
-    // edge-touched set only keeps every per-iteration shuffle proportional
-    // to the (typically tiny) near-dup pair graph, not the full vertex set;
-    // singletons rejoin once at the end. `edges` holds both directions, so
-    // `src` alone covers every touched vertex.
+    // Only vertices that touch an edge can ever change label, so the loop
+    // iterates over the edge-touched set only: every per-iteration shuffle
+    // is proportional to the (typically tiny) near-dup pair graph. `edges`
+    // holds both directions, so `src` alone covers every touched vertex.
     //
     // localCheckpoint truncates the logical plan each iteration — without it
     // the lineage doubles per step and plan compilation blows up after ~8
@@ -797,7 +783,6 @@ object Dedup {
     var live = edges.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
       .select(col("src").as("id"), least(col("src"), col("__mn")).as("label"))
       .localCheckpoint() // eager: materialized here
-    var labels = live
     // ONE join + ONE aggregate per propagation round (min-label message
     // passing): neighbor messages carry the sender's label, each vertex also
     // sends itself its current label tagged in `self` — min(label) is the
@@ -812,8 +797,8 @@ object Dedup {
       msgs.groupBy(col("id"))
         .agg(min(col("label")).as("label"), min(col("self")).as("old"))
     }
-    var converged = false
-    while (!converged) {
+    var changed = true
+    while (changed) {
       // TWO propagation rounds per checkpoint: the checkpoint (an eager
       // materialization pinning block-manager partitions) is the per-
       // iteration fixed cost, so batching rounds halves checkpoints on long
@@ -822,30 +807,33 @@ object Dedup {
       // the fixpoint — round 1's delta needs no separate check. The round-1
       // aggregate appears twice in round 2's plan (join side + self side);
       // its shuffle exchange is reused, not recomputed.
-      val mid = propagate(labels).select(col("id"), col("label"))
+      val mid = propagate(live.select(col("id"), col("label")))
+        .select(col("id"), col("label"))
       val next = propagate(mid).localCheckpoint()
       // isEmpty short-circuits on the first changed row (limit-1 over the
       // checkpointed frame) — a full count aggregate only ever runs on the
       // final (converged) iteration, where the frame is scanned once anyway
-      val anyChanged = !next.filter(col("label") < col("old")).isEmpty
+      changed = !next.filter(col("label") < col("old")).isEmpty
       releaseCheckpoints(live)
       live = next
-      labels = next.select(col("id"), col("label"))
-      converged = !anyChanged
     }
     edges.unpersist()
-    val out = vertices.select(col("id")).join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    (out, live)
+    live
   }
 
-  /** Connected components of `pairs` (id_a, id_b) on the driver, when the
-    * graph has at most `bound` pairs: Some((id, label)) for every
-    * edge-touched id, label = the smallest id in its component, the labels
-    * `connectedComponents` gives. None above the bound (or for a negative
-    * bound), and the caller runs the distributed loop instead. ONE action
-    * collects at most bound + 1 pairs (pairs with a null id are dropped: a
-    * null id joins nothing). The distinct ids are sorted under Spark's
+  /** Connected components of `pairs` (id_a, id_b, no null id) on the
+    * driver, when the graph has at most `bound` pairs: Some((id, label))
+    * for every edge-touched id, label = the smallest id in its component,
+    * the labels the min-label loop gives. None above the bound (or for a
+    * negative bound), and the caller runs the distributed loop instead.
+    *
+    * What reaches the driver: at most bound + 1 pairs, gathered in ONE
+    * Spark job at any partition count — every partition keeps its first
+    * bound + 1 pairs, one exchange moves those to a single partition, and
+    * that partition keeps bound + 1 again (a global limit through a
+    * single-partition exchange, written on the RDD so it runs as one job;
+    * a `limit(..).collect()` scans one partition first and scales up in a
+    * further job per round). The distinct ids are sorted under Spark's
     * ordering for the id type (`TypeUtils.getInterpretedOrdering` on
     * catalyst values — UTF-8 byte order for strings), and union-find over
     * their indices links every root to the smaller one, so each
@@ -857,14 +845,15 @@ object Dedup {
                                      bound: Int): Option[DataFrame] =
     if (bound < 0) None else {
       val idType = pairs.schema("id_a").dataType
-      val edges = pairs.filter(col("id_a").isNotNull && col("id_b").isNotNull)
-        .select(col("id_a"), col("id_b"))
-        .limit(math.min(bound, Int.MaxValue - 1) + 1).collect()
+      val cap = math.min(bound, Int.MaxValue - 1) + 1
+      val edges = pairs.select(col("id_a"), col("id_b")).queryExecution.toRdd
+        .mapPartitions(_.take(cap).map(_.copy()))
+        .coalesce(1, shuffle = true)
+        .mapPartitions(_.take(cap))
+        .collect()
       if (edges.length > bound) None else {
-        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
         val ord = TypeUtils.getInterpretedOrdering(idType)
-        val ends = edges.flatMap(r =>
-          Array(toCatalyst(r.get(0)), toCatalyst(r.get(1)))).map(_.asInstanceOf[AnyRef])
+        val ends = edges.flatMap(r => Array(r.get(0, idType), r.get(1, idType)))
         val sorted = ends.clone()
         java.util.Arrays.sort(sorted, ord)
         val ids = sorted.indices.filter(i =>
@@ -886,25 +875,6 @@ object Dedup {
       }
     }
 
-  /** The reference's `deduplicate` contract (skrub/_deduplicate.py:15-285):
-    * cluster the DISTINCT values of a string column by n-gram similarity and
-    * map every value to its cluster's most frequent member (ties -> smallest
-    * value). Returns the translation map (value, canonical).
-    *
-    * Reference clusters with driver-side hierarchical clustering over TF-IDF
-    * distances; our scale path derives clusters as connected components of
-    * the jaccard near-dup pair graph at `minJaccard` — same contract
-    * (value -> most-frequent-member), shuffle-shaped throughout.
-    *
-    * EAGER contract: the call runs jobs and returns a MATERIALIZED frame
-    * (a lineage-truncated localCheckpoint, |distinct values| rows) so every
-    * intermediate this call owns is freed before returning. The checkpoint
-    * block is released when the frame is garbage-collected (ContextCleaner)
-    * or explicitly by unpersisting the RDD `GraftBridge.checkpointedRddId`
-    * names (`df.rdd` is a new RDD on top of the checkpoint; unpersisting
-    * it frees nothing); it cannot be recomputed after executor loss —
-    * re-run the call in that case.
-    */
   /** `candidates = "auto"` routes to the minhash-band generator above
     * EITHER gate: the exact inverted index's pair amplification (each pair
     * shuffled once per shared shingle) grew ~6x faster than the banded
@@ -924,27 +894,46 @@ object Dedup {
   def autoRoutesToMinhash(nVals: Long, totalChars: Long): Boolean =
     nVals > AutoMinhashAbove || totalChars > AutoMinhashCharsAbove
 
-  /** `maxDriverPairs` default sizing: the driver path collects up to
-    * (limit+1) two-md5-string rows (~200 B each on-heap) and touches up to
-    * 2x that many id strings — 1M pairs keeps the worst case near ~0.5 GB
-    * driver heap; larger graphs take the distributed min-label CC fallback,
-    * which scales to any size.
+  /** The reference's `deduplicate` contract (skrub/_deduplicate.py:15-285):
+    * cluster the DISTINCT values of a string column by n-gram similarity and
+    * map every value to its cluster's most frequent member (ties -> the
+    * smaller value in Spark's string order, unsigned UTF-8 bytes). Returns
+    * the translation map (value, canonical).
     *
-    * Clustering routes on the pair count, as in `keepBest`: a graph of at
-    * most `maxDriverPairs` pairs is clustered by `clusterOnDriver` (one
-    * action collects at most `maxDriverPairs` + 1 pairs), then ONE
-    * broadcast join of the distinct values against the touched ids
-    * collects their (label, id, value, frequency) and the driver picks each
-    * component's canonical; above the bound the distributed min-label loop
-    * labels every value and one window aggregate picks the canonicals.
+    * Reference clusters with driver-side hierarchical clustering over TF-IDF
+    * distances; our scale path derives clusters as connected components of
+    * the jaccard near-dup pair graph at `minJaccard` — same contract
+    * (value -> most-frequent-member), shuffle-shaped throughout. The
+    * components come from `components`, as in `keepBest`: on the driver
+    * for a graph of at most `DriverPairs` pairs (241 pairs for the 5k-doc
+    * bench corpus), distributed above. One tail serves both routes: the
+    * persisted distinct values join their labels, ONE min_by over
+    * (-freq, value) per label window gives each touched value its
+    * cluster's canonical, and an untouched value is its own canonical.
+    * Only the clustering step's pairs reach the driver; no value text
+    * does.
+    *
+    * EAGER contract: the call runs jobs and returns a MATERIALIZED frame
+    * (a lineage-truncated localCheckpoint, |distinct values| rows) so every
+    * intermediate this call owns is freed before returning. The checkpoint
+    * block is released when the frame is garbage-collected (ContextCleaner)
+    * or explicitly by unpersisting the RDD `GraftBridge.checkpointedRddId`
+    * names (`df.rdd` is a new RDD on top of the checkpoint; unpersisting
+    * it frees nothing); it cannot be recomputed after executor loss —
+    * re-run the call in that case.
     */
   def deduplicate(df: DataFrame, c: String, minJaccard: Double = 0.4,
-                  n: Int = 3, maxDriverPairs: Int = 1000000,
-                  candidates: String = "auto"): DataFrame = {
+                  n: Int = 3, candidates: String = "auto"): DataFrame =
+    deduplicate(df, c, minJaccard, n, candidates, DriverPairs)
+
+  /** `deduplicate` with the driver bound as a parameter (tests reach the
+    * distributed path with 0). */
+  private[graft] def deduplicate(df: DataFrame, c: String, minJaccard: Double,
+                                 n: Int, candidates: String,
+                                 bound: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(Set("auto", "jaccard", "minhash").contains(candidates),
       s"candidates must be auto|jaccard|minhash, got $candidates")
-    val spark = df.sparkSession
     val vals = df.filter(col(c).isNotNull).groupBy(col(c).as("v"))
       .agg(count(lit(1)).as("freq"))
       .withColumn("id", md5(col("v")))
@@ -971,68 +960,32 @@ object Dedup {
         n = n, minJaccard = minJaccard)
     // The near-dup pair graph lives over DISTINCT values and only contains
     // pairs above the similarity threshold — it is orders of magnitude
-    // smaller than the corpus (241 pairs for 5k distinct docs at bench
-    // scale; a categorical column with millions of distinct values still
-    // yields a graph bounded by near-duplicate density, not corpus size).
-    // An iterative distributed CC loop over a graph this size is pure
-    // scheduling overhead: each iteration costs a join + aggregate +
-    // checkpoint materialization. So below the bound the graph is
-    // clustered on the driver and the translation map broadcast back.
-    val driverLabels = clusterOnDriver(pairs, maxDriverPairs)
-    if (driverLabels.isDefined) {
-      // only edge-touched values can have a non-identity canonical; fetch
-      // their (label, id, v, freq) with a broadcast join against the
-      // persisted distinct-value frame (bounded by 2·|pairs| rows)
-      val members = vals.join(broadcast(driverLabels.get), Seq("id"))
-        .select(col("label"), col("id"), col("v"), col("freq")).collect()
-      // canonical per cluster: most frequent member, ties -> smallest value
-      // by Spark's string order (unsigned UTF-8 bytes — Java
-      // String.compareTo differs above the BMP)
-      val canonicalOf = new java.util.HashMap[String, (UTF8String, Long)]()
-      members.foreach { m =>
-        val (v, f) = (UTF8String.fromString(m.getString(2)), m.getLong(3))
-        val cur = canonicalOf.get(m.getString(0))
-        if (cur == null || f > cur._2 || (f == cur._2 && v.binaryCompare(cur._1) < 0))
-          canonicalOf.put(m.getString(0), (v, f))
-      }
-      import spark.implicits._
-      val trans = members.map(m =>
-        (m.getString(1), canonicalOf.get(m.getString(0))._1.toString)).toSeq
-      val out = vals.join(broadcast(trans.toDF("id", "canonical")), Seq("id"), "left")
-        .select(col("v").as("value"),
-          coalesce(col("canonical"), col("v")).as("canonical"))
-      // Materialize the translation map (|distinct values| rows) eagerly so
-      // the vals persist this call owns can be freed before returning — the
-      // returned frame is backed by a lineage-truncated checkpoint block,
-      // released with the result like any consumer-owned frame (or by the
-      // ContextCleaner once unreferenced).
-      val mat = out.localCheckpoint()
-      vals.unpersist(blocking = false)
-      mat
-    } else {
-      val (labels, labelCheckpoint) =
-        connectedComponentsTracked(vals.select(col("id")), pairs)
-      val labeled = vals.join(labels, Seq("id"))
-      // cluster representative (most frequent member, ties -> smallest value)
-      // via ONE window aggregate over the label partition — a groupBy+rejoin
-      // would shuffle the same data twice on the same key
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
-      val out = labeled
-        .withColumn("canonical",
-          min_by(col("v"), struct(negate(col("freq")), col("v"))).over(w))
-        .select(col("v").as("value"), col("canonical"))
-      // The translation map is the contract output (|distinct values| rows —
-      // already far smaller than the input); materialize it once and free
-      // every intermediate this call OWNS (the vals persist + the CC loop's
-      // final label checkpoint, whose ids the tracked variant returns) — a
-      // long-lived session running many deduplicate() calls accumulates no
-      // dead storage, and blocks registered by concurrent driver threads are
-      // never touched.
-      val mat = out.localCheckpoint()
-      releaseCheckpoints(labelCheckpoint)
-      vals.unpersist(blocking = false)
-      mat
-    }
+    // smaller than the corpus (a categorical column with millions of
+    // distinct values still yields a graph bounded by near-duplicate
+    // density, not corpus size), so it usually clusters on the driver.
+    val (labels, checkpoint) = components(pairs, bound)
+    // one join to the labels (one broadcast of the driver route's local
+    // frame) serves both branches: the touched values get their cluster's
+    // canonical from ONE aggregate over the label window (one exchange of
+    // the graph-sized touched rows, no join back); the untouched ones are
+    // their own canonical and never cross an exchange keyed on a null label
+    val labeled = vals.join(labels, Seq("id"), "left")
+    val byLabel = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
+    val out = labeled.filter(col("label").isNotNull)
+      .select(col("v").as("value"), min_by(col("v"),
+        struct(negate(col("freq")), col("v"))).over(byLabel).as("canonical"))
+      .unionByName(labeled.filter(col("label").isNull)
+        .select(col("v").as("value"), col("v").as("canonical")))
+    // The translation map is the contract output (|distinct values| rows —
+    // already far smaller than the input); materialize it once and free
+    // every intermediate this call OWNS (the vals persist, and on the
+    // distributed route the loop's final label checkpoint) — a long-lived
+    // session running many deduplicate() calls accumulates no dead storage,
+    // and blocks registered by concurrent driver threads are never touched.
+    val mat = out.localCheckpoint()
+    releaseCheckpoints(checkpoint.toSeq: _*)
+    vals.unpersist(blocking = false)
+    mat
   }
 
   /** Free the local-checkpoint blocks behind `frames`, by the RDD id each
@@ -1061,8 +1014,4 @@ object Dedup {
     */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Embedding dimensionality (one tiny fit-time job). */
-  def vecDim(df: DataFrame, vecCol: String): Int =
-    df.select(size(col(vecCol))).head().getInt(0)
 }

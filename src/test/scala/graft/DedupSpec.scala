@@ -163,7 +163,7 @@ class DedupSpec extends AnyFunSuite {
       Dedup.keepBest(scored, pairs, "doc_id", "score", bound).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
         .sorted
-    val driver = verdicts(Dedup.KeepBestDriverPairs)
+    val driver = verdicts(Dedup.DriverPairs)
     assert(driver.exists(_._3 > 1), "fixture must produce clusters")
     assert(driver.length === docs.count())
     assert(driver.toSeq === verdicts(0).toSeq)
@@ -178,7 +178,7 @@ class DedupSpec extends AnyFunSuite {
       .toDF("id", "score")
     val singletonNull = Seq(("a", Some(1L)), ("b", Some(2L)),
       ("c", None: Option[Long])).toDF("id", "score")
-    for (bound <- Seq(0, Dedup.KeepBestDriverPairs)) {
+    for (bound <- Seq(0, Dedup.DriverPairs)) {
       val e = intercept[Exception] {
         Dedup.keepBest(clusteredNull, pairs, "id", "score", bound).collect()
       }
@@ -209,15 +209,72 @@ class DedupSpec extends AnyFunSuite {
 
   test("deduplicate: driver union-find path and distributed CC fallback agree") {
     val docs = TestSpark.table("documents").limit(300)
-    val fast = Dedup.deduplicate(docs, "text", minJaccard = 0.3)
+    def map(bound: Int) = Dedup.deduplicate(docs, "text", 0.3, 3, "auto", bound)
       .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    // maxDriverPairs = -1 forces every pair count over the guard -> the
-    // distributed min-label-propagation loop runs instead
-    val dist = Dedup.deduplicate(docs, "text", minJaccard = 0.3,
-        maxDriverPairs = -1)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
+    val fast = map(Dedup.DriverPairs)
     assert(fast.nonEmpty)
-    assert(fast === dist)
+    assert(fast.exists { case (v, c) => v != c }, "fixture must produce clusters")
+    // bound 0: every non-empty pair graph takes the distributed loop
+    assert(fast === map(0))
+  }
+
+  test("deduplicate: an equal-frequency tie goes to the value smaller in " +
+    "UTF-8 byte order on both routes") {
+    // U+E000 is EE 80 80 in UTF-8 and U+1F600 is F0 9F 98 80, so the BMP
+    // value is the smaller in bytes; Java String order compares the UTF-16
+    // units E000 > D83D and puts the astral value first
+    val text = "the quick brown fox jumps over the lazy dog"
+    val (bmp, astral) = (s"\uE000 $text", s"\uD83D\uDE00 $text")
+    assert(astral < bmp)
+    val df = Seq(bmp, astral, astral, bmp, "an unrelated value").toDF("text")
+    for (bound <- Seq(0, Dedup.DriverPairs)) {
+      val out = Dedup.deduplicate(df, "text", 0.3, 3, "jaccard", bound)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(out === Map(bmp -> bmp, astral -> bmp,
+        "an unrelated value" -> "an unrelated value"), s"bound $bound")
+    }
+  }
+
+  test("components: a pair with a null id gives the same labels on both " +
+    "routes, and no null id gets a label") {
+    val pairs = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)),
+      (Some(2L), None), (None, Some(3L)), (Some(4L), Some(5L)), (None, None))
+      .toDF("id_a", "id_b")
+    def labels(bound: Int): Map[Any, Any] = {
+      val (l, checkpoint) = Dedup.components(pairs, bound)
+      try l.collect().map(r => r.get(0) -> r.get(1)).toMap
+      finally Dedup.releaseCheckpoints(checkpoint.toSeq: _*)
+    }
+    val driver = labels(Dedup.DriverPairs)
+    assert(driver === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L))
+    assert(labels(0) === driver)
+  }
+
+  test("deduplicate and keepBest leave no persisted RDD beyond the " +
+    "returned result's on either route") {
+    val sc = spark.sparkContext
+    val docs = TestSpark.table("documents").limit(300)
+    val pairs = Dedup.minhashLshPairs(docs, "text", "doc_id",
+      n = 3, rowsPerBand = 2, nBands = 8, minJaccard = 0.2)
+    val scored = docs.select($"doc_id", length($"text").cast("long").as("score"))
+    for (bound <- Seq(0, Dedup.DriverPairs)) {
+      val before = sc.getPersistentRDDs.keySet
+      val map = Dedup.deduplicate(docs, "text", 0.3, 3, "auto", bound)
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size === 1 &&
+        added === org.apache.spark.sql.GraftBridge.checkpointedRddId(map).toSet,
+        s"deduplicate, bound $bound, left persisted RDDs: $added")
+      val beforeKeep = sc.getPersistentRDDs.keySet
+      val verdict = Dedup.keepBest(scored, pairs, "doc_id", "score", bound)
+      assert(verdict.filter(!$"kept").count() > 0)
+      // the distributed route's labels are the loop's final checkpoint,
+      // which the lazy verdict reads; the driver route's are a local frame
+      val held = org.apache.spark.sql.GraftBridge.checkpointedRddId(verdict).toSet
+      assert(held.size === (if (bound == 0) 1 else 0))
+      val addedKeep = sc.getPersistentRDDs.keySet -- beforeKeep
+      assert(addedKeep === held,
+        s"keepBest, bound $bound, left persisted RDDs: $addedKeep")
+    }
   }
 
   test("auto routing gates on char volume OR distinct count") {

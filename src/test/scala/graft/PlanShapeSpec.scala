@@ -244,16 +244,24 @@ class PlanShapeSpec extends AnyFunSuite {
     // and one convergence check per two hops, the driver path none
     val df = (1L to 40L).map(i => (i, i % 7)).toDF("id", "score")
     val pairs = (1L to 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    def jobs(bound: Int): Int = graft.obs.Collector.measure(spark) {
-      graft.operators.Dedup.keepBest(df, pairs, "id", "score", bound).collect()
-    }.jobs.size
-    // two jobs collect the pairs (the limit scans one of the 4 partitions,
-    // then the other three); the verdict's collect runs five more: its
-    // shuffle and broadcast stages, then the result stage. The distributed
-    // loop ran 137 here.
-    val driver = jobs(graft.operators.Dedup.KeepBestDriverPairs)
-    assert(driver === 7)
-    assert(jobs(0) > 10 * driver)
+    def jobs(p: org.apache.spark.sql.DataFrame, bound: Int): Int =
+      graft.obs.Collector.measure(spark) {
+        graft.operators.Dedup.keepBest(df, p, "id", "score", bound).collect()
+      }.jobs.size
+    // one job collects the pairs (every partition's first bound + 1, then
+    // one single-partition exchange); the verdict's collect runs five more:
+    // its shuffle and broadcast stages, then the result stage. The
+    // distributed loop ran 137 here.
+    val driver = jobs(pairs, graft.operators.Dedup.DriverPairs)
+    assert(driver === 6)
+    assert(jobs(pairs, 0) > 10 * driver)
+    // more partitions add no collect job: a cached 16-partition pair frame
+    // (which keepBest reads as the caller's, without its own persist)
+    val wide = pairs.repartition(16).persist()
+    try {
+      assert(wide.count() === 30L && wide.rdd.getNumPartitions === 16)
+      assert(jobs(wide, graft.operators.Dedup.DriverPairs) === driver)
+    } finally wide.unpersist()
   }
 
   test("minhashLshPairs evaluates MinhashSig once per plan in every " +
