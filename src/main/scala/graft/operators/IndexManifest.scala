@@ -188,13 +188,12 @@ object IndexManifest {
     Bucketize.tableProps(spark, table).get(Key)
 
   def stamp(spark: SparkSession, table: String, key: String): Unit = {
-    // whitelist, not blacklist (ADVICE r14): a key containing SQL-literal
-    // escape characters (quotes, backslashes) would be munged by the
-    // property writer's ALTER TABLE, so the stored key never equals the
-    // in-memory key and ensure* silently rebuilds on every call — refuse
-    // loudly
-    // instead. Every key this object mints (digits, hex, ':', '|',
-    // param words) passes; caller-minted precomputedKeys must too.
+    // whitelist, not blacklist (ADVICE r14): keys stay in the alphabet
+    // this object mints (digits, hex, ':', '|', param words), and a
+    // caller-minted precomputedKey outside it is refused loudly. (The
+    // property writer once embedded keys as SQL literals, which munged
+    // quotes and backslashes; it now stores them verbatim, but the
+    // alphabet is kept.)
     require(key.matches("[A-Za-z0-9:|,._=\\-]+"),
       s"malformed manifest key (allowed: [A-Za-z0-9:|,._=-]): $key")
     Bucketize.alterTableProps(spark, table, Seq(Key -> key))

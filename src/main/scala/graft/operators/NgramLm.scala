@@ -166,9 +166,6 @@ object NgramLm {
       .saveAsTable(vocabTable(name))
     model.bigrams.write.mode("overwrite").option("path", s"$path/bigrams")
       .saveAsTable(bigramsTable(name))
-    // key must avoid the substring "token": the property reader redacts
-    // values whose key matches spark.sql.redaction.string.regex
-    // ("(?i)secret|password|token|access[.]key")
     Bucketize.alterTableProps(spark, vocabTable(name), Seq(
       "graft.lmTotal" -> model.totalTokens,
       "graft.lmVocab" -> model.vocabCount))

@@ -16,13 +16,17 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * 100 TB shape: inputs are already top-k lists — |queries|·k rows each —
   * so the union, the (q, doc) sum, and the per-query window all run on
   * k-bounded data regardless of corpus size; the corpus-scale work happened
-  * inside the per-family retrieval operators.
+  * inside the per-family retrieval operators. The fused plan has ONE
+  * exchange: the contributions are hash-partitioned by `q_id`, which
+  * clusters both the (q_id, doc_id) sum and the per-query window.
   */
 object Retrieval {
 
   /** Fuse rank lists sharing the (q_id, doc_id, rank) shape. Output:
     * (q_id, doc_id, rrf_micro, rank), rank 1..k by (rrf_micro desc,
-    * doc_id asc). `c` is the standard RRF damping constant (60).
+    * doc_id asc). `c` is the standard RRF damping constant (60). The
+    * contributions are repartitioned by `q_id` once; the sum and the
+    * window run on that one exchange.
     */
   def rrf(rankings: Seq[DataFrame], k: Int, c: Int = 60): DataFrame = {
     require(rankings.nonEmpty, "Retrieval.rrf: no rankings to fuse")
@@ -32,6 +36,7 @@ object Retrieval {
         round(lit(1000000.0) / (lit(c) + col("rank")))
           .cast(LongType).as("contrib")))
       .reduce(_ unionByName _)
+      .repartition(col("q_id"))
     val fused = contrib.groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("contrib")).as("rrf_micro"))
     val w = Window.partitionBy(col("q_id"))

@@ -87,6 +87,13 @@ object Bucketize {
     * `numBucketsFor`, or disable clustering for this session); the
     * [[ClusteredWriteKey]] session conf is the escape hatch for skewed
     * keys, where the biggest bucket, not the average, is the straggler.
+    *
+    * A frame that is ALREADY hash-partitioned on exactly the bucket keys
+    * at the bucket count (a producer that aggregates over
+    * `repartition(numBuckets, keys)`, as the BM25 postings do) pays no
+    * second exchange: the planner drops this repartition as redundant, so
+    * each of its partitions is written as one bucket (BucketizeSpec pins
+    * the single shuffle).
     */
   private def clusterByBucket(df: DataFrame, keys: Seq[String],
                               numBuckets: Int): DataFrame = {
@@ -143,11 +150,9 @@ object Bucketize {
       .bucketBy(numBuckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
 
-  private def bucketSpecOf(spark: SparkSession, table: String):
+  private[graft] def bucketSpecOf(spark: SparkSession, table: String):
       org.apache.spark.sql.catalyst.catalog.BucketSpec =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec
+    spark.sessionState.catalog.getTableMetadata(ident(table)).bucketSpec
       .getOrElse(throw new IllegalArgumentException(
         s"table $table is not bucketed"))
 
@@ -197,29 +202,32 @@ object Bucketize {
   }
 
   /** The table's properties — the one reader of a bucketed layout's
-    * metadata (index geometry, corpus stats, staleness keys). Values of
-    * keys matching `spark.sql.redaction.string.regex` (e.g. any key
-    * containing "token") come back redacted, so graft keys avoid them.
+    * metadata (index geometry, corpus stats, staleness keys), read
+    * straight from the session catalog: no SQL statement is parsed or
+    * run, and values come back as written (no redaction).
     */
   def tableProps(spark: SparkSession, table: String): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES `$table`").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    spark.sessionState.catalog.getTableRawMetadata(ident(table)).properties
 
-  /** The one writer: SET `set` (one metastore update), then UNSET `unset`
-    * (IF EXISTS). Keys and values are embedded as single-quoted SQL
-    * literals verbatim, so both must be free of quotes and backslashes —
-    * `IndexManifest.stamp` enforces that on caller-minted keys; every
-    * other value graft writes is a number, boolean or UUID.
+  /** The one writer: SET `set`, then drop `unset` (a key that is not
+    * there is skipped), as ONE catalog update — the steps `ALTER TABLE …
+    * SET/UNSET TBLPROPERTIES` runs (`alterTable`, then
+    * `invalidateCachedTable` so the next read of the table re-resolves
+    * it), without building SQL: keys and values are stored verbatim.
     */
   def alterTableProps(spark: SparkSession, table: String,
                       set: Iterable[(String, Any)],
                       unset: Iterable[String] = Nil): Unit = {
-    if (set.nonEmpty) spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-      set.map { case (k, v) => s"'$k' = '$v'" }.mkString("(", ", ", ")"))
-    if (unset.nonEmpty) spark.sql(
-      s"ALTER TABLE `$table` UNSET TBLPROPERTIES IF EXISTS " +
-        unset.map(k => s"'$k'").mkString("(", ", ", ")"))
+    if (set.isEmpty && unset.isEmpty) return
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableRawMetadata(ident(table))
+    catalog.alterTable(meta.copy(properties = meta.properties ++
+      set.map { case (k, v) => k -> v.toString } -- unset))
+    catalog.invalidateCachedTable(ident(table))
   }
+
+  private def ident(table: String) =
+    org.apache.spark.sql.catalyst.TableIdentifier(table)
 
   /** Number of shuffle exchanges in the (possibly adaptive) physical plan —
     * the assertion primitive for "this join is co-located". Descends into

@@ -212,4 +212,58 @@ class BucketizeSpec extends AnyFunSuite {
       if (hadExplicit) saved.foreach(spark.conf.set(k, _))
     }
   }
+
+  test("table properties round-trip through the catalog: a key matching " +
+    "the redaction pattern reads back as written, unsetting an absent key " +
+    "is a no-op, the table stays readable, compact carries graft keys") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bktprops").toString
+    val df = (1L to 200L).map(i => (i, s"v$i")).toDF("k", "v")
+    Bucketize.writeBucketed(df, "graft_bkt_props", s"$dir/t", Seq("k"), 2)
+    try {
+      // a key containing "token" matches Spark's redaction pattern, and
+      // the value holds what a SQL literal would have to escape
+      val tokenKey = "graft.test.api_token"
+      val value = "it's a \\ value, with = and 'quotes'"
+      Bucketize.alterTableProps(spark, "graft_bkt_props",
+        Seq(tokenKey -> value, "graft.test.n" -> 7L))
+      val props = Bucketize.tableProps(spark, "graft_bkt_props")
+      assert(props.get(tokenKey).contains(value))
+      val shown = spark.sql("SHOW TBLPROPERTIES `graft_bkt_props`").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(shown.get(tokenKey).exists(_ != value),
+        s"SHOW TBLPROPERTIES redacts the key: ${shown.get(tokenKey)}")
+      assert(props.get("graft.test.n").contains("7"))
+      Bucketize.alterTableProps(spark, "graft_bkt_props", Nil,
+        Seq("graft.test.absent"))
+      assert(Bucketize.tableProps(spark, "graft_bkt_props") === props)
+      assert(spark.table("graft_bkt_props").count() === 200L)
+      val dirC = java.nio.file.Files.createTempDirectory("graft_bktprops2").toString
+      Bucketize.compact(spark, "graft_bkt_props", s"$dirC/t")
+      val after = Bucketize.tableProps(spark, "graft_bkt_props")
+      assert(after.get(tokenKey).contains(value))
+      assert(after.get("graft.test.n").contains("7"))
+      assert(spark.table("graft_bkt_props").count() === 200L)
+      Bucketize.alterTableProps(spark, "graft_bkt_props", Nil, Seq(tokenKey))
+      assert(!Bucketize.tableProps(spark, "graft_bkt_props").contains(tokenKey))
+    } finally spark.sql("DROP TABLE IF EXISTS graft_bkt_props")
+  }
+
+  test("a frame already hash-partitioned on the bucket key at the bucket " +
+    "count is written without a second exchange, one file per bucket") {
+    def parquetFiles(d: String) = new java.io.File(d).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_bktpre").toString
+    val df = (1L to 3000L).map(i => (i % 50, i)).toDF("k", "v")
+      .repartition(4, col("k")).groupBy("k").agg(sum("v").as("s"))
+    try {
+      val m = graft.obs.Collector.measure(spark)(
+        Bucketize.writeBucketed(df, "graft_bkt_pre", s"$dir/t", Seq("k"), 4))
+      assert(m.stages.count(_.shuffleWrite > 0) === 1,
+        "the frame's own exchange is the only shuffle of the write")
+      assert(parquetFiles(s"$dir/t") === 4)
+      assert(spark.table("graft_bkt_pre").count() === 50L)
+      assert(spark.table("graft_bkt_pre").agg(sum("s")).head().getLong(0) ===
+        (1L to 3000L).sum)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_bkt_pre")
+  }
 }

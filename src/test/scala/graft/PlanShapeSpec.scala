@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import graft.sources.Bucketize
 
 /** Physical-plan regression tests: the perf work of rounds 3-5 lives in
   * plan SHAPES (pushdown reaching the scan, bounded-buffer aggregates
@@ -262,6 +263,68 @@ class PlanShapeSpec extends AnyFunSuite {
       assert(wide.count() === 30L && wide.rdd.getNumPartitions === 16)
       assert(jobs(wide, graft.operators.Dedup.DriverPairs) === driver)
     } finally wide.unpersist()
+  }
+
+  /** Spark jobs `body` runs, through the same listener as the keepBest pin. */
+  private def jobsOf(body: => Unit): Int =
+    graft.obs.Collector.measure(spark)(body).jobs.size
+
+  /** A BM25 index over the documents fixture plus serving-shaped local
+    * frames: a query batch and an ingest batch built on the driver, as a
+    * serving client sends them.
+    */
+  private def servingIndex(name: String): (DataFrame, DataFrame) = {
+    import graft.operators.TextSearch
+    val docs = TestSpark.table("documents").select("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_serve").toString
+    TextSearch.buildIndex(docs, "text", "doc_id", name, dir, numBuckets = 4)
+    val texts = docs.orderBy("doc_id").limit(12).collect().map(_.getString(1))
+    val qs = texts.take(4).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toSeq.toDF("q_id", "q_text")
+    val batch = texts.drop(4).zipWithIndex
+      .map { case (t, i) => (1000000L + i, t + " ingest") }.toSeq
+      .toDF("doc_id", "text")
+    (qs, batch)
+  }
+
+  test("a steady-state BM25 probe of a local query batch runs at most five " +
+    "Spark jobs") {
+    import graft.operators.TextSearch
+    val (qs, _) = servingIndex("graft_jobs_probe")
+    def probe(): Unit =
+      TextSearch.probe(spark, "graft_jobs_probe", qs, "q_text", "q_id", 5)
+        .collect()
+    probe() // verifies the lens count once
+    val n = jobsOf(probe())
+    assert(n <= 5, s"steady-state probe ran $n jobs")
+  }
+
+  test("an append carries lens verification forward: the first probe " +
+    "after it runs no lens-count job, and the append runs at most six jobs") {
+    import graft.operators.TextSearch
+    val (qs, batch) = servingIndex("graft_jobs_append")
+    def probe(): Unit =
+      TextSearch.probe(spark, "graft_jobs_append", qs, "q_text", "q_id", 5)
+        .collect()
+    probe()
+    val steady = jobsOf(probe())
+    val appendJobs = jobsOf(
+      TextSearch.append(batch, "text", "doc_id", "graft_jobs_append"))
+    assert(appendJobs <= 6, s"append ran $appendJobs jobs")
+    assert(jobsOf(probe()) === steady,
+      "the first probe after an append recounted the lens table")
+  }
+
+  test("Retrieval.rrf fuses two rank lists in two Spark jobs: one exchange " +
+    "feeds both the (q_id, doc_id) sum and the per-query window") {
+    val a = Seq((1L, 10L, 1L), (1L, 11L, 2L), (2L, 10L, 1L), (2L, 12L, 2L))
+      .toDF("q_id", "doc_id", "rank")
+    val b = Seq((1L, 11L, 1L), (1L, 13L, 2L), (2L, 12L, 1L), (2L, 10L, 2L))
+      .toDF("q_id", "doc_id", "rank")
+    val fused = graft.operators.Retrieval.rrf(Seq(a, b), 3)
+    assert(jobsOf(fused.collect()) === 2)
+    assert(Bucketize.shuffleExchanges(fused) === 1,
+      fused.queryExecution.executedPlan.toString)
   }
 
   test("minhashLshPairs evaluates MinhashSig once per plan in every " +

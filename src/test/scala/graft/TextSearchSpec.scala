@@ -103,8 +103,8 @@ class TextSearchSpec extends AnyFunSuite {
     "pass (r16/r17)") {
     // literal query frame (real corpus tokens, else AQE collapses the whole
     // plan to EmptyRelation): the only parquet scans left are the corpus's
-    // (qTerms is deliberately evaluated twice — it is query-batch-sized
-    // and broadcast both times; the corpus must never be)
+    // (the query terms enter the plan as literals; the corpus must be
+    // scanned once)
     val someTerms = docs.select(graft.functions.Text.tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 3)
       .limit(1).collect()(0).getSeq[String](0).take(3).mkString(" ")
@@ -278,6 +278,35 @@ class TextSearchSpec extends AnyFunSuite {
       "verified stats tuple must be memoized")
     assert(!TextSearch.verifiedStats.asScala.exists(_.contains("424242")),
       "the corrupted tuple must never have been admitted")
+  }
+
+  test("probe answers degenerate query batches like topk, without an " +
+    "error: empty batch, no indexed term, null text, String ids") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25d").toString
+    TextSearch.buildIndex(docs, "text", "doc_id", "graft_bm25_degen", dir,
+      numBuckets = 4)
+    def probeAndTopk(qs: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] = {
+      val got = TextSearch.probe(spark, "graft_bm25_degen",
+        qs, "q_text", "q_id", k = 3)
+      val want = TextSearch.topk(docs, "text", "doc_id",
+        qs, "q_text", "q_id", k = 3)
+      assert(got.schema === want.schema)
+      val g = got.orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+      assert(g === want.orderBy("q_id", "rank").collect().map(_.toSeq).toSeq)
+      g
+    }
+    val texts = queries.collect().map(_.getString(1))
+    assert(probeAndTopk(Seq.empty[(Long, String)].toDF("q_id", "q_text"))
+      .isEmpty)
+    assert(probeAndTopk(Seq((1L, "zzzzunseen wordnotincorpus"))
+      .toDF("q_id", "q_text")).isEmpty)
+    val withNull = probeAndTopk(Seq((1L, null: String), (2L, texts(0)))
+      .toDF("q_id", "q_text"))
+    assert(withNull.nonEmpty && withNull.forall(_.head == 2L))
+    val stringIds = probeAndTopk(texts.toSeq.zipWithIndex
+      .map { case (t, i) => (s"q$i", t) }.toDF("q_id", "q_text"))
+    assert(stringIds.map(_.head.asInstanceOf[String]).distinct.sorted ===
+      texts.indices.map(i => s"q$i"))
   }
 
   test("one-shot scores/topk leave no persisted frame behind") {
