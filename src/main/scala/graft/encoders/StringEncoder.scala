@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
 import graft.functions.NgramVec
+import graft.ops.Stage
 
 /** StringEncoder (reference skrub/_string_encoder.py:19-306) — the default
   * high-cardinality encoder: TF-IDF over char 2-4-grams, reduced to
@@ -36,11 +37,11 @@ import graft.functions.NgramVec
 object StringEncoder {
 
   /** Vocabularies at or below this size have their per-value features
-    * collected to the driver (a few MB), letting the fit-time persist of the
-    * distinct-values RDD be released before returning — no persisted RDD
-    * outlives `encode`. Larger vocabularies keep the distributed path and
-    * release the persist after an eager `localCheckpoint` of the feature
-    * table (checkpoint blocks are reclaimed by the ContextCleaner when the
+    * collected to the driver (a few MB), so the fit-time stage of the
+    * distinct values is released before returning — no persisted RDD
+    * outlives `encode`. Larger vocabularies keep the distributed path: the
+    * feature table is an owned stage, filled before the distinct values
+    * are released (its blocks are reclaimed by the ContextCleaner when the
     * returned frame is garbage-collected).
     */
   val MaxDriverVocab = 200000
@@ -57,66 +58,61 @@ object StringEncoder {
     // this, the tf-idf treeAggregate and the Gram matrix pass both ran in
     // a single task (CPU-bound hashing, not bytes)
     val raw = df.select(col(c)).filter(col(c).isNotNull)
-    val values = raw
+    val encoded = Stage.scoped(raw
       .repartition(graft.ops.Partitions.cpuSpread(raw), col(c))
-      .distinct()
-      .rdd.map(_.getString(0)).persist()
+      .distinct()) { distinct =>
+      val values = distinct.rdd.map(_.getString(0))
 
-    // 1. document frequencies -> idf weights (broadcast-size: nBuckets)
-    val (dfCounts, n) = values
-      .treeAggregate((new Array[Long](nBuckets), 0L))(
-        seqOp = { case ((acc, cnt), v) =>
-          val t = NgramVec.tf(v, nBuckets)
-          var i = 0
-          while (i < nBuckets) { if (t(i) > 0) acc(i) += 1; i += 1 }
-          (acc, cnt + 1)
-        },
-        combOp = { case ((a, ca), (b, cb)) =>
-          var i = 0
-          while (i < nBuckets) { a(i) += b(i); i += 1 }
-          (a, ca + cb)
-        })
-    val weights = NgramVec.idf(dfCounts, n)
-    val wB = spark.sparkContext.broadcast(weights)
+      // 1. document frequencies -> idf weights (broadcast-size: nBuckets)
+      val (dfCounts, n) = values
+        .treeAggregate((new Array[Long](nBuckets), 0L))(
+          seqOp = { case ((acc, cnt), v) =>
+            val t = NgramVec.tf(v, nBuckets)
+            var i = 0
+            while (i < nBuckets) { if (t(i) > 0) acc(i) += 1; i += 1 }
+            (acc, cnt + 1)
+          },
+          combOp = { case ((a, ca), (b, cb)) =>
+            var i = 0
+            while (i < nBuckets) { a(i) += b(i); i += 1 }
+            (a, ca + cb)
+          })
+      val weights = NgramVec.idf(dfCounts, n)
+      val wB = spark.sparkContext.broadcast(weights)
 
-    // 2. Gram matrix over the tf-idf vectors
-    val vecs = values.map(v => (v, NgramVec.tfidf(v, wB.value, nBuckets)))
-    val gram = new RowMatrix(vecs.map { case (_, a) => OldVectors.dense(a) })
-      .computeGramianMatrix()
+      // 2. Gram matrix over the tf-idf vectors
+      val vecs = values.map(v => (v, NgramVec.tfidf(v, wB.value, nBuckets)))
+      val gram = new RowMatrix(vecs.map { case (_, a) => OldVectors.dense(a) })
+        .computeGramianMatrix()
 
-    // 3. local truncated eigendecomposition
-    val k = math.min(nComponents, nBuckets)
-    val g = breeze.linalg.DenseMatrix.tabulate(nBuckets, nBuckets)(
-      (i, j) => gram(i, j))
-    val eig = breeze.linalg.eigSym(g)
-    val order = eig.eigenvalues.toArray.zipWithIndex.sortBy(-_._1).take(k)
-    val v: Array[Array[Double]] = order.map { case (_, idx) =>
-      val colVec = Array.tabulate(nBuckets)(i => eig.eigenvectors(i, idx))
-      val m = colVec.maxBy(math.abs)
-      if (m < 0) colVec.map(-_) else colVec
-    }
-    val vB = spark.sparkContext.broadcast(v)
-
-    // 4. project + join back; release the fit-time persist either way
-    val feats = vecs.map { case (value, a) =>
-      Row.fromSeq(value +: vB.value.toSeq.map { colVec =>
-        var s = 0.0; var i = 0
-        while (i < a.length) { s += a(i) * colVec(i); i += 1 }
-        s
-      })
-    }
-    val schema = StructType(StructField(c, StringType) +:
-      (0 until k).map(i => StructField(s"${c}_svd_$i", DoubleType)))
-    val encoded =
-      if (n <= MaxDriverVocab) {
-        val local = feats.collect().toSeq
-        values.unpersist(blocking = true)
-        spark.createDataFrame(spark.sparkContext.parallelize(local), schema)
-      } else {
-        val ck = spark.createDataFrame(feats, schema).localCheckpoint()
-        values.unpersist(blocking = true)
-        ck
+      // 3. local truncated eigendecomposition
+      val k = math.min(nComponents, nBuckets)
+      val g = breeze.linalg.DenseMatrix.tabulate(nBuckets, nBuckets)(
+        (i, j) => gram(i, j))
+      val eig = breeze.linalg.eigSym(g)
+      val order = eig.eigenvalues.toArray.zipWithIndex.sortBy(-_._1).take(k)
+      val v: Array[Array[Double]] = order.map { case (_, idx) =>
+        val colVec = Array.tabulate(nBuckets)(i => eig.eigenvectors(i, idx))
+        val m = colVec.maxBy(math.abs)
+        if (m < 0) colVec.map(-_) else colVec
       }
+      val vB = spark.sparkContext.broadcast(v)
+
+      // 4. project + join back; the distinct values are released either way
+      val feats = vecs.map { case (value, a) =>
+        Row.fromSeq(value +: vB.value.toSeq.map { colVec =>
+          var s = 0.0; var i = 0
+          while (i < a.length) { s += a(i) * colVec(i); i += 1 }
+          s
+        })
+      }
+      val schema = StructType(StructField(c, StringType) +:
+        (0 until k).map(i => StructField(s"${c}_svd_$i", DoubleType)))
+      if (n <= MaxDriverVocab)
+        spark.createDataFrame(spark.sparkContext.parallelize(feats.collect().toSeq),
+          schema)
+      else Stage.owned(spark.createDataFrame(feats, schema), "StringEncoder.encode")
+    }
     df.join(encoded, Seq(c), "left")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Embed
+import graft.ops.Stage
 
 /** Pluggable embedding backend for `TextEncoder` — the integration hook
   * that closes the reference's pretrained-text-embedding shape
@@ -145,8 +146,7 @@ object TextEncoder {
 
   def fit(df: DataFrame, c: String, provider: EmbeddingProvider,
           nComponents: Option[Int] = Some(30)): TextEncoderModel = {
-    val emb = provider.embed(uniqueValues(df, c)).persist()
-    try {
+    Stage.scoped(provider.embed(uniqueValues(df, c))) { emb =>
       val rows = df
         .select(coalesce(col(c).cast(StringType), lit("")).as("value"))
         .join(emb, Seq("value"))
@@ -165,7 +165,7 @@ object TextEncoder {
         case None => rows.select(slice(col("embedding"), 1, outDim).as("pca"))
       }
       TextEncoderModel(outDim, pcaOpt, blockScale(feats, "pca"))
-    } finally emb.unpersist()
+    }
   }
 
   /** Project + scale with a fitted model: the provider runs on the

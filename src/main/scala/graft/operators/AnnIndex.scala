@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ByteType
+import graft.ops.Stage
 
 /** Persisted IVF/LSH ANN index — the embedding-side twin of
   * `DedupIndex`: the corpus' normalized vectors are laid out ONCE under
@@ -231,16 +232,14 @@ object AnnIndex {
                   name: String, path: String, kClusters: Int = 0,
                   iters: Int = 2, numBuckets: Int = 32): Unit = {
     val spark = corpus.sparkSession
-    val c = normalizedCorpus(corpus, vecCol, idCol).localCheckpoint()
-    try {
-      val kc =
-        if (kClusters > 0) kClusters
-        else math.max(16, math.sqrt(c.count().toDouble).toInt)
-      val cents = SimilaritySearch.kmeansCentroids(c, kc, iters)
+    // staged for the count, the training scans and the cell write; the
+    // written cells no longer read it
+    Stage.scoped(SimilaritySearch.normalizedCorpus(corpus, vecCol, idCol)) { c =>
+      val cents = SimilaritySearch.kmeansAuto(c, kClusters, iters)
       import spark.implicits._
       kmeansLayout.write(spark, name, path, numBuckets, Map(
         "cells" -> assignedTo(cents, c), "centroids" -> cents.toDF("cid", "cv")))
-    } finally Dedup.releaseCheckpoints(c) // the written cells no longer read it
+    }
   }
 
   /** `ensure` for the k-means IVF layout: content key (listing-derived
@@ -261,15 +260,6 @@ object AnnIndex {
       precomputedKey, IndexManifest.rowsKey(corpus, Seq(idCol, vecCol), _))(
       writeKmeans(corpus, vecCol, idCol, name, path, kClusters, iters,
         numBuckets))
-
-  /** (corpus_id, cv): the non-null vectors, CPU-spread and normalized. */
-  private def normalizedCorpus(corpus: DataFrame, vecCol: String,
-                               idCol: String): DataFrame = {
-    val raw = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__v"))
-      .filter(col("__v").isNotNull)
-    raw.repartition(graft.ops.Partitions.cpuSpread(raw), col("corpus_id"))
-      .select(col("corpus_id"), Dedup.normalized(col("__v")).as("cv"))
-  }
 
   /** (cid, corpus_id, cv): each normalized row in its nearest cell. */
   private def assignedTo(cents: Seq[(Int, Seq[Double])],
@@ -296,7 +286,7 @@ object AnnIndex {
                    name: String): Unit =
     kmeansLayout.append(name, Map("cells" -> assignedTo(
       centroids(corpus.sparkSession, name),
-      normalizedCorpus(corpus, vecCol, idCol))))
+      SimilaritySearch.normalizedCorpus(corpus, vecCol, idCol))))
 
   /** Top-k per query against the persisted cells: assign each query to
     * its `nProbe` nearest STORED centroids (no re-training — the

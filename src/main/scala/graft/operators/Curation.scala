@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.ops.Stage
 
 /** The end-to-end training-data curation sweep — the composition every
   * large-scale pipeline runs before training, as ONE declarative plan:
@@ -263,16 +264,6 @@ object Curation {
       .map { st => fs.delete(st.getPath, true); st.getPath.toString }
   }
 
-  /** The per-run leaf name `sweepFull`/`Recipe.compose` write under their
-    * checkpointDir: family prefix + zero-padded millis write stamp (what
-    * `pruneCheckpoints` orders on — object stores have no trustworthy
-    * directory mtime) + a uuid segment (concurrent same-millisecond runs
-    * must not clobber each other's parquet mid-read).
-    */
-  private[graft] def verdictLeaf(family: String): String =
-    f"${family}_verdicts_${System.currentTimeMillis()}%013d_" +
-      java.util.UUID.randomUUID().toString.take(8) + ".parquet"
-
   /** The FULL sweep: `sweep`'s four stages plus the two model-driven ones —
     * an LM-perplexity gate (`NgramLm` fit on the input corpus itself;
     * `lm_ok` = avg_nll <= `lmMaxNll`, the CCNet-style "drop the most
@@ -289,11 +280,11 @@ object Curation {
     * scan with a doc-keyed aggregate, the id joins aligning the verdict
     * branches, and mixing's per-source aggregate (tiny). The combined
     * verdict frame feeds mixing twice (rate fit + flag join), so it is
-    * materialized once — to parquet under `checkpointDir` when provided
-    * (the lineage-free phase discipline a 100 TB run wants), else
-    * localCheckpoint — one narrow row per doc, the same discipline as the
-    * semantic-dedup assignment — instead of re-running the whole sweep per
-    * consumer.
+    * materialized once as an owned stage (`Stage.owned`) — to parquet under
+    * `checkpointDir` when provided (the lineage-free phase discipline a
+    * 100 TB run wants), else stored with its lineage — one narrow row per
+    * doc, the same discipline as the semantic-dedup verdicts — instead of
+    * re-running the whole sweep per consumer.
     *
     * Output: one row per input doc — idCol, sourceCol, the six stage
     * verdicts, the audit payloads (avg_nll, mix rate) and final `kept`.
@@ -312,39 +303,30 @@ object Curation {
       minCount = lmMinCount, maxBigrams = lmMaxBigrams)
     val lm = NgramLm.score(model, docs, textCol, Seq(idCol))
       .select(col(idCol), col("avg_nll"))
-    val curatedPlan = base
-      .join(lm, Seq(idCol))
-      .join(docs.select(col(idCol), col(sourceCol)), Seq(idCol))
-      .withColumn("lm_ok", coalesce(col("avg_nll") <= lmMaxNll, lit(false)))
-      .withColumn("curated", col("__base_kept") && col("lm_ok"))
-      .drop("__base_kept")
     // The verdict frame feeds mixing twice; materialize it once. With a
     // `checkpointDir` it goes to PARQUET (the phase discipline a 100 TB
     // pipeline wants: lineage-free, recoverable under executor loss, and
-    // not pinned in executor storage memory); without one it falls back to
-    // localCheckpoint — fine single-session, but storage-pinned and
-    // unrecoverable if an executor dies.
+    // not held in executor storage memory); without one it is stored in
+    // the block manager with its lineage, recomputed if a block is lost.
     //
     // RETENTION: the per-run leaf is NEVER auto-deleted — the returned
     // frame reads it lazily for its whole lifetime, so deleting after this
     // call would corrupt every downstream consumer. Repeated sweeps
     // sharing a checkpointDir therefore accumulate one verdict frame per
     // run; call `pruneCheckpoints(spark, dir, keepLast)` between runs
-    // (each leaf is one narrow row per doc, and the UUID naming makes
-    // pruning safe while a run is live).
-    val curated =
-      if (checkpointDir.nonEmpty) {
-        // per-run unique leaf (the Recipe.compose discipline): concurrent
-        // or retried sweeps sharing a checkpointDir must not clobber each
-        // other's verdict parquet mid-read
-        val path = s"${checkpointDir.stripSuffix("/")}/${verdictLeaf("curation")}"
-        curatedPlan.write.mode("overwrite").parquet(path)
-        docs.sparkSession.read.parquet(path)
-      } else curatedPlan.localCheckpoint(true)
-    // the LM model's two checkpoints are read only by `lm`, which `curated`
+    // (each leaf is one narrow row per doc, and the per-run UUID naming
+    // keeps concurrent or retried sweeps from clobbering each other's
+    // verdict parquet mid-read and makes pruning safe while a run is live).
+    val curated = Stage.owned(base
+      .join(lm, Seq(idCol))
+      .join(docs.select(col(idCol), col(sourceCol)), Seq(idCol))
+      .withColumn("lm_ok", coalesce(col("avg_nll") <= lmMaxNll, lit(false)))
+      .withColumn("curated", col("__base_kept") && col("lm_ok"))
+      .drop("__base_kept"), "Curation.sweepFull", checkpointDir, "curation")
+    // the LM model's two stages are read only by `lm`, which `curated`
     // has materialized: free them now rather than when the ContextCleaner
     // collects the model
-    Dedup.releaseCheckpoints(model.vocab, model.bigrams)
+    Stage.release(model.vocab, model.bigrams)
     val mixed = Mix.temperatureFlag(
         curated.filter(col("curated")).select(col(idCol), col(sourceCol)),
         sourceCol, Seq(idCol), mixTemperature, mixTargetFrac, seed)

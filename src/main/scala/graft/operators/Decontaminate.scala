@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VecExprs
+import graft.ops.Stage
 
 /** Benchmark decontamination: flag (or drop) training documents that share
   * any word n-gram with a held-out benchmark/evaluation corpus — the
@@ -116,18 +117,16 @@ object Decontaminate {
     */
   def flagBloom(train: DataFrame, bench: DataFrame, textCol: String,
                 idCol: String, n: Int = 8, fpp: Double = 1e-6): DataFrame = {
-    // persist across the two benchmark-side passes (size job + bloom
+    // staged across the two benchmark-side passes (size job + bloom
     // aggregate) so the bench scan + distinct shuffle runs once, then
-    // release — the filter bytes are the only state that outlives the fit
-    val grams = gramSet(bench, textCol, n).persist()
-    val bytes =
-      try {
-        val expected = math.max(grams.count(), 1L)
-        val bloom = grams.stat.bloomFilter("gram", expected, fpp)
-        val bos = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(bos)
-        bos.toByteArray
-      } finally grams.unpersist()
+    // released — the filter bytes are the only state that outlives the fit
+    val bytes = Stage.scoped(gramSet(bench, textCol, n)) { grams =>
+      val expected = math.max(grams.count(), 1L)
+      val bloom = grams.stat.bloomFilter("gram", expected, fpp)
+      val bos = new java.io.ByteArrayOutputStream()
+      bloom.writeTo(bos)
+      bos.toByteArray
+    }
     train.select(col(idCol),
       coalesce(VecExprs.anyInBloom(
         VecExprs.tokenShingles(col(textCol), n), bytes), lit(false))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Text
+import graft.ops.Stage
 
 /** Large-scale document deduplication suite.
   *
@@ -560,10 +561,11 @@ object Dedup {
     * aggregate, so a change to any of them cannot make the operators
     * silently diverge. `keepCid` (nProbe == 1 only) adds the cell id to
     * the output. Storage discipline follows `deduplicate`: the verdict
-    * frame (one narrow row per vector) is materialized EAGERLY and the
-    * normalized/assignment checkpoints this call owns are freed before
-    * returning — a long-lived session sweeping many corpora accumulates
-    * only the (small) result blocks, released with the result frame.
+    * frame (one narrow row per vector) is an owned stage, filled EAGERLY,
+    * and the normalized and assignment stages this call scopes are freed
+    * before returning — a long-lived session sweeping many corpora
+    * accumulates only the (small) result blocks, released with the result
+    * frame.
     */
   private def semanticVerdicts(df: DataFrame, vecCol: String, idCol: String,
                                minCosine: Double, kClusters: Int,
@@ -572,46 +574,36 @@ object Dedup {
     require(nProbe >= 1, "nProbe must be >= 1")
     require(!keepCid || nProbe == 1,
       "cid output is only unique under single assignment")
-    val raw = df.select(col(idCol).as("id"), col(vecCol).as("__v"))
-      .filter(col("__v").isNotNull)
-    val c = raw
-      .repartition(graft.ops.Partitions.cpuSpread(raw), col("id"))
-      .select(col("id"), normalized(col("__v")).as("nv"))
-      .localCheckpoint()
-    val kc =
-      if (kClusters > 0) kClusters
-      else math.max(16, math.sqrt(c.count().toDouble).toInt)
-    val cents = SimilaritySearch.kmeansCentroids(
-      c.select(col("id").as("corpus_id"), col("nv").as("cv")), kc, iters)
-    // materialize the assignment ONCE: both sides of the cid self-join
-    // read it, and without the checkpoint the NearestCells argmin —
-    // O(n * k * d), the dominant non-join compute with auto k ~ sqrt(n) —
-    // would re-evaluate per side. explode of the 1-element probe array IS
-    // single assignment, so one expression serves every nProbe.
-    val assigned = c.select(col("id"), col("nv"),
-        explode(SimilaritySearch.nearestCids(cents, col("nv"), nProbe))
-          .as("cid"))
-      .localCheckpoint()
-    val x = assigned.select(col("cid"), col("id").as("vec_id"), col("nv").as("xv"))
-    val y = assigned.select(col("cid").as("ycid"), col("id").as("yid"),
-      col("nv").as("yv"))
-    // left join keeps cluster-minimum ids (no smaller partner) with null y
-    val joined = x.join(y,
-      col("cid") === col("ycid") && col("yid") < col("vec_id"), "left")
-    val grouped =
-      if (keepCid) joined.groupBy(col("vec_id"), col("cid"))
-      else joined.groupBy(col("vec_id"))
-    val verdict = grouped.agg(max(coalesce(
-      round(graft.functions.VecExprs.arrayDot(col("xv"), col("yv")), 6)
-        >= minCosine, lit(false))).as("is_dup"))
-    val out =
-      if (keepCid) verdict.select(col("vec_id"),
-        col("cid").cast(org.apache.spark.sql.types.LongType).as("cid"),
-        col("is_dup"))
-      else verdict.select(col("vec_id"), col("is_dup"))
-    val mat = out.localCheckpoint() // eager: verdicts materialized here
-    releaseCheckpoints(assigned, c)
-    mat
+    Stage.scope { stage =>
+      val c = stage(SimilaritySearch.normalizedCorpus(df, vecCol, idCol))
+      val cents = SimilaritySearch.kmeansAuto(c, kClusters, iters)
+      // stage the assignment: both sides of the cid self-join read it, and
+      // without the stage the NearestCells argmin —
+      // O(n * k * d), the dominant non-join compute with auto k ~ sqrt(n) —
+      // would re-evaluate per side. explode of the 1-element probe array IS
+      // single assignment, so one expression serves every nProbe.
+      val assigned = stage(c.select(col("corpus_id").as("id"), col("cv").as("nv"),
+          explode(SimilaritySearch.nearestCids(cents, col("cv"), nProbe))
+            .as("cid")))
+      val x = assigned.select(col("cid"), col("id").as("vec_id"), col("nv").as("xv"))
+      val y = assigned.select(col("cid").as("ycid"), col("id").as("yid"),
+        col("nv").as("yv"))
+      // left join keeps cluster-minimum ids (no smaller partner) with null y
+      val joined = x.join(y,
+        col("cid") === col("ycid") && col("yid") < col("vec_id"), "left")
+      val grouped =
+        if (keepCid) joined.groupBy(col("vec_id"), col("cid"))
+        else joined.groupBy(col("vec_id"))
+      val verdict = grouped.agg(max(coalesce(
+        round(graft.functions.VecExprs.arrayDot(col("xv"), col("yv")), 6)
+          >= minCosine, lit(false))).as("is_dup"))
+      val out =
+        if (keepCid) verdict.select(col("vec_id"),
+          col("cid").cast(org.apache.spark.sql.types.LongType).as("cid"),
+          col("is_dup"))
+        else verdict.select(col("vec_id"), col("is_dup"))
+      Stage.owned(out, "Dedup.semanticVerdicts")
+    }
   }
 
   /** Cluster near-duplicate candidates and keep the BEST-scored member of
@@ -650,8 +642,8 @@ object Dedup {
     * vocabulary-sized and therefore eagerly materialized): it is
     * corpus-row-sized, so the CALLER owns its materialization — each
     * action re-scans `df`, never the pair pipeline (the labels are a
-    * driver-held local frame or the loop's final checkpoint, freed by the
-    * ContextCleaner once the verdict is garbage-collected), and a null
+    * driver-held local frame or the loop's final pinned stage, freed by
+    * the ContextCleaner once the verdict is garbage-collected), and a null
     * score fails there, not in this call. `df` is not read before the
     * first action.
     */
@@ -663,7 +655,7 @@ object Dedup {
     * distributed path with 0). */
   private[graft] def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
                               scoreCol: String, bound: Int): DataFrame = {
-    val labels = components(pairs, bound)._1
+    val labels = components(pairs, bound)
     // null scores fail FAST on every CLUSTERED doc (where they would
     // silently win the per-cluster min_by below — ADVICE r12:
     // struct(negate(null), id) sorts first, so a null-scored doc would
@@ -704,36 +696,26 @@ object Dedup {
 
   /** Connected components of the pair graph `pairs` (id_a, id_b), routed
     * on its size — the one clustering step of `keepBest` and
-    * `deduplicate`. Returns `(labels, checkpoint)`: `labels` holds one
-    * (id, label) row per edge-touched id, label = the smallest id of its
-    * component under Spark's ordering for the id type; `checkpoint` is the
-    * distributed loop's final label checkpoint (the block behind
-    * `labels`, None on the driver route), for a caller that materializes
-    * its result eagerly and then frees it with `releaseCheckpoints`.
+    * `deduplicate`: one (id, label) row per edge-touched id, label = the
+    * smallest id of its component under Spark's ordering for the id type.
+    * On the distributed route the labels read the loop's final pinned
+    * stage; a caller that materializes its result eagerly frees it with
+    * `Stage.release(labels)`.
     *
     * Pairs with a null id are dropped (a null id joins nothing, so it gets
     * no label on either route). At most `bound` pairs cluster on the
     * driver (`clusterOnDriver`); above it, and for a negative bound, the
     * min-label loop runs (`minLabelLoop`). Both routes read `pairs`, so
-    * it is persisted for the call and released before returning, unless
-    * the caller persisted it (unpersisting it would evict the caller's
-    * blocks); `labels` never depends on it.
+    * it is staged for the call (`Stage.scoped`, which reads a frame the
+    * caller cached as is); the labels never depend on it.
     */
-  private[graft] def components(pairs: DataFrame,
-                                bound: Int): (DataFrame, Option[DataFrame]) = {
-    import org.apache.spark.storage.StorageLevel
-    val owned = pairs.storageLevel == StorageLevel.NONE
-    val cached = if (owned) pairs.persist(StorageLevel.MEMORY_AND_DISK) else pairs
-    try {
-      val p = cached.filter(col("id_a").isNotNull && col("id_b").isNotNull)
+  private[graft] def components(pairs: DataFrame, bound: Int): DataFrame =
+    Stage.scoped(pairs) { staged =>
+      val p = staged.filter(col("id_a").isNotNull && col("id_b").isNotNull)
         .select(col("id_a"), col("id_b"))
-      clusterOnDriver(p, bound).map(l => (l, Option.empty[DataFrame]))
-        .getOrElse {
-          val live = minLabelLoop(p)
-          (live.select(col("id"), col("label")), Some(live))
-        }
-    } finally if (owned) cached.unpersist(blocking = false)
-  }
+      clusterOnDriver(p, bound)
+        .getOrElse(minLabelLoop(p).select(col("id"), col("label")))
+    }
 
   /** Connected components of `pairs` (id_a, id_b) for every row of
     * `vertices` (an `id` column): (id, label), label = the smallest id of
@@ -743,7 +725,7 @@ object Dedup {
     * to; `keepBest` and `deduplicate` call `components` instead.
     */
   def connectedComponents(vertices: DataFrame, pairs: DataFrame): DataFrame =
-    vertices.select(col("id")).join(components(pairs, -1)._1, Seq("id"), "left")
+    vertices.select(col("id")).join(components(pairs, -1), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
 
   /** Iterative min-label propagation over a pair graph with no null id:
@@ -751,75 +733,73 @@ object Dedup {
     * neighbors until fixpoint. Converges in O(component diameter) joins —
     * near-dup clusters are tiny cliques, so 2-4 iterations in practice;
     * every step is a shuffle join + hash aggregate (no driver-side graph,
-    * no quadratic stage). Returns the final label checkpoint (id, label,
-    * old): one row per edge-touched id.
+    * no quadratic stage). Returns the final label stage (id, label, old),
+    * pinned: one row per edge-touched id.
     */
-  private def minLabelLoop(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+  private def minLabelLoop(pairs: DataFrame): DataFrame =
     // both directions from ONE pass over `pairs`: a union of two selects
     // would evaluate the (expensive, self-join-shaped) pair pipeline twice
-    // before the persist ever materializes
-    val edges = pairs.select(explode(array(
+    // before the stage is filled
+    Stage.scoped(pairs.select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val idType = pairs.schema("id_a").dataType
-    // Only vertices that touch an edge can ever change label, so the loop
-    // iterates over the edge-touched set only: every per-iteration shuffle
-    // is proportional to the (typically tiny) near-dup pair graph. `edges`
-    // holds both directions, so `src` alone covers every touched vertex.
-    //
-    // localCheckpoint truncates the logical plan each iteration — without it
-    // the lineage doubles per step and plan compilation blows up after ~8
-    // iterations. Each checkpoint pins its partitions in the block manager,
-    // so the PREVIOUS iteration's checkpoint is freed explicitly once the
-    // next one is materialized — otherwise diameter-many copies of the
-    // label frame accumulate.
-    // Initial label = min over {self} ∪ direct neighbors — the same single
-    // hash aggregate a distinct() init would cost, but it IS the first
-    // message-passing round, so every call converges one join+checkpoint
-    // iteration earlier (a 2-clique settles in one loop round).
-    var live = edges.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
-      .select(col("src").as("id"), least(col("src"), col("__mn")).as("label"))
-      .localCheckpoint() // eager: materialized here
-    // ONE join + ONE aggregate per propagation round (min-label message
-    // passing): neighbor messages carry the sender's label, each vertex also
-    // sends itself its current label tagged in `self` — min(label) is the
-    // new label and min(self) recovers the old one, so the convergence test
-    // rides the same aggregate instead of a second join against the
-    // previous labels.
-    def propagate(from: DataFrame): DataFrame = {
-      val msgs = edges.join(from.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("label"),
-          lit(null).cast(idType).as("self"))
-        .unionAll(from.select(col("id"), col("label"), col("label").as("self")))
-      msgs.groupBy(col("id"))
-        .agg(min(col("label")).as("label"), min(col("self")).as("old"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))) { edges =>
+      val idType = pairs.schema("id_a").dataType
+      // Only vertices that touch an edge can ever change label, so the loop
+      // iterates over the edge-touched set only: every per-iteration shuffle
+      // is proportional to the (typically tiny) near-dup pair graph. `edges`
+      // holds both directions, so `src` alone covers every touched vertex.
+      //
+      // The labels are a PINNED stage (lineage cut) each iteration — without
+      // the cut the lineage doubles per step and plan compilation blows up
+      // after ~8 iterations, and a lost block fails loudly instead of
+      // recomputing that growing plan. Each stage holds its partitions in the
+      // block manager, so the PREVIOUS iteration's stage is released
+      // explicitly once the next one is filled — otherwise diameter-many
+      // copies of the label frame accumulate.
+      // Initial label = min over {self} ∪ direct neighbors — the same single
+      // hash aggregate a distinct() init would cost, but it IS the first
+      // message-passing round, so every call converges one join+stage
+      // iteration earlier (a 2-clique settles in one loop round).
+      var live = Stage.pinned(edges.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
+        .select(col("src").as("id"), least(col("src"), col("__mn")).as("label")),
+        "Dedup.minLabelLoop")
+      // ONE join + ONE aggregate per propagation round (min-label message
+      // passing): neighbor messages carry the sender's label, each vertex also
+      // sends itself its current label tagged in `self` — min(label) is the
+      // new label and min(self) recovers the old one, so the convergence test
+      // rides the same aggregate instead of a second join against the
+      // previous labels.
+      def propagate(from: DataFrame): DataFrame = {
+        val msgs = edges.join(from.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"), col("label"),
+            lit(null).cast(idType).as("self"))
+          .unionAll(from.select(col("id"), col("label"), col("label").as("self")))
+        msgs.groupBy(col("id"))
+          .agg(min(col("label")).as("label"), min(col("self")).as("old"))
+      }
+      var changed = true
+      while (changed) {
+        // TWO propagation rounds per stage: the pinned stage (an eager fill
+        // holding block-manager partitions) is the per-iteration fixed
+        // cost, so batching rounds halves stages on long
+        // chains at the price of a bounded (depth-2) lineage. Min-label
+        // propagation is monotone, so "round 2 changed nothing" alone proves
+        // the fixpoint — round 1's delta needs no separate check. The round-1
+        // aggregate appears twice in round 2's plan (join side + self side);
+        // its shuffle exchange is reused, not recomputed.
+        val mid = propagate(live.select(col("id"), col("label")))
+          .select(col("id"), col("label"))
+        val next = Stage.pinned(propagate(mid), "Dedup.minLabelLoop")
+        // isEmpty short-circuits on the first changed row (limit-1 over the
+        // staged frame) — a full count aggregate only ever runs on the
+        // final (converged) iteration, where the frame is scanned once anyway
+        changed = !next.filter(col("label") < col("old")).isEmpty
+        Stage.release(live)
+        live = next
+      }
+      live
     }
-    var changed = true
-    while (changed) {
-      // TWO propagation rounds per checkpoint: the checkpoint (an eager
-      // materialization pinning block-manager partitions) is the per-
-      // iteration fixed cost, so batching rounds halves checkpoints on long
-      // chains at the price of a bounded (depth-2) lineage. Min-label
-      // propagation is monotone, so "round 2 changed nothing" alone proves
-      // the fixpoint — round 1's delta needs no separate check. The round-1
-      // aggregate appears twice in round 2's plan (join side + self side);
-      // its shuffle exchange is reused, not recomputed.
-      val mid = propagate(live.select(col("id"), col("label")))
-        .select(col("id"), col("label"))
-      val next = propagate(mid).localCheckpoint()
-      // isEmpty short-circuits on the first changed row (limit-1 over the
-      // checkpointed frame) — a full count aggregate only ever runs on the
-      // final (converged) iteration, where the frame is scanned once anyway
-      changed = !next.filter(col("label") < col("old")).isEmpty
-      releaseCheckpoints(live)
-      live = next
-    }
-    edges.unpersist()
-    live
-  }
 
   /** Connected components of `pairs` (id_a, id_b, no null id) on the
     * driver, when the graph has at most `bound` pairs: Some((id, label))
@@ -907,19 +887,18 @@ object Dedup {
     * components come from `components`, as in `keepBest`: on the driver
     * for a graph of at most `DriverPairs` pairs (241 pairs for the 5k-doc
     * bench corpus), distributed above. One tail serves both routes: the
-    * persisted distinct values join their labels, ONE min_by over
+    * staged distinct values join their labels, ONE min_by over
     * (-freq, value) per label window gives each touched value its
     * cluster's canonical, and an untouched value is its own canonical.
     * Only the clustering step's pairs reach the driver; no value text
     * does.
     *
     * EAGER contract: the call runs jobs and returns a MATERIALIZED frame
-    * (a lineage-truncated localCheckpoint, |distinct values| rows) so every
-    * intermediate this call owns is freed before returning. The checkpoint
-    * block is released when the frame is garbage-collected (ContextCleaner)
-    * or explicitly by unpersisting the RDD `GraftBridge.checkpointedRddId`
-    * names (`df.rdd` is a new RDD on top of the checkpoint; unpersisting
-    * it frees nothing); it cannot be recomputed after executor loss —
+    * (an owned stage, |distinct values| rows) so every intermediate this
+    * call owns is freed before returning. The stage's blocks are released
+    * when the frame is garbage-collected (ContextCleaner) or explicitly by
+    * `Stage.release`. On the distributed route its lineage reads the
+    * loop's released label stage, so a lost block fails loudly there —
     * re-run the call in that case.
     */
   def deduplicate(df: DataFrame, c: String, minJaccard: Double = 0.4,
@@ -931,74 +910,60 @@ object Dedup {
   private[graft] def deduplicate(df: DataFrame, c: String, minJaccard: Double,
                                  n: Int, candidates: String,
                                  bound: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(Set("auto", "jaccard", "minhash").contains(candidates),
       s"candidates must be auto|jaccard|minhash, got $candidates")
-    val vals = df.filter(col(c).isNotNull).groupBy(col(c).as("v"))
+    Stage.scoped(df.filter(col(c).isNotNull).groupBy(col(c).as("v"))
       .agg(count(lit(1)).as("freq"))
-      .withColumn("id", md5(col("v")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Candidate generator: "jaccard" (exact inverted index — every pair at
-    // or above the threshold) is the oracle-verified exact form; "minhash"
-    // routes through the banded-LSH generator, whose 10x rehearsal cost
-    // grows ~6x more slowly (pairs verified with the SAME exact jaccard,
-    // so false positives are impossible — the tradeoff is LSH recall:
-    // band-collision misses drop a pair entirely). "auto" (default) keeps
-    // the exact generator for small vocabularies and switches to minhash
-    // above the char-volume / distinct-count gates — both stats read in ONE
-    // job from the already-persisted distinct-value frame.
-    val valsText = vals.select(col("v").as("text"), col("id"))
-    val useMinhash = candidates == "minhash" || (candidates == "auto" && {
-      val r = vals.agg(count(lit(1)), sum(length(col("v")))).head()
-      autoRoutesToMinhash(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    })
-    val pairs =
-      if (useMinhash)
-        minhashLshPairs(valsText, "text", "id", n = n, minJaccard = minJaccard)
-          .select(col("id_a"), col("id_b"))
-      else ngramJaccardPairs(valsText, "text", "id",
-        n = n, minJaccard = minJaccard)
-    // The near-dup pair graph lives over DISTINCT values and only contains
-    // pairs above the similarity threshold — it is orders of magnitude
-    // smaller than the corpus (a categorical column with millions of
-    // distinct values still yields a graph bounded by near-duplicate
-    // density, not corpus size), so it usually clusters on the driver.
-    val (labels, checkpoint) = components(pairs, bound)
-    // one join to the labels (one broadcast of the driver route's local
-    // frame) serves both branches: the touched values get their cluster's
-    // canonical from ONE aggregate over the label window (one exchange of
-    // the graph-sized touched rows, no join back); the untouched ones are
-    // their own canonical and never cross an exchange keyed on a null label
-    val labeled = vals.join(labels, Seq("id"), "left")
-    val byLabel = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
-    val out = labeled.filter(col("label").isNotNull)
-      .select(col("v").as("value"), min_by(col("v"),
-        struct(negate(col("freq")), col("v"))).over(byLabel).as("canonical"))
-      .unionByName(labeled.filter(col("label").isNull)
-        .select(col("v").as("value"), col("v").as("canonical")))
-    // The translation map is the contract output (|distinct values| rows —
-    // already far smaller than the input); materialize it once and free
-    // every intermediate this call OWNS (the vals persist, and on the
-    // distributed route the loop's final label checkpoint) — a long-lived
-    // session running many deduplicate() calls accumulates no dead storage,
-    // and blocks registered by concurrent driver threads are never touched.
-    val mat = out.localCheckpoint()
-    releaseCheckpoints(checkpoint.toSeq: _*)
-    vals.unpersist(blocking = false)
-    mat
-  }
-
-  /** Free the local-checkpoint blocks behind `frames`, by the RDD id each
-    * checkpoint registered (no snapshot diffing — a concurrent driver
-    * thread's blocks are never touched). `df.rdd.unpersist()` would free
-    * nothing: `Dataset.rdd` is a new RDD on top of the checkpoint.
-    */
-  private[graft] def releaseCheckpoints(frames: DataFrame*): Unit =
-    frames.foreach { df =>
-      org.apache.spark.sql.GraftBridge.checkpointedRddId(df).foreach(id =>
-        df.sparkSession.sparkContext.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false)))
+      .withColumn("id", md5(col("v")))) { vals =>
+      // Candidate generator: "jaccard" (exact inverted index — every pair at
+      // or above the threshold) is the oracle-verified exact form; "minhash"
+      // routes through the banded-LSH generator, whose 10x rehearsal cost
+      // grows ~6x more slowly (pairs verified with the SAME exact jaccard,
+      // so false positives are impossible — the tradeoff is LSH recall:
+      // band-collision misses drop a pair entirely). "auto" (default) keeps
+      // the exact generator for small vocabularies and switches to minhash
+      // above the char-volume / distinct-count gates — both stats read in ONE
+      // job, the one that fills the staged distinct-value frame.
+      val valsText = vals.select(col("v").as("text"), col("id"))
+      val useMinhash = candidates == "minhash" || (candidates == "auto" && {
+        val r = vals.agg(count(lit(1)), sum(length(col("v")))).head()
+        autoRoutesToMinhash(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      })
+      val pairs =
+        if (useMinhash)
+          minhashLshPairs(valsText, "text", "id", n = n, minJaccard = minJaccard)
+            .select(col("id_a"), col("id_b"))
+        else ngramJaccardPairs(valsText, "text", "id",
+          n = n, minJaccard = minJaccard)
+      // The near-dup pair graph lives over DISTINCT values and only contains
+      // pairs above the similarity threshold — it is orders of magnitude
+      // smaller than the corpus (a categorical column with millions of
+      // distinct values still yields a graph bounded by near-duplicate
+      // density, not corpus size), so it usually clusters on the driver.
+      val labels = components(pairs, bound)
+      // one join to the labels (one broadcast of the driver route's local
+      // frame) serves both branches: the touched values get their cluster's
+      // canonical from ONE aggregate over the label window (one exchange of
+      // the graph-sized touched rows, no join back); the untouched ones are
+      // their own canonical and never cross an exchange keyed on a null label
+      val labeled = vals.join(labels, Seq("id"), "left")
+      val byLabel = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
+      val out = labeled.filter(col("label").isNotNull)
+        .select(col("v").as("value"), min_by(col("v"),
+          struct(negate(col("freq")), col("v"))).over(byLabel).as("canonical"))
+        .unionByName(labeled.filter(col("label").isNull)
+          .select(col("v").as("value"), col("v").as("canonical")))
+      // The translation map is the contract output (|distinct values| rows —
+      // already far smaller than the input); fill it once and free every
+      // intermediate this call OWNS (the staged values on scope exit, and on
+      // the distributed route the loop's final label stage) — a long-lived
+      // session running many deduplicate() calls accumulates no dead storage,
+      // and blocks registered by concurrent driver threads are never touched.
+      val mat = Stage.owned(out, "Dedup.deduplicate")
+      Stage.release(labels)
+      mat
     }
+  }
 
   /** L2-normalize a float array column (double arithmetic). */
   def normalized(vec: Column): Column =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.Stage
 
 /** Distribution drift between two corpus snapshots (beyond reference —
   * the monitoring station of a recurring training-data pipeline: did this
@@ -153,18 +154,17 @@ object Drift {
     withRefCounts(PsiModel(plans.specs, null, eps), ref, cache)
   }
 
-  /** `cache = true`: persist + materialize the bounded per-bin counts so
-    * every later score is ONE aggregate (the score-many estimator shape;
-    * the caller owns the handle — unpersist via `model.refCounts` when
-    * done). `cache = false`: leave them lazy — the one-shot `psi`/`ks`
-    * forms use this so they never leak a cached frame the caller cannot
-    * release.
+  /** `cache = true`: store and fill the bounded per-bin counts now (an
+    * owned stage) so every later score is ONE aggregate (the score-many
+    * estimator shape); the blocks go with the model (ContextCleaner), or
+    * earlier through `Stage.release(model.refCounts)`. `cache = false`:
+    * leave them lazy — the one-shot `psi`/`ks` forms use this, as they
+    * read the counts once.
     */
   private def withRefCounts(m: PsiModel, ref: DataFrame,
                             cache: Boolean): PsiModel = {
-    val rc0 = m.binned(ref, "ref")
-    val rc = if (cache) { val r = rc0.persist(); r.count(); r } else rc0
-    m.copy(refCounts = rc)
+    val rc = m.binned(ref, "ref")
+    m.copy(refCounts = if (cache) Stage.owned(rc, "Drift.refCounts") else rc)
   }
 
   /** Persist a fitted drift monitor as plain JSON: eps + per-column bin

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Text
 import graft.sources.Bucketize
+import graft.ops.Stage
 
 /** N-gram language-model perplexity scoring — the CCNet-style corpus
   * quality signal (Wenzek et al. 2020: docs are ranked by the perplexity of
@@ -44,8 +45,10 @@ import graft.sources.Bucketize
 object NgramLm {
 
   /** Fitted model: bounded count tables + corpus scalars. The frames are
-    * localCheckpointed (they are <= vocabSize / maxBigrams rows) so reuse
-    * across scoring jobs never re-scans the reference corpus.
+    * owned stages (they are <= vocabSize / maxBigrams rows), filled at fit,
+    * so reuse across scoring jobs never re-scans the reference corpus; their
+    * blocks go with the model (ContextCleaner) or earlier through
+    * `Stage.release(model.vocab, model.bigrams)`.
     */
   final case class Model(vocab: DataFrame,   // (w, c)
                          bigrams: DataFrame, // (prev, w, c2)
@@ -67,30 +70,28 @@ object NgramLm {
   def fit(ref: DataFrame, textCol: String, vocabSize: Int = 20000,
           minCount: Long = 2L, maxBigrams: Int = 1000000): Model = {
     // the unigram frame feeds three consumers (N, vocab top-V, and the
-    // callers' broadcast joins) — persist the AGGREGATED frame (distinct
+    // callers' broadcast joins) — stage the AGGREGATED frame (distinct
     // tokens, far smaller than the corpus) so the tokenize scan runs once
-    val uni = ref.select(explode(Text.tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .persist()
-    try {
+    Stage.scoped(ref.select(explode(Text.tokens(col(textCol))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c"))) { uni =>
       // N rides one tiny aggregate over the already-aggregated unigram frame
       val n = Option(uni.agg(sum(col("c"))).collect()(0).get(0))
         .fold(0L)(_.asInstanceOf[Long])
       // top-V: TakeOrderedAndProject (bounded per-partition top-V + driver
       // merge of V rows), deterministic tie-break on the token itself
-      val vocab = uni.orderBy(col("c").desc, col("w")).limit(vocabSize)
-        .localCheckpoint(true)
+      val vocab = Stage.owned(
+        uni.orderBy(col("c").desc, col("w")).limit(vocabSize), "NgramLm.fit")
       val v = vocab.count().toInt
-      val bigrams = pairFrame(ref, textCol, Nil)
+      val bigrams = Stage.owned(pairFrame(ref, textCol, Nil)
         .filter(col("prev").isNotNull)
         .join(broadcast(vocab.select(col("w"))), Seq("w"), "leftsemi")
         .join(broadcast(vocab.select(col("w").as("prev"))), Seq("prev"), "leftsemi")
         .groupBy(col("prev"), col("w")).agg(count(lit(1)).as("c2"))
         .filter(col("c2") >= minCount)
-        .orderBy(col("c2").desc, col("prev"), col("w")).limit(maxBigrams)
-        .localCheckpoint(true)
+        .orderBy(col("c2").desc, col("prev"), col("w")).limit(maxBigrams),
+        "NgramLm.fit")
       Model(vocab, bigrams, n, v)
-    } finally uni.unpersist()
+    }
   }
 
   /** Score `df` against the model: appends n_tokens, oov_frac, avg_nll

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.ops.Stage
 
 /** The end-to-end data-recipe composition — the selection family
   * (classifier gate → leakage-safe split → per-source token budgets →
@@ -53,10 +54,12 @@ import org.apache.spark.sql.types.LongType
   * loudly with the `packSubShards` value that restores the bound (pack
   * grouping is policy, so it must not silently auto-route the way the
   * budget stage does). The verdict frame feeds two consumers (the
-  * survivor path and the output join), so it materializes ONCE — to
-  * parquet under `checkpointDir` (the recoverable phase discipline) or
-  * via localCheckpoint as the single-session fallback — exactly the
-  * `Curation.sweepFull` rhythm. Retention: the per-run
+  * survivor path and the output join), so it materializes ONCE as an
+  * owned stage (`Stage.owned`) — to parquet under `checkpointDir` (the
+  * recoverable phase discipline), else in the block manager with its
+  * lineage — exactly the `Curation.sweepFull` rhythm. The per-doc `base`
+  * it is built from is a scoped stage, released once the verdict is
+  * filled. Retention: the per-run
   * `recipe_verdicts_*` leaf under `checkpointDir` must outlive every
   * consumer of the RETURNED frame (reads are lazy), so it is never
   * auto-deleted — call `Curation.pruneCheckpoints(spark, dir, keepLast)`
@@ -89,50 +92,39 @@ object Recipe {
     // stages joined on the id (the classifier's fit state is bounded).
     // `base` (one narrow row per doc) feeds THREE actions before the
     // verdict materializes (the budget selector's probe aggregate, its
-    // window, and the checkpoint write), so it is persisted for the span
-    // of this call — without it every action re-runs the classifier
-    // scoring scan + tokenize + join (measured: the r12 10x recipe ratio
-    // dropped from ~2.2 to well inside 2x with this persist).
+    // window, and the verdict fill), so it is staged until the verdict is
+    // filled — without it every action re-runs the classifier scoring
+    // scan + tokenize + join (measured as a persist: the r12 10x recipe
+    // ratio dropped from ~2.2 to well inside 2x).
     val qc = Dsir.classifierFlag(docs, textCol, idCol, pos, neg, nBuckets,
         minMeanMicro)
       .withColumnRenamed("doc_id", idCol)
       .select(col(idCol), col("score_micro"),
         col("quality_pred").as("quality_ok"))
-    val base = graft.plans.Splits.withLeakageSafeLabel(
+    val verdict = Stage.scoped(graft.plans.Splits.withLeakageSafeLabel(
         docs.select(col(idCol), col(sourceCol), col(textCol)),
         textCol, testFraction, splitSeed)
       .withColumn("n_toks", size(graft.functions.Text.tokens(
         coalesce(col(textCol), lit("")))).cast(LongType))
       .drop(textCol)
-      .join(qc, Seq(idCol))
-      .persist()
-
-    // stage 3: per-source token budgets over the quality-passing train
-    // pool, best classifier scores first
-    val trainPool = base
-      .filter(col("quality_ok") && col("split") === "train")
-      .select(col(idCol), col(sourceCol), col("n_toks"), col("score_micro"))
-    val budgeted = Budget.selectToBudgetPerGroup(trainPool, sourceCol,
-      "n_toks", "score_micro", idCol, budgets, maxGroupRows)
-    val verdictPlan = base
-      .join(budgeted.filter(col("kept")).select(col(idCol))
-        .withColumn("__bk", lit(true)), Seq(idCol), "left")
-      .withColumn("budget_kept", coalesce(col("__bk"), lit(false)))
-      .drop("__bk")
-
-    // the verdict frame feeds the survivor path AND the output join —
-    // materialize once (sweepFull's checkpoint discipline)
-    val verdict =
-      if (checkpointDir.nonEmpty) {
-        // per-run unique leaf: two composes sharing a checkpointDir must
-        // not clobber each other's verdict parquet mid-read
-        val path = s"${checkpointDir.stripSuffix("/")}/" +
-          Curation.verdictLeaf("recipe")
-        verdictPlan.write.mode("overwrite").parquet(path)
-        docs.sparkSession.read.parquet(path)
-      } else verdictPlan.localCheckpoint(true)
-    // the verdict checkpoint was base's last consumer
-    base.unpersist()
+      .join(qc, Seq(idCol))) { base =>
+      // stage 3: per-source token budgets over the quality-passing train
+      // pool, best classifier scores first
+      val trainPool = base
+        .filter(col("quality_ok") && col("split") === "train")
+        .select(col(idCol), col(sourceCol), col("n_toks"), col("score_micro"))
+      val budgeted = Budget.selectToBudgetPerGroup(trainPool, sourceCol,
+        "n_toks", "score_micro", idCol, budgets, maxGroupRows)
+      // the verdict frame feeds the survivor path AND the output join —
+      // materialize once (sweepFull's discipline; a per-run unique leaf
+      // under checkpointDir, so two composes sharing it never clobber each
+      // other's verdict parquet mid-read). It is base's last consumer.
+      Stage.owned(base
+        .join(budgeted.filter(col("kept")).select(col(idCol))
+          .withColumn("__bk", lit(true)), Seq(idCol), "left")
+        .withColumn("budget_kept", coalesce(col("__bk"), lit(false)))
+        .drop("__bk"), "Recipe.compose", checkpointDir, "recipe")
+    }
 
     // stage 4+5: repeat the survivors per the epoch schedule, then pack
     // per-source shards in (doc, repeat) composite order — id-type
@@ -147,8 +139,8 @@ object Recipe {
     // (pack grouping is policy) so it REFUSES loudly with the
     // packSubShards value that restores the bound — the r12 verdict's
     // un-guarded default-path edge, closed. `repeated` derives from the
-    // verdict checkpoint, so the probe's extra action re-reads one narrow
-    // parquet, not the pipeline.
+    // verdict stage, so the probe's extra action re-reads one narrow
+    // stored frame, not the pipeline.
     val packed = Pack.sequencesBy(repeated, "n_toks", packBudget, sourceCol,
         Seq(idCol, "repeat_idx"), subShards = packSubShards,
         maxShardRows = maxGroupRows)
@@ -191,16 +183,17 @@ object Recipe {
     * repeat_idx pack_id pack_tokens`) + final `kept`
     * (= shipped in some pack).
     *
-    * Checkpoint discipline: when `docs` carries upstream work (a join,
+    * Staging discipline: when `docs` carries upstream work (a join,
     * an aggregate, a window, a shuffle — a dedup chain, say), its narrow
     * input (`idCol`, `sourceCol`, `textCol`, plus `sweepScoreCol` when
-    * set) is staged ONCE at entry — a parquet leaf under `checkpointDir`,
-    * else a persist — and every stage reads it instead of re-running that
-    * lineage per action; a bare scan/filter/project is read as is. Then
-    * exactly TWO materializations — `sweepFull`'s verdict frame and
-    * `compose`'s — each feeding its own two consumers. The returned frame
-    * reads only those two, so a stage is dropped before the call returns
-    * (leaf deleted, or unpersisted). Same
+    * set) is staged ONCE at entry (`Stage.scoped`: a parquet leaf under
+    * `checkpointDir`, else the block manager) and every stage reads it
+    * instead of re-running that lineage per action; a bare
+    * scan/filter/project is read as is. Then exactly TWO owned stages —
+    * `sweepFull`'s verdict frame and `compose`'s — each feeding its own
+    * two consumers. The returned frame reads only those two, so the input
+    * stage is dropped before the call returns (leaf deleted, or
+    * released). Same
     * `checkpointDir` retention note as `compose`: the two per-run verdict
     * leaves persist, prune between runs.
     */
@@ -228,22 +221,12 @@ object Recipe {
     val narrow = (Seq(idCol, sourceCol, textCol) ++
       Option(sweepScoreCol).filter(_.nonEmpty)).distinct.map(col)
     val input = docs.select(narrow: _*)
-    val spark = docs.sparkSession
-    // the returned frame reads only the two verdict checkpoints, so the
+    // the returned frame reads only the two verdict stages, so the input
     // stage is dropped before returning (and on failure)
-    val (staged, dropStage): (DataFrame, () => Unit) =
-      if (!carriesUpstreamWork(input)) (input, () => ())
-      else if (checkpointDir.isEmpty) {
-        val persisted = input.persist()
-        (persisted, () => persisted.unpersist())
-      } else {
-        val path = new org.apache.hadoop.fs.Path(
-          s"${checkpointDir.stripSuffix("/")}/" + Curation.verdictLeaf("recipe_input"))
-        input.write.mode("overwrite").parquet(path.toString)
-        (spark.read.parquet(path.toString), () =>
-          path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true))
-      }
-    try {
+    Stage.scope { stage =>
+      val staged =
+        if (carriesUpstreamWork(input)) stage(input, checkpointDir, "recipe_input")
+        else input
       val sweepV = Curation.sweepFull(staged, bench, textCol, idCol,
           sourceCol, decontaminateN, lmVocabSize, lmMinCount, lmMaxBigrams,
           lmMaxNll, mixTemperature, mixTargetFrac, mixSeed, checkpointDir,
@@ -265,6 +248,6 @@ object Recipe {
         .drop(sourceCol, "kept")
       sweepV.join(recipeV, Seq(idCol), "left")
         .withColumn("kept", col("repeat_idx").isNotNull)
-    } finally dropStage()
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.Stage
 
 /** Sessionization (reference: skrub/_session_encoder.py:41-634).
   *
@@ -114,30 +115,28 @@ object SessionEncoder {
         .select(df.columns.map(col).toSeq :+ col(out): _*)
     } else {
       // The fallback's three consumers would each recompute the window over
-      // a frame too large to rescan casually. localCheckpoint, NOT persist:
-      // same storage footprint (materialized once, read three times), but
-      // (a) a DataFrame persist is a CacheManager entry that nothing here
-      // could ever release — a leak for the session's lifetime — while
-      // checkpoint blocks are freed by the ContextCleaner when the caller
-      // drops the result; (b) the numbering below assigns positions under
-      // ONE concrete partitioning, and a lineage recompute after block loss
-      // could silently shift them — truncated lineage fails loudly instead
-      // (same contract as Kernel.withGlobalRowNumber).
-      val local = local0.localCheckpoint()
+      // a frame too large to rescan casually, so it is stored once, PINNED
+      // (lineage cut): (a) its blocks are freed by the ContextCleaner when
+      // the caller drops the result, with no CacheManager entry to leak;
+      // (b) the numbering below assigns positions under ONE concrete
+      // partitioning, and a lineage recompute after block loss could
+      // silently shift them — truncated lineage fails loudly instead (same
+      // contract as Kernel.withGlobalRowNumber).
+      val local = Stage.pinned(local0, "SessionEncoder.globalSessionId")
       val valid = local.filter(col("__local_session") =!= -1L).drop("__start")
       val invalid = local.filter(col("__local_session") === -1L).drop("__start")
         .withColumn(out, lit(-1L))
       // distributed fallback: range-sort the session-start keys and number
       // them with monotonically_increasing_id ((partitionId << 33) | row
-      // index on the sorted cached frame — a pure projection) plus driver
+      // index on the sorted pinned frame — a pure projection) plus driver
       // prefix sums of the per-partition counts.
       val keyCols = keyNames.map(col)
-      val parts = local.filter(col("__start") === 1L).select(keyCols: _*)
+      val parts = Stage.pinned(local.filter(col("__start") === 1L).select(keyCols: _*)
         .orderBy(keyCols: _*)
         .withColumn("__mid", monotonically_increasing_id())
         .withColumn("__pid", shiftright(col("__mid"), 33).cast(IntegerType))
-        .withColumn("__rid", col("__mid").bitwiseAND(lit((1L << 33) - 1)))
-        .localCheckpoint() // pinned positions + GC-scoped blocks (see above)
+        .withColumn("__rid", col("__mid").bitwiseAND(lit((1L << 33) - 1))),
+        "SessionEncoder.globalSessionId") // pinned positions (see above)
       val counts = parts.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
         .collect().map(r => r.getAs[Int]("__pid") -> r.getAs[Long]("__n")).toMap
       val offsets: Map[Int, Long] = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.Stage
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -186,6 +187,22 @@ object SimilaritySearch {
     * task — and a kClusters*dim driver collect: linear in the corpus,
     * constant driver state.
     */
+  /** (corpus_id, cv): the non-null vectors, CPU-spread and normalized. */
+  private[operators] def normalizedCorpus(corpus: DataFrame, vecCol: String,
+                                          idCol: String): DataFrame = {
+    val raw = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__v"))
+      .filter(col("__v").isNotNull)
+    raw.repartition(graft.ops.Partitions.cpuSpread(raw), col("corpus_id"))
+      .select(col("corpus_id"), Dedup.normalized(col("__v")).as("cv"))
+  }
+
+  /** `kmeansCentroids` with `kClusters <= 0` auto-sized to ~sqrt(corpus)
+    * cells, at least 16 (one count job). */
+  private[operators] def kmeansAuto(c: DataFrame, kClusters: Int,
+                                    iters: Int): Seq[(Int, Seq[Double])] =
+    kmeansCentroids(c, if (kClusters > 0) kClusters
+      else math.max(16, math.sqrt(c.count().toDouble).toInt), iters)
+
   def kmeansCentroids(c: DataFrame, kClusters: Int,
                       iters: Int): Seq[(Int, Seq[Double])] = {
     var cents: Seq[(Int, Seq[Double])] = c
@@ -221,20 +238,13 @@ object SimilaritySearch {
                     idCol: String, k: Int, kClusters: Int = 0,
                     nProbe: Int = 4, iters: Int = 2,
                     maxBroadcastQueries: Long = MaxBroadcastQueries): DataFrame = {
-    val raw = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__v"))
-      .filter(col("__v").isNotNull)
     // training + assignment + probe re-scan the normalized corpus
-    // (iters + 2 passes); localCheckpoint materializes it once. At true
+    // (iters + 2 passes); an owned stage fills it once. At true
     // 100 TB scale the persisted layout (AnnIndex) is the right home for
     // the assigned corpus — this one-shot path mirrors ivfTopK's contract.
-    val c = raw
-      .repartition(graft.ops.Partitions.cpuSpread(raw), col("corpus_id"))
-      .select(col("corpus_id"), Dedup.normalized(col("__v")).as("cv"))
-      .localCheckpoint()
-    val kc =
-      if (kClusters > 0) kClusters
-      else math.max(16, math.sqrt(c.count().toDouble).toInt)
-    val cents = kmeansCentroids(c, kc, iters)
+    val c = Stage.owned(normalizedCorpus(corpus, vecCol, idCol),
+      "SimilaritySearch.kmeansIvfTopK")
+    val cents = kmeansAuto(c, kClusters, iters)
     val cAssigned = c.withColumn("cid",
       element_at(nearestCids(cents, col("cv"), 1), 1))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__v"))

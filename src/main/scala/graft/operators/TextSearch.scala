@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Bucketize
+import graft.ops.Stage
 
 /** BM25 full-text retrieval over a document corpus — the lexical half of
   * the retrieval story next to the ANN family (`SimilaritySearch`,
@@ -289,17 +290,15 @@ object TextSearch {
     * as table properties. `probe` then touches no corpus-side Exchange:
     * the query terms filter the bucketed postings scan by literal. The
     * tokenize happens twice (postings write, lens write) — the stats come
-    * from the lens frame, cached for the write and the stats job, not a
+    * from the lens frame, staged for the write and the stats job, not a
     * third pass.
     */
   def buildIndex(df: DataFrame, textCol: String, idCol: String,
                  name: String, path: String, numBuckets: Int = 32): Unit = {
     val (post, lens) = postings(df, textCol, idCol, numBuckets)
-    val docLens = lens.persist()
-    try layout.write(df.sparkSession, name, path, numBuckets,
-      Map("lens" -> docLens, "postings" -> post),
-      (stats _).tupled(corpusStats(docLens)))
-    finally docLens.unpersist()
+    Stage.scoped(lens)(docLens => layout.write(df.sparkSession, name, path,
+      numBuckets, Map("lens" -> docLens, "postings" -> post),
+      (stats _).tupled(corpusStats(docLens))))
   }
 
   /** The STANDING-INDEX lifecycle in one call (r14 — the bench

@@ -343,11 +343,9 @@ object Kernel {
     // already-sorted partitions — equal keys are adjacent after a range sort,
     // so a partition-local lag sees every duplicate.
     val keyCols = orderBy.map(col)
-    val sorted = df.select(keyCols: _*).orderBy(keyCols: _*)
+    Stage.scoped(df.select(keyCols: _*).orderBy(keyCols: _*)
       .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", shiftright(col("__mid"), 33).cast(IntegerType))
-      .persist()
-    try {
+      .withColumn("__pid", shiftright(col("__mid"), 33).cast(IntegerType))) { sorted =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("__pid")).orderBy(col("__mid"))
       // a previous row must EXIST (lag of never-null __mid) — otherwise a
@@ -373,23 +371,23 @@ object Kernel {
         else element_at(
           map(offsets.flatMap { case (p, o) => Seq(lit(p), lit(o)) }: _*),
           col("__pid"))
-      // the number table is narrow (keys + one long): materialize it so the
-      // sorted keys persist can be released HERE instead of leaking into the
+      // the number table is narrow (keys + one long): fill it so the sorted
+      // keys stage can be released HERE instead of leaking into the
       // returned plan's lifetime. Keys are RENAMED to fresh columns because
-      // localCheckpoint preserves attribute identity — joining df(c) against
-      // an attribute with the same exprId would be a trivially-true
+      // a stage preserves attribute identity — joining df(c) against an
+      // attribute with the same exprId would be a trivially-true
       // self-reference, not a join condition.
       //
-      // checkpoint, DELIBERATELY not persist-with-lineage: positions were
-      // assigned under ONE concrete range partitioning, and a recompute
-      // after executor loss may re-derive different partition boundaries —
-      // the driver-side offsets map would then silently SHIFT positions.
-      // Losing a checkpoint block fails the job loudly instead; the frame
-      // is tiny and the caller retries.
-      val numbered = sorted
+      // PINNED (lineage cut), DELIBERATELY not a stage with lineage:
+      // positions were assigned under ONE concrete range partitioning, and a
+      // recompute after executor loss may re-derive different partition
+      // boundaries — the driver-side offsets map would then silently SHIFT
+      // positions. Losing a pinned block fails the job loudly instead; the
+      // frame is tiny and the caller retries.
+      val numbered = Stage.pinned(sorted
         .withColumn(out, col("__mid").bitwiseAND(lit((1L << 33) - 1)) + offExpr)
-        .select(orderBy.map(c => col(c).as(s"__gk_$c")) :+ col(out): _*)
-        .localCheckpoint()
+        .select(orderBy.map(c => col(c).as(s"__gk_$c")) :+ col(out): _*),
+        "Kernel.withGlobalRowNumber")
       // null-SAFE join-back: a null ordering key is a valid position (the
       // sort put it somewhere deterministic); plain equi-join would silently
       // drop such rows. LEFT join + raise_error instead of inner join: with
@@ -405,7 +403,7 @@ object Kernel {
         .otherwise(numbered(out)).as(out)
       df.join(numbered, cond, "left")
         .select(df.columns.map(df(_)).toSeq :+ checked: _*)
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 
   /** Horizontal (axis=1) concat of frames sharing a common explicit row

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Stage
 
 /** Hyperparameter choices + search/CV over plans (reference
   * skrub/_data_ops/_choosing.py:332-883, _estimator.py:1032-1423).
@@ -391,14 +392,14 @@ object Choices {
                     planFor: Map[String, Any] => Plan,
                     env: Map[String, DataFrame], xVar: String, k: Int,
                     score: DataFrame => Double, seed: Long = 42L): CvResult = {
-    val x = env(xVar).persist()
-    val fold = foldOf(x, k, seed)
-    val scores = (0 until k).map { i =>
-      val learner = Plan.makeLearner(planFor(params))
-      learner.fit(env + (xVar -> x.filter(fold =!= i)))
-      score(learner.transform(env + (xVar -> x.filter(fold === i))))
+    val scores = Stage.scoped(env(xVar)) { x =>
+      val fold = foldOf(x, k, seed)
+      (0 until k).map { i =>
+        val learner = Plan.makeLearner(planFor(params))
+        learner.fit(env + (xVar -> x.filter(fold =!= i)))
+        score(learner.transform(env + (xVar -> x.filter(fold === i))))
+      }
     }
-    x.unpersist()
     CvResult(params, scores)
   }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import graft.ops.Stage
 
 /** DataOps core (reference skrub/_data_ops/, SURVEY §2.10): lazy,
   * environment-bound, REFITTABLE multi-table computation plans.
@@ -19,8 +20,9 @@ import org.apache.spark.sql.DataFrame
   *  - `Merge`: an n-ary combinator (joins, concats) over upstream plans.
   *
   * Evaluation memoizes per node (the reference's per-node result cache,
-  * _evaluation.py:319-330) and persists any node consumed by more than one
-  * parent (the persist-at-fanout rule of SURVEY §4) — a node shared by two
+  * _evaluation.py:319-330) and stages any node consumed by more than one
+  * parent while fitting (the persist-at-fanout rule of SURVEY §4, through
+  * `Stage.scope`) — a node shared by two
   * branches computes once per evaluation, not once per consumer.
   */
 sealed trait Plan {
@@ -130,28 +132,25 @@ object Plan {
     counts.toMap
   }
 
-  /** One evaluation pass. In fit mode every Apply runs `estimator.fit` on
-    * its input and records the fitted transformer into `fitted`; in
-    * transform mode it replays `fitted`.
+  /** One evaluation pass. In fit mode (`fitScope` given) every Apply runs
+    * `estimator.fit` on its input and records the fitted transformer into
+    * `fitted`; in transform mode (None) it replays `fitted`.
     *
-    * Fan-out persist lifecycle: nodes with 2+ consumers are persisted ONLY
-    * in fit mode, where stage fits run jobs during this pass and genuinely
-    * share the cached parent; every persist this pass registers is returned
-    * so the caller can RELEASE it (a DataFrame persist is a CacheManager
-    * entry — never garbage-collected, so an unreleased one leaks for the
-    * session's lifetime; caught auditing r6). In transform mode the pass is
-    * pure lazy plan composition — no job runs here, a persist would only
-    * leak — and shared subtrees that end in a shuffle still get within-
-    * query sharing from ReusedExchange.
+    * Fan-out stage lifecycle: nodes with 2+ consumers are staged ONLY in
+    * fit mode, in `fitScope`, where stage fits run jobs during this pass
+    * and genuinely share the staged parent; the caller's scope releases
+    * them when it closes (an unreleased stage would hold its blocks until
+    * the ContextCleaner runs). In transform mode the pass is pure lazy
+    * plan composition — no job runs here, so nothing is staged — and
+    * shared subtrees that end in a shuffle still get within-query sharing
+    * from ReusedExchange.
     */
   private[plans] def evaluate0(root: Plan, env: Map[String, DataFrame],
                                fitted: scala.collection.mutable.Map[Apply, Transformer],
-                               fitMode: Boolean,
-                               subsampleOn: Boolean = false)
-      : (DataFrame, Seq[DataFrame]) = {
+                               fitScope: Option[Stage.Scope],
+                               subsampleOn: Boolean = false): DataFrame = {
     val fanout = parentCounts(root)
     val memo = scala.collection.mutable.Map[Plan, DataFrame]()
-    val persisted = scala.collection.mutable.ListBuffer[DataFrame]()
     def eval(p: Plan): DataFrame = memo.getOrElseUpdate(p, {
       val out = p match {
         case Var(name) => env.getOrElse(name,
@@ -161,7 +160,7 @@ object Plan {
         case a @ Apply(in, est) =>
           val input = eval(in)
           val t =
-            if (fitMode) { val f = est.fit(input); fitted(a) = f; f }
+            if (fitScope.isDefined) { val f = est.fit(input); fitted(a) = f; f }
             else fitted.getOrElse(a,
               throw new IllegalStateException("transform before fit"))
           t.transform(input)
@@ -182,13 +181,9 @@ object Plan {
               d.columns.map(c => col(c).cast("string")).toSeq: _*))).limit(n)
           }
       }
-      if (fitMode && fanout(p) > 1) {
-        val cached = out.persist()
-        persisted += cached
-        cached
-      } else out
+      fitScope.filter(_ => fanout(p) > 1).fold(out)(_(out))
     })
-    (eval(root), persisted.toSeq)
+    eval(root)
   }
 
   /** The `MarkX` node of a plan, if any (reference `find_X`,
@@ -314,7 +309,7 @@ object Plan {
   /** Numbered step list of the plan, children before parents (reference
     * `.skb.describe_steps`, _skrub_namespace.py:1519). A node consumed by
     * more than one parent is listed once and marked `(shared)` — shared
-    * nodes evaluate once per pass and are persisted (persist-at-fanout).
+    * nodes evaluate once per pass and are staged (persist-at-fanout).
     */
   def describeSteps(root: Plan): String = {
     val fanout = parentCounts(root)
@@ -400,12 +395,9 @@ final class Learner(root: Plan) {
 
   def fit(env: Map[String, DataFrame], subsample: Boolean = false): Learner = {
     fitted.clear()
-    val (_, cached) =
-      Plan.evaluate0(root, env, fitted, fitMode = true,
-        subsampleOn = gated(subsample))
-    // the output frame is discarded — the fan-out caches served the stage
+    // the output frame is discarded — the fan-out stages served the stage
     // fits that just ran; releasing here costs nothing and leaks nothing
-    cached.foreach(_.unpersist(blocking = false))
+    Stage.scope(s => Plan.evaluate0(root, env, fitted, Some(s), gated(subsample)))
     isFit = true
     this
   }
@@ -413,13 +405,12 @@ final class Learner(root: Plan) {
   def fitTransform(env: Map[String, DataFrame],
                    subsample: Boolean = false): DataFrame = {
     fitted.clear()
-    val (out, cached) = Plan.evaluate0(root, env, fitted, fitMode = true,
-      subsampleOn = gated(subsample))
-    // fit jobs already shared the caches; releasing before returning means
+    // fit jobs already shared the stages; releasing before returning means
     // actions on `out` recompute shared subtrees lazily (bounded, and
     // ReusedExchange still collapses shuffle-terminated ones) instead of
-    // this call leaking CacheManager entries for the session's lifetime
-    cached.foreach(_.unpersist(blocking = false))
+    // this call holding their blocks for the output's lifetime
+    val out = Stage.scope(s =>
+      Plan.evaluate0(root, env, fitted, Some(s), gated(subsample)))
     isFit = true
     out
   }
@@ -428,17 +419,13 @@ final class Learner(root: Plan) {
     * _subsampling.py:20-25): fits into a THROWAWAY state — the learner's
     * own fitted stages and fit flag are untouched.
     */
-  def preview(env: Map[String, DataFrame]): DataFrame = {
-    val (out, cached) = Plan.evaluate0(root, env,
-      scala.collection.mutable.Map[Apply, Transformer](),
-      fitMode = true, subsampleOn = gated(true))
-    cached.foreach(_.unpersist(blocking = false))
-    out
-  }
+  def preview(env: Map[String, DataFrame]): DataFrame =
+    Stage.scope(s => Plan.evaluate0(root, env,
+      scala.collection.mutable.Map[Apply, Transformer](), Some(s), gated(true)))
 
   def transform(env: Map[String, DataFrame]): DataFrame = {
     if (!isFit) throw new IllegalStateException("learner is not fitted")
-    Plan.evaluate0(root, env, fitted, fitMode = false)._1
+    Plan.evaluate0(root, env, fitted, None)
   }
 
   /** HTML report of the plan and its (subsampled) preview output (reference

@@ -132,10 +132,11 @@ object EncoderQueries {
     "q_string_encoder" -> ((s, dir) => {
       val nb = 64
       val cust = t(s, dir, "customer").select(col("c_custkey"), col("c_name"))
-      // persist at the fan-out: the ref-vector probe and the final
-      // projection both consume the encoded frame
+      // not staged: `encode` fits eagerly, so each of the two consumers
+      // (the ref-vector probe and the final projection) re-reads only the
+      // join of the customer scan with the fitted feature table
       val enc = graft.encoders.StringEncoder.encode(cust, "c_name",
-        nComponents = nb, nBuckets = nb).persist()
+        nComponents = nb, nBuckets = nb)
       val vec = array((0 until nb).map(i => col(s"c_name_svd_$i")): _*)
       val refName = cust.filter(col("c_name").isNotNull)
         .agg(min(col("c_name"))).collect()(0).getString(0)

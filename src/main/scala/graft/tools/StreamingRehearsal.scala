@@ -131,19 +131,18 @@ object StreamingRehearsal {
       .outputMode("append")
       .option("checkpointLocation", s"$outDir/ckpt/ingest")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // every persist is released in the finally, whichever step throws
-        val b = batch.persist()
-        var matches: DataFrame = null
-        var newDocs: DataFrame = null
-        try {
-          matches = graft.operators.DedupIndex.probe(b, "clean_text",
-            "doc_id", "graft_sr_didx", minJaccard = 0.4).persist()
+        // every stage is released when the scope closes, whichever step
+        // throws
+        graft.ops.Stage.scope { stage =>
+          val b = stage(batch)
+          val matches = stage(graft.operators.DedupIndex.probe(b, "clean_text",
+            "doc_id", "graft_sr_didx", minJaccard = 0.4))
           val survivors = b.count()
           val dups = matches.count()
-          newDocs = b.join(
+          val newDocs = stage(b.join(
             matches.filter(col("jaccard") >= 0.9)
               .select(col("id").as("doc_id")),
-            Seq("doc_id"), "left_anti").persist()
+            Seq("doc_id"), "left_anti"))
           val appended = newDocs.count()
           graft.operators.DedupIndex.append(newDocs, "clean_text", "doc_id",
             "graft_sr_didx")
@@ -153,10 +152,6 @@ object StreamingRehearsal {
             "embedding", "vec_id", "graft_sr_aidx", k = 5).count()
           println(s"[stream] probe id=$batchId survivors=$survivors " +
             s"dupMatches=$dups appended=$appended annRows=$ann")
-        } finally {
-          if (newDocs != null) newDocs.unpersist()
-          if (matches != null) matches.unpersist()
-          b.unpersist()
         }
       }
       .start()

@@ -241,9 +241,9 @@ class DedupSpec extends AnyFunSuite {
       (Some(2L), None), (None, Some(3L)), (Some(4L), Some(5L)), (None, None))
       .toDF("id_a", "id_b")
     def labels(bound: Int): Map[Any, Any] = {
-      val (l, checkpoint) = Dedup.components(pairs, bound)
+      val l = Dedup.components(pairs, bound)
       try l.collect().map(r => r.get(0) -> r.get(1)).toMap
-      finally Dedup.releaseCheckpoints(checkpoint.toSeq: _*)
+      finally graft.ops.Stage.release(l)
     }
     val driver = labels(Dedup.DriverPairs)
     assert(driver === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L))
@@ -262,14 +262,14 @@ class DedupSpec extends AnyFunSuite {
       val map = Dedup.deduplicate(docs, "text", 0.3, 3, "auto", bound)
       val added = sc.getPersistentRDDs.keySet -- before
       assert(added.size === 1 &&
-        added === org.apache.spark.sql.GraftBridge.checkpointedRddId(map).toSet,
+        added === graft.ops.Stage.rdds(map).map(_.id).toSet,
         s"deduplicate, bound $bound, left persisted RDDs: $added")
       val beforeKeep = sc.getPersistentRDDs.keySet
       val verdict = Dedup.keepBest(scored, pairs, "doc_id", "score", bound)
       assert(verdict.filter(!$"kept").count() > 0)
-      // the distributed route's labels are the loop's final checkpoint,
+      // the distributed route's labels are the loop's final pinned stage,
       // which the lazy verdict reads; the driver route's are a local frame
-      val held = org.apache.spark.sql.GraftBridge.checkpointedRddId(verdict).toSet
+      val held = graft.ops.Stage.rdds(verdict).map(_.id).toSet
       assert(held.size === (if (bound == 0) 1 else 0))
       val addedKeep = sc.getPersistentRDDs.keySet -- beforeKeep
       assert(addedKeep === held,
@@ -310,14 +310,14 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("semanticDedup leaves only its verdict checkpoint persisted") {
-    // the normalized-vector and assignment checkpoints are freed by their
-    // own RDD ids; only the returned verdict frame's block stays
+    // the normalized-vector and assignment stages are released when the
+    // call's scope closes; only the returned verdict frame's stage stays
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val emb = TestSpark.table("embeddings").limit(300)
     val out = Dedup.semanticDedup(emb, "embedding", "vec_id", minCosine = 0.9)
     val added = sc.getPersistentRDDs.keySet -- before
-    assert(added === org.apache.spark.sql.GraftBridge.checkpointedRddId(out).toSet
+    assert(added === graft.ops.Stage.rdds(out).map(_.id).toSet
       && added.size == 1, s"semanticDedup left persisted RDDs: $added")
   }
 

@@ -36,7 +36,7 @@ class QuickstartSpec extends AnyFunSuite {
     assert(full.count() > 0)
 
     // checkpointDir mode: verdicts materialize to parquet (lineage-free,
-    // recoverable) and the result is ROW-IDENTICAL to localCheckpoint mode
+    // recoverable) and the result is ROW-IDENTICAL to block-manager mode
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     val fullCkpt = Curation.sweepFull(docs, bench, "text", "doc_id", "source",
       lmMaxNll = 7.0, mixTemperature = 2.0, mixTargetFrac = 0.5,
@@ -247,7 +247,7 @@ class QuickstartSpec extends AnyFunSuite {
     assert(psi.count() === 3)
     val alerts = Drift.fitNewCats(docs, Seq("source")).score(nextCrawl)
     assert(alerts.count() > 0, "every -v2 source is unseen — must alert")
-    monitor.refCounts.unpersist()
+    graft.ops.Stage.release(monitor.refCounts)
   }
 
   test("README standing-index block drives the full lifecycle through " +

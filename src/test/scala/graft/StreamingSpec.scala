@@ -307,7 +307,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("NgramLm scores streamed micro-batches against a statically fit model") {
     // same incremental-ingestion shape as the decontamination probe: the
-    // LM is fit ONCE (bounded count tables, localCheckpointed by fit);
+    // LM is fit ONCE (bounded count tables, staged by fit);
     // each arriving micro-batch pays one scan + the broadcast model joins
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

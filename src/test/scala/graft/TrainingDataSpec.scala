@@ -533,14 +533,15 @@ class TrainingDataSpec extends AnyFunSuite {
   test("Recipe.pipelineFull without a checkpointDir leaves nothing " +
     "persisted but local checkpoints") {
     // exactly the two verdict frames (Curation's and compose's) stay, as
-    // local checkpoints; the staged input and compose's base are plain
-    // persists, and the LM model's two checkpoints are freed, before the
-    // call returns
+    // the owned stages the returned frame reads; the staged input and
+    // compose's base are scoped stages, and the LM model's two stages are
+    // released, before the call returns
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = pipelineFull(joinedDocs())
     val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
-    assert(added.size == 2 && added.values.forall(_.isCheckpointed),
+    assert(added.size == 2 &&
+      added.keySet === graft.ops.Stage.rdds(out).map(_.id).toSet,
       added.values.map(_.toDebugString).mkString("\n"))
     assert(out.collect().nonEmpty)
   }
@@ -671,7 +672,7 @@ class TrainingDataSpec extends AnyFunSuite {
       Seq("curation_verdicts_0000000000005_zzzz.parquet"))
     // the writers actually embed a parsable stamp (sweepFull/compose
     // leaf-name contract)
-    val leaf = graft.operators.Curation.verdictLeaf("curation")
+    val leaf = graft.ops.Stage.verdictLeaf("curation")
     val rest = leaf.split("_verdicts_", 2)(1)
     assert(rest.length > 14 && rest.take(13).forall(_.isDigit) &&
       rest(13) == '_' && leaf.endsWith(".parquet"), leaf)
