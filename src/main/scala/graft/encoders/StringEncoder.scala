@@ -58,10 +58,11 @@ object StringEncoder {
     // this, the tf-idf treeAggregate and the Gram matrix pass both ran in
     // a single task (CPU-bound hashing, not bytes)
     val raw = df.select(col(c)).filter(col(c).isNotNull)
-    val encoded = Stage.scoped(raw
-      .repartition(graft.ops.Partitions.cpuSpread(raw), col(c))
-      .distinct()) { distinct =>
-      val values = distinct.rdd.map(_.getString(0))
+    val encoded = Stage.scope { stage =>
+      val values = stage(raw
+        .repartition(graft.ops.Partitions.cpuSpread(raw), col(c))
+        .distinct()
+        .rdd.map(_.getString(0)))
 
       // 1. document frequencies -> idf weights (broadcast-size: nBuckets)
       val (dfCounts, n) = values

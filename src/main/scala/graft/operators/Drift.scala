@@ -42,6 +42,11 @@ object Drift {
     def labels: Seq[(String, Column)] =
       specs.map(s => s.col -> ColumnAssociations.labelOf(s))
 
+    /** Free the stored reference counts of a `fitPsi(cache = true)` model
+      * now; otherwise they go when the model is garbage-collected. A model
+      * with lazy counts has nothing to free. */
+    def release(): Unit = Stage.release(refCounts)
+
     private[Drift] def binned(df: DataFrame, side: String): DataFrame = df
       .select(explode(array(labels.map { case (c, e) =>
         struct(lit(c).as("c"), e.cast(StringType).as("b"))
@@ -157,7 +162,7 @@ object Drift {
   /** `cache = true`: store and fill the bounded per-bin counts now (an
     * owned stage) so every later score is ONE aggregate (the score-many
     * estimator shape); the blocks go with the model (ContextCleaner), or
-    * earlier through `Stage.release(model.refCounts)`. `cache = false`:
+    * earlier through `model.release()`. `cache = false`:
     * leave them lazy — the one-shot `psi`/`ks` forms use this, as they
     * read the counts once.
     */

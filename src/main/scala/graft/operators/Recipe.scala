@@ -186,8 +186,8 @@ object Recipe {
     * Staging discipline: when `docs` carries upstream work (a join,
     * an aggregate, a window, a shuffle — a dedup chain, say), its narrow
     * input (`idCol`, `sourceCol`, `textCol`, plus `sweepScoreCol` when
-    * set) is staged ONCE at entry (`Stage.scoped`: a parquet leaf under
-    * `checkpointDir`, else the block manager) and every stage reads it
+    * set) is staged ONCE at entry (a `Stage.scope` stage: a parquet leaf
+    * under `checkpointDir`, else a persist) and every stage reads it
     * instead of re-running that lineage per action; a bare
     * scan/filter/project is read as is. Then exactly TWO owned stages —
     * `sweepFull`'s verdict frame and `compose`'s — each feeding its own

@@ -175,18 +175,6 @@ object SimilaritySearch {
   private def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Deterministic k-means over a (corpus_id, cv)-shaped frame of
-    * normalized vectors: init = the `kClusters` vectors ranking first by
-    * md5(id) (a seedless pseudo-random sample any engine reproduces),
-    * then `iters` Lloyd steps. Every centroid coordinate is rounded to 6
-    * decimals after init/averaging and every assignment distance to 6
-    * before the argmin, so the trained quantizer is bit-reproducible in
-    * the DuckDB oracle. Clusters that lose all members are dropped (not
-    * re-seeded). Per iteration: one assignment scan + one (cid, dim)-
-    * keyed avg — map-side combined to kClusters*dim partial rows per
-    * task — and a kClusters*dim driver collect: linear in the corpus,
-    * constant driver state.
-    */
   /** (corpus_id, cv): the non-null vectors, CPU-spread and normalized. */
   private[operators] def normalizedCorpus(corpus: DataFrame, vecCol: String,
                                           idCol: String): DataFrame = {
@@ -203,6 +191,18 @@ object SimilaritySearch {
     kmeansCentroids(c, if (kClusters > 0) kClusters
       else math.max(16, math.sqrt(c.count().toDouble).toInt), iters)
 
+  /** Deterministic k-means over a (corpus_id, cv)-shaped frame of
+    * normalized vectors: init = the `kClusters` vectors ranking first by
+    * md5(id) (a seedless pseudo-random sample any engine reproduces),
+    * then `iters` Lloyd steps. Every centroid coordinate is rounded to 6
+    * decimals after init/averaging and every assignment distance to 6
+    * before the argmin, so the trained quantizer is bit-reproducible in
+    * the DuckDB oracle. Clusters that lose all members are dropped (not
+    * re-seeded). Per iteration: one assignment scan + one (cid, dim)-
+    * keyed avg — map-side combined to kClusters*dim partial rows per
+    * task — and a kClusters*dim driver collect: linear in the corpus,
+    * constant driver state.
+    */
   def kmeansCentroids(c: DataFrame, kClusters: Int,
                       iters: Int): Seq[(Int, Seq[Double])] = {
     var cents: Seq[(Int, Seq[Double])] = c

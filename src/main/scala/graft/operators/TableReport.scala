@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ops.Stage
 
 /** TableReport (reference skrub/_reporting/_summarize.py:21-310 feeding
   * _table_report.py:98): per-column profiling statistics, top/bottom sample
@@ -451,7 +450,7 @@ object TableReport {
         s"<h3>${esc(cn)}</h3>" + svgCompareBars(sorted.toSeq.map(r =>
           (r.getString(1), r.getLong(2) / totR, r.getLong(3) / totC)))
       }.mkString("\n")
-    Stage.release(model.refCounts)
+    model.release()
     s"""<!DOCTYPE html>
        |<html><head><meta charset="utf-8"><title>${esc(title)}</title>
        |<style>table{border-collapse:collapse}td,th{border:1px solid #999;padding:2px 6px;font:12px monospace}</style>

@@ -3,35 +3,35 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The one place the engine stores an intermediate frame.
   *
-  * One storage form: the frame's plan executed once into an RDD of copied
-  * rows, persisted MEMORY_AND_DISK and read back through a `LogicalRDD`
-  * that keeps the plan's attributes, partitioning, ordering and statistics
-  * (`GraftBridge.stageRows`: what `Dataset.localCheckpoint` builds, minus
-  * the lineage cut, planned the way `CacheManager` plans a cached plan).
-  * Unlike a `Dataset.persist`, no separate fill job runs before the first
-  * action that reads it, and no CacheManager entry is made.
-  *
   * Three lifetimes, chosen by what the call site needs:
-  *  - `scoped` / `scope`: lineage kept, released when the body exits (also
-  *    on failure); the first action that reads the frame fills it. A frame
-  *    the caller already staged or cached is read as is and left alone.
-  *  - `owned`: lineage kept, filled once eagerly (one job, named after the
-  *    site), released with the returned frame by the ContextCleaner or
-  *    earlier by `release`.
-  *  - `pinned`: lineage cut, filled eagerly. Only for frames whose
-  *    recompute could shift positions or grow the plan without limit: a
-  *    lost block then fails the job loudly (a `SparkException`) instead.
+  *  - `scoped` / `scope`: a `Dataset.persist` (MEMORY_AND_DISK), lineage
+  *    kept, unpersisted when the body exits (also on failure). The first
+  *    action that reads the frame fills it, and once filled the optimizer
+  *    sees its real size (the cached relation's statistics), which the
+  *    joins of an iterative reader such as the min-label loop plan on. A
+  *    frame the caller already cached or staged is read as is and left
+  *    alone. A site that reads its frame only as an RDD stages that RDD
+  *    instead, so its first job fills it with no fill job of its own.
+  *  - `owned`: filled once eagerly (one job, named after the site) into an
+  *    RDD of copied rows kept with its lineage (`GraftBridge.stageRows`,
+  *    what `Dataset.localCheckpoint` builds before its lineage cut). No
+  *    CacheManager entry holds it, so it is released with the returned
+  *    frame by the ContextCleaner, or earlier by `release`.
+  *  - `pinned`: as `owned`, with the lineage cut (`RDD.localCheckpoint`).
+  *    Only for frames whose recompute could shift positions or grow the
+  *    plan without limit: a lost block then fails the job loudly (a
+  *    `SparkException`) instead.
   *
-  * A non-empty `dir` (an operator's public `checkpointDir`) stages to a
-  * parquet leaf `<dir>/<family>_verdicts_<stamp>_<uuid>.parquet` instead:
-  * deleted when a scope closes, retained for an owned frame (the returned
-  * frame reads it lazily; `Curation.pruneCheckpoints` prunes old leaves).
+  * With a non-empty `dir` (an operator's public `checkpointDir`) a scope
+  * or owned stage writes a parquet leaf
+  * `<dir>/<family>_verdicts_<stamp>_<uuid>.parquet` instead: deleted when a
+  * scope closes, retained for an owned frame (the returned frame reads it
+  * lazily; `Curation.pruneCheckpoints` prunes old leaves per family).
   */
 private[graft] object Stage {
 
@@ -42,20 +42,36 @@ private[graft] object Stage {
   final class Scope private[Stage] () {
     private[Stage] val releases = scala.collection.mutable.ListBuffer[() => Unit]()
 
-    /** `df` staged until the scope closes: lineage kept, filled by the
-      * first action that reads it; a frame the caller cached or staged is
-      * returned as is; with a `dir`, a parquet leaf deleted on close. */
-    def apply(df: DataFrame, dir: String = "", family: String = "stage"): DataFrame =
-      if (dir.nonEmpty) {
+    /** `df` persisted until the scope closes, filled by the first action
+      * that reads it; a frame the caller cached or staged is returned as
+      * is. */
+    def apply(df: DataFrame): DataFrame =
+      if (held(df)) df
+      else {
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        releases += (() => df.unpersist(blocking = false))
+        df
+      }
+
+    /** `rdd` persisted until the scope closes, filled by the first job
+      * that reads it: for a site that reads the frame only as an RDD,
+      * where a staged frame's adaptive plan would run a fill job of its
+      * own first. */
+    def apply[T](rdd: RDD[T]): RDD[T] = {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      releases += (() => rdd.unpersist(blocking = false))
+      rdd
+    }
+
+    /** With a non-empty `dir`, `df` written to a parquet leaf of `family`
+      * that is deleted when the scope closes; else `apply(df)`. */
+    def apply(df: DataFrame, dir: String, family: String): DataFrame =
+      if (dir.isEmpty) apply(df)
+      else {
         val path = writeLeaf(df, dir, family)
         releases += (() => path.getFileSystem(
           df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true))
         df.sparkSession.read.parquet(path.toString)
-      } else if (held(df)) df
-      else {
-        val (rdd, staged) = store(df, "scoped", pin = false)
-        releases += (() => rdd.unpersist(blocking = false))
-        staged
       }
   }
 
@@ -66,31 +82,32 @@ private[graft] object Stage {
   }
 
   /** Run `body` on `df` staged for the body's span (see `Scope.apply`). */
-  def scoped[T](df: DataFrame, dir: String = "", family: String = "stage")(
-      body: DataFrame => T): T =
-    scope(s => body(s(df, dir, family)))
+  def scoped[T](df: DataFrame)(body: DataFrame => T): T =
+    scope(s => body(s(df)))
 
-  /** `df` stored and filled now, in one job described as `site`; the
-    * storage lives as long as the returned frame (see `release`). With a
-    * `dir`, the frame reads a retained parquet leaf instead. */
-  def owned(df: DataFrame, site: String, dir: String = "",
-            family: String = "stage"): DataFrame =
-    if (dir.nonEmpty) graft.obs.phase(site)(
+  /** `df` stored and filled now, in jobs described as `site`; the storage
+    * lives as long as the returned frame (see `release`). */
+  def owned(df: DataFrame, site: String): DataFrame = filled(df, site, pin = false)
+
+  /** With a non-empty `dir`, `df` written now (jobs described as `site`) to
+    * a retained parquet leaf of `family`, which the returned frame reads;
+    * else `owned(df, site)`. */
+  def owned(df: DataFrame, site: String, dir: String, family: String): DataFrame =
+    if (dir.isEmpty) owned(df, site)
+    else graft.obs.phase(site)(
       df.sparkSession.read.parquet(writeLeaf(df, dir, family).toString))
-    else filled(df, site, pin = false)
 
   /** `df` stored, filled now and cut from its lineage (see the object doc):
     * a lost block fails the reading job instead of recomputing. */
-  def pinned(df: DataFrame, site: String): DataFrame =
-    filled(df, site, pin = true)
+  def pinned(df: DataFrame, site: String): DataFrame = filled(df, site, pin = true)
 
-  /** Free now every stage the plans of `frames` read (owned and pinned
-    * frames are otherwise freed when the ContextCleaner collects them). */
+  /** Free now every owned or pinned stage the plans of `frames` read
+    * (otherwise freed when the ContextCleaner collects them). */
   def release(frames: DataFrame*): Unit =
     frames.flatMap(rdds).foreach(_.unpersist(blocking = false))
 
-  /** The stage RDDs `df`'s plan reads (their ids are what a stage adds to
-    * `SparkContext.getPersistentRDDs`). */
+  /** The owned and pinned stage RDDs `df`'s plan reads (their ids are what
+    * such a stage adds to `SparkContext.getPersistentRDDs`). */
   def rdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collect { case l: LogicalRDD if isStage(l.rdd) => l.rdd }
 
@@ -106,21 +123,15 @@ private[graft] object Stage {
   private def isStage(rdd: RDD[_]): Boolean =
     Option(rdd.name).exists(_.startsWith(Tag))
 
-  /** Already staged (a stage frame itself) or cached by the caller. */
+  /** Cached by the caller, or an owned or pinned stage itself. */
   private def held(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE ||
     df.queryExecution.analyzed.isInstanceOf[LogicalRDD] && rdds(df).nonEmpty
 
-  private def store(df: DataFrame, site: String,
-                    pin: Boolean): (RDD[InternalRow], DataFrame) = {
-    val (rdd, staged) = GraftBridge.stageRows(df)
-    rdd.setName(Tag + site).persist(StorageLevel.MEMORY_AND_DISK)
-    if (pin) rdd.localCheckpoint()
-    (rdd, staged)
-  }
-
   private def filled(df: DataFrame, site: String, pin: Boolean): DataFrame =
     graft.obs.phase(site) {
-      val (rdd, staged) = store(df, site, pin)
+      val (rdd, staged) = GraftBridge.stageRows(df)
+      rdd.setName(Tag + site).persist(StorageLevel.MEMORY_AND_DISK)
+      if (pin) rdd.localCheckpoint()
       rdd.count()
       staged
     }

@@ -4,7 +4,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
-import org.apache.spark.sql.internal.SQLConf
 
 /** Column <-> Expression bridge for graft's custom Catalyst expressions.
   * `classic.ExpressionUtils` is `private[sql]`, so this shim lives in the
@@ -19,25 +18,17 @@ object GraftBridge {
       .logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** `df`'s plan, executed once into an RDD of copied rows — what
-    * `Dataset.checkpoint` stores, planned the way `CacheManager` plans a
-    * cached plan: in a session with AQE's final-stage shuffle
-    * optimizations and auto-bucketed scans off, so the stored partitions
-    * are the plan's own and a small CPU-heavy final stage is not coalesced
-    * into one task. Under AQE the plan's shuffle-map stages run here; the
-    * final stage runs in the first job that reads the RDD. Returns the RDD
-    * and a frame over it that keeps `df`'s attributes, partitioning,
-    * ordering and statistics (`LogicalRDD.fromDataset`).
+  /** `df`'s plan executed into an RDD of copied rows, and a frame over it
+    * that keeps `df`'s attributes, partitioning and ordering — what
+    * a Dataset local checkpoint builds before it cuts the RDD's lineage.
+    * Under AQE the plan's shuffle-map stages run here; the final stage
+    * runs in the first job that reads the RDD.
     */
   def stageRows(df: DataFrame): (RDD[InternalRow], DataFrame) = {
-    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val off = classic.SparkSession.getOrCloneSessionWithConfigsOff(session, Seq(
-      SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS,
-      SQLConf.AUTO_BUCKETED_SCAN_ENABLED))
-    val src = classic.Dataset.ofRows(off, df.queryExecution.analyzed)
-    val rdd = SQLExecution.withNewExecutionId(src.queryExecution, Some("stage"))(
-      src.queryExecution.executedPlan.execute().map(_.copy()))
-    (rdd, classic.Dataset.ofRows(session,
-      LogicalRDD.fromDataset(rdd, src, df.isStreaming)))
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    val rdd = SQLExecution.withNewExecutionId(qe, Some("stage"))(
+      qe.executedPlan.execute().map(_.copy()))
+    (rdd, ofRows(ds.sparkSession, LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)))
   }
 }

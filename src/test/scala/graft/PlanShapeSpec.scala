@@ -269,26 +269,6 @@ class PlanShapeSpec extends AnyFunSuite {
   private def jobsOf(body: => Unit): Int =
     graft.obs.Collector.measure(spark)(body).jobs.size
 
-  test("a scoped stage fills inside its first reader: a gather then a " +
-    "collect run one job fewer than over Dataset.persist") {
-    // a 5,000-key aggregate (an exchange under AQE), read first by the
-    // per-partition-take gather `clusterOnDriver` uses, then by a collect;
-    // a persisted frame runs a fill job of its own before the gather
-    def frame = spark.range(0, 20000).select((col("id") % 5000).as("k"))
-      .groupBy("k").count()
-    def reads(df: DataFrame): Unit = {
-      df.queryExecution.toRdd.mapPartitions(_.take(10).map(_.copy()))
-        .coalesce(1, shuffle = true).collect()
-      assert(df.collect().length === 5000)
-    }
-    val persisted = jobsOf {
-      val p = frame.persist()
-      try reads(p) finally p.unpersist()
-    }
-    val staged = jobsOf(graft.ops.Stage.scoped(frame)(reads))
-    assert(staged === persisted - 1, s"staged $staged, persisted $persisted")
-  }
-
   /** A BM25 index over the documents fixture plus serving-shaped local
     * frames: a query batch and an ingest batch built on the driver, as a
     * serving client sends them.

@@ -247,7 +247,7 @@ class QuickstartSpec extends AnyFunSuite {
     assert(psi.count() === 3)
     val alerts = Drift.fitNewCats(docs, Seq("source")).score(nextCrawl)
     assert(alerts.count() > 0, "every -v2 source is unseen — must alert")
-    graft.ops.Stage.release(monitor.refCounts)
+    monitor.release()
   }
 
   test("README standing-index block drives the full lifecycle through " +

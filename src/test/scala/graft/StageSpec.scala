@@ -28,37 +28,47 @@ class StageSpec extends AnyFunSuite {
     sc.getPersistentRDDs.keySet.toSet -- before
 
   test("a scoped stage is released on exit, also when the body throws") {
+    cm.clearCache()
     val before = sc.getPersistentRDDs.keySet.toSet
     Stage.scoped(aggregated) { s =>
       assert(s.count() === 97L)
-      assert(Stage.rdds(s).map(_.id).toSet === added(before))
+      assert(s.storageLevel != org.apache.spark.storage.StorageLevel.NONE &&
+        added(before).nonEmpty)
     }
-    assert(added(before).isEmpty)
+    assert(cm.isEmpty && added(before).isEmpty)
     intercept[IllegalStateException] {
       Stage.scoped(aggregated) { s =>
         s.count()
         throw new IllegalStateException("body failed")
       }
     }
-    assert(added(before).isEmpty)
+    assert(cm.isEmpty && added(before).isEmpty)
   }
 
   test("a scoped stage reads a frame the caller cached, or a stage, as is") {
+    cm.clearCache()
     val cached = aggregated.persist()
-    try Stage.scoped(cached)(s => assert(s eq cached))
-    finally cached.unpersist()
+    try {
+      Stage.scoped(cached)(s => assert(s eq cached))
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally cached.unpersist()
     val owned = Stage.owned(aggregated, "StageSpec")
-    try Stage.scoped(owned)(s => assert(s eq owned))
-    finally Stage.release(owned)
+    try {
+      Stage.scoped(owned)(s => assert((s eq owned) && cm.isEmpty))
+      assert(Stage.rdds(owned).forall(_.getStorageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE))
+    } finally Stage.release(owned)
     assert(Stage.rdds(owned).forall(_.getStorageLevel ==
       org.apache.spark.storage.StorageLevel.NONE))
   }
 
   test("lost blocks: scoped and owned stages recompute the same rows") {
     val expected = rows(aggregated)
+    val before = sc.getPersistentRDDs.keySet.toSet
     Stage.scoped(aggregated) { s =>
       assert(rows(s) === expected)
-      Stage.rdds(s).foreach(_.unpersist(blocking = true))
+      assert(added(before).nonEmpty)
+      added(before).foreach(sc.getPersistentRDDs(_).unpersist(blocking = true))
       assert(rows(s) === expected)
     }
     val owned = Stage.owned(aggregated, "StageSpec")

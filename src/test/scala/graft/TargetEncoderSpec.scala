@@ -373,7 +373,7 @@ class DriftSpec extends AnyFunSuite {
     source.addData((1 to 1000).map(i => i + 2000.0): _*) // batch 1: shifted
     q.processAllAvailable()
     q.stop()
-    graft.ops.Stage.release(model.refCounts)
+    model.release()
     assert(scores(0L) === 0.0, s"identical batch scored ${scores(0L)}")
     assert(scores(1L) > 0.25, s"shifted batch scored only ${scores(1L)}")
     // and the one-shot psi path (which now routes through fitPsi) agrees
@@ -435,12 +435,12 @@ class DriftSpec extends AnyFunSuite {
     val re = loaded.scoreKs(half).collect().map(r =>
       (r.getString(0), r.getDouble(1), r.getLong(2)))
     assert(re.toSeq === est.toSeq)
-    graft.ops.Stage.release(model.refCounts)
+    model.release()
     // a fitPsi model with categorical bins refuses scoreKs loudly
     val catModel = graft.operators.Drift.fitPsi(
       Seq("a", "b").toDF("c"), Seq("c"))
     intercept[IllegalArgumentException] { catModel.scoreKs(half) }
-    graft.ops.Stage.release(catModel.refCounts)
+    catModel.release()
   }
 
   test("fitNewCats estimator: frozen vocabulary, broadcast score, loud cap") {
@@ -481,7 +481,7 @@ class DriftSpec extends AnyFunSuite {
     source.addData((1 to 1000).map(i => i + 500.0): _*) // batch 1: half shift
     q.processAllAvailable()
     q.stop()
-    graft.ops.Stage.release(model.refCounts)
+    model.release()
     assert(scores(0L) === 0.0, s"identical batch scored ${scores(0L)}")
     assert(math.abs(scores(1L) - 0.5) <= 0.02,
       s"half-range shift scored ${scores(1L)}")
